@@ -62,14 +62,14 @@ object ArrowChanges {
     * yields an empty frame with the right schema. */
   def between(spark: SparkSession, path: String, from: Long,
       to: Long): DataFrame = {
-    val root = Paths.get(path).toAbsolutePath.normalize
     require(ArrowDataSource.sinkRoot(path).isDefined,
       s"table_changes: $path carries no commit log to diff over")
-    val latest = ArrowDataSource.latestCommittedEpoch(root)
+    val log = TableLog.read(Paths.get(path).toAbsolutePath.normalize)
+    val latest = log.latest
     require(from >= 0 && to <= latest && from <= to,
       s"table_changes: window ($from, $to] out of range — $path has " +
         s"committed epochs 0..$latest")
-    val horizon = ArrowDataSource.travelHorizon(root)
+    val horizon = log.horizon
     require(from >= horizon,
       s"table_changes: epoch $from of $path predates the vacuum " +
         s"horizon $horizon — removed files of that window were " +
@@ -80,17 +80,13 @@ object ArrowChanges {
     // CONSTRUCTION — short-circuit before the general path scans the
     // rewritten generation AND its originals (O(2× table) for a full
     // compaction) only to cancel them in the exceptAll.
-    val neutral = ArrowDataSource.neutralEpochs(root)
-    val onlyNeutral = !ArrowDataSource.committedHistory(root)
-      .exists(en => en.epoch > from && en.epoch <= to &&
-        !neutral(en.epoch))
+    val onlyNeutral = !log.history.exists(en =>
+      en.epoch > from && en.epoch <= to && !log.neutral(en.epoch))
     if (onlyNeutral)
       return spark.createDataFrame(new java.util.ArrayList[Row](), schema)
         .withColumn(ChangeTypeCol, lit("insert"))
-    val fromSet = ArrowDataSource.liveEntries(root, Some(from))
-      .map(_._2).toSet
-    val toSet = ArrowDataSource.liveEntries(root, Some(to))
-      .map(_._2).toSet
+    val fromSet = log.live(Some(from)).map(_._2).toSet
+    val toSet = log.live(Some(to)).map(_._2).toSet
     val added = (toSet -- fromSet).toSeq.sorted
     val removed = (fromSet -- toSet).toSeq.sorted
     // Merge-on-read deletes churn ROWS without churning files: a
@@ -98,8 +94,8 @@ object ArrowChanges {
     // joins BOTH sides, each read pinned (epochAsOf) to its side's
     // vector — the anti-diff then emits exactly the newly masked rows
     // as deletes. Cost stays O(churned + dv-changed bytes).
-    val dvFrom = ArrowDataSource.liveDvs(root, Some(from))
-    val dvTo = ArrowDataSource.liveDvs(root, Some(to))
+    val dvFrom = log.dvs(Some(from))
+    val dvTo = log.dvs(Some(to))
     val dvChanged = (fromSet intersect toSet)
       .filter(rel => dvFrom.get(rel) != dvTo.get(rel)).toSeq.sorted
     def readFiles(rels: Seq[String], asOf: Long): DataFrame =
@@ -121,35 +117,22 @@ object ArrowChanges {
     * tagged split. Removed files are still on disk (the vacuum-horizon
     * invariant the CALLER checks), so the reader opens them directly,
     * bypassing visibility. */
-  private[arrow] def changePartitions(path: String,
-      root: java.nio.file.Path,
+  private[arrow] def changePartitions(path: String, log: TableLog,
       partSchema: org.apache.spark.sql.types.StructType,
       footerMemo: FooterIndex, after: Long, upTo: Long,
       partFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
-    val prefix = Paths.get(path).toAbsolutePath.normalize
-    val neutral = ArrowDataSource.neutralEpochs(root)
+    val root = log.root
     // UPDATE-stamped epochs tag pre/postimages instead of plain
-    // delete/insert (see the tag constants' contract note). One more
-    // O(metadata) pass per planning call, same cost class as the
-    // neutralEpochs read above — both fold into the compact snapshot,
-    // so the tail stays short on any compacted log
-    val updates = ArrowDataSource.opKinds(root)
-      .filter(_._2 == OpUpdate).keySet
-    // DV state per window epoch, resolved lazily once per epoch: a
-    // remove/add split must apply the vector LIVE at its boundary, or
-    // the feed re-delivers rows an earlier dv epoch already deleted
+    // delete/insert (see the tag constants' contract note)
+    val updates = log.ops.filter(_._2 == OpUpdate).keySet
+    // a remove/add split must apply the vector LIVE at its boundary,
+    // or the feed re-delivers rows an earlier dv epoch already deleted
     // (and drops a restore's resurrection of masked rows)
-    val dvAt = scala.collection.mutable.Map
-      .empty[Long, Map[String, (String, Long)]]
     def dvOf(epoch: Long, rel: String): Option[String] =
-      dvAt.getOrElseUpdate(epoch, ArrowDataSource.liveDvs(root,
-        Some(epoch))).get(rel)
+      log.dvAt(rel, epoch)
         .map { case (dvRel, _) => root.resolve(dvRel).normalize.toString }
-    val entries = ArrowDataSource.committedHistory(root)
-      .filter(en => en.epoch > after && en.epoch <= upTo)
-      .filterNot(en => neutral(en.epoch))
-      .filter(en => root.resolve(en.rel).normalize.startsWith(prefix))
+    val entries = windowEntries(path, log, after, upTo)
     // partition-column predicates prune churned files EXACTLY (the
     // value is constant per directory), same as the ordinary scan —
     // without this a pushed-then-consumed partition filter would
@@ -202,7 +185,7 @@ object ArrowChanges {
             // (new vector minus the previous one, dvInvert selection),
             // so the feed delivers the deleted rows themselves, no
             // carry-over pairs to cancel
-            val dvAbs = diffSidecar(root, en.epoch, en.rel, dvRel)
+            val dvAbs = diffSidecar(log, en.epoch, en.rel, dvRel)
             Some(ArrowFilePartition(f.toString, (0 until nBlocks).toArray,
               partVals, -1, delTag, en.epoch,
               dvFile = dvAbs, dvInvert = true)
@@ -211,15 +194,31 @@ object ArrowChanges {
       }.toArray
   }
 
+  /** Log entries in `(after, upTo]` under `path` (the table root or a
+    * partition subdirectory of it). Epochs marked data-neutral
+    * (compaction / z-order — same row multiset, new files) are SKIPPED
+    * entirely: their churn is invisible to CDC consumers, Delta CDF's
+    * OPTIMIZE contract. Replay stays value-exact — the rewritten rows
+    * were already delivered by the epochs that first inserted them. */
+  private[arrow] def windowEntries(path: String, log: TableLog,
+      after: Long, upTo: Long): Seq[TableLog.LogEntry] = {
+    val prefix = Paths.get(path).toAbsolutePath.normalize
+    log.history
+      .filter(en => en.epoch > after && en.epoch <= upTo)
+      .filterNot(en => log.neutral(en.epoch))
+      .filter(en => log.root.resolve(en.rel).normalize.startsWith(prefix))
+  }
+
   /** The bitmap of rows epoch `epoch` newly masked on `rel`: its
     * committed vector minus the previous live one. First-delete epochs
     * reuse the committed sidecar unchanged; re-deletes materialize a
     * derived `cdf_<epoch>_<hash>.dv` sidecar once (deterministic name,
     * exists-check idempotent — vectors are immutable once committed). */
-  private def diffSidecar(root: java.nio.file.Path, epoch: Long,
+  private def diffSidecar(log: TableLog, epoch: Long,
       rel: String, dvRel: String): String = {
+    val root = log.root
     val committed = root.resolve(dvRel).normalize
-    val prev = ArrowDataSource.liveDvs(root, Some(epoch - 1)).get(rel)
+    val prev = log.dvAt(rel, epoch - 1)
     prev match {
       case None => committed.toString
       case Some((prevRel, _)) =>
@@ -276,7 +275,7 @@ object ArrowChanges {
   * `startingEpoch` (default: the latest committed epoch at stream
   * start, Delta's "changes from now on") rewinds the cursor; epoch 0
   * then replays the initial snapshot as inserts. Vacuum bounds rewind:
-  * a start below [[ArrowDataSource.travelHorizon]] fails fast rather
+  * a start below the vacuum horizon ([[TableLog.horizon]]) fails fast rather
   * than silently skipping reclaimed epochs. */
 class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.types.StructType,
     partSchema: org.apache.spark.sql.types.StructType,
@@ -293,7 +292,6 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
       s"arrow readChangeFeed: $path carries no commit log — only logged " +
         "tables (DML'd, or written by the arrow streaming sink) have a " +
         "change feed"))
-  private val prefix = java.nio.file.Paths.get(path).toAbsolutePath.normalize
   private val footerMemo = new FooterIndex(path)
 
   case class CdfOffset(epoch: Long) extends Offset {
@@ -311,7 +309,7 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
     // `from`. Horizon 0 means "never pruned" (remove events cannot
     // exist at epoch 0), so the full log including the epoch-0
     // snapshot (cursor -1) stays streamable there.
-    val horizon = ArrowDataSource.travelHorizon(root)
+    val horizon = TableLog.read(root).horizon
     require(horizon == 0L || e >= horizon,
       s"arrow readChangeFeed: startingEpoch ${e + 1} of $path predates " +
         s"the vacuum horizon $horizon — removed files of those epochs " +
@@ -319,24 +317,9 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
     CdfOffset(e)
   }
 
-  /** Log entries in `(after, upTo]` under this (possibly partition-)
-    * subdirectory. Epochs marked data-neutral (compaction / z-order —
-    * same row multiset, new files) are SKIPPED entirely: their churn
-    * is invisible to CDC consumers, Delta CDF's OPTIMIZE contract.
-    * Replay stays value-exact — the rewritten rows were already
-    * delivered by the epochs that first inserted them. */
-  private def windowEntries(after: Long, upTo: Long)
-      : Seq[ArrowDataSource.LogEntry] = {
-    val neutral = ArrowDataSource.neutralEpochs(root)
-    ArrowDataSource.committedHistory(root)
-      .filter(en => en.epoch > after && en.epoch <= upTo)
-      .filterNot(en => neutral(en.epoch))
-      .filter(en => root.resolve(en.rel).normalize.startsWith(prefix))
-  }
-
   /** File count of the window — admission control's budget input. */
   private def windowCounts(after: Long, upTo: Long): Seq[(Long, Int)] =
-    windowEntries(after, upTo)
+    ArrowChanges.windowEntries(path, TableLog.read(root), after, upTo)
       .groupBy(_.epoch).view.mapValues(_.size).toSeq.sortBy(_._1)
 
   // ---- Trigger.AvailableNow: drain exactly what exists at start ----
@@ -392,12 +375,13 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
     val e = end.asInstanceOf[CdfOffset].epoch
     // replan after a restart re-checks the horizon: vacuum may have
     // advanced past a checkpointed-but-undelivered window
-    val horizon = ArrowDataSource.travelHorizon(root)
+    val log = TableLog.read(root)
+    val horizon = log.horizon
     require(horizon == 0L || s >= horizon,
       s"arrow readChangeFeed: checkpointed epoch window ($s, $e] of " +
         s"$path predates the vacuum horizon $horizon — the feed cannot " +
         "be replayed exactly; restart from a fresh checkpoint")
-    ArrowChanges.changePartitions(path, root, partSchema, footerMemo,
+    ArrowChanges.changePartitions(path, log, partSchema, footerMemo,
       s, e, partFilters).map(p => p: InputPartition)
   }
 

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions.{count, lit}
   * the whole landing zone) skips every already-ledgered file — at
   * 100 TB, retrying ingestion is a metadata pass over the listing,
   * never a double-load. Log compaction folds every key forward
-  * ([[ArrowDataSource.compactLog]]), so the skip check keeps
+  * ([[TableLog]]'s `#copy`), so the skip check keeps
   * answering after the ingest manifests are reclaimed.
   *
   * A ledgered file whose on-disk SIZE has since changed fails the
@@ -74,8 +74,8 @@ object ArrowCopyInto {
     Files.createDirectories(Paths.get(table))
     ArrowDataSource.initTableLog(table)
     val root = Paths.get(table).toAbsolutePath.normalize
-    val ledger: Map[String, Long] = ArrowDataSource.copiedFiles(root)
-      .map { case (_, k, sz) => k -> sz }.toMap
+    val ledger: Map[String, Long] = TableLog.read(root).copies
+      .map { case (k, (_, sz)) => k -> sz }
     val (skipped, fresh) =
       candidates.partition(p => ledger.contains(keyOf(p)))
     skipped.foreach { p =>

@@ -311,6 +311,12 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       .getOrElse(throw new IllegalArgumentException("arrow: path required"))
     val maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
       .getOrElse(128L * 1024 * 1024)
+    // ONE log read plans the whole scan: files, deletion vectors,
+    // partition discovery, timestamp travel and change-feed bounds
+    val log = TableLog.forDir(path)
+    // timestamps resolve against the log, or refuse on a flat directory
+    lazy val stampLog = log.getOrElse(
+      TableLog.read(Paths.get(path).toAbsolutePath.normalize))
     val epochAsOf = {
       val byEpoch = Option(options.get("epochAsOf"))
         .orElse(properties.get("epochAsOf")).map(_.toLong)
@@ -319,8 +325,7 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       val byTime = Option(options.get("timestampAsOf"))
         .orElse(properties.get("timestampAsOf"))
         .map(ArrowDataSource.parseTravelTimestamp)
-        .map(ms => ArrowDataSource.epochForTimestamp(
-          Paths.get(path).toAbsolutePath.normalize, ms))
+        .map(stampLog.epochForTimestamp)
       require(byEpoch.isEmpty || byTime.isEmpty,
         "arrow: specify either epochAsOf or timestampAsOf, not both")
       byEpoch.orElse(byTime)
@@ -340,14 +345,14 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
         f
       }.toSeq
     }
-    new ArrowScanBuilder(path, schema, maxSplitBytes, epochAsOf,
+    new ArrowScanBuilder(path, schema, log, maxSplitBytes, epochAsOf,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
       Option(options.get("ignoreChanges")).exists(_.toBoolean),
       explicitFiles,
       Option(options.get("readChangeFeed")).exists(_.toBoolean),
-      resolveFeedBound(path, options, "startingEpoch",
+      resolveFeedBound(stampLog, options, "startingEpoch",
         "startingTimestamp", ceiling = true),
-      resolveFeedBound(path, options, "endingEpoch",
+      resolveFeedBound(stampLog, options, "endingEpoch",
         "endingTimestamp", ceiling = false),
       Option(options.get("maxBytesPerTrigger")).map(_.toLong))
   }
@@ -357,7 +362,7 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
     * commit stamps — a STARTING bound takes the first epoch committed
     * AT OR AFTER the instant (ceiling), an ENDING bound the last epoch
     * AT OR BEFORE it (floor, `TIMESTAMP AS OF` semantics). */
-  private def resolveFeedBound(path: String,
+  private def resolveFeedBound(log: => TableLog,
       options: CaseInsensitiveStringMap, epochKey: String,
       tsKey: String, ceiling: Boolean): Option[Long] = {
     val byEpoch = Option(options.get(epochKey)).map(_.toLong)
@@ -367,13 +372,11 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       s"arrow readChangeFeed: specify either $epochKey or $tsKey, " +
         "not both")
     byEpoch.orElse(byTs.map { ms =>
-      val root = Paths.get(path).toAbsolutePath.normalize
-      if (!ceiling) ArrowDataSource.epochForTimestamp(root, ms)
+      if (!ceiling) log.epochForTimestamp(ms)
       else {
-        val stamps = ArrowDataSource.epochTimestamps(root).toSeq
-          .sortBy(_._1)
+        val stamps = log.stamps.toSeq.sortBy(_._1)
         require(stamps.nonEmpty,
-          s"arrow readChangeFeed: $path carries no commit log to " +
+          s"arrow readChangeFeed: ${log.root} carries no commit log to " +
             "resolve a timestamp against")
         stamps.find(_._2 >= ms).map(_._1).getOrElse(
           // after the last commit: an empty window starting past the
@@ -430,11 +433,10 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
           "desync the manifests — overwrite the directory instead")
     ArrowDataSource.requireTableRootForDml(path, "TRUNCATE")
     ArrowDataSource.initTableLog(path)
-    val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val base = ArrowDataSource.latestCommittedEpoch(root)
-    val victims = ArrowDataSource.visibleIpcFiles(path)
+    val log = TableLog.read(Paths.get(path).toAbsolutePath.normalize)
+    val victims = log.files(path, None)
     if (victims.nonEmpty)
-      ArrowDataSource.commitTableEpoch(path, base, Seq.empty,
+      ArrowDataSource.commitTableEpoch(path, log.latest, Seq.empty,
         victims.map(_.toString))
     true
   }
@@ -461,7 +463,8 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
     // via VERSION AS OF until vacuum.
     ArrowDataSource.initTableLog(path)
     val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val base = ArrowDataSource.latestCommittedEpoch(root)
+    val log = TableLog.read(root)
+    val visible = log.files(path, None)
     // metadata-only unlink is sound ONLY when every visible file
     // exposes every referenced column in its PATH — under partition
     // evolution, pre-evolution generations carry the column in bytes,
@@ -471,21 +474,21 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
     val dirComplete = !java.nio.file.Files.isRegularFile(
       root.resolve(ArrowDataSource.MetadataDirName)
         .resolve(ArrowDataSource.PartSpecFileName)) ||
-      ArrowDataSource.visibleIpcFiles(path).forall(f =>
+      visible.forall(f =>
         refs.subsetOf(
           ArrowDataSource.partitionValueMap(path, f).keySet))
     if (!partitionOnly(ps, filters) || !dirComplete) {
       ArrowDelete.deleteWhere(
         org.apache.spark.sql.SparkSession.active, path, ps,
-        filters.toSeq, base)
+        filters.toSeq, log)
       return
     }
     // partition-only predicate: a pure METADATA delete — one epoch
     // removing the pruned files, zero data bytes touched
     val victims = ArrowDataSource.pruneByPartitionFilters(
-      ArrowDataSource.visibleIpcFiles(path), path, ps, filters.toSeq)
+      visible, path, ps, filters.toSeq)
     if (victims.nonEmpty)
-      ArrowDataSource.commitTableEpoch(path, base, Seq.empty,
+      ArrowDataSource.commitTableEpoch(path, log.latest, Seq.empty,
         victims.map(_.toString))
   }
 
@@ -569,7 +572,7 @@ object ArrowDataSource {
     * directory handle until GC, and [[visibleIpcFiles]] runs every
     * streaming trigger, so an unclosed stream per listing would leak
     * file descriptors for the lifetime of a long-lived driver. */
-  private def listDir(p: Path): Seq[Path] = {
+  private[arrow] def listDir(p: Path): Seq[Path] = {
     val s = Files.list(p)
     try s.iterator.asScala.toVector finally s.close()
   }
@@ -598,12 +601,12 @@ object ArrowDataSource {
     }
   }
 
-  /** The streaming sink's commit-log directory (Spark file sink's
-    * `_spark_metadata` pattern): one manifest per committed epoch,
-    * listing that epoch's task files root-relative; periodically a
-    * `<epoch>.compact` snapshot (lines `epoch\trelpath`) replaces the
-    * manifests it covers, so listing cost stays O(snapshot + tail)
-    * instead of O(stream lifetime). */
+  /** The commit-log directory (Spark file sink's `_spark_metadata`
+    * pattern): one manifest per committed epoch, listing that epoch's
+    * files root-relative; periodically a `<epoch>.compact` snapshot
+    * replaces the manifests it covers, so reading the log costs
+    * O(snapshot + tail) instead of O(log lifetime). The line grammar
+    * and the reader are in [[TableLog]]. */
   val MetadataDirName = "_graft_metadata"
 
   /** Every `DefaultCompactInterval` epochs the commit path folds all
@@ -614,9 +617,6 @@ object ArrowDataSource {
 
   private def manifestDir(dir: String): Path =
     Paths.get(dir, MetadataDirName)
-
-  private def epochOf(name: String): Long =
-    name.takeWhile(_ != '.').toLong
 
   /** The commit-log root governing `dir`: `dir` itself when it carries
     * `_graft_metadata`, else the nearest ancestor reached by climbing
@@ -634,20 +634,6 @@ object ArrowDataSource {
     }
     None
   }
-
-  /** One committed log event: `rel` (root-relative) entered the
-    * visible set at `epoch` (add), left it (remove), or — merge-on-read
-    * DELETE — had its deletion vector replaced (`dv` = the DV sidecar's
-    * root-relative path plus its cumulative deleted-row count; the
-    * file's bytes are untouched, the reader masks the listed ordinals).
-    * Streaming sinks only ever append adds; DML / logged overwrite
-    * epochs carry adds+removes; DV epochs carry dv events. Line
-    * formats: manifest `rel` (add) | `-\trel` (remove) |
-    * `dv\t<count>\t<rel>\t<dvrel>`; compact snapshot prefixes the
-    * epoch: `epoch\t<manifest form>`. Bare-`rel` manifests predating
-    * removals parse unchanged. */
-  case class LogEntry(epoch: Long, remove: Boolean, rel: String,
-      dv: Option[(String, Long)] = None)
 
   /** Marker distinguishing a TABLE log (DML / logged batch commits,
     * epochs numbered by the log itself) from a STREAMING-SINK log
@@ -709,166 +695,12 @@ object ArrowDataSource {
           "with a partition predicate (WHERE col = value) instead")
     }
 
-  /** Earliest exactly-addressable epoch (0 until a prune advances it). */
-  def travelHorizon(root: Path): Long = {
-    val m = root.resolve(MetadataDirName).resolve(HorizonMarkerName)
-    if (!Files.exists(m)) 0L
-    else Files.readAllLines(m).asScala.headOption
-      .map(_.trim.toLong).getOrElse(0L)
-  }
-
-  private def parseManifestLine(e: Long, line: String): LogEntry =
-    if (line.startsWith("-\t")) LogEntry(e, remove = true, line.substring(2))
-    else if (line.startsWith("dv\t"))
-      line.split('\t') match {
-        case Array(_, count, rel, dvRel) =>
-          LogEntry(e, remove = false, rel, dv = Some((dvRel, count.toLong)))
-        case _ => throw new IllegalArgumentException(
-          s"arrow log: malformed dv event '$line'")
-      }
-    else LogEntry(e, remove = false, line)
-
-  private def manifestLine(en: LogEntry): String = en.dv match {
-    case Some((dvRel, count)) => s"dv\t$count\t${en.rel}\t$dvRel"
-    case None => if (en.remove) s"-\t${en.rel}" else en.rel
-  }
-
-  private def parseCompactLine(line: String): LogEntry = {
-    val tab = line.indexOf('\t')
-    parseManifestLine(line.substring(0, tab).toLong, line.substring(tab + 1))
-  }
-
-  /** Commit wall-clock stamps. Each epoch commit drops `<epoch>.ts`
-    * (millis) beside its manifest; [[compactLog]] folds known stamps
-    * into `#ts<TAB>epoch<TAB>millis` header lines of the snapshot so
-    * `TIMESTAMP AS OF` keeps resolving after the manifests are
-    * reclaimed. Epochs from before stamping fall back to manifest
-    * mtime while the manifest file lives. */
-  private def writeEpochTimestamp(md: Path, epoch: Long): Unit = {
-    // In-commit-timestamp adjustment (Delta's): stamp = max(now,
-    // previous epoch's stamp + 1) while the previous marker is still
-    // on disk, so a wall clock stepping backwards between commits
-    // cannot record a non-monotone stamp pair. After compaction folds
-    // the previous marker away, the FILTER-based resolution in
-    // epochForTimestamp stays the safety net for residual skew.
-    val prev = scala.util.Try(
-      Files.readAllLines(md.resolve(s"${epoch - 1}.ts")).asScala
-        .headOption.map(_.trim.toLong)).toOption.flatten
-    val stamp = math.max(System.currentTimeMillis(),
-      prev.map(_ + 1L).getOrElse(Long.MinValue))
-    val tmp = md.resolve(s"$epoch.ts.inprogress")
-    Files.write(tmp, java.util.List.of(stamp.toString))
-    Files.move(tmp, md.resolve(s"$epoch.ts"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Every known epoch→commit-millis mapping under `root`'s log:
-    * explicit `.ts` markers win, then compact-snapshot `#ts` headers,
-    * then manifest mtimes (pre-stamping epochs). */
-  def epochTimestamps(root: Path): Map[Long, Long] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Map.empty
-    val files = listDir(md)
-    val names = files.map(_.getFileName.toString)
-    val fromCompact: Map[Long, Long] =
-      names.filter(_.endsWith(".compact")).map(epochOf).sorted.lastOption
-        .toSeq.flatMap { e =>
-          Files.readAllLines(md.resolve(s"$e.compact")).asScala
-            .filter(_.startsWith("#ts\t")).flatMap { l =>
-              l.split('\t') match {
-                case Array(_, ep, ts) => Some((ep.toLong, ts.toLong))
-                case _ => None
-              }
-            }
-        }.toMap
-    // A concurrent compactLog/vacuum may reclaim a manifest between
-    // the listing above and this stat — skip files that vanished
-    // (their stamps are already folded into the snapshot's `#ts`
-    // headers) instead of crashing a racing TIMESTAMP AS OF read.
-    val fromMtime: Map[Long, Long] =
-      names.filter(_.endsWith(".manifest")).flatMap { n =>
-        scala.util.Try(
-          (epochOf(n), Files.getLastModifiedTime(md.resolve(n)).toMillis)
-        ).toOption
-      }.toMap
-    val fromMarkers: Map[Long, Long] =
-      names.filter(_.endsWith(".ts")).flatMap { n =>
-        Files.readAllLines(md.resolve(n)).asScala.headOption
-          .map(t => (epochOf(n), t.trim.toLong))
-      }.toMap
-    fromMtime ++ fromCompact ++ fromMarkers
-  }
-
-  /** Data-neutral maintenance marker: a compaction/z-order epoch
-    * rewrites the SAME row multiset into new files, so change-feed
-    * consumers must not see its churn (Delta CDF's OPTIMIZE
-    * invisibility). The committing writer drops `<epoch>.neutral`;
-    * [[compactLog]] folds markers into `#neutral` snapshot headers. */
-  def markEpochNeutral(root: Path, epoch: Long): Unit = {
-    val md = root.resolve(MetadataDirName)
-    val tmp = md.resolve(s"$epoch.neutral.inprogress")
-    Files.write(tmp, java.util.List.of(epoch.toString))
-    Files.move(tmp, md.resolve(s"$epoch.neutral"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Epochs marked data-neutral (markers + compact-snapshot headers). */
-  /** Re-run a log read that raced a CONCURRENT PROCESS's compactLog:
-    * between our directory listing and the file read, the compactor
-    * deletes covered manifests / `.ts` / `.neutral` markers / older
-    * snapshots (their content is folded into the NEW snapshot, so a
-    * fresh listing sees a complete log again). In-process races cannot
-    * do this (commit + compaction serialize per table through the
-    * epoch reservation), but a second JVM's sweep can land mid-read —
-    * observed as NoSuchFileException on a `.ts` marker under a 3-JVM
-    * commit soak. Bounded: each retry needs ANOTHER whole compaction
-    * to land inside our read window. */
-  private def retryVanishedLogRead[T](what: => T): T = {
-    var attempt = 0
-    while (true) {
-      try return what
-      catch {
-        case _: java.nio.file.NoSuchFileException if attempt < 8 =>
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  def neutralEpochs(root: Path): Set[Long] = retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Set.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val markers = names.filter(_.endsWith(".neutral")).map(epochOf)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#neutral\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep) => Some(ep.toLong)
-            case _ => None
-          })
-      }
-    (markers ++ folded).toSet
-  }
-
-  /** Writer-transaction stamps (Delta's `txn` action). A foreachBatch
-    * writer replayed after a crash re-delivers its last micro-batch;
-    * convergent appliers (keyed MERGE) absorb that, but ADDITIVE
-    * appliers (incremental view deltas) would double-apply. The fix is
-    * a stamp recorded ATOMICALLY with the commit: the writer registers
-    * `(appId, version)` for the table before running its job, and
-    * [[commitTableEpoch]] writes a `#txn<TAB>appId<TAB>version` header
-    * INSIDE the epoch manifest — the manifest rename is the epoch's
-    * visibility flip, so the stamp can neither survive a crashed
-    * commit nor go missing from a landed one. Before applying a batch
-    * the writer asks [[lastTxnVersion]] and skips versions at or below
-    * the recorded one. [[compactLog]] folds the newest stamp per appId
-    * into `#txn` snapshot headers, so the check keeps answering after
-    * the manifests are reclaimed. */
+  /** Writer-transaction stamps pending per table root (`#txn` in the
+    * [[TableLog]] grammar): a foreachBatch writer replayed after a
+    * crash re-delivers its last micro-batch, which ADDITIVE appliers
+    * (incremental view deltas) would double-apply. [[commitTableEpoch]]
+    * writes the stamp inside the epoch manifest; the writer skips
+    * versions at or below [[TableLog.lastTxnVersion]]. */
   private val pendingTxns =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
@@ -890,16 +722,10 @@ object ArrowDataSource {
     try body finally { pendingTxns.remove(key); () }
   }
 
-  /** COPY INTO's loaded-file ledger (Delta's COPY INTO idempotence):
-    * the procedure registers the source-file keys it is loading, and
-    * [[commitTableEpoch]] writes one `#copy<TAB>key<TAB>size` header
-    * per file INSIDE the ingest epoch's manifest — atomic with the
-    * visibility flip, so a crashed load ledgers nothing and a landed
-    * one can never lose its ledger. A re-run consults
-    * [[copiedFiles]] and skips already-ledgered paths: retrying a
-    * 100 TB landing-zone ingest is a metadata no-op, never a
-    * double-load. [[compactLog]] carries EVERY folded key forward
-    * (unlike `#txn`, where only the max per appId matters). */
+  /** COPY INTO's loaded-file ledger pending per table root (`#copy` in
+    * the [[TableLog]] grammar): [[commitTableEpoch]] ledgers the keys
+    * inside the ingest epoch's manifest, and a re-run skips the keys
+    * in [[TableLog.copies]] — a retried ingest never double-loads. */
   private val pendingCopies =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
 
@@ -912,105 +738,6 @@ object ArrowDataSource {
     require(prev == null,
       s"arrow: nested COPY INTO ledger registrations on $dir")
     try body finally { pendingCopies.remove(key); () }
-  }
-
-  /** Every ledgered source file: `(epoch, b64 path, size)` from
-    * manifest `#copy` headers (tail epochs) plus compact-snapshot
-    * `#copy` headers (folded epochs). */
-  def copiedFiles(root: Path): Seq[(Long, String, Long)] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#copy\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, k, sz) => Some((ep.toLong, k, sz.toLong))
-            case _ => None
-          })
-      }
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      scala.util.Try(Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#copy\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, k, sz) => Some((epochOf(n), k, sz.toLong))
-          case _ => None
-        })).getOrElse(Seq.empty)
-    }
-    folded ++ tail
-  }
-
-  /** Every recorded `(epoch, appId, version)` stamp: manifest `#txn`
-    * headers (tail epochs) plus compact-snapshot `#txn` headers
-    * (folded epochs). */
-  def txnStamps(root: Path): Seq[(Long, String, Long)] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#txn\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, app, v) => Some((ep.toLong, app, v.toLong))
-            case _ => None
-          })
-      }
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      scala.util.Try(Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#txn\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, app, v) => Some((epochOf(n), app, v.toLong))
-          case _ => None
-        })).getOrElse(Seq.empty)
-    }
-    folded ++ tail
-  }
-
-  /** Greatest version `appId` has committed to this log, if any —
-    * the replay gate: skip batches with version <= this. */
-  def lastTxnVersion(root: Path, appId: String): Option[Long] = {
-    val vs = txnStamps(root).collect { case (_, a, v) if a == appId => v }
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
-  /** Operation-kind stamps (Delta's commitInfo operation, reduced to
-    * what the change feed needs): a row-level UPDATE commits an
-    * `#op<TAB>update` header INSIDE its epoch manifest — atomic with
-    * the visibility flip, like `#txn` — so the change feed can tag the
-    * epoch's churn `update_preimage`/`update_postimage` instead of
-    * bare delete/insert, letting an external consumer distinguish an
-    * UPDATE from an unrelated delete+insert pair. Manifest form
-    * `#op<TAB>kind`; compact form `#op<TAB>epoch<TAB>kind`. */
-  def opKinds(root: Path): Map[Long, String] = retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Map.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val folded = names.filter(_.endsWith(".compact")).map(epochOf)
-      .sorted.lastOption.toSeq.flatMap { e =>
-        Files.readAllLines(md.resolve(s"$e.compact")).asScala
-          .filter(_.startsWith("#op\t"))
-          .flatMap(_.split('\t') match {
-            case Array(_, ep, kind) => Some((ep.toLong, kind))
-            case _ => None
-          })
-      }
-    // NO Try-swallow here (unlike the #txn/#copy tails): a manifest a
-    // concurrent compaction reclaims mid-read must RETRY through
-    // retryVanishedLogRead — swallowing it would transiently serve an
-    // UPDATE epoch's churn as plain insert/delete to a raw-tag consumer
-    val tail = names.filter(_.endsWith(".manifest")).flatMap { n =>
-      Files.readAllLines(md.resolve(n)).asScala
-        .filter(_.startsWith("#op\t"))
-        .flatMap(_.split('\t') match {
-          case Array(_, kind) => Some((epochOf(n), kind))
-          case _ => None
-        })
-    }
-    (folded ++ tail).toMap
   }
 
   /** `timestampAsOf` option value → epoch millis: a bare long, an
@@ -1030,110 +757,20 @@ object ArrowDataSource {
     }
   }
 
-  /** `TIMESTAMP AS OF` resolution: the greatest epoch whose commit
-    * stamp is at or before `millis` (Delta's contract). The scan is a
-    * FILTER over all epochs, not a prefix take: one non-monotone
-    * stamp (clock skew between commits, or mtime-fallback epochs
-    * interleaved with marker stamps) must not hide every later epoch
-    * whose stamp is eligible. Rapid commits inside one clock tick
-    * still resolve to the greatest epoch of the tick. */
-  def epochForTimestamp(root: Path, millis: Long): Long = {
-    val byEpoch = epochTimestamps(root).toSeq.sortBy(_._1)
-    require(byEpoch.nonEmpty,
-      s"arrow timestampAsOf: $root carries no commit log to resolve " +
-        "a timestamp against")
-    val eligible = byEpoch.filter(_._2 <= millis)
-    require(eligible.nonEmpty, {
-      val (e0, t0) = byEpoch.head
-      s"arrow timestampAsOf: $millis predates the table's first " +
-        s"known commit (epoch $e0 at $t0 = " +
-        s"${java.time.Instant.ofEpochMilli(t0)})"
-    })
-    eligible.last._1
-  }
-
-  private def compactLine(en: LogEntry): String =
-    s"${en.epoch}\t${manifestLine(en)}"
-
-  /** The full committed event history in epoch order: the latest
-    * compact snapshot plus every per-epoch manifest past it. One
-    * directory listing; O(1) snapshot read + O(tail) manifest reads,
-    * independent of how many epochs the log has lived. */
-  def committedHistory(root: Path): Seq[LogEntry] =
-      retryVanishedLogRead {
-    val md = root.resolve(MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val names = listDir(md).map(_.getFileName.toString)
-    val compactEpoch = names.filter(_.endsWith(".compact"))
-      .map(epochOf).sorted.lastOption
-    val snapshot = compactEpoch.toSeq.flatMap { e =>
-      Files.readAllLines(md.resolve(s"$e.compact")).asScala
-        .filterNot(_.startsWith("#")) // `#ts` commit-stamp headers
-        .map(parseCompactLine)
-    }
-    val tail = names.filter(_.endsWith(".manifest"))
-      .map(n => epochOf(n))
-      .filter(e => compactEpoch.forall(e > _))
-      .sorted
-      .flatMap(e => Files.readAllLines(md.resolve(s"$e.manifest")).asScala
-        .filterNot(_.startsWith("#")) // `#txn` writer-transaction headers
-        .map(parseManifestLine(e, _)))
-    snapshot ++ tail
-  }
-
-  /** Committed ADD events only — the streaming source's per-epoch
-    * delta view (what files each epoch contributed). */
-  def committedEntries(root: Path): Seq[(Long, String)] =
-    committedHistory(root).collect {
-      case en if !en.remove && en.dv.isEmpty => (en.epoch, en.rel)
-    }
-
-  /** The live `(addEpoch, rel)` set as of `asOf` (None = now): fold
-    * the history, a removal at `e2 <= asOf` cancelling the add at
-    * `e1 < e2`. This is what makes a DML commit ATOMIC for readers —
-    * the swap from old files to rewritten ones is one manifest rename,
-    * and until it lands every reader keeps resolving the old set.
-    * DV events neither add nor remove a file — they are skipped here
-    * and folded by [[liveDvs]]. */
-  def liveEntries(root: Path, asOf: Option[Long]): Seq[(Long, String)] = {
-    val live = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    committedHistory(root).foreach { en =>
-      if (asOf.forall(en.epoch <= _) && en.dv.isEmpty) {
-        if (en.remove) live.remove(en.rel)
-        else live.put(en.rel, en.epoch)
-      }
-    }
-    live.toSeq.map { case (rel, e) => (e, rel) }
-  }
-
-  /** The live deletion vector per file as of `asOf` (None = now):
-    * `rel → (dvRel, deletedCount)`. A dv event REPLACES the file's
-    * previous vector (vectors are cumulative — the writer unions old
-    * into new); removing OR re-adding the file clears it (a replaced
-    * file's rows start unmasked). Fold order within an epoch is line
-    * order — removes, adds, then dv events, as the commit writes
-    * them. */
+  /** The live deletion vector per file as of `asOf` (None = now) —
+    * see [[TableLog.dvs]]. */
   def liveDvs(root: Path, asOf: Option[Long])
-      : Map[String, (String, Long)] = {
-    val dvs = scala.collection.mutable.LinkedHashMap
-      .empty[String, (String, Long)]
-    committedHistory(root).foreach { en =>
-      if (asOf.forall(en.epoch <= _)) en.dv match {
-        case Some(v) => dvs.put(en.rel, v); ()
-        case None => dvs.remove(en.rel); ()
-      }
-    }
-    dvs.toMap
-  }
+      : Map[String, (String, Long)] = TableLog.read(root).dvs(asOf)
 
   /** Highest committed epoch under `root`'s commit log, -1 when none —
-    * the streaming source's bounded offset for manifest-carrying dirs. */
+    * one listing, no file read and no cache: the commit CAS and the
+    * streaming offsets need the head fresh. */
   def latestCommittedEpoch(root: Path): Long = {
     val md = root.resolve(MetadataDirName)
     if (!Files.isDirectory(md)) return -1L
     val epochs = listDir(md).map(_.getFileName.toString)
       .filter(n => n.endsWith(".manifest") || n.endsWith(".compact"))
-      .map(epochOf)
+      .map(TableLog.epochOf)
     if (epochs.isEmpty) -1L else epochs.max
   }
 
@@ -1153,41 +790,18 @@ object ArrowDataSource {
     * any past epoch of an append-only sink can be re-read exactly:
     * reproduce the training mixture as of last Tuesday's epoch. Flat
     * directories have no commit log and refuse the option. */
-  def visibleIpcFiles(dir: String, asOf: Option[Long]): Seq[Path] = {
-    val files = listIpcFiles(dir)
-    sinkRoot(dir) match {
-      case None =>
-        require(asOf.isEmpty,
-          s"epochAsOf: $dir carries no ${MetadataDirName} commit log " +
-            "to time-travel over")
-        files
-      case Some(root) =>
-        asOf.foreach { e =>
-          val h = travelHorizon(root)
-          require(e >= h,
-            s"epochAsOf: version $e of $dir predates the vacuum " +
-              s"horizon $h — its files were reclaimed; earliest " +
-              s"addressable version is $h")
-        }
-        val resolved = liveEntries(root, asOf)
-          .map { case (_, rel) => root.resolve(rel).normalize }
-        val committed = resolved.map(_.toString).toSet
-        val inside =
-          files.filter(f => committed(f.toAbsolutePath.normalize.toString))
-        // Zero-copy CLONE entries (`../`-relative, borrowed from the
-        // source table — see GraftProcedures.clone) never appear in
-        // this directory's walk; include them directly. A borrowed
-        // file the SOURCE has since vacuumed is a fast failure, not a
-        // silent row drop — re-clone (or deep-copy) to recover.
-        val outside = resolved.filter(p => !p.startsWith(root)).distinct
-        outside.foreach { p =>
-          require(Files.exists(p),
-            s"arrow: cloned file $p referenced by $dir no longer " +
-              "exists — the clone source vacuumed it; re-clone from " +
-              "the source's current state")
-        }
-        (inside ++ outside).sortBy(_.toString)
-    }
+  def visibleIpcFiles(dir: String, asOf: Option[Long]): Seq[Path] =
+    visibleIpcFiles(dir, TableLog.forDir(dir), asOf)
+
+  /** [[visibleIpcFiles]] against an already-read log (None = flat). */
+  def visibleIpcFiles(dir: String, log: Option[TableLog],
+      asOf: Option[Long]): Seq[Path] = log match {
+    case Some(l) => l.files(dir, asOf)
+    case None =>
+      require(asOf.isEmpty,
+        s"epochAsOf: $dir carries no ${MetadataDirName} commit log " +
+          "to time-travel over")
+      listIpcFiles(dir)
   }
 
   /** Atomically record one epoch's committed files. Idempotent by
@@ -1212,10 +826,10 @@ object ArrowDataSource {
     val rels = files.map(f =>
       root.relativize(Paths.get(f).toAbsolutePath.normalize).toString)
     val tmp = md.resolve(s"$epochId.manifest.inprogress")
-    Files.write(tmp, rels.sorted.asJava)
+    Files.write(tmp, TableLog.manifestLines(Seq.empty, rels).asJava)
     Files.move(tmp, manifest,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeEpochTimestamp(md, epochId)
+    TableLog.writeStamp(md, epochId)
     if (compactInterval > 0 && (epochId + 1) % compactInterval == 0)
       compactLog(root, epochId)
   }
@@ -1227,17 +841,33 @@ object ArrowDataSource {
     * working after compaction; only VACUUM (which physically reclaims
     * removed files) trims the travel horizon. Crash between snapshot
     * and deletes is safe: readers ignore metadata at or below the
-    * latest snapshot's epoch, and the next compaction re-deletes. */
+    * latest snapshot's epoch, and the next compaction re-deletes.
+    * Every header fact (commit stamps, neutral marks, `#txn`, `#copy`,
+    * `#op`) at or below `epochId` is carried into the snapshot, so
+    * the log reads the same after the covered files are gone. */
   def compactLog(root: Path, epochId: Long,
       onlyExisting: Boolean = false): Unit = {
     val md = root.resolve(MetadataDirName)
+    // A commit reserves its epoch with an empty manifest and then
+    // renames the written one over it: folding the reservation would
+    // drop that commit (a racing JVM's compaction can land in the
+    // window). Let in-flight commits finish first; a reservation still
+    // empty after the wait is a crashed commit and folds as the empty
+    // epoch it is.
+    var log = TableLog.read(root)
+    val deadline = System.currentTimeMillis() + 2000L
+    while (log.reserved.exists(_ <= epochId) &&
+        System.currentTimeMillis() < deadline) {
+      Thread.sleep(5L)
+      log = TableLog.read(root)
+    }
     // onlyExisting (vacuum's history prune): drop events about files
     // no longer on disk — a removed-then-reclaimed file loses both its
     // add and its remove, so the live fold is unchanged while the
     // time-travel horizon advances to the first epoch whose snapshot
     // is still byte-complete (recorded in `_horizon`; older versions
     // refuse instead of silently resolving short)
-    val all = committedHistory(root).filter(_.epoch <= epochId)
+    val all = log.history.filter(_.epoch <= epochId)
     val entries =
       if (!onlyExisting) all
       else {
@@ -1246,44 +876,13 @@ object ArrowDataSource {
         if (dropped.nonEmpty) {
           // a dropped (add e1, remove e2) pair falsifies versions in
           // [e1, e2): the first fully-intact version is max(e2)
-          val horizon = math.max(travelHorizon(root),
-            dropped.filter(_.remove).map(_.epoch).foldLeft(0L)(math.max))
-          val htmp = md.resolve("_horizon.inprogress")
-          Files.write(htmp, java.util.List.of(horizon.toString))
-          Files.move(htmp, md.resolve(HorizonMarkerName),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          TableLog.writeHorizon(md, math.max(log.horizon,
+            dropped.filter(_.remove).map(_.epoch).foldLeft(0L)(math.max)))
         }
         kept
       }
-    // carry commit stamps through the fold: once the covered manifests
-    // (and their `.ts` markers) are deleted below, the snapshot headers
-    // are the only surviving source for TIMESTAMP AS OF resolution
-    val stamps = epochTimestamps(root).filter(_._1 <= epochId)
-      .toSeq.sorted.map { case (e, t) => s"#ts\t$e\t$t" }
-    val neutrals = neutralEpochs(root).filter(_ <= epochId)
-      .toSeq.sorted.map(e => s"#neutral\t$e")
-    // newest writer-transaction stamp per appId among folded epochs —
-    // older stamps are dead (the replay gate only consults the max)
-    val txns = txnStamps(root).filter(_._1 <= epochId)
-      .groupBy(_._2).values.map(_.maxBy(s => (s._3, s._1))).toSeq
-      .sortBy(_._1).map { case (e, a, v) => s"#txn\t$e\t$a\t$v" }
-    // EVERY ledgered COPY INTO key survives the fold (first epoch per
-    // key wins): the skip-already-loaded check must keep answering
-    // after the ingest manifests are reclaimed
-    val copies = copiedFiles(root).filter(_._1 <= epochId)
-      .groupBy(_._2).values.map(_.minBy(_._1)).toSeq
-      .sortBy(c => (c._1, c._2))
-      .map { case (e, k, sz) => s"#copy\t$e\t$k\t$sz" }
-    // operation kinds survive the fold like neutral markers: the
-    // change feed's pre/postimage tagging must keep answering for any
-    // epoch still above the vacuum horizon
-    val ops = opKinds(root).filter(_._1 <= epochId)
-      .toSeq.sorted.map { case (e, k) => s"#op\t$e\t$k" }
     val ctmp = md.resolve(s"$epochId.compact.inprogress")
-    Files.write(ctmp,
-      (stamps ++ neutrals ++ txns ++ copies ++ ops ++
-        entries.map(compactLine)).asJava)
+    Files.write(ctmp, log.snapshotLines(epochId, entries).asJava)
     try Files.move(ctmp, md.resolve(s"$epochId.compact"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     catch {
@@ -1298,10 +897,10 @@ object ArrowDataSource {
     listDir(md).foreach { f =>
       val n = f.getFileName.toString
       val covered =
-        (n.endsWith(".manifest") && epochOf(n) <= epochId) ||
-          (n.endsWith(".ts") && epochOf(n) <= epochId) ||
-          (n.endsWith(".neutral") && epochOf(n) <= epochId) ||
-          (n.endsWith(".compact") && epochOf(n) < epochId)
+        (n.endsWith(".manifest") && TableLog.epochOf(n) <= epochId) ||
+          (n.endsWith(".ts") && TableLog.epochOf(n) <= epochId) ||
+          (n.endsWith(".neutral") && TableLog.epochOf(n) <= epochId) ||
+          (n.endsWith(".compact") && TableLog.epochOf(n) < epochId)
       if (covered) Files.deleteIfExists(f)
     }
     // fold per-epoch footer-stats fragments the same way: the covered
@@ -1349,25 +948,15 @@ object ArrowDataSource {
     }
     def rel(f: String): String =
       root.relativize(Paths.get(f).toAbsolutePath.normalize).toString
-    // writer-transaction stamp travels INSIDE the manifest: atomic
-    // with the visibility flip (see withPendingTxn scaladoc)
-    val txnHeader = Option(pendingTxns.get(root.toString)).toSeq
-      .map { case (a, v) => s"#txn\t$a\t$v" } ++
-      Option(pendingCopies.get(root.toString)).toSeq.flatten
-        .map { case (k, sz) => s"#copy\t$k\t$sz" } ++
-      opKind.toSeq.map { k =>
-        require(!k.exists("\t\n".contains(_)), s"bad op kind '$k'")
-        s"#op\t$k"
-      }
-    // line order IS fold order within the epoch: removes, adds, then
+    // writer-transaction and COPY INTO stamps travel INSIDE the
+    // manifest: atomic with the visibility flip (see withPendingTxn).
+    // Line order IS fold order within the epoch: removes, adds, then
     // dv events (so a replace-and-remask in one epoch lands masked)
-    val lines = txnHeader ++
-      removes.map(f => manifestLine(LogEntry(epoch, remove = true, rel(f))))
-        .sorted ++ adds.map(rel).sorted ++
-      dvs.map { case (f, dvf, count) =>
-        manifestLine(LogEntry(epoch, remove = false, rel(f),
-          dv = Some((rel(dvf), count))))
-      }.sorted
+    val lines = TableLog.manifestLines(removes.map(rel), adds.map(rel),
+      dvs.map { case (f, dvf, count) => (rel(f), rel(dvf), count) },
+      txn = Option(pendingTxns.get(root.toString)),
+      copies = Option(pendingCopies.get(root.toString)).toSeq.flatten,
+      op = opKind)
     val tmp = md.resolve(s"$epoch.manifest.inprogress")
     Files.write(tmp, lines.asJava)
     // The data-neutral marker must land BEFORE the manifest move —
@@ -1376,10 +965,10 @@ object ArrowDataSource {
     // maintenance epoch's full-table churn to every CDC consumer.
     // Before the move the marker is inert: the epoch is still an
     // empty reservation folding to zero events.
-    if (neutral) markEpochNeutral(root, epoch)
+    if (neutral) TableLog.markNeutral(md, epoch)
     Files.move(tmp, manifest,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeEpochTimestamp(md, epoch)
+    TableLog.writeStamp(md, epoch)
     if (compactInterval > 0 && (epoch + 1) % compactInterval == 0)
       compactLog(root, epoch)
     epoch
@@ -1423,45 +1012,49 @@ object ArrowDataSource {
     -1L // unreachable
   }
 
-  /** Upgrade a flat directory to a logged TABLE in one atomic step:
-    * stage `_graft_metadata` under a temp name with the table marker
-    * and an epoch-0 manifest snapshotting every current file, then
-    * rename the DIRECTORY into place. Readers never observe the
-    * half-built log (the metadata dir either absent — flat visibility
-    * — or complete); a concurrent init losing the rename cleans up
-    * and defers to the winner. No-op when a log already exists. */
+  /** Upgrade a flat directory to a logged TABLE in one atomic step
+    * ([[publishStagedLog]]) whose epoch 0 snapshots every current file.
+    * No-op when a log already exists. */
   def initTableLog(dir: String): Unit = {
     val root = Paths.get(dir).toAbsolutePath.normalize
     if (sinkRoot(dir).isDefined) return
     Files.createDirectories(root)
     val files = listIpcFiles(dir)
       .map(p => root.relativize(p.toAbsolutePath.normalize).toString)
-    val tmp = root.resolve(MetadataDirName + ".init.inprogress")
-    if (Files.exists(tmp)) { // crashed previous init: rebuild
-      listDir(tmp).foreach(Files.deleteIfExists)
-    } else Files.createDirectories(tmp)
+    // a concurrent init that won the rename holds the truth: defer
+    publishStagedLog(root, ".init.inprogress",
+      TableLog.manifestLines(Seq.empty, files))(_ => ())
+    ()
+  }
+
+  /** Build a table log in a staged directory (marker, whatever `fill`
+    * writes, the epoch-0 manifest and its stamp) and rename it into
+    * place in one step, so readers see no log or a complete one. A
+    * crashed earlier staging is rebuilt. False when a concurrent log
+    * won the rename; the staged copy is removed. */
+  private def publishStagedLog(root: Path, stage: String,
+      epoch0: Seq[String])(fill: Path => Unit): Boolean = {
+    val tmp = root.resolve(MetadataDirName + stage)
+    if (Files.exists(tmp)) listDir(tmp).foreach(Files.deleteIfExists)
+    else Files.createDirectories(tmp)
     Files.createFile(tmp.resolve(TableMarkerName))
-    Files.write(tmp.resolve("0.manifest"), files.sorted.asJava)
-    Files.write(tmp.resolve("0.ts"),
-      java.util.List.of(System.currentTimeMillis().toString))
-    try Files.move(tmp, root.resolve(MetadataDirName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
+    fill(tmp)
+    Files.write(tmp.resolve("0.manifest"), epoch0.asJava)
+    TableLog.writeStamp(tmp, 0L)
+    try {
+      Files.move(tmp, root.resolve(MetadataDirName),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      true
+    } catch {
       case _: java.nio.file.FileAlreadyExistsException
           | _: java.nio.file.DirectoryNotEmptyException
           | _: java.nio.file.AccessDeniedException =>
-        // concurrent init won the rename; its snapshot is the truth
         listDir(tmp).foreach(Files.deleteIfExists)
         Files.deleteIfExists(tmp)
+        false
     }
   }
 
-  /** Zero-copy CLONE bootstrap: create `dstRoot`'s table log with an
-    * epoch-0 manifest REFERENCING `rels` (dst-relative `../` paths into
-    * the source table). Same staged-directory atomicity as
-    * [[initTableLog]], but a concurrent log at the destination is a
-    * conflict (the caller promised an empty target), not a silent
-    * defer. */
   /** `_schema` metadata: the DECLARED data schema of an evolved table
     * (`CALL graft.system.add_column`). When present it is authoritative
     * for schema inference: files written before an added column simply
@@ -1851,85 +1444,72 @@ object ArrowDataSource {
     }
   }
 
+  /** Zero-copy CLONE bootstrap: create `dstRoot`'s table log with an
+    * epoch-0 manifest REFERENCING `rels` (dst-relative `../` paths into
+    * the source table), atomically like [[initTableLog]]. A concurrent
+    * log at the destination is a conflict, not a silent defer. */
   def initCloneLog(dstRoot: Path, rels: Seq[String],
       dvs: Seq[(String, String, Long)] = Seq.empty,
       partCols: Seq[String] = Seq.empty,
       src: Option[(Path, Long)] = None): Unit = {
     Files.createDirectories(dstRoot)
-    val tmp = dstRoot.resolve(MetadataDirName + ".clone.inprogress")
-    if (Files.exists(tmp)) listDir(tmp).foreach(Files.deleteIfExists)
-    else Files.createDirectories(tmp)
-    Files.createFile(tmp.resolve(TableMarkerName))
-    // The clone's partition columns are RECORDED, not re-derived: the
-    // borrowed rels walk `..`* down through the source's own path, and
-    // no trailing col=value heuristic can tell a source-root segment
-    // named `day=5` (or a whole nested `a=1/b=2` source path) from a
-    // real partition dir. The file is authoritative even when EMPTY —
-    // an unpartitioned clone of a col=value-named source discovers
-    // zero columns. (`[[discoverPartitionCols]]` consults it first.)
-    Files.write(tmp.resolve(PartColsFileName), partCols.asJava)
-    src.foreach { case (srcRoot, srcEpoch) =>
-      Files.write(tmp.resolve(CloneSrcFileName), java.util.List.of(
-        srcRoot.toAbsolutePath.normalize.toString, srcEpoch.toString))
-      // an EVOLVED source's declared schema + ledgers must travel with
-      // the clone: without them, inference over the borrowed
-      // mixed-generation files fails the consistency sweep, and
-      // renamed physicals would not resolve for branch-local files
-      currentSchemaFile(srcRoot.toAbsolutePath.normalize
-          .resolve(MetadataDirName)).foreach { case (srcSchema, _) =>
-        // the clone starts at CAS generation 0 under the legacy name
-        Files.copy(srcSchema, tmp.resolve(SchemaFileName))
-        ()
-      }
-      // ... and so must the PARTITION EVOLUTION record: without the
-      // source's write spec + type ledger, the clone looks
-      // pre-evolution to maybeEvolved() — pushFilters would claim
-      // partition filters EXACT over borrowed byte-carried
-      // generations (silently dropping rows), pushAggregation would
-      // skip the evolution guard, and dir-value inference could
-      // re-type a string partition column as Long against its
-      // byte-carried generation (ADVICE r12, high)
-      Seq(PartSpecFileName, PartTypesFileName).foreach { fn =>
-        val f = srcRoot.toAbsolutePath.normalize
-          .resolve(MetadataDirName).resolve(fn)
-        if (Files.isRegularFile(f)) {
-          Files.copy(f, tmp.resolve(fn))
-          ()
-        }
-      }
-      // ... and so must CHECK constraints: a write-audit-publish
-      // branch that did not inherit the source's constraints would be
-      // an unguarded side door — staged rows would bypass the gates
-      // the source enforces on every direct writer
-      val srcConstraints = srcRoot.toAbsolutePath.normalize
-        .resolve(MetadataDirName).resolve(TableConstraints.FileName)
-      if (Files.isRegularFile(srcConstraints)) {
-        Files.copy(srcConstraints, tmp.resolve(TableConstraints.FileName))
-        ()
-      }
-    }
     // borrowed deletion vectors ride the epoch-0 manifest like any
     // dv event — a clone of a merge-on-read table must not resurrect
     // the source's masked rows
-    val dvLines = dvs.map { case (rel, dvRel, n) =>
-      manifestLine(LogEntry(0L, remove = false, rel, Some((dvRel, n))))
-    }.sorted
-    Files.write(tmp.resolve("0.manifest"),
-      (rels.sorted ++ dvLines).asJava)
-    Files.write(tmp.resolve("0.ts"),
-      java.util.List.of(System.currentTimeMillis().toString))
-    try Files.move(tmp, dstRoot.resolve(MetadataDirName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException
-          | _: java.nio.file.DirectoryNotEmptyException
-          | _: java.nio.file.AccessDeniedException =>
-        listDir(tmp).foreach(Files.deleteIfExists)
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"clone: $dstRoot became a logged table concurrently — " +
-            "clone requires an empty destination")
+    val landed = publishStagedLog(dstRoot, ".clone.inprogress",
+        TableLog.manifestLines(Seq.empty, rels, dvs)) { tmp =>
+      // The clone's partition columns are RECORDED, not re-derived: the
+      // borrowed rels walk `..`* down through the source's own path, and
+      // no trailing col=value heuristic can tell a source-root segment
+      // named `day=5` (or a whole nested `a=1/b=2` source path) from a
+      // real partition dir. The file is authoritative even when EMPTY —
+      // an unpartitioned clone of a col=value-named source discovers
+      // zero columns. (`[[discoverPartitionCols]]` consults it first.)
+      Files.write(tmp.resolve(PartColsFileName), partCols.asJava)
+      src.foreach { case (srcRoot, srcEpoch) =>
+        Files.write(tmp.resolve(CloneSrcFileName), java.util.List.of(
+          srcRoot.toAbsolutePath.normalize.toString, srcEpoch.toString))
+        // an EVOLVED source's declared schema + ledgers must travel with
+        // the clone: without them, inference over the borrowed
+        // mixed-generation files fails the consistency sweep, and
+        // renamed physicals would not resolve for branch-local files
+        currentSchemaFile(srcRoot.toAbsolutePath.normalize
+            .resolve(MetadataDirName)).foreach { case (srcSchema, _) =>
+          // the clone starts at CAS generation 0 under the legacy name
+          Files.copy(srcSchema, tmp.resolve(SchemaFileName))
+          ()
+        }
+        // ... and so must the PARTITION EVOLUTION record: without the
+        // source's write spec + type ledger, the clone looks
+        // pre-evolution to maybeEvolved() — pushFilters would claim
+        // partition filters EXACT over borrowed byte-carried
+        // generations (silently dropping rows), pushAggregation would
+        // skip the evolution guard, and dir-value inference could
+        // re-type a string partition column as Long against its
+        // byte-carried generation (ADVICE r12, high)
+        Seq(PartSpecFileName, PartTypesFileName).foreach { fn =>
+          val f = srcRoot.toAbsolutePath.normalize
+            .resolve(MetadataDirName).resolve(fn)
+          if (Files.isRegularFile(f)) {
+            Files.copy(f, tmp.resolve(fn))
+            ()
+          }
+        }
+        // ... and so must CHECK constraints: a write-audit-publish
+        // branch that did not inherit the source's constraints would be
+        // an unguarded side door — staged rows would bypass the gates
+        // the source enforces on every direct writer
+        val srcConstraints = srcRoot.toAbsolutePath.normalize
+          .resolve(MetadataDirName).resolve(TableConstraints.FileName)
+        if (Files.isRegularFile(srcConstraints)) {
+          Files.copy(srcConstraints, tmp.resolve(TableConstraints.FileName))
+          ()
+        }
+      }
     }
+    if (!landed) throw new IllegalStateException(
+      s"clone: $dstRoot became a logged table concurrently — " +
+        "clone requires an empty destination")
   }
 
   /** Drop the commit manifest (truncate-on-overwrite: a batch rewrite
@@ -2388,9 +1968,29 @@ object ArrowDataSource {
     })
   }
 
+  /** Open an IPC data file for reading. Files of a logged table come
+    * from its commit log, so a missing one is damage (deleted outside
+    * the table's own operations), not a race: fail naming the file and
+    * the repair verbs instead of letting the read drop its rows. */
+  private[arrow] def openIpc(file: Path): FileChannel =
+    try FileChannel.open(file, StandardOpenOption.READ)
+    catch {
+      case e: java.nio.file.NoSuchFileException =>
+        val logged = Option(file.getParent)
+          .flatMap(p => sinkRoot(p.toString))
+          .filter(r => isTableLog(r.toString))
+        throw logged.map(r => new IllegalStateException(
+          s"arrow: data file $file is missing, but the commit log of " +
+            s"$r lists it as live — it was deleted outside the " +
+            "table's own operations. Run CALL graft.system.fsck(path " +
+            s"=> '$r') to list the damage, then CALL " +
+            "graft.system.restore to an epoch whose files are intact " +
+            "(or re-ingest the lost rows)", e)).getOrElse(e)
+    }
+
   def readFooterSchema(file: Path): StructType = {
     footerOpens.incrementAndGet()
-    val ch = FileChannel.open(file, StandardOpenOption.READ)
+    val ch = openIpc(file)
     val reader = new ArrowFileReader(ch, allocator,
       CommonsCompressionFactory.INSTANCE)
     try {
@@ -2416,7 +2016,7 @@ object ArrowDataSource {
     * — the split planner's input; reads only the footer, no batch data. */
   def recordBlockSizes(file: Path): Seq[Long] = {
     footerOpens.incrementAndGet()
-    val ch = FileChannel.open(file, StandardOpenOption.READ)
+    val ch = openIpc(file)
     val reader = new ArrowFileReader(ch, allocator,
       CommonsCompressionFactory.INSTANCE)
     try {
@@ -2468,7 +2068,7 @@ object ArrowDataSource {
 
   def footerInfo(file: Path): FooterInfo = {
     footerOpens.incrementAndGet()
-    val ch = FileChannel.open(file, StandardOpenOption.READ)
+    val ch = openIpc(file)
     val reader = new ArrowFileReader(ch, allocator,
       CommonsCompressionFactory.INSTANCE)
     try {

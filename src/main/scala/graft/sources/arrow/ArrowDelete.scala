@@ -68,29 +68,30 @@ object ArrowDelete {
 
   /** Distributed copy-on-write delete of every row matching the
     * conjunction `filters` under `root` — a LOGGED table (the caller
-    * ran [[ArrowDataSource.initTableLog]] and passes the planning-time
-    * epoch as `baseEpoch`). Tasks rewrite files but never unlink; the
-    * driver swaps every touched group for its replacement in one
-    * atomic epoch commit, so readers see the delete all-or-nothing.
+    * ran [[ArrowDataSource.initTableLog]] and passes the log it planned
+    * against; its head is the commit's base epoch). Tasks rewrite
+    * files but never unlink; the driver swaps every touched group for
+    * its replacement in one atomic epoch commit, so readers see the
+    * delete all-or-nothing.
     * Caller guarantees every filter is FilterEval-supported over
     * (file ++ partition) columns and that `root` is not a streaming
     * sink. */
   def deleteWhere(spark: SparkSession, root: String,
       partSchema: StructType, filters: Seq[Filter],
-      baseEpoch: Long): Unit = {
+      log: TableLog): Unit = {
+    val baseEpoch = log.latest
     val partCols = partSchema.fieldNames.toSet
     val partF = filters.filter(f => f.references.forall(partCols) &&
       FilterEval.supported(partSchema, f))
     val candidates = ArrowDataSource.pruneByPartitionFilters(
-      ArrowDataSource.visibleIpcFiles(root), root, partSchema, partF)
+      log.files(root, None), root, partSchema, partF)
     if (candidates.isEmpty) return
     if (ArrowDataSource.dvEnabled(root)) {
-      deleteWhereMor(spark, root, partSchema, filters, baseEpoch,
-        candidates)
+      deleteWhereMor(spark, root, partSchema, filters, log, candidates)
       return
     }
     val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = ArrowDataSource.liveDvs(rootP, None)
+    val dvNow = log.dvs(None)
     val rootStr = root
     val fs = filters
     val ps = partSchema
@@ -132,10 +133,11 @@ object ArrowDelete {
     * costs the matched files' scan plus kilobyte sidecars, not a
     * petabyte rewrite. */
   private[arrow] def deleteWhereMor(spark: SparkSession, root: String,
-      partSchema: StructType, filters: Seq[Filter], baseEpoch: Long,
+      partSchema: StructType, filters: Seq[Filter], log: TableLog,
       candidates: Seq[Path]): Unit = {
+    val baseEpoch = log.latest
     val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = ArrowDataSource.liveDvs(rootP, None)
+    val dvNow = log.dvs(None)
     val rootStr = rootP.toString
     val fs = filters
     val ps = partSchema

@@ -120,7 +120,7 @@ object ArrowOptimize {
       val dvDir = root.resolve(ArrowDataSource.DvDirName)
       if (Files.isDirectory(dvDir)) {
         val victimSet = victims.map(_.toAbsolutePath.normalize).toSet
-        val referenced = ArrowDataSource.committedHistory(root)
+        val referenced = TableLog.read(root).history
           .filter { en =>
             val f = root.resolve(en.rel).normalize
             Files.exists(f) && !victimSet(f)
@@ -382,8 +382,9 @@ object AutoCompact {
         // deletion-vectored files are skipped: their live row count is
         // smaller than the footer's and a rewrite here would need the
         // mask — OPTIMIZE handles those explicitly
-        val dvRels = ArrowDataSource.liveDvs(root, None).keySet
-        val small = ArrowDataSource.visibleIpcFiles(path)
+        val log = TableLog.read(root)
+        val dvRels = log.dvs(None).keySet
+        val small = log.files(path, None)
           .filterNot(f => scala.util.Try(root.relativize(
             f.toAbsolutePath.normalize).toString).toOption
             .exists(dvRels))

@@ -1,7 +1,7 @@
 package graft.sources.arrow
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Paths, StandardOpenOption}
+import java.nio.file.Paths
 
 import scala.jdk.CollectionConverters._
 
@@ -34,19 +34,26 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, Column
   * and row-level refinement happens in Catalyst's codegen'd FilterExec
   * above it, exactly as with the vectorized parquet reader.
   */
-/** One-per-scan footer index: lists the directory once and parses each
-  * file's footer at most once, however many planning passes consult it
-  * (pushAggregation, estimateStatistics, planInputPartitions) — at
-  * 100k files the difference between one metadata pass and three. */
-private[arrow] class FooterIndex(path: String,
-    asOf: Option[Long] = None,
-    explicit: Option[Seq[java.nio.file.Path]] = None) {
+/** One-per-scan footer index: reads the commit log (or lists a flat
+  * directory) once and parses each file's footer at most once, however
+  * many planning passes consult it (pushAggregation,
+  * estimateStatistics, planInputPartitions) — at 100k files the
+  * difference between one metadata pass and three. `tableLog` is the
+  * commit log of `path` (None = flat directory), evaluated on first
+  * use. */
+private[arrow] class FooterIndex(path: String, asOf: Option[Long],
+    explicit: Option[Seq[java.nio.file.Path]],
+    tableLog: => Option[TableLog]) {
+  def this(path: String) = this(path, None, None, TableLog.forDir(path))
+
+  lazy val log: Option[TableLog] = tableLog
+
   /** Explicit file list (the change-feed reader naming exactly the
     * churned files of an epoch window — including files a later epoch
     * REMOVED, which visibility resolution would hide) or the normal
     * manifest/as-of-resolved visible set. */
   lazy val files: Seq[java.nio.file.Path] =
-    explicit.getOrElse(ArrowDataSource.visibleIpcFiles(path, asOf))
+    explicit.getOrElse(ArrowDataSource.visibleIpcFiles(path, log, asOf))
   // Sidecar keys are TABLE-ROOT-relative: a read addressed at a
   // partition subdirectory must load (and relativize against) the sink
   // root's sidecar, or every lookup misses and planning silently pays
@@ -78,17 +85,16 @@ private[arrow] class FooterIndex(path: String,
     * Empty for flat dirs and DV-free tables — every DV-aware gate
     * (agg/limit pushdown, stats, split planning) keys off this. */
   lazy val dvs: Map[String, (String, Long)] =
-    ArrowDataSource.sinkRoot(path) match {
-      case Some(r) if ArrowDataSource.isTableLog(path) =>
-        ArrowDataSource.liveDvs(r, asOf).map { case (rel, (dvRel, n)) =>
-          r.resolve(rel).normalize.toString ->
-            (r.resolve(dvRel).normalize.toString, n)
-        }
-      case _ => Map.empty
-    }
+    log.map { l =>
+      l.dvs(asOf).map { case (rel, (dvRel, n)) =>
+        l.root.resolve(rel).normalize.toString ->
+          (l.root.resolve(dvRel).normalize.toString, n)
+      }
+    }.getOrElse(Map.empty)
 }
 
 class ArrowScanBuilder(path: String, schema: StructType,
+    log: Option[TableLog], // the commit log this scan plans against
     maxSplitBytes: Long = 128L * 1024 * 1024,
     epochAsOf: Option[Long] = None,
     maxFilesPerTrigger: Option[Int] = None,
@@ -103,7 +109,11 @@ class ArrowScanBuilder(path: String, schema: StructType,
     with SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
-  private val footerIdx = new FooterIndex(path, epochAsOf, explicitFiles)
+  def this(path: String, schema: StructType) =
+    this(path, schema, TableLog.forDir(path))
+
+  private val footerIdx =
+    new FooterIndex(path, epochAsOf, explicitFiles, log)
 
   // Hive-style partition columns discovered from the directory layout
   // (empty for flat dirs); they live in paths, not files. Column NAMES
@@ -838,22 +848,22 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     // FILE-grain contract (CoW carry-over rows surface as cancelling
     // delete+insert pairs; net by full row value for an exact diff).
     if (changeFeed) {
-      val root = ArrowDataSource.sinkRoot(path).getOrElse(
+      val log = footerIdx.log.getOrElse(
         throw new IllegalArgumentException(
           s"arrow readChangeFeed: $path carries no commit log"))
-      val latest = ArrowDataSource.latestCommittedEpoch(root)
+      val latest = log.latest
       val from = startingEpoch.get - 1L
       val to = endingEpoch.getOrElse(latest)
       require(from <= to && to <= latest,
         s"arrow readChangeFeed: batch window [${from + 1}, $to] out " +
           s"of range — $path has committed epochs 0..$latest")
-      val horizon = ArrowDataSource.travelHorizon(root)
+      val horizon = log.horizon
       require(horizon == 0L || from >= horizon,
         s"arrow readChangeFeed: startingEpoch ${from + 1} of $path " +
           s"predates the vacuum horizon $horizon — removed files of " +
           s"those epochs were reclaimed; earliest readable epoch is " +
           s"${horizon + 1}")
-      return ArrowChanges.changePartitions(path, root, partSchema,
+      return ArrowChanges.changePartitions(path, log, partSchema,
         footerIdx, from, to, (partFilters ++ runtimeFilters).toSeq)
     }
     val bucketed = bucketLayout.isDefined
@@ -1132,8 +1142,9 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
     * is the consumer's job). */
   private def epochDeltaFiles(root: java.nio.file.Path, after: Long,
       upTo: Long): Seq[java.nio.file.Path] = {
+    val log = TableLog.read(root)
     if (!ignoreChanges)
-      ArrowDataSource.committedHistory(root).foreach { en =>
+      log.history.foreach { en =>
         if (en.remove && en.epoch > after && en.epoch <= upTo)
           throw new UnsupportedOperationException(
             s"arrow streaming source on $path: epoch ${en.epoch} " +
@@ -1156,7 +1167,7 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
     // fresh stream over a table with rewrite history delivers the
     // current snapshot (Delta's initial-snapshot semantics), not every
     // superseded generation ever committed
-    val files = ArrowDataSource.liveEntries(root, Some(upTo))
+    val files = log.live(Some(upTo))
       .collect { case (e, rel) if e > after =>
         root.resolve(rel).normalize }
       .filter(_.startsWith(prefix))
@@ -1237,8 +1248,9 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
       case (ArrowEpochOffset(s), ArrowEpochOffset(e)) if e > s =>
         val root = epochRoot.get
         val prefix = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-        val byEpoch = ArrowDataSource.committedEntries(root)
-          .map { case (ep, rel) => (ep, root.resolve(rel).normalize) }
+        val byEpoch = TableLog.read(root).history
+          .collect { case en if !en.remove && en.dv.isEmpty =>
+            (en.epoch, root.resolve(en.rel).normalize) }
           .filter { case (ep, abs) => ep > s && ep <= e &&
             abs.startsWith(prefix) }
           .groupBy(_._1).view.mapValues { fs =>
@@ -1390,7 +1402,7 @@ class ArrowReaderFactory(schema: StructType, filters: Array[Filter],
 private[arrow] abstract class ArrowReaderBase(partition: ArrowFilePartition,
     schema: StructType, partSchema: StructType = StructType(Seq.empty)) {
   protected val channel: FileChannel =
-    FileChannel.open(Paths.get(partition.file), StandardOpenOption.READ)
+    ArrowDataSource.openIpc(Paths.get(partition.file))
   protected val reader: ArrowFileReader =
     new ArrowFileReader(channel, ArrowDataSource.allocator,
       CommonsCompressionFactory.INSTANCE)

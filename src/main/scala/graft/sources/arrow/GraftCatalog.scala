@@ -235,8 +235,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
     val millis = Math.floorDiv(timestamp, 1000L)
-    val epoch = ArrowDataSource.epochForTimestamp(
-      java.nio.file.Paths.get(path).toAbsolutePath.normalize, millis)
+    val epoch = TableLog.read(
+      java.nio.file.Paths.get(path).toAbsolutePath.normalize)
+      .epochForTimestamp(millis)
     val opts = new CaseInsensitiveStringMap(Map("path" -> path).asJava)
     val schema = new ArrowDataSource().inferSchema(opts)
     new ArrowTable(schema,

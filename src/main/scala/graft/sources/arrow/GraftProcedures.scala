@@ -314,7 +314,7 @@ object GraftProcedures {
       val reclaimed = ArrowOptimize.vacuum(path, graceMs = 0L)
       result(out, Array(new GenericInternalRow(Array[Any](
         dvs.size.toLong, reclaimed.length.toLong,
-        ArrowDataSource.travelHorizon(root)))))
+        TableLog.read(root).horizon))))
     }
   }
 
@@ -420,8 +420,8 @@ object GraftProcedures {
             "sinks and logged tables have epoch history"))
       // commit wall-clock per epoch (micros, TimestampType internal);
       // null for epochs predating stamping whose manifest is gone
-      val stamps = ArrowDataSource.epochTimestamps(root)
-      val rows = ArrowDataSource.committedHistory(root)
+      val log = TableLog.read(root)
+      val rows = log.history
         .groupBy(_.epoch).toSeq.sortBy(_._1)
         .map { case (epoch, entries) =>
           val (removes, rest) = entries.partition(_.remove)
@@ -436,7 +436,7 @@ object GraftProcedures {
           val masked = dvEvents.flatMap(_.dv.map(_._2)).sum
           new GenericInternalRow(Array[Any](
             epoch,
-            stamps.get(epoch).map(m => java.lang.Long.valueOf(m * 1000L))
+            log.stamps.get(epoch).map(m => java.lang.Long.valueOf(m * 1000L))
               .orNull,
             adds.length.toLong, bytes,
             removes.length.toLong, masked)): InternalRow
@@ -482,7 +482,8 @@ object GraftProcedures {
           "them back would desync the stream; only DML/logged-batch " +
           "commit logs restore")
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val latest = ArrowDataSource.latestCommittedEpoch(root)
+      val log = TableLog.read(root)
+      val latest = log.latest
       require(tsArg.isEmpty || epochArg == -1L,
         "restore: specify either epoch or timestamp, not both")
       require(tsArg.nonEmpty || epochArg != -1L,
@@ -491,21 +492,20 @@ object GraftProcedures {
       // TIMESTAMP AS OF reads; epochForTimestamp refuses pre-first-
       // commit instants, the horizon check below refuses reclaimed ones
       val target = tsArg match {
-        case Some(t) => ArrowDataSource.epochForTimestamp(root,
-          ArrowDataSource.parseTravelTimestamp(t))
+        case Some(t) =>
+          log.epochForTimestamp(ArrowDataSource.parseTravelTimestamp(t))
         case None => epochArg
       }
       require(target >= 0 && target <= latest,
         s"restore: epoch $target out of range — $path has committed " +
           s"epochs 0..$latest")
-      val horizon = ArrowDataSource.travelHorizon(root)
+      val horizon = log.horizon
       require(target >= horizon,
         s"restore: epoch $target of $path predates the vacuum " +
           s"horizon $horizon — its files were reclaimed; earliest " +
           s"restorable epoch is $horizon")
-      val want = ArrowDataSource.liveEntries(root, Some(target))
-        .map(_._2).toSet
-      val have = ArrowDataSource.liveEntries(root, None).map(_._2).toSet
+      val want = log.live(Some(target)).map(_._2).toSet
+      val have = log.live(None).map(_._2).toSet
       val addSet = want -- have
       val adds = addSet.toSeq.sorted.map(r => root.resolve(r).toString)
       val removes = (have -- want).toSeq.sorted
@@ -515,8 +515,8 @@ object GraftProcedures {
       // (an add clears the vector), so a target vector re-commits; a
       // kept file whose vector must CLEAR cycles remove+add in the
       // same epoch (fold order: removes, adds, dv events).
-      val wantDv = ArrowDataSource.liveDvs(root, Some(target))
-      val haveDv = ArrowDataSource.liveDvs(root, None)
+      val wantDv = log.dvs(Some(target))
+      val haveDv = log.dvs(None)
       val dvRestores = scala.collection.mutable
         .ArrayBuffer.empty[(String, String, Long)]
       val dvClears = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -581,7 +581,8 @@ object GraftProcedures {
       // honors the source's vacuum horizon (pre-horizon versions
       // refuse) and manifest visibility; flat sources clone their
       // current listing (asOf refuses without a log, as on any read)
-      val files = ArrowDataSource.visibleIpcFiles(src, asOf)
+      val log = TableLog.forDir(src)
+      val files = ArrowDataSource.visibleIpcFiles(src, log, asOf)
       require(files.nonEmpty, s"clone: no visible files under $src" +
         asOf.map(e => s" at epoch $e").getOrElse(""))
       val rels = files.map(f =>
@@ -590,9 +591,7 @@ object GraftProcedures {
       // dst-relative, restricted to the cloned file set
       val fileRels = files.map(f =>
         f.toAbsolutePath.normalize).toSet
-      val dvs = (if (ArrowDataSource.isTableLog(src))
-        ArrowDataSource.liveDvs(srcRoot, asOf) else Map.empty[String,
-        (String, Long)]).toSeq.collect {
+      val dvs = log.map(_.dvs(asOf)).getOrElse(Map.empty).toSeq.collect {
         case (rel, (dvRel, n))
             if fileRels(srcRoot.resolve(rel).normalize) =>
           (dstRoot.relativize(srcRoot.resolve(rel).normalize).toString,
@@ -607,7 +606,7 @@ object GraftProcedures {
         // lineage for write-audit-publish: which table, at which epoch
         src = Some((srcRoot,
           if (ArrowDataSource.isTableLog(src))
-            asOf.getOrElse(ArrowDataSource.latestCommittedEpoch(srcRoot))
+            asOf.getOrElse(log.map(_.latest).getOrElse(-1L))
           else -1L)))
       FooterIndexFile.cloneTo(srcRoot, dstRoot, files)
       val bytes = files.map(f => Files.size(f)).sum
@@ -680,9 +679,10 @@ object GraftProcedures {
           "the clone — staged rows were not checked against the " +
           "current gates; align the constraints and re-clone")
       // branch state to land
-      val files = ArrowDataSource.visibleIpcFiles(branch, None)
+      val branchLog = TableLog.read(branchRoot)
+      val files = branchLog.files(branch, None)
         .map(_.toAbsolutePath.normalize)
-      val masks = ArrowDataSource.liveDvs(branchRoot, None)
+      val masks = branchLog.dvs(None)
       // fail fast before moving anything (the commit re-checks
       // atomically via the exclusive manifest create)
       val latest = ArrowDataSource.latestCommittedEpoch(mainRoot)
@@ -1745,7 +1745,8 @@ object GraftProcedures {
       }
       // the window must be APPEND-ONLY: a sketch cannot subtract the
       // values a removal or deletion vector took away
-      ArrowDataSource.committedHistory(root).foreach { en =>
+      val log = TableLog.read(root)
+      log.history.foreach { en =>
         if ((en.remove || en.dv.isDefined) && en.epoch > priorEpoch &&
             en.epoch <= latest)
           throw new UnsupportedOperationException(
@@ -1754,8 +1755,9 @@ object GraftProcedures {
               "sketches only grow; run a full CALL analyze to " +
               "recompute over the current snapshot")
       }
-      val deltaRels = ArrowDataSource.committedEntries(root).collect {
-        case (e, rel) if e > priorEpoch && e <= latest => rel
+      val deltaRels = log.history.collect {
+        case en if !en.remove && en.dv.isEmpty && en.epoch > priorEpoch &&
+          en.epoch <= latest => en.rel
       }.distinct
       lastAnalyzeFiles = deltaRels.size.toLong
       if (deltaRels.isEmpty) { // empty epochs: advance the cursor only
@@ -1907,15 +1909,18 @@ object GraftProcedures {
         findings += ((check, "FAIL", detail)); ()
       }
       // re-derive the referenced set from the LOG, not the disk
-      // listing (visibleIpcFiles intersects with what exists — a
-      // dangling manifest entry would vanish from it silently, which
-      // is exactly the corruption fsck exists to surface)
-      val files: Seq[Path] =
+      // listing: a dangling manifest entry is exactly the corruption
+      // fsck exists to surface (a read of it fails naming this verb)
+      val log =
         if (ArrowDataSource.isTableLog(root.toString))
-          ArrowDataSource.liveEntries(root, None)
-            .map { case (_, rel) => root.resolve(rel).normalize }
-        else ArrowDataSource.listIpcFiles(root.toString)
+          Some(TableLog.read(root))
+        else None
+      val files: Seq[Path] = log match {
+        case Some(l) => l.live(None)
+          .map { case (_, rel) => root.resolve(rel).normalize }
+        case None => ArrowDataSource.listIpcFiles(root.toString)
           .map(_.toAbsolutePath.normalize)
+      }
       // 1. referenced data files exist and carry a parsable footer
       val schemas = files.flatMap { f =>
         if (!Files.isRegularFile(f)) { bad("file-exists", f.toString); None }
@@ -1948,8 +1953,7 @@ object GraftProcedures {
           }
       }
       // 3. live deletion vectors parse and fit their files
-      if (ArrowDataSource.isTableLog(root.toString))
-        ArrowDataSource.liveDvs(root, None).foreach {
+      log.foreach(_.dvs(None).foreach {
           case (rel, (dvRel, _)) =>
             val dvAbs = root.resolve(dvRel).normalize
             if (!Files.isRegularFile(dvAbs))
@@ -1966,7 +1970,7 @@ object GraftProcedures {
                         s"batches but $rel has ${info.sizes.length}")
                   }
             }
-        }
+        })
       // 4. every physical IPC file is listed by SOME epoch manifest:
       // a file NO epoch ever adopted is invisible to every reader —
       // silent data loss. The reachable producer is the
@@ -1974,15 +1978,14 @@ object GraftProcedures {
       // the bare directory renames its file AFTER a concurrent
       // initTableLog/mergeSchema-promotion snapshots the file list);
       // fsck turns that silence into a finding.
-      if (ArrowDataSource.isTableLog(root.toString)) {
+      log.foreach { l =>
         // ONE history pass: any file an epoch ever adopted appears as
         // an add (or remove) entry — O(history), not O(epochs²) of
-        // per-epoch liveEntries folds. Files whose whole lifecycle
+        // per-epoch live-set folds. Files whose whole lifecycle
         // predates the latest log compaction read as unlisted too:
         // they are equally invisible to every reader and are exactly
         // the vacuum-pending debris the message points at.
-        val listed = ArrowDataSource.committedHistory(root)
-          .filter(_.dv.isEmpty).map(_.rel).toSet
+        val listed = l.history.filter(_.dv.isEmpty).map(_.rel).toSet
         ArrowDataSource.listIpcFiles(root.toString).foreach { f =>
           val rel = root.relativize(f.toAbsolutePath.normalize).toString
           if (!listed.contains(rel)) bad("file-listed",
@@ -2060,11 +2063,8 @@ object GraftProcedures {
         else null
       // the SINK ROOT owns the log — a subdirectory path reports its
       // table's epochs, not an empty log
-      val logRoot = ArrowDataSource.sinkRoot(path)
-      val epochs = logRoot
-        .map(ArrowDataSource.latestCommittedEpoch).getOrElse(-1L)
-      val horizon = logRoot
-        .map(ArrowDataSource.travelHorizon).getOrElse(0L)
+      val epochs = memo.log.map(_.latest).getOrElse(-1L)
+      val horizon = memo.log.map(_.horizon).getOrElse(0L)
       result(out, Array(new GenericInternalRow(Array[Any](
         files.length.toLong, bytes, rows,
         math.max(0L, epochs), horizon,

@@ -105,8 +105,8 @@ object ChangeReplication {
     val spark = batch.sparkSession
     val dstRoot = java.nio.file.Paths.get(dstDir).toAbsolutePath.normalize
     if (txn.exists { case (app, v) =>
-      graft.sources.arrow.ArrowDataSource
-        .lastTxnVersion(dstRoot, app).exists(_ >= v)
+      graft.sources.arrow.TableLog.read(dstRoot)
+        .lastTxnVersion(app).exists(_ >= v)
     }) return // replayed micro-batch: already applied atomically
     val dataCols = batch.columns.toSeq
       .filterNot(c => c == ArrowChanges.ChangeTypeCol ||

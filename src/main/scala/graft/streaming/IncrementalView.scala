@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog, TableLog}
 
 /** Incremental materialized-view maintenance: keep a grouped
   * COUNT/SUM aggregate table in sync with a logged source by applying
@@ -29,7 +29,7 @@ import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog}
   * apply commits under a writer-transaction stamp
   * ([[ArrowDataSource.withPendingTxn]]) — the `(appId, batchId)` pair
   * lands atomically inside the view's epoch manifest, and a replayed
-  * batch is skipped by the [[ArrowDataSource.lastTxnVersion]] gate
+  * batch is skipped by the [[TableLog.lastTxnVersion]] gate
   * before any job runs. This is Delta's idempotent-writer `txn`
   * contract, not convergence-by-key: the gate is exact even though
   * delta application is not idempotent.
@@ -130,7 +130,7 @@ object IncrementalView {
       groupCols: Seq[String], sums: Seq[(String, String)],
       appId: String, version: Long): Boolean = {
     val root = java.nio.file.Paths.get(viewDir).toAbsolutePath.normalize
-    if (ArrowDataSource.lastTxnVersion(root, appId).exists(_ >= version))
+    if (TableLog.read(root).lastTxnVersion(appId).exists(_ >= version))
       return false // replayed micro-batch: already folded in
     val delta = netDelta(signChanges(batch, "__sign"), groupCols, sums)
     mergeDelta(delta, viewDir, groupCols, sums, appId, version)
@@ -313,7 +313,7 @@ object IncrementalView {
         .drop("__dimk")
     ensureView(spark, factDir, viewDir, groupCols, sums, enrichNow)
     val version = packEpochs(f1, d1)
-    val prev = ArrowDataSource.lastTxnVersion(vRoot, appId)
+    val prev = TableLog.read(vRoot).lastTxnVersion(appId)
     if (prev.exists(_ >= version)) return false
     val delta = prev match {
       case None =>

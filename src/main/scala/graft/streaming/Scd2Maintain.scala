@@ -86,8 +86,8 @@ object Scd2Maintain {
     val spark = batch.sparkSession
     val dimRoot = java.nio.file.Paths.get(dimDir).toAbsolutePath.normalize
     if (txn.exists { case (app, v) =>
-      graft.sources.arrow.ArrowDataSource
-        .lastTxnVersion(dimRoot, app).exists(_ >= v)
+      graft.sources.arrow.TableLog.read(dimRoot)
+        .lastTxnVersion(app).exists(_ >= v)
     }) return // replayed micro-batch: already applied atomically
     val dataCols = batch.columns.toSeq
       .filterNot(c => c == ArrowChanges.ChangeTypeCol ||

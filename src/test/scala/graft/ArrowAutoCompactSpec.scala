@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 
 /** Post-commit auto-compaction (`set_auto_compact`): splinter-heavy
   * ingest self-heals without OPTIMIZE calls, the rewrite touches only
@@ -62,7 +62,7 @@ class ArrowAutoCompactSpec extends AnyFunSuite {
       .filter(col(graft.sources.arrow.ArrowChanges.ChangeTypeCol) ===
         "insert").count() == 4,
       "appends missing from the feed")
-    assert(ArrowDataSource.neutralEpochs(root).nonEmpty,
+    assert(TableLog.read(root).neutral.nonEmpty,
       "auto-compaction epoch not marked data-neutral")
 
     // disable: splinters accumulate again

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowChanges, ArrowDataSource, ArrowOptimize, GraftCatalog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource, ArrowOptimize, GraftCatalog, TableLog}
 
 /** Streaming change feed (`readChangeFeed`): epoch-offset micro-batches
   * over the table log, each delivering an epoch's churned files as rows
@@ -365,8 +365,8 @@ class ArrowChangeFeedSpec extends AnyFunSuite {
   test("a start below the vacuum horizon fails fast") {
     val dir = tableWithHistory()
     ArrowOptimize.vacuum(dir, graceMs = 0L)
-    val horizon = ArrowDataSource.travelHorizon(
-      java.nio.file.Paths.get(dir))
+    val horizon = TableLog.read(
+      java.nio.file.Paths.get(dir)).horizon
     assert(horizon > 0, "vacuum did not advance the horizon")
     val err = intercept[Exception] {
       drainFeed(dir, "cdf_vacuumed", startingEpoch = Some(0L))
@@ -441,7 +441,7 @@ class ArrowChangeFeedSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tableWithHistory()
     val root = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val stamps = graft.sources.arrow.ArrowDataSource.epochTimestamps(root)
+    val stamps = graft.sources.arrow.TableLog.read(root).stamps
     val latest = graft.sources.arrow.ArrowDataSource
       .latestCommittedEpoch(root)
     def batchFeedTs(fromTs: Long, toTs: Option[Long] = None): DataFrame = {

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowCopyInto, ArrowDataSource}
+import graft.sources.arrow.{ArrowCopyInto, ArrowDataSource, TableLog}
 
 /** COPY INTO — idempotent landing-zone ingestion: per-file ledger
   * carried in epoch manifests, retry skips, mutation detection,
@@ -75,7 +75,7 @@ class ArrowCopyIntoSpec extends AnyFunSuite {
     val root = Paths.get(table).toAbsolutePath.normalize
     val epoch = ArrowDataSource.latestCommittedEpoch(root)
     ArrowDataSource.compactLog(root, epoch)
-    assert(ArrowDataSource.copiedFiles(root).size == 2,
+    assert(TableLog.read(root).copies.size == 2,
       "folded ledger lost keys")
     // post-compaction retry still skips both, new file still loads
     land(df.filter(col("id") >= 40), landing, "c")

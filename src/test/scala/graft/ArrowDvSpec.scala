@@ -183,6 +183,37 @@ class ArrowDvSpec extends AnyFunSuite {
       .count() == 0)
     assert(feed.filter(col(ArrowChanges.CommitEpochCol) === e2)
       .select(col("id")).distinct().count() == 10)
+
+    // ONE file carrying both vector epochs: each epoch's split is the
+    // diff against the vector live on that file just before it
+    import spark.implicits._
+    val one = Files.createTempDirectory("dv_cdf_one").toString
+    (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "tag")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(one)
+    ArrowDataSource.initTableLog(one)
+    spark.sql(s"CALL graft.system.set_dv(path => '$one')").collect()
+    val oneRoot = Paths.get(one).toAbsolutePath.normalize
+    val f0 = ArrowDataSource.latestCommittedEpoch(oneRoot)
+    spark.sql(s"DELETE FROM graft.arrow.`$one` WHERE id <= 10")
+    spark.sql(s"DELETE FROM graft.arrow.`$one` WHERE id <= 25")
+    val f2 = ArrowDataSource.latestCommittedEpoch(oneRoot)
+    assert(f2 == f0 + 2)
+    val oneFeed = spark.read.format("arrow")
+      .option("readChangeFeed", "true")
+      .option("startingEpoch", f0 + 1).load(one)
+      .filter(col(ArrowChanges.ChangeTypeCol) === "delete")
+    assert(oneFeed.count() == 25 &&
+      oneFeed.select(col("id")).distinct().count() == 25,
+      "a vector epoch re-delivered rows an earlier one masked")
+    assert(oneFeed.filter(col(ArrowChanges.CommitEpochCol) === f2)
+      .agg(min(col("id")), max(col("id"))).collect()(0) match {
+      case r => r.getLong(0) == 11L && r.getLong(1) == 25L
+    })
+    val oneDiff = ArrowChanges.between(spark, one, f0, f2)
+    assert(oneDiff.filter(col(ArrowChanges.ChangeTypeCol) === "delete")
+      .count() == 25 &&
+      oneDiff.filter(col(ArrowChanges.ChangeTypeCol) === "insert")
+        .count() == 0)
   }
 
   test("OPTIMIZE purges vectors (reads through them, removes the " +

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, ArrowOptimize, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, ArrowOptimize, GraftCatalog, TableLog}
 
 /** The TABLE log: `_graft_metadata` extended with REMOVE events, so
   * DML, logged overwrite/append, and maintenance rewrites each commit
@@ -109,7 +109,7 @@ class ArrowTableLogSpec extends AnyFunSuite {
     val e = ArrowDataSource.commitAppendWithRebase(dir, staleBase,
       Seq(f2.toString)) // stale base: must rebase, not throw
     assert(e == staleBase + 2)
-    val live = ArrowDataSource.liveEntries(root, None).map(_._2).toSet
+    val live = TableLog.read(root).live(None).map(_._2).toSet
     assert(live.exists(_.contains("part-rebase-a")) &&
       live.exists(_.contains("part-rebase-b")),
       "a rebased append lost a file")
@@ -252,7 +252,7 @@ class ArrowTableLogSpec extends AnyFunSuite {
     spark.sql(s"UPDATE graft.arrow.`$dir` SET tag = 'x' " +
       "WHERE id > 90") // ep 2
     val root = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    val stamps = graft.sources.arrow.ArrowDataSource.epochTimestamps(root)
+    val stamps = graft.sources.arrow.TableLog.read(root).stamps
     // an instant BETWEEN epoch 1's and epoch 2's stamps resolves to 1
     // (stamps are strictly monotone by the in-commit adjustment)
     val between = stamps(1L).toString
@@ -449,9 +449,86 @@ class ArrowTableLogSpec extends AnyFunSuite {
       (0 to 499).map(e => f"part-$e%05d.arrow"))
     // commit stamps survive folding end-to-end: the FIRST epoch's
     // stamp is only reachable through 100 chained snapshot folds
-    val stamps = ArrowDataSource.epochTimestamps(root)
+    val stamps = TableLog.read(root).stamps
     assert(stamps.size == epochs,
       s"lost commit stamps in the folds: ${stamps.size}/$epochs")
     assert(stamps.keySet.min == 0L && stamps.keySet.max == 999L)
+  }
+
+  test("compaction does not change the log: TableLog reads equal " +
+      "facts before and after the fold, and vacuum's fold keeps the " +
+      "facts of surviving files while the horizon advances") {
+    val dir = Files.createTempDirectory("tlog_fold").toString
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    // raw placeholder files: this pin is about the log, not the bytes
+    def file(name: String): String = {
+      val f = root.resolve(name)
+      Files.createDirectories(f.getParent)
+      Files.write(f, Array[Byte](1))
+      f.toString
+    }
+    ArrowDataSource.initTableLog(dir) // epoch 0: empty snapshot
+    ArrowDataSource.withPendingTxn(dir, "app", 1L) {
+      ArrowDataSource.withPendingCopies(dir, Seq(("k1", 10L))) {
+        ArrowDataSource.commitTableEpoch(dir, 0L,
+          Seq(file("a.arrow"), file("b.arrow")), Seq.empty)
+      }
+    }
+    ArrowDataSource.commitTableEpoch(dir, 1L, Seq.empty, Seq.empty,
+      dvs = Seq((root.resolve("a.arrow").toString,
+        file("_graft_dv/a1.dv"), 3L)))
+    ArrowDataSource.commitTableEpoch(dir, 2L, Seq(file("c.arrow")),
+      Seq(root.resolve("b.arrow").toString), opKind = Some("update"))
+    ArrowDataSource.commitTableEpoch(dir, 3L, Seq(file("d.arrow")),
+      Seq(root.resolve("c.arrow").toString), neutral = true)
+    ArrowDataSource.withPendingTxn(dir, "app", 2L) {
+      ArrowDataSource.commitTableEpoch(dir, 4L, Seq(file("e.arrow")),
+        Seq.empty)
+    }
+    val before = TableLog.read(root)
+    assert(before.latest == 5L && before.history.exists(_.remove) &&
+      before.history.exists(_.dv.isDefined) && before.stamps.size == 6 &&
+      before.neutral == Set(4L) && before.ops == Map(3L -> "update") &&
+      before.txns == Map("app" -> ((5L, 2L))) &&
+      before.copies == Map("k1" -> ((1L, 10L))),
+      s"fixture lacks a fact kind: $before")
+
+    ArrowDataSource.compactLog(root, before.latest)
+    assert(Files.exists(root.resolve("_graft_metadata/5.compact")))
+    assert(TableLog.read(root) == before,
+      "the compact snapshot reads differently from the manifests")
+
+    // vacuum reclaims the removed b and c, then folds with onlyExisting
+    val reclaimed = ArrowOptimize.vacuum(dir, graceMs = 0L)
+      .map(_.getFileName.toString).toSet
+    assert(reclaimed == Set("b.arrow", "c.arrow"))
+    val after = TableLog.read(root)
+    val surviving = Set("a.arrow", "d.arrow", "e.arrow")
+    assert(after.history ==
+      before.history.filter(en => surviving(en.rel)))
+    assert(after.live(None) == before.live(None))
+    assert(after.dvs(None) == before.dvs(None))
+    assert(after.copy(history = before.history, horizon = 0L) == before,
+      "vacuum's fold changed a header fact")
+    assert(after.horizon == 4L && before.horizon == 0L,
+      "the horizon did not advance past the reclaimed versions")
+  }
+
+  test("a live data file missing from disk fails the read with the " +
+      "file's path and the repair verbs, instead of dropping its rows") {
+    val dir = freshTable()
+    ArrowDataSource.initTableLog(dir)
+    val victim = ArrowDataSource.visibleIpcFiles(dir).head
+    Files.delete(victim)
+    // a row read opens every live file (COUNT(*) alone may be answered
+    // from the footer-stats sidecar without opening one)
+    val e = intercept[Exception] {
+      spark.read.format("arrow").load(dir).collect()
+    }
+    val messages = Iterator.iterate(e: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(String.valueOf(_)).mkString("; ")
+    assert(messages.contains(victim.toString) &&
+      messages.contains("graft.system.fsck") &&
+      messages.contains("graft.system.restore"), messages)
   }
 }

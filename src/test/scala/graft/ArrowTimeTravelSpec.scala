@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 
 /** Epoch time travel over the Arrow streaming sink's commit log: the
   * per-epoch manifests (and the epoch-ATTRIBUTED snapshot lines that
@@ -181,13 +181,14 @@ class ArrowTimeTravelSpec extends AnyFunSuite {
     val f1 = Paths.get(dir, "part-1.arrow")
     Files.write(f1, Array[Byte](1))
     ArrowDataSource.commitEpochManifest(dir, 1L, Seq(f1.toString))
-    val stamps = ArrowDataSource.epochTimestamps(
-      Paths.get(dir).toAbsolutePath.normalize)
+    val stamps = TableLog.read(
+      Paths.get(dir).toAbsolutePath.normalize).stamps
     assert(stamps(1L) == future + 1L,
       s"expected epoch 1 stamped ${future + 1}, got ${stamps(1L)}")
     // resolution at the skewed instant lands on the later epoch
-    assert(ArrowDataSource.epochForTimestamp(
-      Paths.get(dir).toAbsolutePath.normalize, future + 1L) == 1L)
+    assert(TableLog.read(
+      Paths.get(dir).toAbsolutePath.normalize)
+      .epochForTimestamp(future + 1L) == 1L)
   }
 
   test("timestamp travel survives compaction: stamps fold into the " +

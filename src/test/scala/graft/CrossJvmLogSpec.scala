@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.ArrowDataSource
+import graft.sources.arrow.{ArrowDataSource, TableLog}
 
 /** Child-process entry for [[CrossJvmLogSpec]]: commits `n` one-file
   * append epochs to the table at `dir` under the optimistic-concurrency
@@ -32,6 +32,27 @@ object CrossJvmLogRacer {
   }
 }
 
+/** Child-process entry for [[CrossJvmLogSpec]]'s replay-gate race:
+  * commits `n` one-file appends to `dir`, each stamped `#txn` by
+  * writer `app` at version i, with a compaction every 2 epochs so
+  * covered manifests keep vanishing under a concurrent reader. */
+object CrossJvmTxnRacer {
+  def main(args: Array[String]): Unit = {
+    val (dir, app, n) = (args(0), args(1), args(2).toInt)
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    (1 to n).foreach { i =>
+      val f = root.resolve(s"${app}_$i.arrow")
+      Files.write(f, Array[Byte](65, 82, 82, 79, 87, 49))
+      ArrowDataSource.withPendingTxn(dir, app, i.toLong) {
+        ArrowDataSource.commitAppendWithRebase(dir,
+          ArrowDataSource.latestCommittedEpoch(root), Seq(f.toString),
+          compactInterval = 2)
+      }
+    }
+    println(s"RACER_DONE $app")
+  }
+}
+
 /** The optimistic-concurrency claim held only as far as it was tested:
   * ArrowTableLogSpec races 8 writers in ONE JVM, where the filesystem
   * calls share a process. This spec races two PROCESSES on one table —
@@ -50,7 +71,7 @@ class CrossJvmLogSpec extends AnyFunSuite {
     val n = 50 // crosses many compaction intervals: each process's
     // fold SWEEPS covered manifests/.ts markers while the others are
     // mid-read — the window that crashed log reads before
-    // retryVanishedLogRead (NoSuchFileException on a .ts marker,
+    // TableLog.read retried the read (NoSuchFileException on a .ts marker,
     // reproduced 6/6 under this load pre-fix)
 
     val java = Paths.get(System.getProperty("java.home"), "bin", "java")
@@ -127,5 +148,33 @@ class CrossJvmLogSpec extends AnyFunSuite {
     assert(!visible.contains("seed_1.arrow"))
     assert(visible.contains("interloper_1.arrow"),
       "the other process's commit was lost")
+  }
+
+  test("the replay gate never reads low while another JVM's " +
+      "compactions fold the stamped manifests away") {
+    val dir = Files.createTempDirectory("xjvm_txn").toString
+    ArrowDataSource.initTableLog(dir)
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    val n = 60
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
+      .toString
+    val child = new ProcessBuilder(java, "-cp",
+      System.getProperty("java.class.path"), "graft.CrossJvmTxnRacer",
+      dir, "xjvm", n.toString).redirectErrorStream(true).start()
+    // a vanished manifest must be re-read, never skipped: a skipped
+    // #txn stamp reads the gate LOW, and a replayed batch re-applies
+    var seen = 0L
+    var polls = 0
+    while (child.isAlive) {
+      val v = TableLog.read(root).lastTxnVersion("xjvm").getOrElse(0L)
+      assert(v >= seen,
+        s"lastTxnVersion went back from $seen to $v after $polls polls")
+      seen = v
+      polls += 1
+    }
+    val out = new String(child.getInputStream.readAllBytes, "UTF-8")
+    assert(child.waitFor() == 0 && out.contains("RACER_DONE"),
+      s"child JVM failed:\n$out")
+    assert(TableLog.read(root).lastTxnVersion("xjvm").contains(n.toLong))
   }
 }

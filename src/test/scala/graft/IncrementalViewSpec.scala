@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 import graft.streaming.IncrementalView
 
 /** Incremental materialized-view maintenance off the change feed:
@@ -312,7 +312,7 @@ class IncrementalViewSpec extends AnyFunSuite {
       .write.format("arrow").mode("overwrite").save(dir)
     ArrowDataSource.initTableLog(dir)
     val root = Paths.get(dir).toAbsolutePath.normalize
-    assert(ArrowDataSource.lastTxnVersion(root, "app_a").isEmpty)
+    assert(TableLog.read(root).lastTxnVersion("app_a").isEmpty)
     // enough stamped commits to cross the default compaction interval
     for (v <- 1L to 12L) {
       ArrowDataSource.withPendingTxn(dir, "app_a", v) {
@@ -322,24 +322,24 @@ class IncrementalViewSpec extends AnyFunSuite {
     }
     // compaction has folded part of the log; the gate must still see
     // the newest stamp (manifest headers + folded #txn headers)
-    assert(ArrowDataSource.lastTxnVersion(root, "app_a").contains(12L))
-    assert(ArrowDataSource.lastTxnVersion(root, "app_b").isEmpty,
+    assert(TableLog.read(root).lastTxnVersion("app_a").contains(12L))
+    assert(TableLog.read(root).lastTxnVersion("app_b").isEmpty,
       "stamps are per-appId")
     // a second writer's stamps interleave independently
     ArrowDataSource.withPendingTxn(dir, "app_b", 5L) {
       spark.sql(s"INSERT INTO graft.arrow.`$dir` VALUES (990, 'b')")
     }
-    assert(ArrowDataSource.lastTxnVersion(root, "app_a").contains(12L))
-    assert(ArrowDataSource.lastTxnVersion(root, "app_b").contains(5L))
+    assert(TableLog.read(root).lastTxnVersion("app_a").contains(12L))
+    assert(TableLog.read(root).lastTxnVersion("app_b").contains(5L))
     // force a fold past everything and re-check
     ArrowDataSource.compactLog(root,
       ArrowDataSource.latestCommittedEpoch(root))
-    assert(ArrowDataSource.lastTxnVersion(root, "app_a").contains(12L),
+    assert(TableLog.read(root).lastTxnVersion("app_a").contains(12L),
       "compaction dropped the folded txn stamp")
-    assert(ArrowDataSource.lastTxnVersion(root, "app_b").contains(5L))
+    assert(TableLog.read(root).lastTxnVersion("app_b").contains(5L))
     // unrelated commits carry no stamp
     spark.sql(s"INSERT INTO graft.arrow.`$dir` VALUES (991, 'c')")
-    assert(ArrowDataSource.lastTxnVersion(root, "app_a").contains(12L))
+    assert(TableLog.read(root).lastTxnVersion("app_a").contains(12L))
   }
 
   test("a batch whose change rows all carry NULL measures for a group " +
@@ -398,15 +398,15 @@ class IncrementalViewSpec extends AnyFunSuite {
       }
       spark.sql(s"INSERT INTO graft.arrow.`$dir` VALUES (10, 'w')")
     }
-    assert(ArrowDataSource.lastTxnVersion(root, "winner").contains(7L),
+    assert(TableLog.read(root).lastTxnVersion("winner").contains(7L),
       "winner's epoch lost its stamp after a losing registration")
-    assert(ArrowDataSource.lastTxnVersion(root, "loser").isEmpty,
+    assert(TableLog.read(root).lastTxnVersion("loser").isEmpty,
       "loser's stamp leaked onto the winner's epoch — the replay " +
         "gate would skip a batch that was never applied")
     // the registry must be clean again: a fresh registration succeeds
     ArrowDataSource.withPendingTxn(dir, "winner", 8L) {
       spark.sql(s"INSERT INTO graft.arrow.`$dir` VALUES (11, 'w')")
     }
-    assert(ArrowDataSource.lastTxnVersion(root, "winner").contains(8L))
+    assert(TableLog.read(root).lastTxnVersion("winner").contains(8L))
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 
 /** Randomized soundness walk over the metadata-only schema-evolution
   * surface: a seeded sequence of add_column / rename_column /
@@ -255,7 +255,7 @@ class SchemaEvolutionWalkSpec extends AnyFunSuite {
               .toAbsolutePath.normalize
             val (name, _) = tagSnaps.head
             val epoch = ArrowDataSource.tags(root)(name)
-            val horizon = ArrowDataSource.travelHorizon(root)
+            val horizon = TableLog.read(root).horizon
             if (epoch < horizon)
               assertThrows[Exception] {
                 spark.sql(s"CALL graft.system.restore(" +

@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog}
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 
 /** Randomized ACID history check: apply a random sequence of DML
   * operations (DELETE / UPDATE / INSERT / OPTIMIZE / RESTORE) to a
@@ -95,7 +95,7 @@ class TimeTravelPropertySpec extends AnyFunSuite {
     // pre-horizon versions refuse loudly, post-horizon stay bit-exact
     spark.sql(s"CALL graft.system.vacuum(path => '$dir', " +
       "grace_ms => 0)").collect()
-    val horizon = ArrowDataSource.travelHorizon(root)
+    val horizon = TableLog.read(root).horizon
     val head = ArrowDataSource.latestCommittedEpoch(root)
     assert(horizon > 0,
       "the walk's CoW churn left nothing to reclaim — the pre-horizon " +

@@ -2,16 +2,16 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.sources.arrow.ArrowDataSource
+import graft.sources.arrow.{ArrowDataSource, TableLog}
 
 /** Reader-vs-compaction soak (run on demand:
   * `sbt "Test/runMain graft.tools.ReadRace"`). A child process loops
-  * raw log reads — visibleIpcFiles, epochTimestamps, txnStamps,
-  * committedHistory — while the parent commits 120 epochs whose
-  * interval-triggered compactions keep sweeping covered metadata out
-  * from under the reader. Every read must succeed (the
-  * retryVanishedLogRead contract) and every visible set must be a
-  * consistent snapshot (size equals some prefix count of commits). */
+  * raw log reads — visibleIpcFiles and TableLog.read — while the
+  * parent commits 120 epochs whose interval-triggered compactions keep
+  * sweeping covered metadata out from under the reader. Every read
+  * must succeed (TableLog.read's retry contract) and every visible set
+  * must be a consistent snapshot (size equals some prefix count of
+  * commits). */
 object ReadRaceChild {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
@@ -25,9 +25,10 @@ object ReadRaceChild {
       val e = ArrowDataSource.latestCommittedEpoch(root)
       require(n <= e,
         s"inconsistent read: $n visible files at epoch $e")
-      ArrowDataSource.epochTimestamps(root)
-      ArrowDataSource.txnStamps(root)
-      ArrowDataSource.committedHistory(root)
+      val log = TableLog.read(root)
+      require(log.live(None).size <= log.latest,
+        s"inconsistent log: ${log.live(None).size} live files at " +
+          s"epoch ${log.latest}")
       reads += 1
     }
     println(s"READRACE_CHILD reads=$reads")
