@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Hashing is double-hashed Murmur3 over the value's canonical bytes
   * (UTF-8 for strings, 64-bit widening for integrals), shared verbatim
-  * between the write path (InternalRow values) and the planner (filter
+  * between the write path (batch vectors) and the planner (filter
   * literals), so the contract cannot drift.
   */
 object ArrowBloom {
@@ -67,6 +67,19 @@ object ArrowBloom {
     var i = 0
     while (i < NumHashes) {
       setBit(bits, Math.floorMod(h1 + i * h2, NumBits))
+      i += 1
+    }
+  }
+
+  /** Adds the non-null values among the first `n` rows of `v`, one
+    * batch's vector of a [[supported]] column of type `dt`. */
+  def addAll(bits: Array[Long], v: org.apache.arrow.vector.ValueVector,
+      dt: DataType, n: Int): Unit = {
+    val get: Int => Any =
+      if (dt == StringType) ZoneMaps.utf8s(v) else ZoneMaps.longs(v)
+    var i = 0
+    while (i < n) {
+      if (!v.isNull(i)) add(bits, dt, get(i))
       i += 1
     }
   }

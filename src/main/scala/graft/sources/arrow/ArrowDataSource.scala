@@ -2049,6 +2049,19 @@ object ArrowDataSource {
     * the directory's compression choice. */
   val CodecMetaKey = "graft.codec"
 
+  /** The Arrow buffer codec an `option("codec", ...)` names; None
+    * writes uncompressed buffers. */
+  def codecType(codec: Option[String])
+      : Option[org.apache.arrow.vector.compression.CompressionUtil.CodecType] =
+    codec.map(_.toLowerCase).map {
+      case "lz4" =>
+        org.apache.arrow.vector.compression.CompressionUtil.CodecType.LZ4_FRAME
+      case "zstd" =>
+        org.apache.arrow.vector.compression.CompressionUtil.CodecType.ZSTD
+      case other => throw new IllegalArgumentException(
+        s"arrow codec must be lz4 or zstd, got $other")
+    }
+
   /** Name of the per-row file-path metadata column. */
   val FileMetaCol = "_file"
 
@@ -2073,26 +2086,32 @@ object ArrowDataSource {
       CommonsCompressionFactory.INSTANCE)
     try {
       reader.getVectorSchemaRoot // forces footer read
-      val sizes = reader.getRecordBlocks.asScala
-        .map(b => b.getMetadataLength.toLong + b.getBodyLength).toSeq
-      val zm = Option(reader.getMetaData.get(ZoneMaps.MetaKey))
-        .flatMap(ZoneMaps.decode)
-      val rs = Option(reader.getMetaData.get(ZoneMaps.RowStats.MetaKey))
-        .flatMap(ZoneMaps.RowStats.decode)
-      val bk = for {
-        c <- Option(reader.getMetaData.get(GraftBucket.MetaCol))
-        n <- Option(reader.getMetaData.get(GraftBucket.MetaN))
-        i <- Option(reader.getMetaData.get(GraftBucket.MetaId))
-      } yield (c, n.toInt, i.toInt)
-      val blooms = reader.getMetaData.asScala.iterator.collect {
-        case (k, v) if k.startsWith(ArrowBloom.MetaPrefix) =>
-          ArrowBloom.decode(v)
-            .map(bits => k.stripPrefix(ArrowBloom.MetaPrefix) -> bits)
-      }.flatten.toMap
-      val sort = Option(reader.getMetaData.get(GraftSort.MetaCol))
-      val codec = Option(reader.getMetaData.get(CodecMetaKey))
-      FooterInfo(sizes, zm, rs, bk, blooms, sort, codec)
+      parseFooter(reader.getMetaData, reader.getRecordBlocks.asScala.toSeq)
     } finally { reader.close(); ch.close() }
+  }
+
+  /** [[FooterInfo]] from a footer's custom metadata and record blocks —
+    * the parse [[footerInfo]] runs over a file, and the writer runs over
+    * the footer it has just written. */
+  def parseFooter(meta: JMap[String, String],
+      blocks: Seq[org.apache.arrow.vector.ipc.message.ArrowBlock])
+      : FooterInfo = {
+    val sizes = blocks.map(b => b.getMetadataLength.toLong + b.getBodyLength)
+    val zm = Option(meta.get(ZoneMaps.MetaKey)).flatMap(ZoneMaps.decode)
+    val rs = Option(meta.get(ZoneMaps.RowStats.MetaKey))
+      .flatMap(ZoneMaps.RowStats.decode)
+    val bk = for {
+      c <- Option(meta.get(GraftBucket.MetaCol))
+      n <- Option(meta.get(GraftBucket.MetaN))
+      i <- Option(meta.get(GraftBucket.MetaId))
+    } yield (c, n.toInt, i.toInt)
+    val blooms = meta.asScala.iterator.collect {
+      case (k, v) if k.startsWith(ArrowBloom.MetaPrefix) =>
+        ArrowBloom.decode(v)
+          .map(bits => k.stripPrefix(ArrowBloom.MetaPrefix) -> bits)
+    }.flatten.toMap
+    FooterInfo(sizes, zm, rs, bk, blooms,
+      Option(meta.get(GraftSort.MetaCol)), Option(meta.get(CodecMetaKey)))
   }
 
   /** Process-wide count of record batches actually loaded from disk —

@@ -251,7 +251,7 @@ object ArrowDelete {
       info.codec, 8192,
       tc.map(_.partitionId()).getOrElse(0),
       tc.map(_.taskAttemptId()).getOrElse(0L),
-      null, bucketMeta, info.blooms.keys.toSeq.sorted, info.sort)
+      bucketMeta, info.blooms.keys.toSeq.sorted, info.sort)
     try {
       while (reader.next()) {
         val r = reader.get()

@@ -254,7 +254,7 @@ class ArrowDeltaWriter(path: String, writeSchema: StructType,
     TableConstraints.enforcing(
       if (partitionCols.isEmpty)
         new ArrowDataWriter(path, rowSchema, codec, 8192, partitionId,
-          taskId, null, Map.empty, bloomCols)
+          taskId, Map.empty, bloomCols)
       else
         new ArrowPartitionedWriter(path, rowSchema, codec, 8192,
           partitionId, taskId, partitionCols, 64, bloomCols),

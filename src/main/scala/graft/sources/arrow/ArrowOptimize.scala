@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.vector.{FieldVector, ValueVector, VarCharVector, VectorLoader, VectorSchemaRoot, VectorUnloader}
-import org.apache.arrow.vector.compression.CompressionUtil
 import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryEncoder, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
 import org.apache.arrow.vector.ipc.message.IpcOption
@@ -257,12 +256,7 @@ object ArrowOptimize {
         dicts.values.toSeq: _*)
       val writerRoot = VectorSchemaRoot.create(
         new ArrowSchema(outFields.asJava), allocator)
-      val codecType = codec.map(_.toLowerCase).map {
-        case "lz4" => CompressionUtil.CodecType.LZ4_FRAME
-        case "zstd" => CompressionUtil.CodecType.ZSTD
-        case other => throw new IllegalArgumentException(
-          s"arrow codec must be lz4 or zstd, got $other")
-      }
+      val codecType = ArrowDataSource.codecType(codec)
       val metaData = new java.util.HashMap[String, String](
         reader.getMetaData) // zone maps + row stats survive verbatim
       // ...except the codec stamp, which must reflect THIS rewrite's

@@ -351,7 +351,7 @@ class ArrowCoWWriterFactory(path: String, writeSchema: StructType,
     val inner: DataWriter[InternalRow] = TableConstraints.enforcing(
       if (partitionCols.isEmpty)
         new ArrowDataWriter(path, rowSchema, codec, 8192, partitionId,
-          taskId, null, Map.empty, bloomCols, sortCol)
+          taskId, Map.empty, bloomCols, sortCol)
       else
         new ArrowPartitionedWriter(path, rowSchema, codec, 8192,
           partitionId, taskId, partitionCols, 64, bloomCols, sortCol),

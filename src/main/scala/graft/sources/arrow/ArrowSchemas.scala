@@ -11,9 +11,10 @@ import org.apache.spark.sql.types._
   * to hold (Arrow columnar tables, `/root/reference/CMakeLists.txt:103`)
   * plus what the fixtures need (`timestamp`, `list<float>`).
   *
-  * Deliberately self-contained: Spark's own ArrowUtils is private[sql],
-  * and coding against the public Arrow 18 API keeps this source
-  * independent of Spark internals.
+  * Schema conversion stays here: graft's field names (`element`, the
+  * map's entry names), the lossless widenings it serves, and the
+  * defaults a reader can fill. Value writing is Spark's `ArrowWriter`
+  * over the root this schema builds ([[ArrowDataWriter]]).
   */
 object ArrowSchemas {
 

@@ -4,16 +4,16 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.compression.CommonsCompressionFactory
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.ListVector
-import org.apache.arrow.vector.compression.CompressionUtil
+import org.apache.arrow.vector.VectorSchemaRoot
 import org.apache.arrow.vector.dictionary.DictionaryProvider
 import org.apache.arrow.vector.ipc.ArrowFileWriter
 import org.apache.arrow.vector.ipc.message.IpcOption
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.arrow.ArrowWriter
 import org.apache.spark.sql.types._
 
 /** Write path: one Arrow IPC file per task, record batches of
@@ -208,7 +208,7 @@ class ArrowStreamingWriterFactory(path: String, schema: StructType,
           None, transform)
       else if (partitionCols.isEmpty)
         new ArrowDataWriter(path, schema, codec, batchRows, partitionId,
-          taskId, null, Map.empty, bloomCols)
+          taskId, Map.empty, bloomCols)
       else
         new ArrowPartitionedWriter(path, schema, codec, batchRows,
           partitionId, taskId, partitionCols, maxOpenWriters, bloomCols),
@@ -475,7 +475,7 @@ class ArrowWriterFactory(path: String, schema: StructType,
           sortCol, transform)
       case None if partitionCols.isEmpty =>
         new ArrowDataWriter(path, schema, codec, batchRows, partitionId,
-          taskId, null, Map.empty, bloomCols, sortCol)
+          taskId, Map.empty, bloomCols, sortCol)
       case None =>
         new ArrowPartitionedWriter(path, schema, codec, batchRows,
           partitionId, taskId, partitionCols, maxOpenWriters, bloomCols,
@@ -514,7 +514,7 @@ class ArrowBucketedWriter(path: String, schema: StructType,
     var w = writers(id)
     if (w == null) {
       w = new ArrowDataWriter(path, schema, codec, batchRows, partitionId,
-        taskId, null, Map(
+        taskId, Map(
           GraftBucket.MetaCol -> bucketCol,
           GraftBucket.MetaN -> numBuckets.toString,
           GraftBucket.MetaId -> id.toString), bloomCols, sortCol)
@@ -621,14 +621,17 @@ class ArrowPartitionedWriter(path: String, schema: StructType,
   private val dataOrdinals: Array[Int] = schema.fields.indices
     .filterNot(partOrdinals.contains(_)).toArray
   private val dataSchema = StructType(dataOrdinals.map(schema.fields(_)))
+  // the file's columns of each incoming row, one reused view
+  private val dataRow =
+    ProjectingInternalRow(dataSchema, dataOrdinals.toIndexedSeq)
   private val transformOrd: Int =
     transform.map(t => schema.fieldIndex(t.srcCol)).getOrElse(-1)
 
   private val writers =
     scala.collection.mutable.LinkedHashMap.empty[String, ArrowDataWriter]
   // sealed-but-unrenamed temp files of evicted sub-writers
-  private val pendingRenames =
-    scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
+  private val evicted =
+    scala.collection.mutable.ArrayBuffer.empty[ArrowDataWriter.Sealed]
 
   private def partValue(row: InternalRow, ord: Int): String = {
     if (row.isNullAt(ord)) return ArrowDataSource.NullPartValue
@@ -665,70 +668,77 @@ class ArrowPartitionedWriter(path: String, schema: StructType,
         if (writers.size >= maxOpenWriters) {
           val (lruKey, lru) = writers.head
           writers.remove(lruKey)
-          pendingRenames += lru.seal()
+          evicted += lru.seal()
         }
         val dir = Paths.get(path, rel)
         Files.createDirectories(dir)
         val fresh = new ArrowDataWriter(dir.toString, dataSchema, codec,
-          batchRows, partitionId, taskId, dataOrdinals, Map.empty,
-          bloomCols, sortCol)
+          batchRows, partitionId, taskId, Map.empty, bloomCols, sortCol)
         writers.put(rel, fresh)
         fresh
     }
-    w.write(row)
+    dataRow.project(row)
+    w.write(dataRow)
   }
 
   override def commit(): WriterCommitMessage = {
     val subs = writers.values.toSeq
       .map(_.commit()).collect { case m: ArrowCommitMessage => m }
-    val evicted = pendingRenames.map { case (tmp, fin) =>
-      Files.move(tmp, fin, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      fin.toString
-    }
-    val evictedFooters = evicted.map(f => FooterIndexFile.encodeInfo(
-      ArrowDataSource.footerInfo(Paths.get(f))))
-    ArrowCommitMessage(evicted.toSeq ++ subs.flatMap(_.files),
-      evictedFooters.toSeq ++ subs.flatMap(_.footers))
+    ArrowCommitMessage(evicted.map(_.publish()).toSeq ++
+      subs.flatMap(_.files), evicted.map(_.footer).toSeq ++
+      subs.flatMap(_.footers))
   }
 
   override def abort(): Unit = {
     writers.values.foreach(_.abort())
-    pendingRenames.foreach { case (tmp, fin) =>
-      Files.deleteIfExists(tmp); Files.deleteIfExists(fin)
+    evicted.foreach { s =>
+      Files.deleteIfExists(s.tmp); Files.deleteIfExists(s.file)
     }
   }
 
   override def close(): Unit = writers.values.foreach(_.close())
 }
 
+/** One task's Arrow IPC file. Rows go into the vectors through Spark's
+  * [[ArrowWriter]]; every `BatchRows` rows the batch is written out,
+  * and its footer stats are computed once from the filled vectors:
+  * zone maps ([[ZoneMaps.range]]), row and null counts, blooms
+  * ([[ArrowBloom.addAll]]) and the file-wide sort check
+  * ([[GraftSort.check]]). */
 class ArrowDataWriter(path: String, schema: StructType,
     codec: Option[String], BatchRows: Int, partitionId: Int, taskId: Long,
-    colMapOrNull: Array[Int] = null,
     extraMeta: Map[String, String] = Map.empty,
     bloomCols: Seq[String] = Seq.empty,
     sortCol: Option[String] = None)
     extends DataWriter[InternalRow] {
 
-  // File field i reads incoming-row ordinal colMap(i) — identity for
-  // flat writes; the data-column ordinals for partitioned writes (the
-  // partition columns are carried by the directory, not the file).
-  private val colMap: Array[Int] =
-    if (colMapOrNull != null) colMapOrNull else schema.fields.indices.toArray
-
   // Validate options and build the in-memory root BEFORE touching the
   // filesystem — a constructor failure must not leave a partial file
   // (DataWriter.abort never runs for writers that failed to construct).
-  private val codecType: Option[CompressionUtil.CodecType] =
-    codec.map(_.toLowerCase).map {
-      case "lz4" => CompressionUtil.CodecType.LZ4_FRAME
-      case "zstd" => CompressionUtil.CodecType.ZSTD
-      case other => throw new IllegalArgumentException(
-        s"arrow codec must be lz4 or zstd, got $other")
-    }
+  private val codecType = ArrowDataSource.codecType(codec)
+  private val fields = schema.fields
+  // The sorted-layout stamp is VERIFIED, not trusted: rows must arrive
+  // ascending NULLS FIRST on sortCol across the WHOLE file, else no
+  // stamp lands and readers plan as unsorted — a wrong upstream sort
+  // can cost the optimization, never correctness.
+  private val sortIdx: Int = sortCol match {
+    case None => -1
+    case Some(c) =>
+      require(schema.fieldNames.contains(c),
+        s"arrow sortBy column $c is not in the written schema " +
+          s"${schema.fieldNames.mkString("[", ",", "]")} (partition " +
+          "columns live in directories and cannot carry a sort stamp)")
+      val i = schema.fieldIndex(c)
+      require(GraftSort.supported(fields(i).dataType),
+        s"arrow sortBy column $c has unsupported type " +
+          s"${fields(i).dataType.simpleString}")
+      i
+  }
   private val allocator = ArrowDataSource.allocator
     .newChildAllocator(s"arrow-writer-$partitionId-$taskId", 0, Long.MaxValue)
   private val root = VectorSchemaRoot.create(
     ArrowSchemas.toArrowSchema(schema), allocator)
+  private val rows = ArrowWriter.create(root)
   // Write under a temp name invisible to the reader (listIpcFiles only
   // matches *.arrow) and atomically rename at commit: a concurrent
   // reader — the micro-batch streaming source composing with the
@@ -741,9 +751,9 @@ class ArrowDataWriter(path: String, schema: StructType,
   private val channel: FileChannel = FileChannel.open(tmpFile,
     StandardOpenOption.CREATE, StandardOpenOption.WRITE,
     StandardOpenOption.TRUNCATE_EXISTING)
-  // Zone-map stats land in this map; ArrowFileWriter keeps the
-  // REFERENCE and serializes it into the footer at end(), so filling it
-  // during batch writes (footers are written last) is sound.
+  // Footer stats land in this map; ArrowFileWriter keeps the REFERENCE
+  // and serializes it into the footer at end(), so filling it after the
+  // batch writes (footers are written last) is sound.
   private val metaData = new java.util.HashMap[String, String]()
   extraMeta.foreach { case (k, v) => metaData.put(k, v) }
   codec.foreach(c =>
@@ -759,443 +769,101 @@ class ArrowDataWriter(path: String, schema: StructType,
   }
   writer.start()
 
-  private val fields = schema.fields
   private var rowIdx = 0
 
-  // ---- zone-map accumulation (see ZoneMaps) ------------------------
-  // Per tracked column: running min/max over the CURRENT batch's
-  // non-null values. NaN poisons the batch's stat (recorded as None) so
-  // pruning never reasons over a non-total order.
+  // ---- footer stats, one entry per written batch -------------------
+  // Zone maps: min/max per trackable column (see ZoneMaps).
   private val zmCols: Array[Int] = fields.indices
     .filter(i => ZoneMaps.trackable(fields(i).name, fields(i).dataType))
     .toArray
-  private val zmKind: Array[Int] =
-    zmCols.map(i => ZoneMaps.kindOf(fields(i).dataType))
-  private val zmLongMin = Array.fill(zmCols.length)(Long.MaxValue)
-  private val zmLongMax = Array.fill(zmCols.length)(Long.MinValue)
-  private val zmDblMin = Array.fill(zmCols.length)(Double.MaxValue)
-  private val zmDblMax = Array.fill(zmCols.length)(-Double.MaxValue)
-  // string bounds in UTF8String (binary) order; row buffers are
-  // reused, so stored extrema must be CLONES
-  private val zmStrMin =
-    new Array[org.apache.spark.unsafe.types.UTF8String](zmCols.length)
-  private val zmStrMax =
-    new Array[org.apache.spark.unsafe.types.UTF8String](zmCols.length)
-  // decimal extrema as exact java BigDecimals (scale fixed per column)
-  private val zmDecMin = new Array[java.math.BigDecimal](zmCols.length)
-  private val zmDecMax = new Array[java.math.BigDecimal](zmCols.length)
-  private val zmSeen = Array.fill(zmCols.length)(false)
-  private val zmPoisoned = Array.fill(zmCols.length)(false)
   private val zmBatches =
     scala.collection.mutable.ArrayBuffer.empty[Seq[ZoneMaps.Range]]
-
-  private def zmUpdate(row: InternalRow): Unit = {
-    var j = 0
-    while (j < zmCols.length) {
-      val col = zmCols(j)
-      val ord = colMap(col)
-      if (!row.isNullAt(ord)) {
-        if (zmKind(j) == ZoneMaps.KindLong) {
-          val v = fields(col).dataType match {
-            case ByteType => row.getByte(ord).toLong
-            case ShortType => row.getShort(ord).toLong
-            case IntegerType | DateType => row.getInt(ord).toLong
-            case _ => row.getLong(ord)
-          }
-          if (v < zmLongMin(j)) zmLongMin(j) = v
-          if (v > zmLongMax(j)) zmLongMax(j) = v
-          zmSeen(j) = true
-        } else if (zmKind(j) == ZoneMaps.KindString) {
-          val v = row.getUTF8String(ord)
-          if (zmStrMin(j) == null || v.compareTo(zmStrMin(j)) < 0)
-            zmStrMin(j) = v.clone()
-          if (zmStrMax(j) == null || v.compareTo(zmStrMax(j)) > 0)
-            zmStrMax(j) = v.clone()
-          zmSeen(j) = true
-        } else if (zmKind(j) == ZoneMaps.KindDecimal) {
-          val dt = fields(col).dataType
-            .asInstanceOf[org.apache.spark.sql.types.DecimalType]
-          val v = row.getDecimal(ord, dt.precision, dt.scale)
-            .toJavaBigDecimal
-          if (zmDecMin(j) == null || v.compareTo(zmDecMin(j)) < 0)
-            zmDecMin(j) = v
-          if (zmDecMax(j) == null || v.compareTo(zmDecMax(j)) > 0)
-            zmDecMax(j) = v
-          zmSeen(j) = true
-        } else {
-          val v = fields(col).dataType match {
-            case FloatType => row.getFloat(ord).toDouble
-            case _ => row.getDouble(ord)
-          }
-          if (java.lang.Double.isNaN(v)) zmPoisoned(j) = true
-          else {
-            if (v < zmDblMin(j)) zmDblMin(j) = v
-            if (v > zmDblMax(j)) zmDblMax(j) = v
-            zmSeen(j) = true
-          }
-        }
-      }
-      j += 1
-    }
-  }
-
-  // ---- row/null-count accumulation (see ZoneMaps.RowStats) ---------
-  // Per-batch row counts + per-column null counts, for COUNT aggregate
-  // pushdown. Null counting is type-agnostic, so every column with an
-  // encodable name is tracked, not just the zone-mapped ones.
+  // Row and null counts, for COUNT aggregate pushdown (see
+  // ZoneMaps.RowStats). Null counting is type-agnostic, so every column
+  // with an encodable name is tracked, not just the zone-mapped ones.
   private val rsCols: Array[Int] = fields.indices
     .filter(i => ZoneMaps.RowStats.trackable(fields(i).name)).toArray
-  private val rsNulls = Array.fill(rsCols.length)(0L)
   private val rsBatches =
     scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-
-  private def rsUpdate(row: InternalRow): Unit = {
-    var j = 0
-    while (j < rsCols.length) {
-      if (row.isNullAt(colMap(rsCols(j)))) rsNulls(j) += 1
-      j += 1
-    }
-  }
-
-  private def rsSealBatch(batchRowCount: Long): Unit = {
-    rsBatches += ((batchRowCount, rsNulls.toSeq))
-    java.util.Arrays.fill(rsNulls, 0L)
-  }
-  // ------------------------------------------------------------------
-
-  // ---- per-FILE bloom filters (see ArrowBloom) ---------------------
-  // Opt-in point-lookup pruning for high-cardinality columns: one
-  // 64 KiB bloom per configured column per file, sealed into the
-  // footer. Unknown/unsupported column names are silently skipped —
-  // blooms are an optimization surface.
+  // Per-FILE blooms for opt-in point-lookup pruning (see ArrowBloom):
+  // one 64 KiB bloom per configured column. Unknown or unsupported
+  // column names are skipped — blooms are an optimization surface.
   private val bloomColIdx: Array[Int] = bloomCols
     .filter(schema.fieldNames.contains(_))
     .map(schema.fieldIndex)
-    .filter(i => ArrowBloom.supported(schema.fields(i).dataType))
+    .filter(i => ArrowBloom.supported(fields(i).dataType))
     .toArray
   private val bloomBits: Array[Array[Long]] =
     bloomColIdx.map(_ => ArrowBloom.emptyBits())
-
-  private def bloomUpdate(row: InternalRow): Unit = {
-    var j = 0
-    while (j < bloomColIdx.length) {
-      val i = bloomColIdx(j)
-      val ord = colMap(i)
-      if (!row.isNullAt(ord)) {
-        val dt = schema.fields(i).dataType
-        val v: Any = dt match {
-          case StringType => row.getUTF8String(ord)
-          case LongType => row.getLong(ord)
-          case IntegerType => row.getInt(ord)
-          case ShortType => row.getShort(ord)
-          case _ => row.getByte(ord)
-        }
-        ArrowBloom.add(bloomBits(j), dt, v)
-      }
-      j += 1
-    }
-  }
-  // ------------------------------------------------------------------
-
-  // ---- sorted-layout verification (see GraftSort) ------------------
-  // The writer VERIFIES the declared order instead of trusting it:
-  // rows must arrive ascending NULLS FIRST on sortCol across the WHOLE
-  // file, else no stamp lands and readers plan as unsorted — a wrong
-  // upstream sort can cost the optimization, never correctness.
-  private val sortIdx: Int = sortCol match {
-    case None => -1
-    case Some(c) =>
-      require(schema.fieldNames.contains(c),
-        s"arrow sortBy column $c is not in the written schema " +
-          s"${schema.fieldNames.mkString("[", ",", "]")} (partition " +
-          "columns live in directories and cannot carry a sort stamp)")
-      val i = schema.fieldIndex(c)
-      require(GraftSort.supported(schema.fields(i).dataType),
-        s"arrow sortBy column $c has unsupported type " +
-          s"${schema.fields(i).dataType.simpleString}")
-      i
-  }
-  private var sortOk = sortIdx >= 0
-  private var sortSeenNonNull = false
-  private var sortLastLong = Long.MinValue
-  private var sortLastStr: org.apache.spark.unsafe.types.UTF8String = null
-
-  private def sortUpdate(row: InternalRow): Unit =
-    if (sortOk) {
-      val ord = colMap(sortIdx)
-      if (row.isNullAt(ord)) {
-        if (sortSeenNonNull) sortOk = false // NULLS FIRST violated
-      } else {
-        fields(sortIdx).dataType match {
-          case StringType =>
-            val v = row.getUTF8String(ord)
-            if (sortSeenNonNull && sortLastStr.compareTo(v) > 0)
-              sortOk = false
-            else sortLastStr = v.clone() // row buffers are reused
-          case dt =>
-            val v = dt match {
-              case ByteType => row.getByte(ord).toLong
-              case ShortType => row.getShort(ord).toLong
-              case IntegerType | DateType => row.getInt(ord).toLong
-              case _ => row.getLong(ord)
-            }
-            if (sortSeenNonNull && sortLastLong > v) sortOk = false
-            else sortLastLong = v
-        }
-        sortSeenNonNull = true
-      }
-    }
-  // ------------------------------------------------------------------
-
-  private def zmSealBatch(): Unit = {
-    zmBatches += zmCols.indices.map { j =>
-      if (!zmSeen(j) || zmPoisoned(j)) None
-      else if (zmKind(j) == ZoneMaps.KindLong)
-        Some((zmLongMin(j).toString, zmLongMax(j).toString))
-      else if (zmKind(j) == ZoneMaps.KindString) {
-        // long extrema are not recorded: skipping stays exact without
-        // prefix-truncation successor arithmetic, and the columns
-        // string skipping serves (ids, categories) are short
-        if (zmStrMin(j).numBytes > ZoneMaps.MaxStringStat ||
-            zmStrMax(j).numBytes > ZoneMaps.MaxStringStat) None
-        else Some((ZoneMaps.escapeStat(zmStrMin(j).toString),
-          ZoneMaps.escapeStat(zmStrMax(j).toString)))
-      } else if (zmKind(j) == ZoneMaps.KindDecimal)
-        // toPlainString: no exponent form, so the read side's
-        // BigDecimal(stat) comparison is exact at any magnitude
-        Some((zmDecMin(j).toPlainString, zmDecMax(j).toPlainString))
-      else
-        Some((zmDblMin(j).toString, zmDblMax(j).toString))
-    }
-    java.util.Arrays.fill(zmLongMin, Long.MaxValue)
-    java.util.Arrays.fill(zmLongMax, Long.MinValue)
-    java.util.Arrays.fill(zmDblMin, Double.MaxValue)
-    java.util.Arrays.fill(zmDblMax, -Double.MaxValue)
-    java.util.Arrays.fill(
-      zmStrMin.asInstanceOf[Array[Object]], null)
-    java.util.Arrays.fill(
-      zmStrMax.asInstanceOf[Array[Object]], null)
-    java.util.Arrays.fill(
-      zmDecMin.asInstanceOf[Array[Object]], null)
-    java.util.Arrays.fill(
-      zmDecMax.asInstanceOf[Array[Object]], null)
-    java.util.Arrays.fill(zmSeen, false)
-    java.util.Arrays.fill(zmPoisoned, false)
-  }
-  // ------------------------------------------------------------------
+  private var sortCheck = GraftSort.Check()
 
   override def write(row: InternalRow): Unit = {
-    var i = 0
-    while (i < fields.length) {
-      writeValue(root.getVector(i), fields(i).dataType, row, colMap(i),
-        rowIdx)
-      i += 1
-    }
-    zmUpdate(row)
-    rsUpdate(row)
-    bloomUpdate(row)
-    if (sortIdx >= 0) sortUpdate(row)
+    rows.write(row)
     rowIdx += 1
     if (rowIdx >= BatchRows) flush()
   }
 
-  private def writeValue(vector: FieldVector, dt: DataType, row: InternalRow,
-      col: Int, idx: Int): Unit = {
-    if (row.isNullAt(col)) {
-      vector match {
-        case v: BaseFixedWidthVector => v.setNull(idx)
-        case v: BaseVariableWidthVector => v.setNull(idx)
-        case v: ListVector => v.setNull(idx)
-        case v: complex.StructVector => v.setNull(idx)
-        case v => throw new UnsupportedOperationException(s"null for $v")
-      }
-      return
-    }
-    (vector, dt) match {
-      case (v: BigIntVector, LongType) => v.setSafe(idx, row.getLong(col))
-      case (v: IntVector, IntegerType) => v.setSafe(idx, row.getInt(col))
-      case (v: SmallIntVector, ShortType) => v.setSafe(idx, row.getShort(col))
-      case (v: TinyIntVector, ByteType) => v.setSafe(idx, row.getByte(col))
-      case (v: Float8Vector, DoubleType) => v.setSafe(idx, row.getDouble(col))
-      case (v: Float4Vector, FloatType) => v.setSafe(idx, row.getFloat(col))
-      case (v: BitVector, BooleanType) =>
-        v.setSafe(idx, if (row.getBoolean(col)) 1 else 0)
-      case (v: VarCharVector, StringType) =>
-        v.setSafe(idx, row.getUTF8String(col).getBytes)
-      case (v: VarBinaryVector, BinaryType) =>
-        v.setSafe(idx, row.getBinary(col))
-      case (v: TimeStampMicroTZVector, TimestampType) =>
-        v.setSafe(idx, row.getLong(col))
-      case (v: TimeStampMicroVector, TimestampNTZType) =>
-        v.setSafe(idx, row.getLong(col))
-      case (v: DateDayVector, DateType) => v.setSafe(idx, row.getInt(col))
-      case (v: DecimalVector, d: org.apache.spark.sql.types.DecimalType) =>
-        v.setSafe(idx,
-          row.getDecimal(col, d.precision, d.scale).toJavaBigDecimal)
-      case (v: complex.MapVector, MapType(kt, vt, _)) =>
-        writeMap(v, kt, vt, row.getMap(col), idx)
-      case (v: complex.StructVector, st: StructType) =>
-        writeStruct(v, st, row.getStruct(col, st.size), idx)
-      case (v: ListVector, ArrayType(elem, _)) =>
-        writeList(v, elem, row.getArray(col), idx)
-      case (v, t) => throw new UnsupportedOperationException(
-        s"graft arrow writer: $t into ${v.getClass.getSimpleName}")
-    }
-  }
-
-  /** Nested struct column (the typed-metadata shape a multimodal
-    * corpus carries next to its binary payloads): Arrow's struct
-    * layout is just the child vectors plus a validity bitmap, so the
-    * write recurses [[writeValue]] into each child at the same row
-    * index — any supported type (scalars, lists, maps, deeper structs)
-    * nests for free. */
-  private def writeStruct(v: complex.StructVector, st: StructType,
-      s: InternalRow, idx: Int): Unit = {
-    v.setIndexDefined(idx)
-    var j = 0
-    while (j < st.size) {
-      writeValue(v.getChildByOrdinal(j).asInstanceOf[FieldVector],
-        st.fields(j).dataType, s, j, idx)
-      j += 1
-    }
-  }
-
-  /** Arrow canonical map layout (map<entries: struct<key,value>>, null
-    * keys forbidden) via the UnionMapWriter protocol — the
-    * `events.props`-shaped column a pipeline otherwise has to
-    * pre-flatten before an Arrow write. */
-  private def writeMap(v: complex.MapVector, kt: DataType, vt: DataType,
-      m: org.apache.spark.sql.catalyst.util.MapData, idx: Int): Unit = {
-    val w = v.getWriter
-    w.setPosition(idx)
-    w.startMap()
-    val keys = m.keyArray()
-    val vals = m.valueArray()
-    var j = 0
-    val n = m.numElements()
-    while (j < n) {
-      w.startEntry()
-      writeMapScalar(w.key(), kt, keys, j)
-      writeMapScalar(w.value(), vt, vals, j)
-      w.endEntry()
-      j += 1
-    }
-    w.endMap()
-  }
-
-  private def writeMapScalar(
-      w: org.apache.arrow.vector.complex.writer.BaseWriter.MapWriter,
-      dt: DataType,
-      arr: org.apache.spark.sql.catalyst.util.ArrayData, j: Int): Unit =
-    dt match {
-      case LongType =>
-        if (arr.isNullAt(j)) w.bigInt().writeNull()
-        else w.bigInt().writeBigInt(arr.getLong(j))
-      case IntegerType =>
-        if (arr.isNullAt(j)) w.integer().writeNull()
-        else w.integer().writeInt(arr.getInt(j))
-      case DoubleType =>
-        if (arr.isNullAt(j)) w.float8().writeNull()
-        else w.float8().writeFloat8(arr.getDouble(j))
-      case BooleanType =>
-        if (arr.isNullAt(j)) w.bit().writeNull()
-        else w.bit().writeBit(if (arr.getBoolean(j)) 1 else 0)
-      case StringType =>
-        if (arr.isNullAt(j)) w.varChar().writeNull()
-        else {
-          val bytes = arr.getUTF8String(j).getBytes
-          val buf = allocator.buffer(bytes.length)
-          try {
-            buf.writeBytes(bytes)
-            w.varChar().writeVarChar(0, bytes.length, buf)
-          } finally buf.close()
-        }
-      case other => throw new UnsupportedOperationException(
-        s"graft arrow writer: map entry type $other")
-    }
-
-  private def writeList(v: ListVector, elem: DataType,
-      arr: org.apache.spark.sql.catalyst.util.ArrayData, idx: Int): Unit = {
-    val w = v.getWriter
-    w.setPosition(idx)
-    w.startList()
-    var j = 0
-    val n = arr.numElements()
-    while (j < n) {
-      elem match {
-        case FloatType => w.float4().writeFloat4(arr.getFloat(j))
-        case DoubleType => w.float8().writeFloat8(arr.getDouble(j))
-        case LongType => w.bigInt().writeBigInt(arr.getLong(j))
-        case IntegerType => w.integer().writeInt(arr.getInt(j))
-        case StringType =>
-          val bytes = arr.getUTF8String(j).getBytes
-          val buf = allocator.buffer(bytes.length)
-          try {
-            buf.writeBytes(bytes)
-            w.varChar().writeVarChar(0, bytes.length, buf)
-          } finally buf.close()
-        case other => throw new UnsupportedOperationException(
-          s"graft arrow writer: list<$other>")
-      }
-      j += 1
-    }
-    w.endList()
-  }
-
   private def flush(): Unit = {
     if (rowIdx > 0) {
-      root.setRowCount(rowIdx)
+      rows.finish()
       writer.writeBatch()
-      zmSealBatch()
-      rsSealBatch(rowIdx.toLong)
-      root.allocateNew() // reset vectors for the next batch
+      def vec(i: Int) = root.getVector(i)
+      zmBatches += zmCols.toSeq.map(i =>
+        ZoneMaps.range(vec(i), fields(i).dataType, rowIdx))
+      rsBatches += ((rowIdx.toLong,
+        rsCols.toSeq.map(i => vec(i).getNullCount.toLong)))
+      bloomColIdx.zip(bloomBits).foreach { case (i, bits) =>
+        ArrowBloom.addAll(bits, vec(i), fields(i).dataType, rowIdx)
+      }
+      if (sortIdx >= 0) sortCheck = GraftSort.check(vec(sortIdx),
+        fields(sortIdx).dataType, rowIdx, sortCheck)
+      rows.reset()
       rowIdx = 0
     }
   }
 
-  private var sealed_ = false
+  private var sealed_ : Option[ArrowDataWriter.Sealed] = None
 
   /** Finish the on-disk temp file (footer included) and release every
     * buffer — but do NOT rename it visible. The rename stays with TASK
     * commit, so an LRU-evicted sub-writer of [[ArrowPartitionedWriter]]
     * can free its memory mid-task without a crashed task ever leaving
-    * a reader-visible file. Returns (temp, final) for the deferred
-    * rename. */
-  def seal(): (Path, Path) = {
-    if (!sealed_) {
-      flush()
-      if (zmCols.nonEmpty && zmBatches.nonEmpty) {
-        metaData.put(ZoneMaps.MetaKey,
-          ZoneMaps.encode(zmCols.map(fields(_).name).toSeq, zmBatches.toSeq))
-      }
-      if (rsBatches.nonEmpty) {
-        metaData.put(ZoneMaps.RowStats.MetaKey,
-          ZoneMaps.RowStats.encode(rsCols.map(fields(_).name).toSeq,
-            rsBatches.toSeq))
-      }
-      bloomColIdx.zipWithIndex.foreach { case (i, j) =>
-        metaData.put(ArrowBloom.MetaPrefix + fields(i).name,
-          ArrowBloom.encode(bloomBits(j)))
-      }
-      if (sortIdx >= 0 && sortOk)
-        metaData.put(GraftSort.MetaCol, fields(sortIdx).name)
-      writer.end(); writer.close(); channel.close()
-      root.close(); allocator.close()
-      sealed_ = true
+    * a reader-visible file. */
+  def seal(): ArrowDataWriter.Sealed = sealed_.getOrElse {
+    flush()
+    if (zmCols.nonEmpty && zmBatches.nonEmpty) {
+      metaData.put(ZoneMaps.MetaKey,
+        ZoneMaps.encode(zmCols.map(fields(_).name).toSeq, zmBatches.toSeq))
     }
-    (tmpFile, file)
+    if (rsBatches.nonEmpty) {
+      metaData.put(ZoneMaps.RowStats.MetaKey,
+        ZoneMaps.RowStats.encode(rsCols.map(fields(_).name).toSeq,
+          rsBatches.toSeq))
+    }
+    bloomColIdx.zip(bloomBits).foreach { case (i, bits) =>
+      metaData.put(ArrowBloom.MetaPrefix + fields(i).name,
+        ArrowBloom.encode(bits))
+    }
+    if (sortIdx >= 0 && sortCheck.ok)
+      metaData.put(GraftSort.MetaCol, fields(sortIdx).name)
+    writer.end()
+    // the footer just written, parsed as a reader would parse it
+    val footer = FooterIndexFile.encodeInfo(ArrowDataSource.parseFooter(
+      metaData, writer.getRecordBlocks.asScala.toSeq))
+    writer.close(); channel.close()
+    root.close(); allocator.close()
+    val s = ArrowDataWriter.Sealed(tmpFile, file, footer)
+    sealed_ = Some(s)
+    s
   }
 
   override def commit(): WriterCommitMessage = {
-    seal()
-    Files.move(tmpFile, file,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ArrowCommitMessage(Seq(file.toString), Seq(
-      FooterIndexFile.encodeInfo(ArrowDataSource.footerInfo(file))))
+    val s = seal()
+    ArrowCommitMessage(Seq(s.publish()), Seq(s.footer))
   }
 
   override def abort(): Unit = {
-    if (!sealed_) {
+    if (sealed_.isEmpty) {
       try { writer.close(); channel.close(); root.close(); allocator.close() }
       catch { case _: Throwable => () }
     }
@@ -1204,4 +872,16 @@ class ArrowDataWriter(path: String, schema: StructType,
   }
 
   override def close(): Unit = ()
+}
+
+object ArrowDataWriter {
+  /** A finished temp file, its final name, and its
+    * [[FooterIndexFile.encodeInfo]] stats line. */
+  final case class Sealed(tmp: Path, file: Path, footer: String) {
+    /** Rename the file visible; returns its path. */
+    def publish(): String = {
+      Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      file.toString
+    }
+  }
 }

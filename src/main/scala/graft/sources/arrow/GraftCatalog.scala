@@ -84,6 +84,41 @@ object GraftSort {
          TimestampType | TimestampNTZType | StringType => true
     case _ => false
   }
+
+  /** The file-wide order check between batches: `ok` until a row breaks
+    * ascending NULLS FIRST; `last` is the last key seen (a
+    * `java.lang.Long`, or a copied [[UTF8String]]), null until the
+    * first non-null row. */
+  final case class Check(ok: Boolean = true, last: Any = null)
+
+  /** The check after the first `n` rows of `v`, one batch's vector of
+    * the sort column (of a [[supported]] type `dt`). */
+  def check(v: org.apache.arrow.vector.ValueVector, dt: DataType, n: Int,
+      prev: Check): Check =
+    if (!prev.ok) prev
+    else {
+      val str = dt == StringType
+      val get: Int => Any = if (str) ZoneMaps.utf8s(v) else ZoneMaps.longs(v)
+      var last = prev.last
+      var i = 0
+      while (i < n) {
+        if (v.isNull(i)) { if (last != null) return Check(ok = false) }
+        else {
+          val x = get(i)
+          if (last != null && (if (str) last.asInstanceOf[UTF8String]
+              .compareTo(x.asInstanceOf[UTF8String]) > 0
+              else last.asInstanceOf[Long] > x.asInstanceOf[Long]))
+            return Check(ok = false)
+          last = x
+        }
+        i += 1
+      }
+      // a string key points into the batch's reused buffers: carry a copy
+      Check(last = last match {
+        case s: UTF8String => s.clone()
+        case k => k
+      })
+    }
 }
 
 /** `bucket(numBuckets, col)` as a Spark V2 function — what

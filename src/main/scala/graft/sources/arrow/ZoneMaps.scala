@@ -1,7 +1,9 @@
 package graft.sources.arrow
 
+import org.apache.arrow.vector.{BaseIntVector, DateDayVector, DecimalVector, Float4Vector, Float8Vector, TimeStampVector, ValueVector, VarCharVector}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Batch-level zone maps for the Arrow IPC source: per-record-batch
   * min/max of every numeric/temporal column, written into the IPC
@@ -128,6 +130,104 @@ object ZoneMaps {
       case Some((mn, mx)) => s"$mn:$mx"
       case None => ""
     }.mkString(";")).mkString("\n")
+  }
+
+  /** One batch's stat for a trackable column of type `dt`: min and max
+    * of the non-null values among the first `n` rows of its vector.
+    * None when every value is null, when a NaN poisons a fractional
+    * column (pruning never reasons over a non-total order), or when a
+    * string bound is longer than [[MaxStringStat]]. */
+  def range(v: ValueVector, dt: DataType, n: Int): Range = kindOf(dt) match {
+    case KindLong =>
+      val get = longs(v)
+      var mn = Long.MaxValue
+      var mx = Long.MinValue
+      var seen = false
+      var i = 0
+      while (i < n) {
+        if (!v.isNull(i)) {
+          val x = get(i)
+          if (x < mn) mn = x
+          if (x > mx) mx = x
+          seen = true
+        }
+        i += 1
+      }
+      if (seen) Some((mn.toString, mx.toString)) else None
+    case KindDouble =>
+      val get: Int => Double = v match {
+        case f: Float4Vector => i => f.get(i).toDouble
+        case d: Float8Vector => d.get
+      }
+      var mn = Double.MaxValue
+      var mx = -Double.MaxValue
+      var seen = false
+      var i = 0
+      while (i < n) {
+        if (!v.isNull(i)) {
+          val x = get(i)
+          if (java.lang.Double.isNaN(x)) return None
+          if (x < mn) mn = x
+          if (x > mx) mx = x
+          seen = true
+        }
+        i += 1
+      }
+      if (seen) Some((mn.toString, mx.toString)) else None
+    case KindString =>
+      val get = utf8s(v)
+      var mn: UTF8String = null
+      var mx: UTF8String = null
+      var i = 0
+      while (i < n) {
+        if (!v.isNull(i)) {
+          val x = get(i)
+          if (mn == null || x.compareTo(mn) < 0) mn = x
+          if (mx == null || x.compareTo(mx) > 0) mx = x
+        }
+        i += 1
+      }
+      // long extrema are not recorded: skipping stays exact without
+      // prefix-truncation successor arithmetic, and the columns string
+      // skipping serves (ids, categories) are short
+      if (mn == null || mn.numBytes > MaxStringStat ||
+          mx.numBytes > MaxStringStat) None
+      else Some((escapeStat(mn.toString), escapeStat(mx.toString)))
+    case KindDecimal =>
+      val d = v.asInstanceOf[DecimalVector]
+      var mn: java.math.BigDecimal = null
+      var mx: java.math.BigDecimal = null
+      var i = 0
+      while (i < n) {
+        if (!v.isNull(i)) {
+          val x = d.getObject(i)
+          if (mn == null || x.compareTo(mn) < 0) mn = x
+          if (mx == null || x.compareTo(mx) > 0) mx = x
+        }
+        i += 1
+      }
+      // toPlainString: no exponent form, so the read side's
+      // BigDecimal(stat) comparison is exact at any magnitude
+      if (mn == null) None else Some((mn.toPlainString, mx.toPlainString))
+    case _ => None
+  }
+
+  /** An integral or temporal vector's values as longs — the stat domain
+    * of [[KindLong]] (the integer, days for dates, micros for
+    * timestamps). Callers test `isNull` before reading a slot. */
+  private[arrow] def longs(v: ValueVector): Int => Long = v match {
+    case b: BaseIntVector => b.getValueAsLong
+    case d: DateDayVector => i => d.get(i).toLong
+    case t: TimeStampVector => t.get
+  }
+
+  /** A string vector's values as [[UTF8String]]s that point into the
+    * vector's data buffer: valid until the vector is reset, so a value
+    * kept longer must be cloned. */
+  private[arrow] def utf8s(v: ValueVector): Int => UTF8String = {
+    val s = v.asInstanceOf[VarCharVector]
+    i => UTF8String.fromAddress(null,
+      s.getDataBufferAddress + s.getStartOffset(i), s.getValueLength(i))
   }
 
   final case class ZoneMap(cols: Array[String],

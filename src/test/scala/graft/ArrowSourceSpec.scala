@@ -131,6 +131,31 @@ class ArrowSourceSpec extends AnyFunSuite {
       .mode("overwrite").save(zdir)
     assert(bagEqual(spark.read.format("arrow").load(zdir), src),
       "zstd struct data changed")
+    // lists of every element kind, NULL elements and null lists
+    // included, and a map whose values are lists
+    val ndir = tmpDir()
+    def orNull(c: org.apache.spark.sql.Column) =
+      when(col("id") % 5 === 0, lit(null)).otherwise(c)
+    val nested = spark.range(20).toDF("id").select(col("id"),
+      orNull(array(col("id") * 1.5, lit(null).cast("double"), lit(3.0)))
+        .as("ds"),
+      array(concat(lit("a"), col("id")), lit(null).cast("string"))
+        .as("ss"),
+      array(col("id") % 2 === 0, lit(null).cast("boolean")).as("bs"),
+      array(col("id").cast("smallint"), lit(null).cast("smallint"))
+        .as("hs"),
+      array(struct(col("id").as("a"), concat(lit("x"), col("id")).as("b")),
+        lit(null).cast("struct<a:bigint,b:string>")).as("sts"),
+      array(array(col("id").cast("int"), lit(null).cast("int")),
+        lit(null).cast("array<int>")).as("aas"),
+      orNull(map(lit("k"), array(col("id"), lit(null).cast("bigint"))))
+        .as("m"))
+    nested.write.format("arrow").mode("overwrite").save(ndir)
+    val nback = spark.read.format("arrow").load(ndir)
+    assert(nback.schema == nested.schema,
+      s"nested schema changed: ${nback.schema.treeString}")
+    assert(nback.orderBy("id").collect().toSeq ==
+      nested.orderBy("id").collect().toSeq, "nested list data changed")
   }
 
   test("struct columns survive MULTI-BATCH reads (close+reload)") {

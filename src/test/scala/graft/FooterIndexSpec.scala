@@ -32,10 +32,9 @@ class FooterIndexSpec extends AnyFunSuite {
       .option("sortBy", "k")
       .mode("overwrite").save(dir)
 
-  test("the sidecar exists after a write, covers every file, and its " +
-      "stats equal a footer sweep exactly") {
-    val dir = Files.createTempDirectory("fidx_eq").toString
-    writeFixture(dir)
+  /** Every live file has a sidecar entry whose stats and schema equal
+    * a sweep of the file's own footer. */
+  private def assertSidecarMatchesFooters(dir: String): Unit = {
     val root = Paths.get(dir).toAbsolutePath.normalize
     val files = ArrowDataSource.visibleIpcFiles(dir)
     assert(files.nonEmpty)
@@ -54,6 +53,39 @@ class FooterIndexSpec extends AnyFunSuite {
         Some(ArrowDataSource.readFooterSchema(f).fields.toSeq.map(x =>
           (x.name, x.dataType))), s"schema diverges for $rel")
     }
+  }
+
+  test("the sidecar exists after a write, covers every file, and its " +
+      "stats equal a footer sweep exactly") {
+    val dir = Files.createTempDirectory("fidx_eq").toString
+    writeFixture(dir)
+    assertSidecarMatchesFooters(dir)
+  }
+
+  test("partitioned writes that evict sub-writers and bucketed writes " +
+      "ship the same stats a footer sweep reads") {
+    def rows = spark.range(3000).selectExpr(
+      "id AS k", "CAST(id % 97 AS DOUBLE) AS v",
+      "CONCAT('u', CAST(id % 50 AS STRING)) AS tag",
+      "(id DIV 200) % 5 AS p")
+      .coalesce(1)
+    // runs of 200 rows per partition value, two open writers: every
+    // third run evicts (seals) the least-recently-written file
+    val part = Files.createTempDirectory("fidx_evict").toString
+    rows.write.format("arrow").partitionBy("p")
+      .option("maxOpenWriters", "2").option("batchRows", "64")
+      .option("codec", "zstd").option("bloomFilterColumns", "tag")
+      .option("sortBy", "k").mode("overwrite").save(part)
+    assert(ArrowDataSource.visibleIpcFiles(part).size > 5,
+      "no sub-writer was evicted")
+    assertSidecarMatchesFooters(part)
+    val bucketed = Files.createTempDirectory("fidx_bucket").toString
+    rows.write.format("arrow").option("bucketBy", "k")
+      .option("numBuckets", "4").option("batchRows", "64")
+      .option("bloomFilterColumns", "tag").option("sortBy", "k")
+      .mode("overwrite").save(bucketed)
+    assert(ArrowDataSource.visibleIpcFiles(bucketed).size == 4)
+    assertSidecarMatchesFooters(bucketed)
   }
 
   test("planning an indexed directory opens ZERO data-file footers — " +
