@@ -1012,6 +1012,58 @@ object ArrowDataSource {
     -1L // unreachable
   }
 
+  /** Write `w`'s rows into the logged table `dir` STAGED (on disk, in
+    * no manifest) and publish them as ONE epoch on top of `base` that
+    * also removes `removes`: [[commitTableEpoch]]'s conflict check,
+    * no rebase. When another writer committed past `base` the staged
+    * files are deleted and the ConcurrentModificationException
+    * propagates. Adds come from the staged job's OWN commit messages
+    * (token handoff), never a dir-diff — a concurrent appender's
+    * renamed-but-uncommitted files must not be claimed into this
+    * epoch. Staged files bypass the batch-write commit hook, so their
+    * footer stats are recorded here as the epoch's sidecar fragment:
+    * one footer read per written file, driver-side, page-cache hot. */
+  def commitStaged(dir: String, base: Long,
+      w: org.apache.spark.sql.DataFrameWriter[_],
+      removes: Seq[String] = Seq.empty, neutral: Boolean = false): Long = {
+    val token = java.util.UUID.randomUUID().toString
+    w.option("stageOnly", "true").option("stageToken", token).save(dir)
+    val adds = Option(stagedFiles.remove(token))
+      .getOrElse(throw new IllegalStateException(
+        s"staged write of $dir returned no file manifest"))
+    val epoch =
+      try commitTableEpoch(dir, base, adds, removes, neutral = neutral)
+      catch {
+        case e: java.util.ConcurrentModificationException =>
+          adds.foreach(a => Files.deleteIfExists(Paths.get(a)))
+          throw e
+      }
+    if (adds.nonEmpty)
+      FooterIndexFile.appendEpochFragment(dir, epoch,
+        readFooterSchema(Paths.get(adds.head)),
+        adds.map(a => a -> FooterIndexFile.encodeInfo(
+          footerInfo(Paths.get(a)))))
+    epoch
+  }
+
+  /** Rows live in `dir` net of deletion vectors, counted from `log`
+    * (None = flat: the directory listing) and footer row stats alone —
+    * no data read. None when a live file's footer carries no row
+    * count. */
+  def liveRowCount(dir: String, log: Option[TableLog]): Option[Long] = {
+    val ix = new FooterIndex(dir, None, None, log)
+    val counts = ix.files.map { f =>
+      val info = ix.info(f)
+      val total =
+        if (info.sizes.isEmpty) Some(0L)
+        else info.rowStats.filter(_.batches.length == info.sizes.length)
+          .map(_.batches.map(_._1).sum)
+      total.map(_ - ix.dvs.get(f.toAbsolutePath.normalize.toString)
+        .fold(0L)(_._2))
+    }
+    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+  }
+
   /** Upgrade a flat directory to a logged TABLE in one atomic step
     * ([[publishStagedLog]]) whose epoch 0 snapshots every current file.
     * No-op when a log already exists. */

@@ -68,33 +68,13 @@ object GraftProcedures {
     if (ArrowDataSource.isTableLog(path)) {
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
       val base = ArrowDataSource.latestCommittedEpoch(root)
-      // adds come from the staged job's OWN commit messages (token
-      // handoff), never a dir-diff — a concurrent appender's renamed-
-      // but-uncommitted files must not be claimed into this epoch
-      val token = java.util.UUID.randomUUID().toString
-      writer(df).option("stageOnly", "true")
-        .option("stageToken", token).save(path)
-      val adds = Option(ArrowDataSource.stagedFiles.remove(token))
-        .getOrElse(throw new IllegalStateException(
-          s"staged rewrite of $path returned no file manifest"))
       // maintenance rewrites carry the SAME row multiset — the
       // neutral flag makes commitTableEpoch write the marker before
       // the epoch's visibility flip, so change-feed consumers can
       // never observe the churn as data change
-      val epoch = ArrowDataSource.commitTableEpoch(path, base, adds,
+      ArrowDataSource.commitStaged(path, base, writer(df),
         replaced.map(_.toString), neutral = true)
-      // staged files bypass the batch-write commit hook, so record
-      // their footer stats as the epoch's sidecar fragment — a
-      // just-compacted table should plan in one metadata read like any
-      // freshly written one. Cost: one footer read per REWRITTEN file,
-      // driver-side, right after writing them (page-cache hot),
-      // bounded by the rewrite; log compaction folds the fragment.
-      if (adds.nonEmpty)
-        FooterIndexFile.appendEpochFragment(path, epoch,
-          ArrowDataSource.readFooterSchema(
-            java.nio.file.Paths.get(adds.head)),
-          adds.map(a => a -> FooterIndexFile.encodeInfo(
-            ArrowDataSource.footerInfo(java.nio.file.Paths.get(a)))))
+      ()
     } else {
       writer(df).save(path)
       replaced.foreach(Files.deleteIfExists)

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sources.arrow.{ArrowChanges, GraftCatalog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog, TableLog}
 
 /** CDC replication on the engine's own primitives: tail a logged
   * table's STREAMING change feed (`readChangeFeed`) and apply each
@@ -32,13 +34,47 @@ import graft.sources.arrow.{ArrowChanges, GraftCatalog}
   * Scale: each trigger moves O(churned bytes) through one MERGE per
   * epoch; the replica's copy-on-write rewrite touches only files
   * holding matched keys (runtime group filtering), so a day of DML
-  * against a petabyte source replicates a day of changes. */
+  * against a petabyte source replicates a day of changes. A fresh
+  * replica starts from the source's snapshot, not by replaying every
+  * epoch since 0 (see [[ChangeReplication.replicate]]). */
 object ChangeReplication {
+
+  /** Every replicate writer's appId starts with this; the checkpoint's
+    * UUID follows. */
+  private val AppPrefix = "graft_repl_"
+
+  /** Suffix of the stamp a snapshot bootstrap commits: its version is
+    * the source epoch the replica was seeded from. */
+  private val SnapshotSuffix = ":snapshot"
 
   /** Start replicating `srcDir`'s change feed into `dstDir` (an
     * existing arrow table, possibly empty) keyed by `keyCols`.
     * Drains everything committed at start when `availableNow`
-    * (batch-style catch-up), else runs continuously. */
+    * (batch-style catch-up), else runs continuously.
+    *
+    * `startingEpoch = 0` (the default) means "replicate the whole
+    * table". A fresh stream (no committed batch in `checkpoint`) then
+    * starts from a snapshot instead of replaying every epoch since 0,
+    * as Delta's change-feed consumers do:
+    *  - a replica carrying a `graft_repl_<uuid>:snapshot` stamp (from
+    *    this checkpoint or an earlier one) resumes at stamp + 1;
+    *  - a replica with no live row (log and footer stats, no data
+    *    read) and no stamp of this writer is BOOTSTRAPPED: the
+    *    source's latest epoch `e` is read as a snapshot and, when its
+    *    keys are unique, appended in one replica epoch stamped
+    *    `<appId>:snapshot = e`, committed only if the replica is still
+    *    at the epoch it was checked empty at; the stream starts at
+    *    `e + 1`.
+    * On an empty replica with unique keys the replay would leave
+    * exactly the rows live at `e` (carry-over pairs cancel, a key last
+    * deleted is absent), so the bootstrap is exact; it also seeds a
+    * replica of a vacuumed source, whose epoch 0 no longer streams.
+    * Every other case replays as given: an explicit `startingEpoch`,
+    * an existing checkpoint, a non-empty or already-stamped replica, a
+    * repeated key in the snapshot, or a commit racing the bootstrap.
+    *
+    * `keyCols` are checked against the source's columns before
+    * anything starts. */
   def replicate(spark: SparkSession, srcDir: String, dstDir: String,
       keyCols: Seq[String], checkpoint: String,
       startingEpoch: Long = 0L,
@@ -47,14 +83,23 @@ object ChangeReplication {
     if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
       spark.conf.set("spark.sql.catalog.graft",
         classOf[GraftCatalog].getName)
-    val feed = spark.readStream.format("arrow")
-      .option("readChangeFeed", "true")
-      .option("startingEpoch", startingEpoch)
-      .load(srcDir)
+    val srcCols = spark.read.format("arrow").load(srcDir).columns
+    val missing = keyCols.filterNot(srcCols.contains)
+    require(missing.isEmpty,
+      s"replicate: key column(s) ${missing.mkString(", ")} not in " +
+        s"$srcDir (columns: ${srcCols.mkString(", ")})")
     // stable writer identity scoped to the checkpoint (its batchId
     // sequence): replayed batches are gated before any job runs
-    val appId = "graft_repl_" + java.util.UUID
+    val appId = AppPrefix + java.util.UUID
       .nameUUIDFromBytes(checkpoint.getBytes("UTF-8")).toString
+    val from =
+      if (startingEpoch != 0L || hasCommittedBatch(spark, checkpoint))
+        startingEpoch
+      else fromSnapshot(spark, srcDir, dstDir, keyCols, appId)
+    val feed = spark.readStream.format("arrow")
+      .option("readChangeFeed", "true")
+      .option("startingEpoch", from)
+      .load(srcDir)
     val writer = feed.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -62,6 +107,76 @@ object ChangeReplication {
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())
     else writer).start()
+  }
+
+  /** Whether Spark's offsets log under `checkpoint` holds a batch: the
+    * stream then resumes from it and ignores `startingEpoch`. */
+  private def hasCommittedBatch(spark: SparkSession,
+      checkpoint: String): Boolean = {
+    val offsets = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
+    val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(offsets) &&
+      fs.listStatus(offsets).exists(_.getPath.getName.forall(_.isDigit))
+  }
+
+  /** The newest snapshot stamp any replicate writer committed to the
+    * replica: the source epoch it was seeded from. */
+  private def snapshotStamp(log: TableLog): Option[Long] =
+    log.txns.collect {
+      case (app, (epoch, v))
+          if app.startsWith(AppPrefix) && app.endsWith(SnapshotSuffix) =>
+        (epoch, v)
+    }.maxByOption(_._1).map(_._2)
+
+  /** Where a fresh whole-table stream starts (see [[replicate]]):
+    * stamp + 1, `e + 1` after a bootstrap from source epoch `e`, or 0
+    * to replay. */
+  private def fromSnapshot(spark: SparkSession, srcDir: String,
+      dstDir: String, keyCols: Seq[String], appId: String): Long = {
+    val srcRoot = ArrowDataSource.sinkRoot(srcDir) match {
+      case Some(r) => r
+      case None => return 0L // no log, no feed: the stream reports it
+    }
+    def bootstrappable(log: Option[TableLog]): Boolean =
+      !log.exists(_.lastTxnVersion(appId).isDefined) &&
+        ArrowDataSource.liveRowCount(dstDir, log).contains(0L)
+    val log0 = TableLog.forDir(dstDir)
+    log0.flatMap(snapshotStamp) match {
+      case Some(stamp) => return stamp + 1L
+      case None => if (!bootstrappable(log0)) return 0L
+    }
+    val e = ArrowDataSource.latestCommittedEpoch(srcRoot)
+    val snap = spark.read.format("arrow").option("epochAsOf", e)
+      .load(srcDir)
+    def layout(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    // a replica of another layout takes the rows through the MERGE's
+    // by-name assignment and casts, not a file append
+    if (layout(spark.read.format("arrow").load(dstDir)) != layout(snap))
+      return 0L
+    // one aggregation over the keys: a repeated key would make the
+    // snapshot hold rows the replay's one-row-per-key MERGE drops
+    val repeated = snap.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
+    if (!repeated.isEmpty) return 0L
+    ArrowDataSource.initTableLog(dstDir)
+    if (!ArrowDataSource.isTableLog(dstDir)) return 0L // streaming sink
+    // the epoch the replica is checked empty at is the commit's base
+    val log = TableLog.read(Paths.get(dstDir).toAbsolutePath.normalize)
+    if (snapshotStamp(log).isDefined || !bootstrappable(Some(log)))
+      return 0L
+    // the codec a MERGE into the replica would write with
+    val codec = ArrowDataSource.visibleIpcFiles(dstDir, Some(log), None)
+      .headOption.flatMap(f => ArrowDataSource.footerInfo(f).codec)
+    val w = snap.write.format("arrow").mode("append")
+    try {
+      ArrowDataSource.withPendingTxn(dstDir, appId + SnapshotSuffix, e) {
+        ArrowDataSource.commitStaged(dstDir, log.latest,
+          codec.fold(w)(c => w.option("codec", c)))
+      }
+      e + 1L
+    } catch {
+      case _: java.util.ConcurrentModificationException => 0L
+    }
   }
 
   /** Per-call counter making each applyBatch's temp view names unique:
@@ -98,7 +213,10 @@ object ChangeReplication {
     * braces: the keyed MERGE converges under re-application, and
     * when `txn` is given the batch's `(appId, version)` stamp commits
     * atomically with the epoch, so a replayed batch is skipped before
-    * any job runs ([[graft.sources.arrow.ArrowDataSource.withPendingTxn]]). */
+    * any job runs ([[graft.sources.arrow.ArrowDataSource.withPendingTxn]]).
+    * A batch with no rows (an empty epoch window, such as the first
+    * one after a snapshot bootstrap) returns right after the gate:
+    * it runs no netting or MERGE job and commits no replica epoch. */
   def applyBatch(batch: DataFrame, dstDir: String,
       keyCols: Seq[String],
       txn: Option[(String, Long)] = None): Unit = {
@@ -108,6 +226,7 @@ object ChangeReplication {
       graft.sources.arrow.TableLog.read(dstRoot)
         .lastTxnVersion(app).exists(_ >= v)
     }) return // replayed micro-batch: already applied atomically
+    if (batch.isEmpty) return // empty window: nothing to net or commit
     val dataCols = batch.columns.toSeq
       .filterNot(c => c == ArrowChanges.ChangeTypeCol ||
         c == ArrowChanges.CommitEpochCol)

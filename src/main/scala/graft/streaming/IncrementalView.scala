@@ -125,13 +125,16 @@ object IncrementalView {
 
   /** Apply one micro-batch of tagged change rows as per-group deltas.
     * Returns false when the replay gate skipped the batch (its
-    * `(appId, version)` stamp is already committed to the view log). */
+    * `(appId, version)` stamp is already committed to the view log).
+    * A batch with no rows passes the gate but runs no delta or MERGE
+    * job and commits no view epoch. */
   def applyDelta(batch: DataFrame, viewDir: String,
       groupCols: Seq[String], sums: Seq[(String, String)],
       appId: String, version: Long): Boolean = {
     val root = java.nio.file.Paths.get(viewDir).toAbsolutePath.normalize
     if (TableLog.read(root).lastTxnVersion(appId).exists(_ >= version))
       return false // replayed micro-batch: already folded in
+    if (batch.isEmpty) return true // empty window: nothing to fold in
     val delta = netDelta(signChanges(batch, "__sign"), groupCols, sums)
     mergeDelta(delta, viewDir, groupCols, sums, appId, version)
     true

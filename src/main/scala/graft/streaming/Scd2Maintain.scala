@@ -79,7 +79,8 @@ object Scd2Maintain {
   private val applySeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Apply one micro-batch of tagged change rows to the dimension in
-    * one MERGE (see the object doc for the algebra). */
+    * one MERGE (see the object doc for the algebra). A batch with no
+    * rows runs no netting or MERGE job and commits no dimension epoch. */
   def applyBatch(batch: DataFrame, dimDir: String,
       keyCols: Seq[String],
       txn: Option[(String, Long)] = None): Unit = {
@@ -89,6 +90,7 @@ object Scd2Maintain {
       graft.sources.arrow.TableLog.read(dimRoot)
         .lastTxnVersion(app).exists(_ >= v)
     }) return // replayed micro-batch: already applied atomically
+    if (batch.isEmpty) return // empty window: nothing to net or commit
     val dataCols = batch.columns.toSeq
       .filterNot(c => c == ArrowChanges.ChangeTypeCol ||
         c == ArrowChanges.CommitEpochCol)

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.GraftCatalog
+import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
 import graft.streaming.ChangeReplication
 
 /** CDC replication built on the streaming change feed + keyed MERGE:
@@ -26,6 +26,65 @@ class ChangeReplicationSpec extends AnyFunSuite {
 
   private def snapshot(dir: String): DataFrame =
     spark.read.format("arrow").load(dir).select(col("id"), col("tag"))
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  private def latestEpoch(dir: String): Long =
+    ArrowDataSource.latestCommittedEpoch(Paths.get(dir).toAbsolutePath.normalize)
+
+  /** A replica table at a fresh directory holding `rows`. */
+  private def replica(prefix: String, rows: Seq[(Long, String)] = Nil)
+      : String = {
+    import spark.implicits._
+    val dst = tmp(prefix)
+    rows.toDF("id", "tag")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(dst)
+    dst
+  }
+
+  /** 100 rows, then a DELETE epoch and an UPDATE epoch. */
+  private def sourceWithHistory(prefix: String): String = {
+    import spark.implicits._
+    val src = tmp(prefix)
+    (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "tag")
+      .repartition(2)
+      .write.format("arrow").mode("overwrite").save(src)
+    spark.sql(s"DELETE FROM graft.arrow.`$src` WHERE id <= 20")
+    spark.sql(s"UPDATE graft.arrow.`$src` SET tag = 'patched' " +
+      "WHERE id BETWEEN 30 AND 40")
+    src
+  }
+
+  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery)
+      : Unit = try q.processAllAvailable() finally q.stop()
+
+  private def replicate(src: String, dst: String, ckpt: String): Unit =
+    drain(ChangeReplication.replicate(spark, src, dst,
+      keyCols = Seq("id"), checkpoint = ckpt))
+
+  /** Source epochs the replica was bootstrapped from (its
+    * `:snapshot` stamps). */
+  private def snapshotStamps(dst: String): Seq[Long] =
+    TableLog.forDir(dst).toSeq.flatMap(_.txns.collect {
+      case (app, (_, v)) if app.endsWith(":snapshot") => v
+    })
+
+  /** The replay a fresh replica ran before the snapshot bootstrap:
+    * the whole feed since epoch 0 applied to `dst` as one batch. */
+  private def replayInto(src: String, dst: String, name: String): Unit = {
+    val q = spark.readStream.format("arrow")
+      .option("readChangeFeed", "true").option("startingEpoch", 0L)
+      .load(src).writeStream
+      .format("memory").queryName(name).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    drain(q)
+    val sunk = spark.table(name)
+    ChangeReplication.applyBatch(spark.createDataFrame(
+      java.util.Arrays.asList(sunk.collect(): _*), sunk.schema),
+      dst, Seq("id"))
+  }
 
   test("replica converges to the source across DML epochs and " +
       "checkpointed catch-up runs") {
@@ -156,5 +215,106 @@ class ChangeReplicationSpec extends AnyFunSuite {
       "update-then-delete key must end absent")
     assert(snapshot(dst).filter(col("id") === 5)
       .select(col("tag")).as[String].collect().toSeq == Seq("kept"))
+  }
+
+  test("a fresh empty replica bootstraps from the source snapshot: " +
+      "stamped at the source epoch, equal to the replay, not repeated") {
+    val src = sourceWithHistory("boot_src")
+    val dst = replica("boot_dst")
+    val ckpt = tmp("boot_ckpt")
+    replicate(src, dst, ckpt)
+    assert(snapshotStamps(dst) == Seq(latestEpoch(src)),
+      "the bootstrap must stamp the source epoch it read")
+    val replayed = replica("boot_replay")
+    replayInto(src, replayed, "boot_feed")
+    assert(bagEqual(snapshot(dst), snapshot(replayed)),
+      "bootstrapped replica differs from the replayed one")
+    assert(bagEqual(snapshot(dst), snapshot(src)))
+
+    // the source is unchanged: neither the same checkpoint nor a fresh
+    // one bootstraps again or commits an epoch
+    val synced = latestEpoch(dst)
+    val ckpt2 = tmp("boot_ckpt2")
+    replicate(src, dst, ckpt2)
+    replicate(src, dst, ckpt)
+    assert(latestEpoch(dst) == synced,
+      "a replica in sync with an unchanged source gained an epoch")
+    assert(snapshotStamps(dst).size == 1)
+
+    // the fresh checkpoint resumed past the stamp: later DML streams in
+    spark.sql(s"DELETE FROM graft.arrow.`$src` WHERE id % 3 = 0")
+    spark.sql(s"INSERT INTO graft.arrow.`$src` VALUES (500, 'late')")
+    replicate(src, dst, ckpt2)
+    assert(bagEqual(snapshot(dst), snapshot(src)),
+      "replica diverged after resuming past the snapshot stamp")
+  }
+
+  test("a source with a repeated key falls back to the replay") {
+    import spark.implicits._
+    val src = tmp("dup_src")
+    Seq((1L, "a"), (2L, "c")).toDF("id", "tag").coalesce(1)
+      .write.format("arrow").mode("overwrite").save(src)
+    ArrowDataSource.initTableLog(src)
+    spark.sql(s"INSERT INTO graft.arrow.`$src` VALUES (1, 'b')")
+    val dst = replica("dup_dst")
+    replicate(src, dst, tmp("dup_ckpt"))
+    assert(snapshotStamps(dst).isEmpty, "a repeated key must not bootstrap")
+    val replayed = replica("dup_replay")
+    replayInto(src, replayed, "dup_feed")
+    assert(bagEqual(snapshot(dst), snapshot(replayed)))
+    assert(snapshot(dst).count() == 2, "the replay keeps one row per key")
+  }
+
+  test("a non-empty replica falls back to the replay") {
+    val src = sourceWithHistory("full_src")
+    val stale = Seq((999L, "stale"), (50L, "old"))
+    val dst = replica("full_dst", stale)
+    replicate(src, dst, tmp("full_ckpt"))
+    assert(snapshotStamps(dst).isEmpty,
+      "a replica holding rows must not bootstrap")
+    val replayed = replica("full_replay", stale)
+    replayInto(src, replayed, "full_feed")
+    assert(bagEqual(snapshot(dst), snapshot(replayed)))
+    assert(snapshot(dst).filter(col("id") === 999L).count() == 1)
+  }
+
+  test("a fresh replica of a vacuumed source seeds and then resumes") {
+    val src = sourceWithHistory("vac_src")
+    spark.sql(s"CALL graft.system.compact(path => '$src', " +
+      "target_rows => 1000)").collect()
+    spark.sql(s"CALL graft.system.vacuum(path => '$src', grace_ms => 0)")
+      .collect()
+    assert(TableLog.read(Paths.get(src).toAbsolutePath.normalize)
+      .horizon > 0, "vacuum did not advance the horizon")
+    val dst = replica("vac_dst")
+    val ckpt = tmp("vac_ckpt")
+    replicate(src, dst, ckpt)
+    assert(bagEqual(snapshot(dst), snapshot(src)),
+      "replica of a vacuumed source diverged")
+    spark.sql(s"DELETE FROM graft.arrow.`$src` WHERE id > 90")
+    spark.sql(s"UPDATE graft.arrow.`$src` SET tag = 'after' WHERE id = 50")
+    replicate(src, dst, ckpt)
+    assert(bagEqual(snapshot(dst), snapshot(src)),
+      "replica diverged after resuming with the same checkpoint")
+  }
+
+  test("a key column the source lacks fails before the stream starts") {
+    val src = sourceWithHistory("key_src")
+    val err = intercept[IllegalArgumentException] {
+      ChangeReplication.replicate(spark, src, replica("key_dst"),
+        keyCols = Seq("idd"), checkpoint = tmp("key_ckpt"))
+    }
+    assert(err.getMessage.contains("idd"), err.getMessage)
+  }
+
+  test("an empty micro-batch commits no replica epoch") {
+    val src = sourceWithHistory("empty_src")
+    val dst = replica("empty_dst")
+    replicate(src, dst, tmp("empty_ckpt"))
+    val synced = latestEpoch(dst)
+    drain(ChangeReplication.replicate(spark, src, dst, keyCols = Seq("id"),
+      checkpoint = tmp("empty_ckpt2"), startingEpoch = latestEpoch(src) + 1))
+    assert(latestEpoch(dst) == synced)
+    assert(bagEqual(snapshot(dst), snapshot(src)))
   }
 }

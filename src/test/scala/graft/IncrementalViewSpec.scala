@@ -409,4 +409,29 @@ class IncrementalViewSpec extends AnyFunSuite {
     }
     assert(TableLog.read(root).lastTxnVersion("winner").contains(8L))
   }
+
+  test("an empty micro-batch commits no view epoch") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("ivm_empty_src").toString
+    val dst = Files.createTempDirectory("ivm_empty_dst").toString
+    (1 to 20).map(i => (i.toLong, s"g${i % 3}", i.toLong))
+      .toDF("id", "grp", "amt").coalesce(1)
+      .write.format("arrow").mode("overwrite").save(src)
+    ArrowDataSource.initTableLog(src)
+    def refresh(ckpt: String, from: Long): Unit = {
+      val q = IncrementalView.maintain(spark, src, dst,
+        groupCols = Seq("grp"), sums = Seq(("amt", "sum_amt")),
+        checkpoint = ckpt, startingEpoch = from)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def latest(dir: String): Long = ArrowDataSource.latestCommittedEpoch(
+      Paths.get(dir).toAbsolutePath.normalize)
+    refresh(Files.createTempDirectory("ivm_empty_ck1").toString, 0L)
+    val synced = latest(dst)
+    // a fresh checkpoint past the source's head: its window is empty
+    refresh(Files.createTempDirectory("ivm_empty_ck2").toString,
+      latest(src) + 1)
+    assert(latest(dst) == synced, "an empty batch committed a view epoch")
+    assert(bagEqual(viewDf(dst), recompute(src)))
+  }
 }

@@ -131,4 +131,33 @@ class Scd2Spec extends AnyFunSuite {
     assert(twice == once, "replayed batch changed the dimension")
     checkInvariants(src, dim)
   }
+
+  test("an empty micro-batch commits no dimension epoch") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("scd2e_src").toString
+    val dim = Files.createTempDirectory("scd2e_dim").toString
+    val base = (1L to 20L).map(i => (i, "g", i)).toDF("id", "grp", "amt")
+    base.coalesce(1).write.format("arrow").mode("overwrite").save(src)
+    ArrowDataSource.initTableLog(src)
+    base.limit(0)
+      .withColumn("valid_from", lit(0L))
+      .withColumn("valid_to", lit(null).cast("long"))
+      .withColumn("is_current", lit(true))
+      .coalesce(1).write.format("arrow").mode("overwrite").save(dim)
+    def refresh(from: Long): Unit = {
+      val q = Scd2Maintain.maintain(spark, src, dim, keyCols = Seq("id"),
+        checkpoint = Files.createTempDirectory("scd2e_ckpt").toString,
+        startingEpoch = from)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def latest(dir: String): Long = ArrowDataSource.latestCommittedEpoch(
+      java.nio.file.Paths.get(dir).toAbsolutePath.normalize)
+    refresh(0L)
+    val synced = latest(dim)
+    // a fresh checkpoint past the source's head: its window is empty
+    refresh(latest(src) + 1)
+    assert(latest(dim) == synced,
+      "an empty batch committed a dimension epoch")
+    checkInvariants(src, dim)
+  }
 }
