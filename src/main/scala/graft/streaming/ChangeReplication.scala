@@ -3,10 +3,12 @@ package graft.streaming
 import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog, TableLog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource, TableLog}
+import MaintainCore.{Target, assign, src}
 
 /** CDC replication on the engine's own primitives: tail a logged
   * table's STREAMING change feed (`readChangeFeed`) and apply each
@@ -80,33 +82,20 @@ object ChangeReplication {
       startingEpoch: Long = 0L,
       availableNow: Boolean = true): StreamingQuery = {
     require(keyCols.nonEmpty, "replicate needs at least one key column")
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[GraftCatalog].getName)
     val srcCols = spark.read.format("arrow").load(srcDir).columns
     val missing = keyCols.filterNot(srcCols.contains)
     require(missing.isEmpty,
       s"replicate: key column(s) ${missing.mkString(", ")} not in " +
         s"$srcDir (columns: ${srcCols.mkString(", ")})")
-    // stable writer identity scoped to the checkpoint (its batchId
-    // sequence): replayed batches are gated before any job runs
-    val appId = AppPrefix + java.util.UUID
-      .nameUUIDFromBytes(checkpoint.getBytes("UTF-8")).toString
+    val appId = MaintainCore.appId(AppPrefix, checkpoint)
     val from =
       if (startingEpoch != 0L || hasCommittedBatch(spark, checkpoint))
         startingEpoch
       else fromSnapshot(spark, srcDir, dstDir, keyCols, appId)
-    val feed = spark.readStream.format("arrow")
-      .option("readChangeFeed", "true")
-      .option("startingEpoch", from)
-      .load(srcDir)
-    val writer = feed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MaintainCore.start(spark, srcDir, checkpoint, from, availableNow) {
+      (batch, batchId) =>
         applyBatch(batch, dstDir, keyCols, Some((appId, batchId)))
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-    else writer).start()
+    }
   }
 
   /** Whether Spark's offsets log under `checkpoint` holds a batch: the
@@ -169,7 +158,7 @@ object ChangeReplication {
       .headOption.flatMap(f => ArrowDataSource.footerInfo(f).codec)
     val w = snap.write.format("arrow").mode("append")
     try {
-      ArrowDataSource.withPendingTxn(dstDir, appId + SnapshotSuffix, e) {
+      MaintainCore.commit(dstDir, Some((appId + SnapshotSuffix, e))) {
         ArrowDataSource.commitStaged(dstDir, log.latest,
           codec.fold(w)(c => w.option("codec", c)))
       }
@@ -178,12 +167,6 @@ object ChangeReplication {
       case _: java.util.ConcurrentModificationException => 0L
     }
   }
-
-  /** Per-call counter making each applyBatch's temp view names unique:
-    * two replicate() streams sharing one SparkSession interleave
-    * foreachBatch callbacks, and a session-global view name would let
-    * one stream's MERGE read the other's rows mid-epoch. */
-  private val applySeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Apply one micro-batch of tagged change rows (possibly spanning
     * many epochs) to the replica in ONE keyed MERGE total, however
@@ -220,73 +203,33 @@ object ChangeReplication {
   def applyBatch(batch: DataFrame, dstDir: String,
       keyCols: Seq[String],
       txn: Option[(String, Long)] = None): Unit = {
-    val spark = batch.sparkSession
-    val dstRoot = java.nio.file.Paths.get(dstDir).toAbsolutePath.normalize
-    if (txn.exists { case (app, v) =>
-      graft.sources.arrow.TableLog.read(dstRoot)
-        .lastTxnVersion(app).exists(_ >= v)
-    }) return // replayed micro-batch: already applied atomically
-    if (batch.isEmpty) return // empty window: nothing to net or commit
-    val dataCols = batch.columns.toSeq
-      .filterNot(c => c == ArrowChanges.ChangeTypeCol ||
-        c == ArrowChanges.CommitEpochCol)
-    require(keyCols.forall(dataCols.contains),
-      s"key columns ${keyCols.mkString(",")} not all present in " +
-        s"${dataCols.mkString(",")}")
-    val ec = col(ArrowChanges.CommitEpochCol)
-    val tc = col(ArrowChanges.ChangeTypeCol)
-    val net = batch
-      .groupBy(ec +: dataCols.map(col): _*)
-      .agg(
-        // update_postimage/update_preimage are an UPDATE epoch's
-        // new/old values — insert/delete-equivalent under netting
-        sum(when(tc.isin("insert", ArrowChanges.UpdatePostimage), 1L)
-          .otherwise(0L)).as("__ins"),
-        sum(when(tc.isin("delete", ArrowChanges.UpdatePreimage), 1L)
-          .otherwise(0L)).as("__del"))
-      .withColumn("__op",
-        when(col("__ins") > col("__del"), lit("upsert"))
-          .when(col("__del") > col("__ins"), lit("delete")))
-      .filter(col("__op").isNotNull) // carry-over rows cancel to null
-    val winners = net
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
+    MaintainCore.applyOnce(batch, dstDir, txn) {
+      val (dataCols, net) = MaintainCore.netRows(batch, keyCols)
+      val ec = col(ArrowChanges.CommitEpochCol)
+      val winners = net
+        .withColumn("__rn", row_number().over(Window
           .partitionBy(keyCols.map(col): _*)
           // greatest epoch wins; within it, upsert beats delete
           .orderBy(ec.desc, col("__op").desc)))
-      .filter(col("__rn") === 1)
-      .select((dataCols.map(c => col(s"`$c`")) :+ col("__op")): _*)
-    val view = s"graft_repl_${applySeq.incrementAndGet()}_" +
-      java.util.UUID.randomUUID().toString.takeRight(12)
-    // The keyed MERGE evaluates its source several times (runtime-filter
-    // triage, CoW rewrite, not-matched append are separate jobs), and
-    // `winners` carries the whole net+window pipeline over the change
-    // feed — pin the O(churned keys) result so the feed is scanned once
-    // per batch, not once per MERGE-internal job (guide §5).
-    val cached = winners.persist()
-    try {
-      cached.createOrReplaceTempView(view)
-      val onKeys = keyCols.map(k => s"t.`$k` = s.`$k`").mkString(" AND ")
-      val setCols = dataCols.map(c => s"`$c` = s.`$c`").mkString(", ")
-      val insCols = dataCols.map(c => s"`$c`").mkString(", ")
-      val insVals = dataCols.map(c => s"s.`$c`").mkString(", ")
-      val merge =
-        s"""MERGE INTO graft.arrow.`$dstDir` t
-           |USING $view s ON $onKeys
-           |WHEN MATCHED AND s.`__op` = 'delete' THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET $setCols
-           |WHEN NOT MATCHED AND s.`__op` = 'upsert' THEN
-           |  INSERT ($insCols) VALUES ($insVals)""".stripMargin
-      txn match {
-        case Some((app, v)) =>
-          graft.sources.arrow.ArrowDataSource
-            .withPendingTxn(dstDir, app, v) { spark.sql(merge); () }
-        case None => spark.sql(merge); ()
-      }
-    } finally {
-      spark.catalog.dropTempView(view)
-      cached.unpersist()
-      ()
+        .filter(col("__rn") === 1)
+        .select((dataCols.map(c => col(s"`$c`")) :+ col("__op")): _*)
+      // The keyed MERGE evaluates its source several times (runtime-filter
+      // triage, CoW rewrite, not-matched append are separate jobs), and
+      // `winners` carries the whole net+window pipeline over the change
+      // feed — pin the O(churned keys) result so the feed is scanned once
+      // per batch, not once per MERGE-internal job (guide §5).
+      val cached = winners.persist()
+      try {
+        val t = Target(dstDir)
+        MaintainCore.mergeInto(cached, t,
+            keyCols.map(k => t(k) === src(k)).reduce(_ && _))
+          .whenMatched(src("__op") === "delete").delete()
+          .whenMatched().update(assign(dataCols)(src))
+          .whenNotMatched(src("__op") === "upsert")
+          .insert(assign(dataCols)(src))
+          .merge()
+      } finally { cached.unpersist(); () }
     }
+    ()
   }
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog, TableLog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource}
+import MaintainCore.{Target, assign, src}
 
 /** Incremental materialized-view maintenance: keep a grouped
   * COUNT/SUM aggregate table in sync with a logged source by applying
@@ -29,7 +30,7 @@ import graft.sources.arrow.{ArrowChanges, ArrowDataSource, GraftCatalog, TableLo
   * apply commits under a writer-transaction stamp
   * ([[ArrowDataSource.withPendingTxn]]) — the `(appId, batchId)` pair
   * lands atomically inside the view's epoch manifest, and a replayed
-  * batch is skipped by the [[TableLog.lastTxnVersion]] gate
+  * batch is skipped by the [[graft.sources.arrow.TableLog.lastTxnVersion]] gate
   * before any job runs. This is Delta's idempotent-writer `txn`
   * contract, not convergence-by-key: the gate is exact even though
   * delta application is not idempotent.
@@ -94,34 +95,18 @@ object IncrementalView {
       availableNow: Boolean = true,
       enrich: DataFrame => DataFrame = identity): StreamingQuery = {
     require(groupCols.nonEmpty, "incremental view needs group columns")
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[GraftCatalog].getName)
     ensureView(spark, srcDir, viewDir, groupCols, sums, enrich)
-    // identity = the checkpoint: Spark's batchId sequence is scoped to
-    // it, so the stamp's appId must be too (a fresh checkpoint restarts
-    // batch numbering AND the replay gate together)
-    val appId = "graft_ivm_" + java.util.UUID
-      .nameUUIDFromBytes(checkpoint.getBytes("UTF-8")).toString
-    val feed = enrich(spark.readStream.format("arrow")
-      .option("readChangeFeed", "true")
-      .option("startingEpoch", startingEpoch)
-      .load(srcDir))
-    val writer = feed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDelta(batch, viewDir, groupCols, sums, appId, batchId)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-    else writer).start()
+    val appId = MaintainCore.appId("graft_ivm_", checkpoint)
+    MaintainCore.start(spark, srcDir, checkpoint, startingEpoch,
+        availableNow, enrich) { (batch, batchId) =>
+      applyDelta(batch, viewDir, groupCols, sums, appId, batchId)
+      ()
+    }
   }
 
   /** The maintained view as a DataFrame. */
   def read(spark: SparkSession, viewDir: String): DataFrame =
     spark.read.format("arrow").load(viewDir)
-
-  private val applySeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Apply one micro-batch of tagged change rows as per-group deltas.
     * Returns false when the replay gate skipped the batch (its
@@ -130,15 +115,11 @@ object IncrementalView {
     * job and commits no view epoch. */
   def applyDelta(batch: DataFrame, viewDir: String,
       groupCols: Seq[String], sums: Seq[(String, String)],
-      appId: String, version: Long): Boolean = {
-    val root = java.nio.file.Paths.get(viewDir).toAbsolutePath.normalize
-    if (TableLog.read(root).lastTxnVersion(appId).exists(_ >= version))
-      return false // replayed micro-batch: already folded in
-    if (batch.isEmpty) return true // empty window: nothing to fold in
-    val delta = netDelta(signChanges(batch, "__sign"), groupCols, sums)
-    mergeDelta(delta, viewDir, groupCols, sums, appId, version)
-    true
-  }
+      appId: String, version: Long): Boolean =
+    MaintainCore.applyOnce(batch, viewDir, Some((appId, version))) {
+      mergeDelta(netDelta(signChanges(batch, "__sign"), groupCols, sums),
+        viewDir, groupCols, sums)
+    }
 
   /** ±1 sign for a change-feed row: inserts / update-postimages add,
     * deletes / update-preimages retract. Tag columns are consumed. */
@@ -172,56 +153,36 @@ object IncrementalView {
   }
 
   /** Fold one netted per-group delta frame into the view with ONE
-    * keyed MERGE, committed under the `(appId, version)` txn stamp. */
+    * keyed MERGE: ONE view epoch, so the caller's txn stamp, the group
+    * updates, the group deletes and the new groups land in one atomic
+    * commit.
+    *
+    * The MERGE evaluates its source across several internal jobs, but
+    * the delta's lineage here is ONE CDF scan + netting hash-agg — a
+    * persist was tried (round-18, guide §5) and measured SLOWER
+    * back-to-back (cdc_incremental_agg 1.03/1.00 s unpinned vs
+    * 1.15/1.19 pinned; join_agg likewise): the materialization
+    * barrier + cache write cost more than re-running the cheap
+    * pipeline. Contrast ChangeReplication, where the SAME fix on a
+    * two-window source pipeline took cdc_replicate 5.26 → 1.94 s.
+    * Left unpinned deliberately. */
   private def mergeDelta(delta: DataFrame, viewDir: String,
-      groupCols: Seq[String], sums: Seq[(String, String)],
-      appId: String, version: Long): Unit = {
-    val spark = delta.sparkSession
-    // The MERGE below evaluates its source across several internal
-    // jobs, but the delta's lineage here is ONE CDF scan + netting
-    // hash-agg — a persist was tried (round-18, guide §5) and measured
-    // SLOWER back-to-back (cdc_incremental_agg 1.03/1.00 s unpinned vs
-    // 1.15/1.19 pinned; join_agg likewise): the materialization
-    // barrier + cache write cost more than re-running the cheap
-    // pipeline. Contrast ChangeReplication, where the SAME fix on a
-    // two-window source pipeline took cdc_replicate 5.26 → 1.94 s.
-    // Left unpinned deliberately.
-    val cached = delta
-    val view = s"graft_ivm_${applySeq.incrementAndGet()}_" +
-      java.util.UUID.randomUUID().toString.takeRight(12)
-    cached.createOrReplaceTempView(view)
-    try {
-      val onKeys = groupCols // null-safe: NULL group keys are groups too
-        .map(k => s"t.`$k` <=> s.`$k`").mkString(" AND ")
-      val setN = s"`n` = t.`n` + s.`__dn`"
+      groupCols: Seq[String], sums: Seq[(String, String)]): Unit = {
+    val t = Target(viewDir)
+    val dn = t("n") + src("__dn")
+    val aliases = sums.map(_._2)
+    MaintainCore.mergeInto(delta, t, // null-safe: NULL group keys are groups too
+        groupCols.map(k => t(k) <=> src(k)).reduce(_ && _))
+      .whenMatched(dn <= 0).delete()
       // coalesce(t.*) guards state written before the delta-side
       // coalesce existed (a NULL already in the view must not stay
       // sticky once deltas resume arriving)
-      val setSums = sums.map { case (_, a) =>
-        s"`$a` = coalesce(t.`$a`, 0) + s.`__d_$a`"
-      }
-      val insCols = (groupCols ++ Seq("n") ++ sums.map(_._2))
-        .map(c => s"`$c`").mkString(", ")
-      val insVals = (groupCols.map(c => s"s.`$c`") ++ Seq("s.`__dn`") ++
-        sums.map { case (_, a) => s"s.`__d_$a`" }).mkString(", ")
-      val merge =
-        s"""MERGE INTO graft.arrow.`$viewDir` t
-           |USING $view s ON $onKeys
-           |WHEN MATCHED AND t.`n` + s.`__dn` <= 0 THEN DELETE
-           |WHEN MATCHED THEN UPDATE SET ${(setN +: setSums).mkString(", ")}
-           |WHEN NOT MATCHED AND s.`__dn` > 0 THEN
-           |  INSERT ($insCols) VALUES ($insVals)""".stripMargin
-      // ONE merge = ONE view epoch: the txn stamp, the group updates,
-      // the group deletes, and the new groups land in one atomic commit
-      ArrowDataSource.withPendingTxn(viewDir, appId, version) {
-        spark.sql(merge)
-      }
-      ()
-    } finally {
-      spark.catalog.dropTempView(view)
-      cached.unpersist()
-      ()
-    }
+      .whenMatched().update(Map("`n`" -> dn) ++ assign(aliases)(a =>
+        coalesce(t(a), lit(0)) + src(s"__d_$a")))
+      .whenNotMatched(src("__dn") > 0).insert(
+        assign(groupCols)(src) ++ Map("`n`" -> src("__dn")) ++
+          assign(aliases)(a => src(s"__d_$a")))
+      .merge()
   }
 
   /** Two source epochs in one txn-stamp long: `(fact << 31) | dim`.
@@ -290,12 +251,8 @@ object IncrementalView {
       factUpTo: Option[Long] = None,
       dimUpTo: Option[Long] = None): Boolean = {
     require(groupCols.nonEmpty, "incremental join view needs group columns")
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[GraftCatalog].getName)
     val fRoot = java.nio.file.Paths.get(factDir).toAbsolutePath.normalize
     val dRoot = java.nio.file.Paths.get(dimDir).toAbsolutePath.normalize
-    val vRoot = java.nio.file.Paths.get(viewDir).toAbsolutePath.normalize
     val fLatest = ArrowDataSource.latestCommittedEpoch(fRoot)
     val dLatest = ArrowDataSource.latestCommittedEpoch(dRoot)
     val f1 = factUpTo.getOrElse(fLatest)
@@ -316,7 +273,7 @@ object IncrementalView {
         .drop("__dimk")
     ensureView(spark, factDir, viewDir, groupCols, sums, enrichNow)
     val version = packEpochs(f1, d1)
-    val prev = TableLog.read(vRoot).lastTxnVersion(appId)
+    val prev = MaintainCore.lastVersion(viewDir, appId)
     if (prev.exists(_ >= version)) return false
     val delta = prev match {
       case None =>
@@ -362,7 +319,9 @@ object IncrementalView {
           .unionByName(term(dF, dD))
         netDelta(contributions, groupCols, sums)
     }
-    mergeDelta(delta, viewDir, groupCols, sums, appId, version)
+    MaintainCore.commit(viewDir, Some((appId, version))) {
+      mergeDelta(delta, viewDir, groupCols, sums)
+    }
     true
   }
 }

@@ -3,9 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.arrow.{ArrowChanges, GraftCatalog}
+import graft.sources.arrow.ArrowChanges
+import MaintainCore.{Target, assign, src}
 
 /** Incremental SCD TYPE-2 dimension maintenance from a logged table's
   * change feed — the third CDC consumer next to the keyed replica
@@ -58,25 +59,12 @@ object Scd2Maintain {
       startingEpoch: Long = 0L,
       availableNow: Boolean = true): StreamingQuery = {
     require(keyCols.nonEmpty, "scd2 needs at least one key column")
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[GraftCatalog].getName)
-    val feed = spark.readStream.format("arrow")
-      .option("readChangeFeed", "true")
-      .option("startingEpoch", startingEpoch)
-      .load(srcDir)
-    val appId = "graft_scd2_" + java.util.UUID
-      .nameUUIDFromBytes(checkpoint.getBytes("UTF-8")).toString
-    val writer = feed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, dimDir, keyCols, Some((appId, batchId)))
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-    else writer).start()
+    val appId = MaintainCore.appId("graft_scd2_", checkpoint)
+    MaintainCore.start(spark, srcDir, checkpoint, startingEpoch,
+        availableNow) { (batch, batchId) =>
+      applyBatch(batch, dimDir, keyCols, Some((appId, batchId)))
+    }
   }
-
-  private val applySeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Apply one micro-batch of tagged change rows to the dimension in
     * one MERGE (see the object doc for the algebra). A batch with no
@@ -84,103 +72,60 @@ object Scd2Maintain {
   def applyBatch(batch: DataFrame, dimDir: String,
       keyCols: Seq[String],
       txn: Option[(String, Long)] = None): Unit = {
-    val spark = batch.sparkSession
-    val dimRoot = java.nio.file.Paths.get(dimDir).toAbsolutePath.normalize
-    if (txn.exists { case (app, v) =>
-      graft.sources.arrow.TableLog.read(dimRoot)
-        .lastTxnVersion(app).exists(_ >= v)
-    }) return // replayed micro-batch: already applied atomically
-    if (batch.isEmpty) return // empty window: nothing to net or commit
-    val dataCols = batch.columns.toSeq
-      .filterNot(c => c == ArrowChanges.ChangeTypeCol ||
-        c == ArrowChanges.CommitEpochCol)
-    require(keyCols.forall(dataCols.contains),
-      s"key columns ${keyCols.mkString(",")} not all present in " +
-        s"${dataCols.mkString(",")}")
-    val ec = col(ArrowChanges.CommitEpochCol)
-    val tc = col(ArrowChanges.ChangeTypeCol)
-    // 1. net per-(epoch, row): CoW carry-over cancels
-    val net = batch
-      .groupBy(ec +: dataCols.map(col): _*)
-      .agg(
-        // update_postimage/update_preimage are an UPDATE epoch's
-        // new/old values — insert/delete-equivalent under netting
-        sum(when(tc.isin("insert", ArrowChanges.UpdatePostimage), 1L)
-          .otherwise(0L)).as("__ins"),
-        sum(when(tc.isin("delete", ArrowChanges.UpdatePreimage), 1L)
-          .otherwise(0L)).as("__del"))
-      .withColumn("__op",
-        when(col("__ins") > col("__del"), lit("upsert"))
-          .when(col("__del") > col("__ins"), lit("delete")))
-      .filter(col("__op").isNotNull)
-    // 2. one event per (key, epoch): upsert supersedes delete
-    val perKeyEpoch = Window
-      .partitionBy((keyCols.map(col) :+ ec): _*)
-      .orderBy(col("__op").desc)
-    val wk = Window.partitionBy(keyCols.map(col): _*)
-    val events = net
-      .withColumn("__rn", row_number().over(perKeyEpoch))
-      .filter(col("__rn") === 1)
-      // 3. per-key interval endpoints
-      .withColumn("__next", lead(ec, 1).over(wk.orderBy(ec.asc)))
-      .withColumn("__first", min(ec).over(wk))
-    val dcols = dataCols.map(c => col(s"`$c`"))
-    val inserts = events.filter(col("__op") === "upsert")
-      .select(dcols ++ Seq(
-        ec.cast("long").as(ValidFromCol),
-        col("__next").cast("long").as(ValidToCol),
-        col("__next").isNull.as(IsCurrentCol),
-        lit("insert").as("__action"),
-        lit(-1L).as("__close_epoch")): _*)
-    val closes = events.filter(ec === col("__first"))
-      .select(dcols ++ Seq(
-        lit(-1L).as(ValidFromCol),
-        lit(null).cast("long").as(ValidToCol),
-        lit(false).as(IsCurrentCol),
-        lit("close").as("__action"),
-        ec.cast("long").as("__close_epoch")): _*)
-    val view = s"graft_scd2_${applySeq.incrementAndGet()}_" +
-      java.util.UUID.randomUUID().toString.takeRight(12)
-    // `events` feeds both union branches (inserts + closes) and the
-    // MERGE's internal jobs; a persist was tried here (round-18,
-    // guide §5) and measured SLOWER back-to-back (2.89/3.27 s unpinned
-    // vs 3.19/3.68 pinned at sf0.1): unlike ChangeReplication's
-    // winners pipeline (two stacked windows, 6 internal
-    // re-evaluations, 5.26 → 1.94 s from the same fix), this source is
-    // one CDF scan + netting agg, and the dimension MERGE's triage
-    // short-circuits — the materialization barrier costs more than the
-    // saved recompute. Left unpinned deliberately.
-    val cached = events
-    try {
-      inserts.unionAll(closes).createOrReplaceTempView(view)
-      val onKeys = keyCols.map(k => s"t.`$k` = s.`$k`").mkString(" AND ")
-      val insCols = (dataCols ++
-        Seq(ValidFromCol, ValidToCol, IsCurrentCol))
-        .map(c => s"`$c`").mkString(", ")
-      val insVals = (dataCols ++
-        Seq(ValidFromCol, ValidToCol, IsCurrentCol))
-        .map(c => s"s.`$c`").mkString(", ")
-      val merge =
-        s"""MERGE INTO graft.arrow.`$dimDir` t
-           |USING $view s ON $onKeys AND (
-           |  (s.`__action` = 'close' AND t.`$IsCurrentCol`
-           |     AND t.`$ValidFromCol` < s.`__close_epoch`)
-           |  OR (s.`__action` = 'insert'
-           |     AND t.`$ValidFromCol` = s.`$ValidFromCol`))
-           |WHEN MATCHED AND s.`__action` = 'close' THEN UPDATE SET
-           |  `$ValidToCol` = s.`__close_epoch`, `$IsCurrentCol` = false
-           |WHEN NOT MATCHED AND s.`__action` = 'insert' THEN
-           |  INSERT ($insCols) VALUES ($insVals)""".stripMargin
-      txn match {
-        case Some((app, v)) =>
-          graft.sources.arrow.ArrowDataSource
-            .withPendingTxn(dimDir, app, v) { spark.sql(merge); () }
-        case None => spark.sql(merge); ()
-      }
-    } finally {
-      spark.catalog.dropTempView(view)
-      cached.unpersist()
-      ()
+    MaintainCore.applyOnce(batch, dimDir, txn) {
+      val (dataCols, net) = MaintainCore.netRows(batch, keyCols)
+      val ec = col(ArrowChanges.CommitEpochCol)
+      // 2. one event per (key, epoch): upsert supersedes delete
+      val perKeyEpoch = Window
+        .partitionBy((keyCols.map(col) :+ ec): _*)
+        .orderBy(col("__op").desc)
+      val wk = Window.partitionBy(keyCols.map(col): _*)
+      // `events` feeds both union branches (inserts + closes) and the
+      // MERGE's internal jobs; a persist was tried here (round-18,
+      // guide §5) and measured SLOWER back-to-back (2.89/3.27 s
+      // unpinned vs 3.19/3.68 pinned at sf0.1): unlike
+      // ChangeReplication's winners pipeline (two stacked windows, 6
+      // internal re-evaluations, 5.26 → 1.94 s from the same fix), this
+      // source is one CDF scan + netting agg, and the dimension MERGE's
+      // triage short-circuits — the materialization barrier costs more
+      // than the saved recompute. Left unpinned deliberately.
+      val events = net // 1. net
+        .withColumn("__rn", row_number().over(perKeyEpoch))
+        .filter(col("__rn") === 1)
+        // 3. per-key interval endpoints
+        .withColumn("__next", lead(ec, 1).over(wk.orderBy(ec.asc)))
+        .withColumn("__first", min(ec).over(wk))
+      val dcols = dataCols.map(c => col(s"`$c`"))
+      val inserts = events.filter(col("__op") === "upsert")
+        .select(dcols ++ Seq(
+          ec.cast("long").as(ValidFromCol),
+          col("__next").cast("long").as(ValidToCol),
+          col("__next").isNull.as(IsCurrentCol),
+          lit("insert").as("__action"),
+          lit(-1L).as("__close_epoch")): _*)
+      val closes = events.filter(ec === col("__first"))
+        .select(dcols ++ Seq(
+          lit(-1L).as(ValidFromCol),
+          lit(null).cast("long").as(ValidToCol),
+          lit(false).as(IsCurrentCol),
+          lit("close").as("__action"),
+          ec.cast("long").as("__close_epoch")): _*)
+      // 4. close each key's open version, insert the version rows
+      val t = Target(dimDir)
+      val action = src("__action")
+      MaintainCore.mergeInto(inserts.unionAll(closes), t,
+          keyCols.map(k => t(k) === src(k)).reduce(_ && _) && (
+            (action === "close" && t(IsCurrentCol) &&
+              t(ValidFromCol) < src("__close_epoch")) ||
+            (action === "insert" && t(ValidFromCol) === src(ValidFromCol))))
+        .whenMatched(action === "close").update(Map(
+          s"`$ValidToCol`" -> src("__close_epoch"),
+          s"`$IsCurrentCol`" -> lit(false)))
+        .whenNotMatched(action === "insert")
+        .insert(assign(dataCols ++
+          Seq(ValidFromCol, ValidToCol, IsCurrentCol))(src))
+        .merge()
     }
+    ()
   }
 }

@@ -317,4 +317,30 @@ class ChangeReplicationSpec extends AnyFunSuite {
     assert(latestEpoch(dst) == synced)
     assert(bagEqual(snapshot(dst), snapshot(src)))
   }
+
+  test("two replicate streams sharing one session each converge to " +
+      "their own source") {
+    val srcA = sourceWithHistory("par_a_src")
+    val srcB = sourceWithHistory("par_b_src")
+    // B's rows differ from A's in every column, so a MERGE reading the
+    // other stream's batch would show in either replica
+    spark.sql(s"UPDATE graft.arrow.`$srcB` SET id = id + 1000, " +
+      "tag = concat('b_', tag)")
+    spark.sql(s"INSERT INTO graft.arrow.`$srcB` VALUES (5000, 'b_only')")
+    // a replica holding a row replays the feed instead of bootstrapping
+    // from a snapshot, so every batch of both streams runs a MERGE
+    val dstA = replica("par_a_dst", Seq((50L, "old")))
+    val dstB = replica("par_b_dst", Seq((1050L, "old")))
+    val qa = ChangeReplication.replicate(spark, srcA, dstA,
+      keyCols = Seq("id"), checkpoint = tmp("par_a_ckpt"))
+    val qb = ChangeReplication.replicate(spark, srcB, dstB,
+      keyCols = Seq("id"), checkpoint = tmp("par_b_ckpt"))
+    try { qa.processAllAvailable(); qb.processAllAvailable() }
+    finally { qa.stop(); qb.stop() }
+    assert(bagEqual(snapshot(dstA), snapshot(srcA)),
+      "replica A diverged from its source")
+    assert(bagEqual(snapshot(dstB), snapshot(srcB)),
+      "replica B diverged from its source")
+    assert(snapshot(dstB).filter(col("id") === 5000L).count() == 1)
+  }
 }

@@ -225,6 +225,43 @@ class IncrementalViewSpec extends AnyFunSuite {
       "a gated refresh must leave the view untouched")
   }
 
+  test("refreshJoined refuses a target that advances one cursor " +
+      "component and regresses the other") {
+    import spark.implicits._
+    val fact = Files.createTempDirectory("ivmc_fact").toString
+    val dimd = Files.createTempDirectory("ivmc_dim").toString
+    val dst = Files.createTempDirectory("ivmc_dst").toString
+    (1 to 20).map(i => (i.toLong, (i % 4).toLong, i.toLong))
+      .toDF("id", "k", "amt")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(fact)
+    ArrowDataSource.initTableLog(fact)
+    (0L to 3L).map(k => (k, s"r$k")).toDF("k", "region")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(dimd)
+    ArrowDataSource.initTableLog(dimd)
+    for (i <- 1 to 2)
+      spark.sql(s"INSERT INTO graft.arrow.`$fact` VALUES (${100 + i}, 1, 5)")
+    for (i <- 1 to 3)
+      spark.sql(s"INSERT INTO graft.arrow.`$dimd` VALUES (${10 + i}, 'x')")
+    def latest(dir: String): Long =
+      ArrowDataSource.latestCommittedEpoch(Paths.get(dir).toAbsolutePath.normalize)
+    val (fLatest, dLatest) = (latest(fact), latest(dimd))
+    def refresh(f: Long, d: Long): Boolean =
+      IncrementalView.refreshJoined(spark, fact, dimd, dst,
+        factKey = "k", dimKey = "k", dimCols = Seq("region"),
+        groupCols = Seq("region"), sums = Seq(("amt", "sum_amt")),
+        appId = "ivmc_spec", factUpTo = Some(f), dimUpTo = Some(d))
+    // cursor (fact - 1, dim), then a target that advances the fact
+    // cursor and moves the dim cursor back by two epochs
+    val (f0, d0) = (fLatest - 1, dLatest)
+    val (f1, d1) = (fLatest, dLatest - 2)
+    assert(refresh(f0, d0))
+    val viewEpoch = latest(dst)
+    val err = intercept[IllegalArgumentException](refresh(f1, d1))
+    assert(err.getMessage.contains(s"($f1, $d1)") &&
+      err.getMessage.contains(s"($f0, $d0)"), err.getMessage)
+    assert(latest(dst) == viewEpoch, "a refused refresh committed an epoch")
+  }
+
   test("a source RESTORE flows through the feed as churn the additive " +
       "deltas absorb — the view converges to the restored aggregate") {
     import spark.implicits._
