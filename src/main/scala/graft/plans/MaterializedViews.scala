@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.arrow.ArrowDataSource
+import graft.sources.arrow.{ArrowDataSource, ArrowTable}
 
 /** Materialized-view QUERY REWRITE over the incrementally maintained
   * views ([[graft.streaming.IncrementalView]]) — the optimizer half of
@@ -134,14 +134,9 @@ object RewriteToMaterializedView extends Rule[LogicalPlan] {
     else None
   }
 
-  private def viewRelation(e: Entry): DataSourceV2Relation = {
-    val provider = new ArrowDataSource()
-    val opts = new CaseInsensitiveStringMap(
-      Map("path" -> e.viewDir).asJava)
-    val table = provider.getTable(provider.inferSchema(opts),
-      Array.empty, Map("path" -> e.viewDir).asJava)
-    DataSourceV2Relation.create(table, None, None, opts)
-  }
+  private def viewRelation(e: Entry): DataSourceV2Relation =
+    DataSourceV2Relation.create(ArrowTable.load(e.viewDir), None, None,
+      new CaseInsensitiveStringMap(Map("path" -> e.viewDir).asJava))
 
   /** sum(measure) pattern → measure name, when registered. */
   private def sumMeasure(e: Entry, x: Expression): Option[String] = {

@@ -650,8 +650,7 @@ object DedupQueries {
   def substringDedupIncremental(spark: SparkSession, dir: String)
       : DataFrame = {
     val L = 30
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled",
       "true")

@@ -186,8 +186,7 @@ object GraphQueries {
     * [[pageRank]] — one oracle covers both; GraphSpec pins the
     * single-exchange join shape and the result equality. */
   def pageRankIndexed(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled",
       "true")

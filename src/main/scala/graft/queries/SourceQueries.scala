@@ -289,8 +289,7 @@ object SourceQueries {
     * repeated-fact-fact-join layout: the shuffle is paid once at write
     * time, then every subsequent join on the key is exchange-free. */
   def arrowBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val liOut = tmp("arrowbkt_li", dir)
     val oOut = tmp("arrowbkt_o", dir)
@@ -322,8 +321,7 @@ object SourceQueries {
     * paid once at write time, and every later join on the key is both
     * shuffle-free and sort-free. */
   def arrowSortedJoin(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val liOut = tmp("arrowsrt_li", dir)
     val oOut = tmp("arrowsrt_o", dir)

@@ -72,8 +72,7 @@ object StorageQueries {
     * this is the periodic reconciliation pass: runtime group
     * filtering bounds the rewrite to files holding churned keys. */
   def mergeFullSync(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val dst = graft.Scratch.dir("sync_dst", dir)
     graft.Scratch.reset(dst)
     val base = Tables.orders(spark, dir)
@@ -119,8 +118,7 @@ object StorageQueries {
     * materialize the column as null); every untouched file serves it
     * as null through the by-name reader. */
   def mergeUpsertEvolve(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("mergeevo_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -163,8 +161,7 @@ object StorageQueries {
     * file census; the compliance op Delta spells DELETE + REORG APPLY
     * (PURGE) + VACUUM RETAIN 0). */
   def arrowPurge(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("purge_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -351,8 +348,7 @@ object StorageQueries {
     * 100 TB shape: retention sweeps and GDPR-style partition drops are
     * metadata operations, never table rewrites. */
   def arrowDeletePartition(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_delete", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -373,8 +369,7 @@ object StorageQueries {
     * range-sorted write gives each file a disjoint o_orderkey slice,
     * so the low-key delete provably skips the upper files. */
   def arrowDeleteRows(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_delete_rows", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -396,8 +391,7 @@ object StorageQueries {
     * holding matches, and the range-sorted layout means the low-key
     * predicate provably skips the upper files. */
   def arrowUpdateRows(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_update_rows", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -417,8 +411,7 @@ object StorageQueries {
     * 'M'. Same ReplaceData machinery as [[arrowUpdateRows]]; inserts
     * ride the replacement write as fresh files. */
   def arrowMergeRows(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_merge_rows", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -448,8 +441,7 @@ object StorageQueries {
     * the zone-map batch-skip win is pinned by GraftProcedureSpec's
     * counter test. */
   def arrowZorderBox(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_zorder", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -469,8 +461,7 @@ object StorageQueries {
     * vacuum (reclaims nothing here — proves it never touches live
     * data) → aggregate matches the untouched oracle exactly. */
   def arrowMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_maint", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -494,8 +485,7 @@ object StorageQueries {
     * reproducing yesterday's training run is a metadata resolve, not
     * a restore-from-backup. */
   def arrowTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_time_travel", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -522,8 +512,7 @@ object StorageQueries {
     * table. The 100 TB shape: "the table as of last night's cron" is
     * a stamp lookup over O(epochs) metadata, not a data operation. */
   def arrowTimestampTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_ts_travel", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -572,8 +561,7 @@ object StorageQueries {
     * the oracles pin that. Cuts the bench's per-query fixture DML
     * from 3× to 1× without touching any measured maintenance path. */
   private def cdcSource(spark: SparkSession, dir: String): String = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("cdc_shared_src", dir)
     graft.Fixtures.once(src) {
       graft.Scratch.reset(src)
@@ -710,8 +698,7 @@ object StorageQueries {
     * 3 INSERT (keys no fact references). */
   private def ivmmSource(spark: SparkSession, dir: String)
       : (String, String) = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val fact = graft.Scratch.dir("ivmm_fact", dir)
     val dimd = graft.Scratch.dir("ivmm_dim", dir)
     graft.Fixtures.once(fact) {
@@ -788,8 +775,7 @@ object StorageQueries {
     * needs: readers of main never see a half-applied batch, and a
     * failed audit costs nothing but the branch's own files. */
   def arrowWapPublish(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val main = graft.Scratch.dir("wap_q_main", dir)
     val branch = graft.Scratch.dir("wap_q_branch", dir)
     graft.Scratch.reset(main, branch)
@@ -838,8 +824,7 @@ object StorageQueries {
     * cost is the refresh maintenance and the rewrite under test, not
     * two table writes + a DML job. */
   def mvRewriteAgg(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("mvq_src", dir)
     graft.Fixtures.once(src) {
       graft.Scratch.reset(src)
@@ -878,8 +863,7 @@ object StorageQueries {
     * counts and integral sums. The query REQUIRES the rollup to have
     * fired; DuckDB recomputes from the base table. */
   def mvRewriteRollup(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("mvr_src", dir)
     // round-18: the logged source is immutable after its build —
     // shared across invocations (cdcSource convention); the refresh
@@ -920,8 +904,7 @@ object StorageQueries {
     * adding a column to a petabyte table is one metadata write; no
     * file is rewritten until a row-level operation touches it. */
   def arrowAddColumn(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("addcol_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -1020,8 +1003,7 @@ object StorageQueries {
     * "everything before today is channel='legacy'" on a petabyte
     * table is one metadata write, not a backfill job. */
   def arrowDefaultColumn(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("defcol_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -1057,8 +1039,7 @@ object StorageQueries {
     * firing over the narrow generations (integral stats are exact
     * longs, integral bloom hashing is width-agnostic). */
   def arrowTypeWiden(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("widen_q", dir)
     graft.Scratch.reset(out)
     // the narrow generation's key folds into int range REGARDLESS of
@@ -1104,8 +1085,7 @@ object StorageQueries {
     * name natively, and a CoW UPDATE materializes it. No file is
     * rewritten by the rename itself. */
   def arrowRenameColumn(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("renamecol_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -1228,8 +1208,7 @@ object StorageQueries {
     * plain GROUP BY — proving the layout's metadata is an exact
     * census of the data. */
   def arrowPartitionsMeta(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("parts_meta", dir)
     graft.Fixtures.once(out) {
       Tables.orders(spark, dir)
@@ -1253,8 +1232,7 @@ object StorageQueries {
     * costs the matched files' scan plus kilobyte sidecars, not a
     * petabyte rewrite. */
   def arrowDeleteDv(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("dv_q_src", dir)
     graft.Scratch.reset(src)
     Tables.orders(spark, dir)
@@ -1282,8 +1260,7 @@ object StorageQueries {
     * ArrowDeltaSpec pins that not one pre-existing data file
     * rewrites; this query pins the VALUES under the hash gate. */
   def arrowDeltaUpdate(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("delta_q_src", dir)
     graft.Scratch.reset(src)
     Tables.orders(spark, dir)
@@ -1326,8 +1303,7 @@ object StorageQueries {
     * source isolation in one result. The 100 TB shape: a writable
     * dev/test sandbox of a petabyte table in one metadata commit. */
   def arrowClone(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val src = graft.Scratch.dir("clone_q_src", dir)
     val dst = graft.Scratch.dir("clone_q_dst", dir)
     graft.Scratch.reset(src, dst)
@@ -1360,8 +1336,7 @@ object StorageQueries {
     * untouched data, proving restore resurrects exactly the old file
     * set while keeping the mutations addressable in history. */
   def arrowRestore(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_restore", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -1390,8 +1365,7 @@ object StorageQueries {
     * predicates over the untouched table. The 100 TB shape: a day of
     * DML against a petabyte table diffs the day's files. */
   def arrowChanges(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_changes", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -1425,8 +1399,7 @@ object StorageQueries {
     * source, O(churned bytes) read, and the netting is ONE hash
     * aggregation the consumer owns. */
   def arrowCdfBatch(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_cdf_batch", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -1473,8 +1446,7 @@ object StorageQueries {
     * proof. The 100 TB shape: retrying ingestion over a petabyte
     * landing zone costs a listing + ledger lookup, never a re-load. */
   def arrowCopyInto(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val landing = graft.Scratch.dir("copy_landing", dir)
     val table = graft.Scratch.dir("copy_target", dir)
     val staged = graft.Scratch.dir("copy_staged", dir)
@@ -1543,8 +1515,7 @@ object StorageQueries {
     * ordinary OPTIMIZE traffic. */
   def arrowPartitionEvolution(spark: SparkSession, dir: String)
       : DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("part_evolution", dir)
     graft.Scratch.reset(out)
     val o = Tables.orders(spark, dir)
@@ -1576,8 +1547,7 @@ object StorageQueries {
     * shape: "the corpus the model trained on" is a name, not a number
     * someone has to remember; resolution is one metadata read. */
   def arrowTagTravel(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("arrow_tag_travel", dir)
     Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -1606,8 +1576,7 @@ object StorageQueries {
     * implementation. The 100 TB shape: CREATE and both ALTERs are one
     * metadata write each; only the INSERT epochs touch data. */
   def arrowDdlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("ddl_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir).createOrReplaceTempView("ddl_orders_src")
@@ -1640,8 +1609,7 @@ object StorageQueries {
     * rename + one manifest commit — a petabyte staging workflow whose
     * cost is the churn, never the table. */
   def arrowBranchPublish(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("branchq", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)
@@ -1684,8 +1652,7 @@ object StorageQueries {
     * and pruning on the derived column for free instead of
     * recomputing the expression per query. */
   def arrowGeneratedColumn(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.arrow.GraftCatalog].getName)
+    graft.sources.arrow.GraftCatalog.register(spark)
     val out = graft.Scratch.dir("gencol_q", dir)
     graft.Scratch.reset(out)
     Tables.orders(spark, dir)

@@ -864,8 +864,7 @@ object VectorQueries {
       ivfAssign(spark, dir).repartition(col("cell"))
         .write.format("arrow").partitionBy("cell")
         .mode("overwrite").save(index)
-      spark.conf.set("spark.sql.catalog.graft",
-        classOf[graft.sources.arrow.GraftCatalog].getName)
+      graft.sources.arrow.GraftCatalog.register(spark)
       graft.sources.arrow.ArrowDataSource.initTableLog(index)
       spark.sql(s"CALL graft.system.set_dv(path => '$index')").collect()
       spark.sql(s"DELETE FROM graft.arrow.`$index` WHERE vec_id % 7 = 3")

@@ -279,6 +279,7 @@ object ArrowChanges {
   * than silently skipping reclaimed epochs. */
 class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.types.StructType,
     partSchema: org.apache.spark.sql.types.StructType,
+    footerMemo: FooterIndex, // the starting scan's: footer parses only
     startingEpoch: Option[Long], maxFilesPerTrigger: Option[Int],
     partFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -292,7 +293,6 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
       s"arrow readChangeFeed: $path carries no commit log — only logged " +
         "tables (DML'd, or written by the arrow streaming sink) have a " +
         "change feed"))
-  private val footerMemo = new FooterIndex(path)
 
   case class CdfOffset(epoch: Long) extends Offset {
     override def json(): String = s"""{"epoch":$epoch}"""
@@ -386,7 +386,8 @@ class ArrowChangesMicroBatchStream(path: String, schema: org.apache.spark.sql.ty
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(schema, Array.empty, partSchema)
+    new ArrowReaderFactory(schema, Array.empty, partSchema,
+      footerMemo.snap.declaration)
 
   override def commit(end: Offset): Unit = ()
 

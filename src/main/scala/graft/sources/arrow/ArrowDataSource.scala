@@ -39,24 +39,45 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = true
 
-  private def paths(options: CaseInsensitiveStringMap): Seq[Path] = {
-    val p = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("arrow source requires a path"))
-    ArrowDataSource.visibleIpcFiles(p)
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    ArrowTable.inferSchema(TableSnapshot.read(Option(options.get("path"))
+      .getOrElse(throw new IllegalArgumentException(
+        "arrow source requires a path"))), options)
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: JMap[String, String]): Table =
+    new ArrowTable(schema, properties.asScala.toMap, partitioning)
+}
+
+object ArrowTable {
+  /** The table at `path` for the catalog: one snapshot infers the
+    * schema and resolves `TIMESTAMP AS OF` (`timestampMillis`) to the
+    * epoch the table travels to; `version` travels to an epoch. */
+  def load(path: String, version: Option[Long] = None,
+      timestampMillis: Option[Long] = None): ArrowTable = {
+    val snap = TableSnapshot.read(path)
+    val epoch =
+      version.orElse(timestampMillis.map(snap.stampLog.epochForTimestamp))
+    val props = Map("path" -> path) ++
+      epoch.map(e => "epochAsOf" -> e.toString)
+    new ArrowTable(inferSchema(snap,
+      new CaseInsensitiveStringMap(Map("path" -> path).asJava)), props)
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+  /** The table schema of `snap`'s files (latest epoch, whatever
+    * `VERSION`/`TIMESTAMP AS OF` a later scan travels to). */
+  def inferSchema(snap: TableSnapshot,
+      options: CaseInsensitiveStringMap): StructType = {
+    val root = snap.path
     // change-feed reads surface the table schema plus the two change
     // metadata columns; everything below infers the table schema
     if (Option(options.get("readChangeFeed")).exists(_.toBoolean)) {
-      val p = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException("arrow source requires a path"))
-      require(ArrowDataSource.sinkRoot(p).isDefined,
-        s"arrow readChangeFeed: $p carries no commit log — only logged " +
+      require(snap.log.isDefined,
+        s"arrow readChangeFeed: $root carries no commit log — only logged " +
           "tables (DML'd, or written by the arrow streaming sink) have " +
           "a change feed")
       // CaseInsensitiveStringMap stores keys lowercased
-      val base = inferSchema(new CaseInsensitiveStringMap(
+      val base = inferSchema(snap, new CaseInsensitiveStringMap(
         (options.asScala.toMap - "readchangefeed").asJava))
       return StructType(base.fields ++ Seq(
         org.apache.spark.sql.types.StructField(ArrowChanges.ChangeTypeCol,
@@ -64,61 +85,55 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
         org.apache.spark.sql.types.StructField(ArrowChanges.CommitEpochCol,
           org.apache.spark.sql.types.LongType, nullable = false)))
     }
-    var files = paths(options)
+    val declared = snap.declaration.schema
+    var files = snap.footers.files
     if (files.isEmpty) {
       // A logged table DML emptied has zero VISIBLE files but must
       // stay addressable (read count 0, INSERT/RESTORE back to life).
       // Its replaced files are still on disk until vacuum and carry
       // the authoritative footer schema — infer from those.
-      val p = Option(options.get("path")).get
-      if (ArrowDataSource.isTableLog(p))
-        files = ArrowDataSource.listIpcFiles(p).take(1)
+      if (snap.isTableLog)
+        files = ArrowDataSource.listIpcFiles(root).take(1)
       if (files.isEmpty) {
         // a freshly CREATE TABLE'd table has no file AT ALL, visible
         // or replaced — its declaration IS the schema (plus any
         // recorded partition spec), exactly the reading a first
         // INSERT plans against
-        val r = ArrowDataSource.sinkRoot(p)
-          .getOrElse(Paths.get(p).toAbsolutePath.normalize)
-        ArrowDataSource.declaredSchema(r).foreach { ds =>
-          val partCols = ArrowDataSource.discoverPartitionSchema(p)
+        declared.foreach { ds =>
+          val partCols = snap.partSchema
           return StructType(ds.fields.filterNot(f =>
             partCols.fieldNames.contains(f.name)) ++ partCols.fields)
         }
       }
     }
-    require(files.nonEmpty, s"no .arrow files under ${options.get("path")}")
-    val root = Option(options.get("path")).get
+    require(files.nonEmpty, s"no .arrow files under $root")
     // Write-time footer-stats sidecar: schema inference AND the
     // consistency sweep below resolve from one metadata read for every
     // covered file; only uncovered files (foreign writers, maintenance
     // rewrites) open footers. Stored schemas are what readFooterSchema
     // surfaced at write commit, so a hit is bit-identical to a sweep.
-    // Anchor at the SINK ROOT (sidecar keys are table-root-relative) so
-    // a read addressed at a partition subdirectory still hits the index
-    val sidecarRoot = ArrowDataSource.sinkRoot(root)
-      .getOrElse(Paths.get(root).toAbsolutePath.normalize)
-    val sidecarIdx = FooterIndexFile.load(sidecarRoot)
+    // Keys are relative to the SINK ROOT, so a read addressed at a
+    // partition subdirectory still hits the index
     def idxSchema(f: Path): Option[StructType] =
-      sidecarIdx.flatMap { ix =>
+      snap.sidecar.flatMap { ix =>
         scala.util.Try(
-          sidecarRoot.relativize(f.toAbsolutePath.normalize).toString)
+          snap.root.relativize(f.toAbsolutePath.normalize).toString)
           .toOption.flatMap(ix.schemaOf)
       }
     // A DECLARED schema (metadata-only ADD COLUMN) is authoritative:
     // files predating an added column serve it as nulls via the
     // by-name reader. Every footer must still be a name+type SUBSET of
     // the declaration — real type drift stays a loud error.
-    ArrowDataSource.declaredSchema(sidecarRoot).foreach { ds =>
-      val (declared, dropped) =
-        ArrowDataSource.toleratedFooterFields(sidecarRoot, ds)
+    declared.foreach { ds =>
+      val (tolerated, dropped) = ArrowDataSource.toleratedFooterFields(
+        snap.root, ds, snap.declaration)
       val bad = new java.util.concurrent.atomic.AtomicReference[String](null)
       files.asJava.parallelStream().forEach { f =>
         if (bad.get() == null) {
           val got = idxSchema(f)
             .getOrElse(ArrowDataSource.readFooterSchema(f))
           got.fields.find(g =>
-              !ArrowDataSource.footerFieldTolerated(declared, dropped, g)
+              !ArrowDataSource.footerFieldTolerated(tolerated, dropped, g)
               && !dropped(g.name)).foreach(
             g => bad.compareAndSet(null,
               s"arrow: $f carries ${g.name}:${g.dataType.simpleString} " +
@@ -128,7 +143,7 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
         }
       }
       Option(bad.get()).foreach(m => throw new IllegalArgumentException(m))
-      val partCols = ArrowDataSource.discoverPartitionSchema(root)
+      val partCols = snap.partSchema
       // partition evolution: an evolved column may sit in the declared
       // data schema (pre-evolution generations carry it in bytes) —
       // it must surface ONCE, through the partition machinery, whose
@@ -185,7 +200,7 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
         case Some(g) => out(f.name) =
           g.copy(dataType = unionType(f.name, g.dataType, f.dataType))
       }
-      val partCols = ArrowDataSource.discoverPartitionSchema(root)
+      val partCols = snap.partSchema
       return StructType(out.values.toArray.filterNot(f =>
         partCols.fieldNames.contains(f.name)) ++ partCols.fields)
     }
@@ -237,10 +252,6 @@ class ArrowDataSource extends TableProvider with DataSourceRegister {
     val partCols = ArrowDataSource.discoverPartitionSchema(root, files)
     StructType(dataSchema.fields ++ partCols.fields)
   }
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new ArrowTable(schema, properties.asScala.toMap, partitioning)
 }
 
 class ArrowTable(schema: StructType, properties: Map[String, String],
@@ -300,9 +311,8 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     val path = properties.getOrElse("path",
       throw new IllegalArgumentException("arrow: path required"))
-    ArrowDataSource.requireTableRootForDml(path,
-      s"row-level ${info.command}")
-    new ArrowRowLevelOperationBuilder(path, schema, info)
+    new ArrowRowLevelOperationBuilder(
+      TableSnapshot.forDml(path, s"row-level ${info.command}"), schema, info)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -311,12 +321,11 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       .getOrElse(throw new IllegalArgumentException("arrow: path required"))
     val maxSplitBytes = Option(options.get("maxSplitBytes")).map(_.toLong)
       .getOrElse(128L * 1024 * 1024)
-    // ONE log read plans the whole scan: files, deletion vectors,
-    // partition discovery, timestamp travel and change-feed bounds
-    val log = TableLog.forDir(path)
-    // timestamps resolve against the log, or refuse on a flat directory
-    lazy val stampLog = log.getOrElse(
-      TableLog.read(Paths.get(path).toAbsolutePath.normalize))
+    // ONE snapshot plans the whole scan: files, deletion vectors,
+    // footer stats, ledgers, partition discovery, timestamp travel and
+    // change-feed bounds
+    val snap = TableSnapshot.read(path)
+    lazy val stampLog = snap.stampLog
     val epochAsOf = {
       val byEpoch = Option(options.get("epochAsOf"))
         .orElse(properties.get("epochAsOf")).map(_.toLong)
@@ -345,7 +354,7 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
         f
       }.toSeq
     }
-    new ArrowScanBuilder(path, schema, log, maxSplitBytes, epochAsOf,
+    new ArrowScanBuilder(snap, schema, maxSplitBytes, epochAsOf,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
       Option(options.get("ignoreChanges")).exists(_.toBoolean),
       explicitFiles,
@@ -395,23 +404,18 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
     * list and only overlapping files rewrite, one task per file.
     * Predicates FilterEval cannot claim (NOT, unsupported types) are
     * refused (`canDeleteWhere` false) rather than evaluated wrong. */
-  private def partSchemaOf(path: String): StructType =
-    ArrowDataSource.discoverPartitionSchema(path)
-
-  private def partitionOnly(ps: StructType,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    filters.forall(f => f.references.forall(ps.fieldNames.contains(_)) &&
-      FilterEval.supported(ps, f))
-
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
     val path = properties.getOrElse("path", return false)
-    val ps = partSchemaOf(path)
+    deletable(TableSnapshot.read(path).partSchema, filters)
+  }
+
+  private def deletable(ps: StructType,
+      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     filters.forall(f => f.references.nonEmpty &&
       ((f.references.forall(ps.fieldNames.contains(_)) &&
         FilterEval.supported(ps, f)) ||
         FilterEval.supported(schema, f)))
-  }
 
   /** `TRUNCATE TABLE graft.arrow.`/path`` — Spark's TruncateTableExec
     * IGNORES this method's boolean, so the inherited default (which
@@ -425,18 +429,10 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
   override def truncateTable(): Boolean = {
     val path = properties.getOrElse("path",
       throw new IllegalArgumentException("arrow: path required"))
-    if (ArrowDataSource.sinkRoot(path).isDefined &&
-        !ArrowDataSource.isTableLog(path))
-      throw new UnsupportedOperationException(
-        s"arrow: $path carries a streaming commit log " +
-          s"(${ArrowDataSource.MetadataDirName}); TRUNCATE would " +
-          "desync the manifests — overwrite the directory instead")
-    ArrowDataSource.requireTableRootForDml(path, "TRUNCATE")
-    ArrowDataSource.initTableLog(path)
-    val log = TableLog.read(Paths.get(path).toAbsolutePath.normalize)
-    val victims = log.files(path, None)
+    val snap = TableSnapshot.forDml(path, "TRUNCATE")
+    val victims = snap.files(None)
     if (victims.nonEmpty)
-      ArrowDataSource.commitTableEpoch(path, log.latest, Seq.empty,
+      ArrowDataSource.commitTableEpoch(path, snap.latest, Seq.empty,
         victims.map(_.toString))
     true
   }
@@ -445,42 +441,32 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     val path = properties.getOrElse("path",
       throw new IllegalArgumentException("arrow: path required"))
-    if (ArrowDataSource.sinkRoot(path).isDefined &&
-        !ArrowDataSource.isTableLog(path))
-      throw new UnsupportedOperationException(
-        s"arrow: $path carries a streaming commit log " +
-          s"(${ArrowDataSource.MetadataDirName}); DELETE would desync " +
-          "the manifests — rewrite the directory with a batch " +
-          "overwrite instead")
-    ArrowDataSource.requireTableRootForDml(path, "DELETE")
-    val ps = partSchemaOf(path)
-    require(canDeleteWhere(filters),
-      s"arrow DELETE needs FilterEval-supported predicates, got " +
-        filters.mkString("[", ",", "]"))
     // Every DELETE path is logged: the first one upgrades a flat
     // directory to a table (epoch 0 = current files), making the
     // delete atomic for readers and the pre-delete state addressable
     // via VERSION AS OF until vacuum.
-    ArrowDataSource.initTableLog(path)
-    val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    val log = TableLog.read(root)
-    val visible = log.files(path, None)
+    val snap = TableSnapshot.forDml(path, "DELETE")
+    val ps = snap.partSchema
+    require(deletable(ps, filters),
+      s"arrow DELETE needs FilterEval-supported predicates, got " +
+        filters.mkString("[", ",", "]"))
+    val visible = snap.files(None)
     // metadata-only unlink is sound ONLY when every visible file
     // exposes every referenced column in its PATH — under partition
     // evolution, pre-evolution generations carry the column in bytes,
     // so their matching rows must go through the copy-on-write path
     // (which evaluates the real byte values)
     val refs = filters.flatMap(_.references).toSet
-    val dirComplete = !java.nio.file.Files.isRegularFile(
-      root.resolve(ArrowDataSource.MetadataDirName)
-        .resolve(ArrowDataSource.PartSpecFileName)) ||
+    val dirComplete = !snap.evolved ||
       visible.forall(f =>
         refs.subsetOf(
           ArrowDataSource.partitionValueMap(path, f).keySet))
-    if (!partitionOnly(ps, filters) || !dirComplete) {
+    val partitionOnly = filters.forall(f =>
+      f.references.forall(ps.fieldNames.contains(_)) &&
+        FilterEval.supported(ps, f))
+    if (!partitionOnly || !dirComplete) {
       ArrowDelete.deleteWhere(
-        org.apache.spark.sql.SparkSession.active, path, ps,
-        filters.toSeq, log)
+        org.apache.spark.sql.SparkSession.active, snap, filters.toSeq)
       return
     }
     // partition-only predicate: a pure METADATA delete — one epoch
@@ -488,7 +474,7 @@ class ArrowTable(schema: StructType, properties: Map[String, String],
     val victims = ArrowDataSource.pruneByPartitionFilters(
       visible, path, ps, filters.toSeq)
     if (victims.nonEmpty)
-      ArrowDataSource.commitTableEpoch(path, log.latest, Seq.empty,
+      ArrowDataSource.commitTableEpoch(path, snap.latest, Seq.empty,
         victims.map(_.toString))
   }
 
@@ -894,8 +880,9 @@ object ArrowDataSource {
     }
     // covered metadata is now redundant: older snapshots and every
     // manifest (and stamp marker) at or below this snapshot's epoch
-    listDir(md).foreach { f =>
-      val n = f.getFileName.toString
+    val names = listDir(md).map(_.getFileName.toString)
+    names.foreach { n =>
+      val f = md.resolve(n)
       val covered =
         (n.endsWith(".manifest") && TableLog.epochOf(n) <= epochId) ||
           (n.endsWith(".ts") && TableLog.epochOf(n) <= epochId) ||
@@ -905,7 +892,7 @@ object ArrowDataSource {
     }
     // fold per-epoch footer-stats fragments the same way: the covered
     // epochs' stats join the root sidecar, the tail stays per-epoch
-    FooterIndexFile.foldFragments(root, epochId)
+    FooterIndexFile.foldFragments(root, names, epochId)
   }
 
   /** Atomic, conflict-checked TABLE epoch commit: `removes` leave the
@@ -1046,12 +1033,11 @@ object ArrowDataSource {
     epoch
   }
 
-  /** Rows live in `dir` net of deletion vectors, counted from `log`
-    * (None = flat: the directory listing) and footer row stats alone —
-    * no data read. None when a live file's footer carries no row
-    * count. */
-  def liveRowCount(dir: String, log: Option[TableLog]): Option[Long] = {
-    val ix = new FooterIndex(dir, None, None, log)
+  /** Rows live in `snap`'s head net of deletion vectors, counted from
+    * its files and footer row stats alone — no data read. None when a
+    * live file's footer carries no row count. */
+  def liveRowCount(snap: TableSnapshot): Option[Long] = {
+    val ix = snap.footers
     val counts = ix.files.map { f =>
       val info = ix.info(f)
       val total =
@@ -1126,24 +1112,20 @@ object ArrowDataSource {
   /** The CURRENT declaration file and its CAS generation: the highest
     * `_schema.g<N>` when any exist, else the legacy bare `_schema` at
     * generation 0. None when undeclared. */
-  private[arrow] def currentSchemaFile(md: Path): Option[(Path, Long)] = {
-    if (!Files.isDirectory(md)) return None
+  private[arrow] def currentSchemaFile(md: Path,
+      listing: Option[Set[String]] = None): Option[(Path, Long)] = {
+    val names = listing.getOrElse {
+      if (!Files.isDirectory(md)) return None
+      listDir(md).map(_.getFileName.toString).toSet
+    }
     val prefix = SchemaFileName + ".g"
-    val gens = {
-      val s = Files.list(md)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith(prefix) && !n.endsWith(".inprogress"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong)
-          .toOption.map(g => (md.resolve(n), g)))
-        .toVector
-      finally s.close()
-    }
+    val gens = names.toSeq
+      .filter(n => n.startsWith(prefix) && !n.endsWith(".inprogress"))
+      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong)
+        .toOption.map(g => (md.resolve(n), g)))
     if (gens.nonEmpty) Some(gens.maxBy(_._2))
-    else {
-      val bare = md.resolve(SchemaFileName)
-      if (Files.isRegularFile(bare)) Some((bare, 0L)) else None
-    }
+    else if (names(SchemaFileName)) Some((md.resolve(SchemaFileName), 0L))
+    else None
   }
 
   /** Current declaration generation; -1 when undeclared. Read this
@@ -1162,34 +1144,67 @@ object ArrowDataSource {
       .map(f => Files.readAllLines(f._1).asScala.toSeq)
       .getOrElse(Seq.empty)
 
+  /** A table's DECLARED data schema (None = undeclared) with its
+    * ledgers, parsed from one `_schema` generation:
+    *  - `dropped`: column names DROPPED from the declaration — files
+    *    still carrying them pass the drift sweep, and `add_column`
+    *    refuses to re-use them (without per-column ids, re-adding a
+    *    dropped name would RESURRECT the old files' values);
+    *  - `aliases`: the RENAME ledger, logical name → the physical names
+    *    files written before (each of) its renames carry. The reader
+    *    resolves a requested logical column by its own name first,
+    *    then each ledgered physical — Delta column mapping's effect
+    *    without per-column ids, for the rename-only case;
+    *  - `defaults`: INITIAL DEFAULTS (Iceberg's initial-default),
+    *    column name → SQL literal text served in place of NULL for
+    *    files whose footer LACKS the column (a post-declaration file
+    *    that stores an explicit NULL serves NULL). Declared by
+    *    `add_column(..., default => ...)`. */
+  final case class Declaration(
+      schema: Option[org.apache.spark.sql.types.StructType],
+      dropped: Set[String],
+      aliases: Map[String, Seq[String]],
+      defaults: Map[String, String])
+
+  /** The current [[Declaration]] under `root`, its generation picked
+    * from `listing` (a [[TableLog.listing]]) when given. */
+  def declaration(root: Path, listing: Option[Set[String]] = None)
+      : Declaration =
+    currentSchemaFile(root.resolve(MetadataDirName), listing) match {
+      case None => Declaration(None, Set.empty, Map.empty, Map.empty)
+      case Some((f, _)) =>
+        val lines = Files.readAllLines(f).asScala.toSeq
+        val dropped = Set.newBuilder[String]
+        val aliases = Map.newBuilder[String, Seq[String]]
+        val defaults = Map.newBuilder[String, String]
+        lines.drop(1).foreach { line =>
+          line.split("\t").toList match {
+            case "drop" :: name :: Nil => dropped += name; ()
+            case "alias" :: logical :: physicals if physicals.nonEmpty =>
+              aliases += (logical -> physicals); ()
+            // initial defaults: the literal is the line's remainder (a
+            // string literal may itself contain a tab; add_column
+            // refuses newlines, the only structural byte here)
+            case "default" :: name :: rest if rest.nonEmpty =>
+              defaults += (name -> rest.mkString("\t")); ()
+            case _ => ()
+          }
+        }
+        Declaration(
+          lines.headOption.map(org.apache.spark.sql.types.StructType.fromDDL),
+          dropped.result(), aliases.result(), defaults.result())
+    }
+
   def declaredSchema(root: Path): Option[org.apache.spark.sql.types.StructType] =
-    currentSchemaFile(root.resolve(MetadataDirName))
-      .flatMap(f => Files.readAllLines(f._1).asScala.headOption)
-      .map(org.apache.spark.sql.types.StructType.fromDDL)
+    declaration(root).schema
 
-  /** Column names DROPPED from the declared schema (`drop` ledger
-    * lines of `_schema`): files still carrying them pass the drift
-    * sweep, and `add_column` refuses to re-use them — without
-    * per-column ids, re-adding a dropped name would RESURRECT the old
-    * files' values. */
-  def droppedColumns(root: Path): Set[String] =
-    schemaLedger(root)._1
+  def droppedColumns(root: Path): Set[String] = declaration(root).dropped
 
-  /** RENAME ledger: logical name → the physical names files written
-    * before (each of) its renames carry. The reader resolves a
-    * requested logical column by trying its own name first, then each
-    * ledgered physical — Delta column mapping's effect without
-    * per-column ids, for the rename-only case. */
   def aliasColumns(root: Path): Map[String, Seq[String]] =
-    schemaLedger(root)._2
+    declaration(root).aliases
 
-  /** INITIAL DEFAULTS (Iceberg's initial-default): column name → SQL
-    * literal text served in place of NULL for files whose footer LACKS
-    * the column (presence in the footer decides — a post-declaration
-    * file that stores an explicit NULL serves NULL). Declared by
-    * `add_column(..., default => ...)`. */
   def defaultColumns(root: Path): Map[String, String] =
-    schemaLedger(root)._3
+    declaration(root).defaults
 
   /** Parse, fold and ANSI-cast a default literal to the column type's
     * INTERNAL value (UTF8String / Long / Int / ...). Loud on
@@ -1208,34 +1223,6 @@ object ArrowDataSource {
       .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
   }
 
-  private def schemaLedger(root: Path)
-      : (Set[String], Map[String, Seq[String]], Map[String, String]) =
-    currentSchemaFile(root.resolve(MetadataDirName)) match {
-      case None => (Set.empty, Map.empty, Map.empty)
-      case Some((f, _)) => parseLedger(f)
-    }
-
-  private def parseLedger(f: Path)
-      : (Set[String], Map[String, Seq[String]], Map[String, String]) = {
-      val dropped = Set.newBuilder[String]
-      val aliases = Map.newBuilder[String, Seq[String]]
-      val defaults = Map.newBuilder[String, String]
-      Files.readAllLines(f).asScala.drop(1).foreach { line =>
-        line.split("\t").toList match {
-          case "drop" :: name :: Nil => dropped += name; ()
-          case "alias" :: logical :: physicals if physicals.nonEmpty =>
-            aliases += (logical -> physicals); ()
-          // initial defaults: the literal is the line's remainder (a
-          // string literal may itself contain a tab; add_column
-          // refuses newlines, the only structural byte here)
-          case "default" :: name :: rest if rest.nonEmpty =>
-            defaults += (name -> rest.mkString("\t")); ()
-          case _ => ()
-        }
-      }
-      (dropped.result(), aliases.result(), defaults.result())
-  }
-
   /** What a footer may legitimately carry on a declared-schema table:
     * the (name, type) pairs of the declaration plus each pre-rename
     * physical AT ITS LOGICAL'S TYPE (it is served under the new name,
@@ -1244,9 +1231,9 @@ object ArrowDataSource {
     * by schema inference's drift sweep and fsck, so the two can never
     * diverge on what counts as drift. */
   def toleratedFooterFields(root: Path,
-      ds: org.apache.spark.sql.types.StructType)
+      ds: org.apache.spark.sql.types.StructType, decl: Declaration)
       : (Set[(String, org.apache.spark.sql.types.DataType)], Set[String]) = {
-    val aliases = aliasColumns(root)
+    val aliases = decl.aliases
     val aliasTyped = aliases.flatMap { case (logical, physicals) =>
       ds.fields.find(_.name == logical).toSeq
         .flatMap(f => physicals.map(p => (p, f.dataType)))
@@ -1261,7 +1248,7 @@ object ArrowDataSource {
       aliases.getOrElse(l, Seq.empty).map(p => (p, t))
     }
     (ds.fields.map(f => (f.name, f.dataType)).toSet ++ aliasTyped ++
-      partTyped, droppedColumns(root))
+      partTyped, decl.dropped)
   }
 
   /** Whether a footer field is legitimate under the tolerated set:
@@ -1419,7 +1406,6 @@ object ArrowDataSource {
         .filter(_._2 < gen - 8)
         .foreach(n => Files.deleteIfExists(md.resolve(n._1)))
       finally s.close()
-      aliasCache.clear() // renames are rare; re-read ledgers lazily
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
@@ -1431,53 +1417,6 @@ object ArrowDataSource {
       Files.deleteIfExists(tmp)
       ()
     }
-  }
-
-  /** Per-JVM memo of rename ledgers for the READER's miss path, keyed
-    * by table root with the ledger file's mtime as the staleness
-    * check. Only consulted when a requested column is absent from a
-    * file's own fields (evolved tables), so ordinary scans never pay
-    * the lookup. */
-  private val aliasCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, java.nio.file.attribute.FileTime,
-      (Map[String, Seq[String]], Map[String, String]))]()
-
-  /** The rename ledger governing `file`, resolved by walking ancestors
-    * for a `_graft_metadata/_schema` (partition subdirs sit under the
-    * table root). Empty for never-evolved tables. */
-  def aliasColumnsForFile(file: Path): Map[String, Seq[String]] =
-    ledgersForFile(file)._1
-
-  /** Initial defaults resolved from a FILE's table root (the reader's
-    * lookup path) — same memoized climb as [[aliasColumnsForFile]]. */
-  def defaultColumnsForFile(file: Path): Map[String, String] =
-    ledgersForFile(file)._2
-
-  private def ledgersForFile(file: Path)
-      : (Map[String, Seq[String]], Map[String, String]) = {
-    var dir = file.toAbsolutePath.normalize.getParent
-    var depth = 0
-    while (dir != null && depth < 6) {
-      currentSchemaFile(dir.resolve(MetadataDirName)) match {
-        case Some((ledger, gen)) =>
-          val mtime = Files.getLastModifiedTime(ledger)
-          // ONE entry per table root, replaced when the generation or
-          // mtime moves — a long-lived reader JVM watching other JVMs
-          // advance generations must not grow an entry per generation
-          val key = dir.toString
-          val cached = aliasCache.get(key)
-          if (cached != null && cached._1 == gen && cached._2 == mtime)
-            return cached._3
-          val parsed3 = parseLedger(ledger)
-          val parsed = (parsed3._2, parsed3._3)
-          aliasCache.put(key, (gen, mtime, parsed))
-          return parsed
-        case None => ()
-      }
-      dir = dir.getParent
-      depth += 1
-    }
-    (Map.empty, Map.empty)
   }
 
   /** `_clone_src` metadata: where (and at which epoch) this table was
@@ -1618,9 +1557,6 @@ object ArrowDataSource {
   /** Partition column names in layout order, read off the first file's
     * relative path (`c1=v1/c2=v2/part-....arrow`); empty for flat
     * layouts. */
-  def discoverPartitionCols(root: String): Seq[String] =
-    discoverPartitionCols(root, visibleIpcFiles(root))
-
   def discoverPartitionCols(root: String, files: Seq[Path]): Seq[String] = {
     val rootP = Paths.get(root)
     if (!Files.isDirectory(rootP)) return Seq.empty
@@ -1920,9 +1856,10 @@ object ArrowDataSource {
           "the running stream's writer options")
     val root = Paths.get(path).toAbsolutePath.normalize
     initTableLog(path)
+    val snap = TableSnapshot.read(path)
     // bucketed layouts refuse: partitionBy cannot combine with
     // bucketBy on the write path either
-    val idx = new FooterIndex(path)
+    val idx = snap.footers
     require(!idx.files.exists(f => idx.info(f).bucket.isDefined),
       s"arrow: $path carries a bucketed layout; bucketing and " +
         "partition evolution do not compose")
@@ -1945,7 +1882,7 @@ object ArrowDataSource {
           dt.simpleString)
       c -> dt
     }
-    val union = (discoverPartitionCols(path) ++ cols).distinct
+    val union = (snap.partCols ++ cols).distinct
     // the ledger ACCUMULATES: every union column's type, resolvable
     // from the current read schema (prior entries win nothing — they
     // were recorded from the same authority), so repeated evolutions
@@ -1995,9 +1932,6 @@ object ArrowDataSource {
   /** Partition columns as a schema: the recorded spec's type wins
     * (partition evolution), else LongType when every dir value parses
     * as a long, else StringType (the minimal useful inference). */
-  def discoverPartitionSchema(root: String): StructType =
-    discoverPartitionSchema(root, visibleIpcFiles(root))
-
   def discoverPartitionSchema(root: String, files: Seq[Path]): StructType = {
     val cols = discoverPartitionCols(root, files)
     if (cols.isEmpty) return StructType(Seq.empty)

@@ -67,34 +67,33 @@ object ArrowDelete {
   }
 
   /** Distributed copy-on-write delete of every row matching the
-    * conjunction `filters` under `root` — a LOGGED table (the caller
-    * ran [[ArrowDataSource.initTableLog]] and passes the log it planned
-    * against; its head is the commit's base epoch). Tasks rewrite
-    * files but never unlink; the driver swaps every touched group for
-    * its replacement in one atomic epoch commit, so readers see the
-    * delete all-or-nothing.
+    * conjunction `filters` in `snap` — a LOGGED table's snapshot
+    * ([[TableSnapshot.forDml]]; its head is the commit's base epoch).
+    * Tasks rewrite files but never unlink; the driver swaps every
+    * touched group for its replacement in one atomic epoch commit, so
+    * readers see the delete all-or-nothing.
     * Caller guarantees every filter is FilterEval-supported over
-    * (file ++ partition) columns and that `root` is not a streaming
-    * sink. */
-  def deleteWhere(spark: SparkSession, root: String,
-      partSchema: StructType, filters: Seq[Filter],
-      log: TableLog): Unit = {
-    val baseEpoch = log.latest
+    * (file ++ partition) columns. */
+  def deleteWhere(spark: SparkSession, snap: TableSnapshot,
+      filters: Seq[Filter]): Unit = {
+    val root = snap.path
+    val partSchema = snap.partSchema
     val partCols = partSchema.fieldNames.toSet
     val partF = filters.filter(f => f.references.forall(partCols) &&
       FilterEval.supported(partSchema, f))
     val candidates = ArrowDataSource.pruneByPartitionFilters(
-      log.files(root, None), root, partSchema, partF)
+      snap.files(None), root, partSchema, partF)
     if (candidates.isEmpty) return
-    if (ArrowDataSource.dvEnabled(root)) {
-      deleteWhereMor(spark, root, partSchema, filters, log, candidates)
+    if (snap.dvEnabled) {
+      deleteWhereMor(spark, snap, filters, candidates)
       return
     }
-    val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = log.dvs(None)
+    val rootP = snap.root
+    val dvNow = snap.log.get.dvs(None)
     val rootStr = root
     val fs = filters
     val ps = partSchema
+    val decl = snap.declaration
     // a DV'd file rewriting copy-on-write must not resurrect its
     // masked rows: the rewrite reads through the vector
     val payload = candidates.map { f =>
@@ -104,13 +103,13 @@ object ArrowDelete {
     }
     val results = spark.sparkContext
       .parallelize(payload, payload.length)
-      .map { case (f, dv) => (f, rewriteFile(rootStr, f, ps, fs, dv)) }
+      .map { case (f, dv) => (f, rewriteFile(rootStr, f, ps, fs, decl, dv)) }
       .collect() // (file, replacements) pairs — metadata, not rows
     val removed = results.collect { case (f, Some(_)) => f }.toSeq
     val adds = results.flatMap { case (_, r) => r.getOrElse(Nil) }.toSeq
     if (removed.nonEmpty) {
       val epoch =
-        ArrowDataSource.commitTableEpoch(root, baseEpoch, adds, removed)
+        ArrowDataSource.commitTableEpoch(root, snap.latest, adds, removed)
       // CoW replacements bypass the batch-write commit hook: record
       // their stats as the epoch's sidecar fragment (cost bounded by
       // churned files; folded by log compaction) so DML-heavy tables
@@ -132,15 +131,15 @@ object ArrowDelete {
     * At 100 TB: deleting 0.1% of rows scattered across a petabyte
     * costs the matched files' scan plus kilobyte sidecars, not a
     * petabyte rewrite. */
-  private[arrow] def deleteWhereMor(spark: SparkSession, root: String,
-      partSchema: StructType, filters: Seq[Filter], log: TableLog,
+  private[arrow] def deleteWhereMor(spark: SparkSession,
+      snap: TableSnapshot, filters: Seq[Filter],
       candidates: Seq[Path]): Unit = {
-    val baseEpoch = log.latest
-    val rootP = Paths.get(root).toAbsolutePath.normalize
-    val dvNow = log.dvs(None)
+    val rootP = snap.root
+    val dvNow = snap.log.get.dvs(None)
     val rootStr = rootP.toString
     val fs = filters
-    val ps = partSchema
+    val ps = snap.partSchema
+    val decl = snap.declaration
     val payload = candidates.map { f =>
       val rel = rootP.relativize(f.toAbsolutePath.normalize).toString
       (f.toString,
@@ -160,7 +159,8 @@ object ArrowDelete {
           (f, null: String, -1L, -1L) // footer stats prove no match
         else {
           val oldDv = oldDvPath.map(p => DeletionVectors.read(Paths.get(p)))
-          DeletionVectors.computeMask(rootStr, f, ps, fs, oldDv) match {
+          DeletionVectors.computeMask(rootStr, f, ps, fs, decl,
+              oldDv) match {
             case None => (f, null: String, -1L, -1L)
             case Some((mask, totalRows, _)) =>
               val masked = DeletionVectors.cardinality(mask)
@@ -181,7 +181,7 @@ object ArrowDelete {
       case (f, dv, _, masked) if dv != null => (f, dv, masked)
     }.toSeq
     if (removes.nonEmpty || dvs.nonEmpty) {
-      ArrowDataSource.commitTableEpoch(root, baseEpoch, Seq.empty,
+      ArrowDataSource.commitTableEpoch(snap.path, snap.latest, Seq.empty,
         removes, dvs = dvs)
       ()
     }
@@ -194,7 +194,7 @@ object ArrowDelete {
     * flips only at the driver's epoch commit. */
   private[arrow] def rewriteFile(root: String, file: String,
       partSchema: StructType, filters: Seq[Filter],
-      dvFile: Option[String] = None)
+      decl: ArrowDataSource.Declaration, dvFile: Option[String])
       : Option[Seq[String]] = {
     val src = Paths.get(file)
     val info = ArrowDataSource.footerInfo(src)
@@ -209,9 +209,7 @@ object ArrowDelete {
     // and a column it carries in bytes (pre-evolution generation) must
     // stay there (values preserved)
     val dirCols = ArrowDataSource.partitionValueMap(root, src).keySet
-    val dataSchema = StructType(ArrowDataSource.declaredSchema(
-      ArrowDataSource.sinkRoot(root)
-        .getOrElse(Paths.get(root).toAbsolutePath.normalize))
+    val dataSchema = StructType(decl.schema
       .getOrElse(ArrowDataSource.readFooterSchema(src))
       .fields.filterNot(f => dirCols.contains(f.name)))
     val dataF = filters.filterNot(f =>
@@ -244,7 +242,7 @@ object ArrowDelete {
       GraftBucket.MetaId -> i.toString)
     }.getOrElse(Map.empty[String, String])
     val reader = new ArrowRowReader(partition, readSchema,
-      Array.empty, partSchema)
+      Array.empty, partSchema, decl)
     var total = 0L
     var kept = 0L
     val writer = new ArrowDataWriter(src.getParent.toString, dataSchema,

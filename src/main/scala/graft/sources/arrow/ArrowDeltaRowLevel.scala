@@ -25,9 +25,9 @@ import org.apache.spark.sql.types.StructType
   * UPDATE touching 0.1% of rows costs the matched rows' scan, kilobyte
   * vectors, and the new rows' bytes — not a rewrite of every touched
   * file. */
-class ArrowDeltaOperation(path: String, tableSchema: StructType,
+class ArrowDeltaOperation(snap: TableSnapshot, tableSchema: StructType,
     cmd: RowLevelOperation.Command)
-    extends ArrowRowLevelOperation(path, tableSchema, cmd)
+    extends ArrowRowLevelOperation(snap, tableSchema, cmd)
     with SupportsDelta {
 
   override def description(): String =
@@ -53,7 +53,7 @@ class ArrowDeltaOperation(path: String, tableSchema: StructType,
       : DeltaWriteBuilder = {
     // footer-stats sidecar first (one metadata read), per-file footer
     // opens only for uncovered files — never an O(files) sweep per DML
-    val memo = new FooterIndex(path)
+    val memo = snapshot.footers
     val infos = memo.files.map(memo.info)
     // DELETE only masks (bucket routing untouched); UPDATE/MERGE
     // append rows that would bypass bucket routing — refuse those on
@@ -133,7 +133,9 @@ class ArrowDeltaBatchWrite(op: ArrowRowLevelOperation, path: String,
         }
       }
     msgs.foreach(m => { fold(m.deletes); fold(m.updateDeletes) })
-    val existingDvs = ArrowDataSource.liveDvs(root, None)
+    // the vectors live at the commit base (the commit below fails if
+    // the head moved past it)
+    val existingDvs = op.snapshot.log.get.dvs(None)
     val removes = scala.collection.mutable.ArrayBuffer.empty[String]
     val dvs = scala.collection.mutable
       .ArrayBuffer.empty[(String, String, Long)]
@@ -184,8 +186,9 @@ class ArrowDeltaBatchWrite(op: ArrowRowLevelOperation, path: String,
     val kind =
       if (hasUpdateChurn && !hasPlainChurn) Some(ArrowChanges.OpUpdate)
       else None
-    val epoch = ArrowDataSource.commitTableEpoch(path, op.baseEpoch,
-      adds, removes.toSeq, dvs = dvs.toSeq, opKind = kind)
+    val epoch = ArrowDataSource.commitTableEpoch(path,
+      op.snapshot.latest, adds, removes.toSeq, dvs = dvs.toSeq,
+      opKind = kind)
     val pairs = msgs.flatMap(m =>
       m.insertFiles.zip(m.insertFooters) ++
         m.updateFiles.zip(m.updateFooters)).toSeq

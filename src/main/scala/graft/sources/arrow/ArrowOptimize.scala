@@ -391,7 +391,7 @@ object AutoCompact {
             (totalRows + targetRows - 1) / targetRows).toInt
           val schema = org.apache.spark.sql.SparkSession.active
             .read.format("arrow").load(path).schema
-          val partCols = ArrowDataSource.discoverPartitionSchema(path)
+          val partCols = TableSnapshot.read(path).partSchema
             .fieldNames.toSeq
           val df = spark.read.format("arrow").schema(schema)
             .option("files", files.map(f => root.relativize(

@@ -58,19 +58,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * need per-bucket routing to keep the storage-partitioned-join
   * contract, and silently dropping the bucket stamp would corrupt it.
   */
-class ArrowRowLevelOperationBuilder(path: String, tableSchema: StructType,
-    info: RowLevelOperationInfo) extends RowLevelOperationBuilder {
+class ArrowRowLevelOperationBuilder(snapshot: TableSnapshot,
+    tableSchema: StructType, info: RowLevelOperationInfo)
+    extends RowLevelOperationBuilder {
   // `set_dv` tables take the DELTA (merge-on-read) path: deletes
   // become deletion-vector bits, updates delete+insert — no touched
   // file rewrites. Everything else keeps group-based copy-on-write.
   override def build(): RowLevelOperation =
-    if (ArrowDataSource.dvEnabled(path))
-      new ArrowDeltaOperation(path, tableSchema, info.command)
-    else new ArrowRowLevelOperation(path, tableSchema, info.command)
+    if (snapshot.dvEnabled)
+      new ArrowDeltaOperation(snapshot, tableSchema, info.command)
+    else new ArrowRowLevelOperation(snapshot, tableSchema, info.command)
 }
 
-class ArrowRowLevelOperation(path: String, tableSchema: StructType,
+/** `snapshot` is the one metadata read of the operation
+  * ([[TableSnapshot.forDml]]): its scan plans the snapshot's files,
+  * its write builder reads their footer stats, and its commit is
+  * based on `snapshot.latest` — the epoch those files came from, so a
+  * writer that committed in between fails this DML instead of
+  * silently losing its rows. */
+class ArrowRowLevelOperation(private[arrow] val snapshot: TableSnapshot,
+    tableSchema: StructType,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
+  protected val path: String = snapshot.path
 
   /** Files the CoW scan finally planned (post triage + runtime group
     * filter) — the exact group set the write replaces at job commit.
@@ -79,14 +88,7 @@ class ArrowRowLevelOperation(path: String, tableSchema: StructType,
     * plans before the write job that consumes it commits. */
   @volatile private[arrow] var scannedFiles: Seq[String] = Seq.empty
 
-  /** Table-log epoch the scan planned against — the optimistic-
-    * concurrency base [[ArrowCoWWrite.commit]] hands to
-    * [[ArrowDataSource.commitTableEpoch]]; a writer that committed in
-    * between fails this DML instead of silently losing its rows. */
-  @volatile private[arrow] var baseEpoch: Long = -1L
-
-  private[arrow] val partSchema: StructType =
-    ArrowDataSource.discoverPartitionSchema(path)
+  private[arrow] def partSchema: StructType = snapshot.partSchema
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -97,27 +99,13 @@ class ArrowRowLevelOperation(path: String, tableSchema: StructType,
     Array(Expressions.column(ArrowDataSource.FileMetaCol))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    if (ArrowDataSource.sinkRoot(path).isDefined &&
-        !ArrowDataSource.isTableLog(path))
-      throw new UnsupportedOperationException(
-        s"arrow: $path is a streaming sink (commit log present); " +
-          "row-level UPDATE/MERGE/DELETE would bypass the exactly-once " +
-          "manifest. Rewrite via batch overwrite instead.")
-    // First DML upgrades a flat directory to a logged table (epoch 0
-    // snapshots the current files): from here on the old→new swap is
-    // one atomic manifest rename, readers never see both generations,
-    // and pre-DML epochs stay addressable via VERSION AS OF.
-    ArrowDataSource.initTableLog(path)
-    baseEpoch = ArrowDataSource.latestCommittedEpoch(
-      java.nio.file.Paths.get(path).toAbsolutePath.normalize)
+      : ScanBuilder =
     new ArrowCoWScanBuilder(this, path, tableSchema, partSchema)
-  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     // footer-stats sidecar first: DML planning on a 100k-file table
     // must not pay an O(files) footer sweep for a bucket/codec check
-    val memo = new FooterIndex(path)
+    val memo = snapshot.footers
     val infos = memo.files.map(memo.info)
     if (infos.exists(_.bucket.isDefined))
       throw new UnsupportedOperationException(
@@ -175,8 +163,9 @@ class ArrowCoWScan(op: ArrowRowLevelOperation, path: String,
     extends Scan with Batch with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  // one cached footer read per file across triage and planning
-  private val footerIdx = new FooterIndex(path)
+  // the operation's footer index: one cached footer read per file
+  // across triage, planning and the write builder
+  private val footerIdx = op.snapshot.footers
 
   /** Footer-derived size of the triaged candidate set — without it a
     * MERGE join would plan the target side blind and might broadcast
@@ -256,7 +245,8 @@ class ArrowCoWScan(op: ArrowRowLevelOperation, path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(schema, Array.empty, partSchema)
+    new ArrowReaderFactory(schema, Array.empty, partSchema,
+      op.snapshot.declaration)
 }
 
 class ArrowCoWWriteBuilder(op: ArrowRowLevelOperation, path: String,
@@ -319,8 +309,8 @@ class ArrowCoWWrite(op: ArrowRowLevelOperation, path: String,
       if (op.command() == RowLevelOperation.Command.UPDATE)
         Some(ArrowChanges.OpUpdate)
       else None
-    val epoch = ArrowDataSource.commitTableEpoch(path, op.baseEpoch,
-      adds, op.scannedFiles, opKind = kind)
+    val epoch = ArrowDataSource.commitTableEpoch(path,
+      op.snapshot.latest, adds, op.scannedFiles, opKind = kind)
     // CoW replacement files are brand new names: record their stats as
     // the epoch's sidecar fragment (folded by log compaction) so
     // DML-heavy tables keep one-metadata-read planning without a full

@@ -34,44 +34,33 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, Column
   * and row-level refinement happens in Catalyst's codegen'd FilterExec
   * above it, exactly as with the vectorized parquet reader.
   */
-/** One-per-scan footer index: reads the commit log (or lists a flat
-  * directory) once and parses each file's footer at most once, however
-  * many planning passes consult it (pushAggregation,
-  * estimateStatistics, planInputPartitions) — at 100k files the
-  * difference between one metadata pass and three. `tableLog` is the
-  * commit log of `path` (None = flat directory), evaluated on first
-  * use. */
-private[arrow] class FooterIndex(path: String, asOf: Option[Long],
-    explicit: Option[Seq[java.nio.file.Path]],
-    tableLog: => Option[TableLog]) {
-  def this(path: String) = this(path, None, None, TableLog.forDir(path))
-
-  lazy val log: Option[TableLog] = tableLog
+/** One-per-snapshot footer index: the files of `snap` at `asOf`, each
+  * file's footer parsed at most once however many planning passes
+  * consult it (pushAggregation, estimateStatistics,
+  * planInputPartitions) — at 100k files the difference between one
+  * metadata pass and three. */
+private[arrow] class FooterIndex(val snap: TableSnapshot,
+    asOf: Option[Long], explicit: Option[Seq[java.nio.file.Path]]) {
+  def log: Option[TableLog] = snap.log
 
   /** Explicit file list (the change-feed reader naming exactly the
     * churned files of an epoch window — including files a later epoch
     * REMOVED, which visibility resolution would hide) or the normal
     * manifest/as-of-resolved visible set. */
   lazy val files: Seq[java.nio.file.Path] =
-    explicit.getOrElse(ArrowDataSource.visibleIpcFiles(path, log, asOf))
-  // Sidecar keys are TABLE-ROOT-relative: a read addressed at a
-  // partition subdirectory must load (and relativize against) the sink
-  // root's sidecar, or every lookup misses and planning silently pays
-  // the per-file footer sweep the index exists to avoid.
-  private lazy val root =
-    ArrowDataSource.sinkRoot(path).getOrElse(
-      Paths.get(path).toAbsolutePath.normalize)
+    explicit.getOrElse(snap.files(asOf))
   // The write-time footer-stats sidecar: ONE metadata read replaces
   // the per-file footer sweep for every file it covers. Files it does
   // not cover (foreign writers, maintenance rewrites) fall back to a
   // footer open — the index is an optimization, never a correctness
   // surface (files are immutable once visible, so a hit is exact).
-  private lazy val sidecar = FooterIndexFile.load(root)
+  // Keys are TABLE-ROOT-relative, so a read addressed at a partition
+  // subdirectory still hits.
   private def indexed(p: java.nio.file.Path)
       : Option[ArrowDataSource.FooterInfo] =
-    sidecar.flatMap { ix =>
+    snap.sidecar.flatMap { ix =>
       scala.util.Try(
-        root.relativize(p.toAbsolutePath.normalize).toString)
+        snap.root.relativize(p.toAbsolutePath.normalize).toString)
         .toOption.flatMap(ix.infoOf)
     }
   private val cache = scala.collection.concurrent.TrieMap
@@ -93,8 +82,7 @@ private[arrow] class FooterIndex(path: String, asOf: Option[Long],
     }.getOrElse(Map.empty)
 }
 
-class ArrowScanBuilder(path: String, schema: StructType,
-    log: Option[TableLog], // the commit log this scan plans against
+class ArrowScanBuilder(snap: TableSnapshot, schema: StructType,
     maxSplitBytes: Long = 128L * 1024 * 1024,
     epochAsOf: Option[Long] = None,
     maxFilesPerTrigger: Option[Int] = None,
@@ -109,11 +97,10 @@ class ArrowScanBuilder(path: String, schema: StructType,
     with SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
 
-  def this(path: String, schema: StructType) =
-    this(path, schema, TableLog.forDir(path))
-
+  private val path = snap.path
   private val footerIdx =
-    new FooterIndex(path, epochAsOf, explicitFiles, log)
+    if (epochAsOf.isEmpty && explicitFiles.isEmpty) snap.footers
+    else new FooterIndex(snap, epochAsOf, explicitFiles)
 
   // Hive-style partition columns discovered from the directory layout
   // (empty for flat dirs); they live in paths, not files. Column NAMES
@@ -239,7 +226,7 @@ class ArrowScanBuilder(path: String, schema: StructType,
     // the pre-evolution exactness without an O(files) path sweep
     val partRefs = partF.flatMap(_.references).toSet
     val exactPart = partRefs.isEmpty ||
-      !ArrowScanBuilder.maybeEvolved(path) ||
+      !snap.evolved ||
       footerIdx.files.forall(f =>
         partRefs.subsetOf(
           ArrowDataSource.partitionValueMap(path, f).keySet))
@@ -305,7 +292,7 @@ class ArrowScanBuilder(path: String, schema: StructType,
     // that file to one group (serving null would silently mis-group
     // the whole pre-evolution generation), so refuse the push and let
     // the ordinary scan read the real values
-    if (groupCols.nonEmpty && ArrowScanBuilder.maybeEvolved(path) &&
+    if (groupCols.nonEmpty && snap.evolved &&
         footerIdx.files.exists(f =>
           !groupCols.forall(
             ArrowDataSource.partitionValueMap(path, f).contains)))
@@ -505,23 +492,11 @@ class ArrowScanBuilder(path: String, schema: StructType,
   }
 }
 
-object ArrowScanBuilder {
-  /** Can `path` hold MIXED partition generations? Only once a write
-    * spec was ever recorded (`set_partitioning`) — one metadata stat,
-    * so pre-evolution tables skip the O(files) path sweeps the
-    * exactness checks otherwise need. */
-  private[arrow] def maybeEvolved(path: String): Boolean =
-    ArrowDataSource.sinkRoot(path).exists(r =>
-      java.nio.file.Files.isRegularFile(r
-        .resolve(ArrowDataSource.MetadataDirName)
-        .resolve(ArrowDataSource.PartSpecFileName)))
-}
-
 class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     partFilters: Array[Filter] = Array.empty,
     partSchema: StructType = StructType(Seq.empty),
     maxSplitBytes: Long = 128L * 1024 * 1024,
-    idx: FooterIndex = null,
+    footerIdx: FooterIndex,
     limit: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     ignoreChanges: Boolean = false,
@@ -533,7 +508,7 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with SupportsReportOrdering {
-  private val footerIdx = Option(idx).getOrElse(new FooterIndex(path))
+  private def decl = footerIdx.snap.declaration
 
   /** The directory's bucketed layout `(col, numBuckets)` — present only
     * when EVERY file carries the same bucket stamp (a mixed directory
@@ -573,7 +548,7 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
         // the footer's physical stamp to the current logical name so
         // sorted-merge reads survive schema evolution
         if (schema.fieldNames.contains(phys)) phys
-        else ArrowDataSource.aliasColumnsForFile(files.head)
+        else decl.aliases
           .collectFirst { case (logical, physicals)
             if physicals.contains(phys) &&
               schema.fieldNames.contains(logical) => logical }
@@ -1042,7 +1017,7 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(schema, filters, partSchema)
+    new ArrowReaderFactory(schema, filters, partSchema, decl)
 
   /** Micro-batch streaming read: each trigger processes the files that
     * appeared since the last committed offset. When the source
@@ -1063,16 +1038,17 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     if (changeFeed)
       new ArrowChangesMicroBatchStream(path, schema, partSchema,
-        startingEpoch, maxFilesPerTrigger, partFilters.toSeq)
+        footerIdx, startingEpoch, maxFilesPerTrigger, partFilters.toSeq)
     else
       new ArrowMicroBatchStream(path, schema, filters, partFilters,
-        partSchema, maxFilesPerTrigger, ignoreChanges,
+        partSchema, footerIdx, maxFilesPerTrigger, ignoreChanges,
         maxBytesPerTrigger)
 }
 
 class ArrowMicroBatchStream(path: String, schema: StructType,
     filters: Array[Filter], partFilters: Array[Filter],
     partSchema: StructType,
+    footerMemo: FooterIndex, // the starting scan's: footer parses only
     maxFilesPerTrigger: Option[Int] = None,
     ignoreChanges: Boolean = false,
     maxBytesPerTrigger: Option[Long] = None)
@@ -1105,9 +1081,9 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
   private val epochRoot: Option[java.nio.file.Path] =
     ArrowDataSource.sinkRoot(path)
 
-  // listing stays live (a new trigger must see new files); footer
-  // parses are memoized — a committed file's footer never changes
-  private val footerMemo = new FooterIndex(path)
+  // the listing stays live (a new trigger must see new files); only
+  // footer parses come from footerMemo — a committed file's footer
+  // never changes
 
   // The file-set offset serializes the full seen-file set, so
   // checkpoint entries grow with directory lifetime. Surface the
@@ -1334,7 +1310,8 @@ class ArrowMicroBatchStream(path: String, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(schema, filters, partSchema)
+    new ArrowReaderFactory(schema, filters, partSchema,
+      footerMemo.snap.declaration)
 
   override def commit(end: Offset): Unit = ()
 
@@ -1358,8 +1335,10 @@ case class ArrowFilePartition(file: String, blockIdxs: Array[Int],
     new GenericInternalRow(Array[Any](bucketId))
 }
 
+/** `decl`: the table's declaration, whose rename and default ledgers
+  * the readers resolve requested columns through. */
 class ArrowReaderFactory(schema: StructType, filters: Array[Filter],
-    partSchema: StructType = StructType(Seq.empty))
+    partSchema: StructType, decl: ArrowDataSource.Declaration)
     extends PartitionReaderFactory {
 
   // Always columnar: pushed data filters only skip batches via zone
@@ -1377,13 +1356,13 @@ class ArrowReaderFactory(schema: StructType, filters: Array[Filter],
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ArrowFilePartition]
-    new ArrowRowReader(p, schema, filters, partSchema)
+    new ArrowRowReader(p, schema, filters, partSchema, decl)
   }
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[ColumnarBatch] = {
     val p = partition.asInstanceOf[ArrowFilePartition]
-    new ArrowBatchReader(p, schema, partSchema)
+    new ArrowBatchReader(p, schema, partSchema, decl)
   }
 }
 
@@ -1400,7 +1379,8 @@ class ArrowReaderFactory(schema: StructType, filters: Array[Filter],
   * always see the value type — encoding is a pure layout property of
   * the file. */
 private[arrow] abstract class ArrowReaderBase(partition: ArrowFilePartition,
-    schema: StructType, partSchema: StructType = StructType(Seq.empty)) {
+    schema: StructType, partSchema: StructType,
+    decl: ArrowDataSource.Declaration) {
   protected val channel: FileChannel =
     ArrowDataSource.openIpc(Paths.get(partition.file))
   protected val reader: ArrowFileReader =
@@ -1433,9 +1413,7 @@ private[arrow] abstract class ArrowReaderBase(partition: ArrowFilePartition,
         case Some(pi) if pi >= partition.partValues.length ||
             partition.partValues(pi) == null =>
           val fi = fileFields.indexOf(n) match {
-            case -1 => ArrowDataSource
-              .aliasColumnsForFile(Paths.get(partition.file))
-              .getOrElse(n, Seq.empty)
+            case -1 => decl.aliases.getOrElse(n, Seq.empty)
               .map(fileFields.indexOf).find(_ >= 0).getOrElse(-1)
             case i => i
           }
@@ -1452,11 +1430,9 @@ private[arrow] abstract class ArrowReaderBase(partition: ArrowFilePartition,
             n == ArrowChanges.CommitEpochCol => Left(-4)
         case None => fileFields.indexOf(n) match {
           // miss: a RENAMED column may live in this file under its
-          // pre-rename physical name (memoized ledger; only evolved
-          // tables ever reach this lookup) — else null-fill (-1)
-          case -1 => Left(
-            ArrowDataSource.aliasColumnsForFile(Paths.get(partition.file))
-              .getOrElse(n, Seq.empty)
+          // pre-rename physical name (the table's rename ledger) —
+          // else null-fill (-1)
+          case -1 => Left(decl.aliases.getOrElse(n, Seq.empty)
               .map(fileFields.indexOf).find(_ >= 0).getOrElse(-1))
           case i => Left(i)
         }
@@ -1465,12 +1441,11 @@ private[arrow] abstract class ArrowReaderBase(partition: ArrowFilePartition,
   }
   // initial defaults (Iceberg's): requested columns this file PREDATES
   // (absent from its footer) serve their declared default instead of
-  // null — resolved once per split from the table ledger, literals
-  // evaluated to internal values here so per-batch serving is a
+  // null — from the table's default ledger, literals evaluated to
+  // internal values once per split so per-batch serving is a
   // constant-vector fill
   private lazy val columnDefaults: Map[String, Any] = {
-    val raw = ArrowDataSource
-      .defaultColumnsForFile(Paths.get(partition.file))
+    val raw = decl.defaults
     if (raw.isEmpty) Map.empty
     else schema.fields.iterator.flatMap(f => raw.get(f.name)
       .map(lit => f.name -> ArrowDataSource.evalDefault(lit, f.dataType)))
@@ -1944,8 +1919,8 @@ private[arrow] final class DictStringVector(
 }
 
 class ArrowBatchReader(partition: ArrowFilePartition, schema: StructType,
-    partSchema: StructType = StructType(Seq.empty))
-    extends ArrowReaderBase(partition, schema, partSchema)
+    partSchema: StructType, decl: ArrowDataSource.Declaration)
+    extends ArrowReaderBase(partition, schema, partSchema, decl)
     with PartitionReader[ColumnarBatch] {
   private var current: ColumnarBatch = _
   override def next(): Boolean = nextBatch() match {
@@ -1997,9 +1972,9 @@ case class ArrowAggPartition(rows: Array[Array[Any]])
   * createReader` API contract, and [[ArrowDelete.rewriteFile]]'s
   * copy-on-write rewrite loop. */
 class ArrowRowReader(partition: ArrowFilePartition, schema: StructType,
-    filters: Array[Filter],
-    partSchema: StructType = StructType(Seq.empty))
-    extends ArrowReaderBase(partition, schema, partSchema)
+    filters: Array[Filter], partSchema: StructType,
+    decl: ArrowDataSource.Declaration)
+    extends ArrowReaderBase(partition, schema, partSchema, decl)
     with PartitionReader[InternalRow] {
   private val predicate: InternalRow => Boolean =
     if (filters.isEmpty) _ => true

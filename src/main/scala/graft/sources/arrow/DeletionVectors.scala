@@ -93,16 +93,15 @@ object DeletionVectors {
     * row matches (the file's entry is untouched). The caller turns an
     * all-rows-masked result into a plain REMOVE event instead. */
   def computeMask(root: String, file: String, partSchema: StructType,
-      filters: Seq[Filter], oldDv: Option[Array[java.util.BitSet]])
+      filters: Seq[Filter], decl: ArrowDataSource.Declaration,
+      oldDv: Option[Array[java.util.BitSet]])
       : Option[(Array[java.util.BitSet], Long, Long)] = {
     val src = Paths.get(file)
     val info = ArrowDataSource.footerInfo(src)
     // evolved tables: evaluate the predicate under the declared
     // LOGICAL schema (alias fallback / null-fill in the reader), like
     // ArrowDelete.rewriteFile
-    val dataSchema = ArrowDataSource.declaredSchema(
-      ArrowDataSource.sinkRoot(root)
-        .getOrElse(java.nio.file.Paths.get(root).toAbsolutePath.normalize))
+    val dataSchema = decl.schema
       .getOrElse(ArrowDataSource.readFooterSchema(src))
     // each name once: an evolved partition column a pre-evolution file
     // still carries in bytes binds its data ordinal (the reader serves
@@ -123,7 +122,8 @@ object DeletionVectors {
     }
     val partition = ArrowFilePartition(file,
       (0 until nBatches).toArray, partValues)
-    val reader = new ArrowBatchReader(partition, readSchema, partSchema)
+    val reader = new ArrowBatchReader(partition, readSchema, partSchema,
+      decl)
     var batchIdx = -1
     var newMatches = 0L
     var totalRows = 0L

@@ -157,35 +157,36 @@ object FooterIndexFile {
   }
 
   /** Per-epoch sidecar fragments of a LOGGED directory:
-    * `_graft_metadata/<epoch>.fstats`, sorted by epoch. A logged table
-    * must not rewrite the whole root sidecar on every commit — that is
-    * an O(entries) write per epoch, O(n²) over the log's lifetime —
-    * so each epoch appends its own small fragment and [[foldFragments]]
-    * (called by log compaction) folds them into the root file, exactly
-    * the manifest/compact-snapshot shape. Load cost stays
+    * `_graft_metadata/<epoch>.fstats`. A logged table must not rewrite
+    * the whole root sidecar on every commit — that is an O(entries)
+    * write per epoch, O(n²) over the log's lifetime — so each epoch
+    * appends its own small fragment and [[foldFragments]] (called by
+    * log compaction) folds them into the root file, exactly the
+    * manifest/compact-snapshot shape. Load cost stays
     * O(snapshot + tail). */
-  private def fragmentFiles(root: Path): Seq[(Long, Path)] = {
-    val md = root.resolve(ArrowDataSource.MetadataDirName)
-    if (!Files.isDirectory(md)) return Seq.empty
-    val s = Files.list(md)
-    try s.iterator.asScala.filter(_.getFileName.toString
-      .endsWith(".fstats"))
-      .flatMap { p =>
-        scala.util.Try(p.getFileName.toString
-          .takeWhile(_ != '.').toLong).toOption.map(_ -> p)
-      }.toVector.sortBy(_._1)
-    finally s.close()
-  }
+  private def fragment(root: Path, epoch: Long): Path =
+    root.resolve(ArrowDataSource.MetadataDirName).resolve(s"$epoch.fstats")
+
+  /** Epochs of the fragments named in `listing` (file names in
+    * `_graft_metadata`), ascending. */
+  private def fragments(listing: Iterable[String]): Seq[Long] =
+    listing.toSeq.filter(_.endsWith(".fstats"))
+      .flatMap(n => scala.util.Try(TableLog.epochOf(n)).toOption).sorted
 
   /** Parse the directory's sidecar: the root file (process-cached, one
-    * read) folded with any per-epoch fragments (O(tail) small reads).
+    * read) folded with the per-epoch fragments `listing` names — the
+    * listing of a [[TableLog.listed]] read (O(tail) small reads).
     * None = nothing indexed (planning falls back to the sweep). */
-  def load(root: Path): Option[Index] =
+  def load(root: Path, listing: Set[String]): Option[Index] =
     try {
       val parts = loadRoot(root).toSeq ++
-        fragmentFiles(root).flatMap { case (_, p) => parse(p) }
+        fragments(listing).flatMap(e => parse(fragment(root, e)))
       parts.reduceLeftOption(fold)
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** [[load]] with the listing of a fresh read of `root`'s log. */
+  def load(root: Path): Option[Index] =
+    load(root, TableLog.listed(root)._2)
 
   /** One epoch's entries as a fragment beside its manifest. Idempotent
     * by epoch (first commit wins — replayed epochs no-op, matching the
@@ -212,19 +213,20 @@ object FooterIndexFile {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Log-compaction hook: fold every fragment at or below `epochId`
-    * into the root sidecar and delete it. Crash between the two steps
-    * is safe — re-folding an already-folded fragment is idempotent
-    * (same keys, same values). */
-  def foldFragments(root: Path, epochId: Long): Unit =
+  /** Log-compaction hook: fold the fragments `listing` names at or
+    * below `epochId` into the root sidecar and delete them. Crash
+    * between the two steps is safe — re-folding an already-folded
+    * fragment is idempotent (same keys, same values). */
+  def foldFragments(root: Path, listing: Iterable[String],
+      epochId: Long): Unit =
     try {
-      val covered = fragmentFiles(root).filter(_._1 <= epochId)
+      val covered = fragments(listing).filter(_ <= epochId)
       if (covered.isEmpty) return
       val parts = loadRoot(root).toSeq ++
-        covered.flatMap { case (_, p) => parse(p) }
+        covered.flatMap(e => parse(fragment(root, e)))
       parts.reduceLeftOption(fold)
         .foreach(writeAtomic(root, _))
-      covered.foreach { case (_, p) => Files.deleteIfExists(p) }
+      covered.foreach(e => Files.deleteIfExists(fragment(root, e)))
     } catch { case scala.util.control.NonFatal(_) => () }
 
   private def parse(f: Path): Option[Index] =

@@ -12,7 +12,7 @@ package graft.sources.arrow
   * arrow package because [[FooterIndex]] is package-private. */
 object FooterProbe {
   private def pass(dir: String): Int = {
-    val idx = new FooterIndex(dir)
+    val idx = TableSnapshot.read(dir).footers
     idx.files.map(f => idx.info(f).sizes.length).sum
   }
 

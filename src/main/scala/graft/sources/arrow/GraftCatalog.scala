@@ -163,8 +163,7 @@ class GraftBucketBound(keyType: DataType) extends ScalarFunction[Integer] {
   * reads go through here instead:
   *
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graft",
-  *     classOf[GraftCatalog].getName)
+  *   GraftCatalog.register(spark)
   *   spark.table(s"graft.arrow.`$dir`")   // namespace arrow, name = path
   * }}}
   *
@@ -204,10 +203,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
-    val opts = new CaseInsensitiveStringMap(Map("path" -> path).asJava)
-    val provider = new ArrowDataSource
-    val schema = provider.inferSchema(opts)
-    new ArrowTable(schema, Map("path" -> path), Array.empty)
+    ArrowTable.load(path)
   }
 
   /** `VERSION AS OF <epoch>` over a streaming-sink directory: versions
@@ -243,21 +239,12 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             }
           }
       }
-    val epoch = resolved match {
-      case Left(branchPath) =>
-        // a BRANCH read is the branch table's CURRENT head — no
-        // epoch pin; the ref advances as the branch commits
-        val bOpts = new CaseInsensitiveStringMap(
-          Map("path" -> branchPath).asJava)
-        return new ArrowTable(
-          new ArrowDataSource().inferSchema(bOpts),
-          Map("path" -> branchPath), Array.empty)
-      case Right(e) => e
+    resolved match {
+      // a BRANCH read is the branch table's CURRENT head — no epoch
+      // pin; the ref advances as the branch commits
+      case Left(branchPath) => ArrowTable.load(branchPath)
+      case Right(e) => ArrowTable.load(path, version = Some(e))
     }
-    val opts = new CaseInsensitiveStringMap(Map("path" -> path).asJava)
-    val schema = new ArrowDataSource().inferSchema(opts)
-    new ArrowTable(schema,
-      Map("path" -> path, "epochAsOf" -> epoch.toString), Array.empty)
   }
 
   /** `TIMESTAMP AS OF <ts>` — Spark hands the literal as MICROseconds
@@ -269,14 +256,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         ident)
-    val millis = Math.floorDiv(timestamp, 1000L)
-    val epoch = TableLog.read(
-      java.nio.file.Paths.get(path).toAbsolutePath.normalize)
-      .epochForTimestamp(millis)
-    val opts = new CaseInsensitiveStringMap(Map("path" -> path).asJava)
-    val schema = new ArrowDataSource().inferSchema(opts)
-    new ArrowTable(schema,
-      Map("path" -> path, "epochAsOf" -> epoch.toString), Array.empty)
+    ArrowTable.load(path,
+      timestampMillis = Some(Math.floorDiv(timestamp, 1000L)))
   }
 
   /** `CREATE TABLE graft.arrow.`/path`` (cols...) [USING arrow]
@@ -510,4 +491,13 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
       new GraftBucketFunction
     else throw new org.apache.spark.sql.catalyst.analysis
       .NoSuchFunctionException(ident)
+}
+
+object GraftCatalog {
+  /** Name this catalog `graft` on `spark`, unless the session already
+    * names a `graft` catalog. Query bodies call it themselves: they may
+    * run on a session the engine's builder did not configure. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
+      spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
 }

@@ -156,7 +156,7 @@ object GraftProcedures {
         s"compact: $path is a streaming sink; compact its commit log " +
           "via the sink's manifest compaction, not a file rewrite")
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val partCols = ArrowDataSource.discoverPartitionSchema(path)
+      val partCols = TableSnapshot.read(path).partSchema
         .fieldNames.toSeq
       selector.foreach(sel => require(partCols.nonEmpty,
         s"compact: partition => '$sel' but $path carries no " +
@@ -183,7 +183,7 @@ object GraftProcedures {
             .load(path)
       }
       val n = df.count() // footer-stat pushdown: metadata-only
-      val memo = new FooterIndex(path)
+      val memo = TableSnapshot.read(path).footers
       val targetBytes = input.getLong(3)
       // bytes-targeted sizing: the sidecar's per-file block sizes are
       // already in hand (one metadata read), so the byte budget costs
@@ -273,7 +273,7 @@ object GraftProcedures {
       // victim files on clones, so purge composes the same way
       val dvs = ArrowDataSource.liveDvs(root, None)
       if (dvs.nonEmpty) {
-        val partCols = ArrowDataSource.discoverPartitionSchema(path)
+        val partCols = TableSnapshot.read(path).partSchema
           .fieldNames.toSeq
         val files = dvs.keys.toSeq.sorted
           .map(rel => root.resolve(rel).normalize)
@@ -367,7 +367,7 @@ object GraftProcedures {
       val n = df.count() // footer-stat pushdown: metadata-only
       val nFiles = math.max(1L, (n + target - 1) / target).toInt
       GraftProcedures.loggedRewrite(path, before,
-        ArrowDataSource.discoverPartitionSchema(path).fieldNames.toSeq)(
+        TableSnapshot.read(path).partSchema.fieldNames.toSeq)(
         df.withColumn("__zkey", zkey)
           .repartitionByRange(nFiles, col("__zkey"))
           .sortWithinPartitions(col("__zkey"))
@@ -582,7 +582,7 @@ object GraftProcedures {
         // recorded at bootstrap: discovery at the SOURCE root is
         // reliable (in-root layouts; a cloned source consults its own
         // recorded list), while the dst's `../` rels are not
-        ArrowDataSource.discoverPartitionCols(src),
+        TableSnapshot.read(src).partCols,
         // lineage for write-audit-publish: which table, at which epoch
         src = Some((srcRoot,
           if (ArrowDataSource.isTableLog(src))
@@ -955,7 +955,7 @@ object GraftProcedures {
       ArrowDataSource.evolveDeclaration(root) { () =>
         val current = currentDataSchema(path, root, "add_column")
         val partCols =
-          ArrowDataSource.discoverPartitionCols(root.toString).toSet
+          TableSnapshot.read(root.toString).partCols.toSet
         val dropped = ArrowDataSource.droppedColumns(root)
         val aliases = ArrowDataSource.aliasColumns(root)
         require(!dropped.exists(resolver(_, colName)) &&
@@ -1091,13 +1091,13 @@ object GraftProcedures {
     val current = currentDataSchema(root.toString, root,
       "mergeSchema write")
     val partCols = writePartCols ++
-      ArrowDataSource.discoverPartitionCols(root.toString)
+      TableSnapshot.read(root.toString).partCols
     // A partition-named incoming column must CARRY the partition's
     // type — routing would otherwise stringify mismatched values into
     // the layout and fail only at read time (add_column refuses the
     // name collision loudly; the write path owes the same loudness).
     val partSchema =
-      ArrowDataSource.discoverPartitionSchema(root.toString)
+      TableSnapshot.read(root.toString).partSchema
     // Names resolve with the SESSION's resolver (case-insensitive by
     // default, like every Spark column lookup): an incoming `AMT`
     // against a declared `amt` is the SAME column — declaring it fresh
@@ -1336,7 +1336,7 @@ object GraftProcedures {
       ArrowDataSource.evolveDeclaration(root) { () =>
         val current = currentDataSchema(path, root, "widen_column")
         val partCols =
-          ArrowDataSource.discoverPartitionCols(root.toString).toSet
+          TableSnapshot.read(root.toString).partCols.toSet
         val dropped = ArrowDataSource.droppedColumns(root)
         val aliases = ArrowDataSource.aliasColumns(root)
         val evolved =
@@ -1428,7 +1428,7 @@ object GraftProcedures {
         .read.format("arrow").option("mergeSchema", "true")
         .load(path).schema
       val partCols =
-        ArrowDataSource.discoverPartitionCols(root.toString).toSet
+        TableSnapshot.read(root.toString).partCols.toSet
       StructType(full.fields.filterNot(f => partCols(f.name)))
     }
 
@@ -1491,7 +1491,7 @@ object GraftProcedures {
         require(current.fieldNames.contains(oldName),
           s"rename_column: no column $oldName on $path")
         val partCols =
-          ArrowDataSource.discoverPartitionCols(root.toString).toSet
+          TableSnapshot.read(root.toString).partCols.toSet
         val dropped = ArrowDataSource.droppedColumns(root)
         val aliases = ArrowDataSource.aliasColumns(root)
         require(!current.fieldNames.contains(newName) &&
@@ -1557,7 +1557,7 @@ object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val path = input.getUTF8String(0).toString
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val memo = new FooterIndex(path)
+      val memo = TableSnapshot.read(path).footers
       def partOf(f: java.nio.file.Path): String = {
         val rel = root.relativize(f.toAbsolutePath.normalize)
         (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
@@ -1915,7 +1915,8 @@ object GraftProcedures {
           // same tolerance set the reader's drift sweep uses — fsck
           // and inference can never diverge on what counts as drift
           val (declared, dropped) =
-            ArrowDataSource.toleratedFooterFields(root, ds)
+            ArrowDataSource.toleratedFooterFields(root, ds,
+              ArrowDataSource.declaration(root))
           schemas.foreach { case (f, s) =>
             s.fields.filterNot(g =>
               ArrowDataSource.footerFieldTolerated(declared, dropped, g)
@@ -1980,8 +1981,7 @@ object GraftProcedures {
       // dir VALUE the recorded/discovered column type cannot decode —
       // a corrupt `o_custkey=abc` under a BIGINT column would
       // otherwise pass fsck and crash every scan's constant vector
-      val partSchema = ArrowDataSource
-        .discoverPartitionSchema(root.toString)
+      val partSchema = TableSnapshot.read(root.toString).partSchema
       if (partSchema.nonEmpty) files.foreach { f =>
         val decodes = scala.util.Try {
           val m = ArrowDataSource.partitionValueMap(root.toString, f)
@@ -2023,7 +2023,7 @@ object GraftProcedures {
       StructField("partition_columns", StringType, nullable = false)))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val path = input.getUTF8String(0).toString
-      val memo = new FooterIndex(path)
+      val memo = TableSnapshot.read(path).footers
       val files = memo.files
       val bytes = files.map(f => Files.size(f)).sum
       def rowsOf(f: java.nio.file.Path): Option[Long] =
@@ -2052,7 +2052,7 @@ object GraftProcedures {
         TableConstraints.list(path).length.toLong,
         java.lang.Boolean.valueOf(ArrowDataSource.dvEnabled(path)),
         java.lang.Boolean.valueOf(AutoCompact.config(path).isDefined),
-        utf8(ArrowDataSource.discoverPartitionSchema(path)
+        utf8(TableSnapshot.read(path).partSchema
           .fieldNames.mkString(","))))))
     }
   }

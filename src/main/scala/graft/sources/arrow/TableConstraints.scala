@@ -185,7 +185,7 @@ object TableConstraints {
           "(5 attempts) — quiesce writers and retry")
       val validatedEpoch = ArrowDataSource.latestCommittedEpoch(root)
       val statsClean = try {
-        val memo = new FooterIndex(dir)
+        val memo = TableSnapshot.read(dir).footers
         memo.files.nonEmpty && memo.files.map(memo.info).forall(i =>
           i.rowStats.exists(rs => rs.cols.contains(col) &&
             rs.batches.indices.forall(b =>

@@ -199,7 +199,13 @@ object TableLog {
     * deletes a listed file before it is read: a fresh listing sees the
     * new snapshot holding its facts. Bounded: each retry needs another
     * whole compaction inside the read window. */
-  def read(root: Path): TableLog = {
+  def read(root: Path): TableLog = listed(root)._1
+
+  /** [[read]], plus every name the read listed in `_graft_metadata` —
+    * the one listing the sidecars a [[TableSnapshot]] resolves
+    * (footer-stats fragments, the schema generation, the table
+    * markers) are named by. */
+  def listed(root: Path): (TableLog, Set[String]) = {
     var attempt = 0
     while (true) {
       try return readOnce(root)
@@ -214,7 +220,7 @@ object TableLog {
   private def lines(f: Path): Seq[String] =
     Files.readAllLines(f).asScala.toSeq
 
-  private def readOnce(root: Path): TableLog = {
+  private def readOnce(root: Path): (TableLog, Set[String]) = {
     val md = root.resolve(MetadataDirName)
     val names =
       if (Files.isDirectory(md)) ArrowDataSource.listDir(md)
@@ -273,7 +279,7 @@ object TableLog {
       if (!names.contains(ArrowDataSource.HorizonMarkerName)) 0L
       else lines(md.resolve(ArrowDataSource.HorizonMarkerName))
         .headOption.map(_.trim.toLong).getOrElse(0L)
-    TableLog(root,
+    (TableLog(root,
       latest = (manifests ++ snapshot).maxOption.getOrElse(-1L),
       horizon = horizon,
       history = history.result(),
@@ -282,7 +288,7 @@ object TableLog {
       txns = txns.toMap,
       copies = copies.toMap,
       ops = ops.toMap,
-      reserved = empty.filterNot(markers.contains).toSet)
+      reserved = empty.filterNot(markers.contains).toSet), names.toSet)
   }
 
   // ---- the line codec: the only place log lines are parsed or

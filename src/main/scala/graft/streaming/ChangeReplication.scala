@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.sources.arrow.{ArrowChanges, ArrowDataSource, TableLog}
+import graft.sources.arrow.{ArrowChanges, ArrowDataSource, TableLog, TableSnapshot}
 import MaintainCore.{Target, assign, src}
 
 /** CDC replication on the engine's own primitives: tail a logged
@@ -126,13 +124,13 @@ object ChangeReplication {
       case Some(r) => r
       case None => return 0L // no log, no feed: the stream reports it
     }
-    def bootstrappable(log: Option[TableLog]): Boolean =
-      !log.exists(_.lastTxnVersion(appId).isDefined) &&
-        ArrowDataSource.liveRowCount(dstDir, log).contains(0L)
-    val log0 = TableLog.forDir(dstDir)
-    log0.flatMap(snapshotStamp) match {
+    def bootstrappable(snap: TableSnapshot): Boolean =
+      !snap.log.exists(_.lastTxnVersion(appId).isDefined) &&
+        ArrowDataSource.liveRowCount(snap).contains(0L)
+    val snap0 = TableSnapshot.read(dstDir)
+    snap0.log.flatMap(snapshotStamp) match {
       case Some(stamp) => return stamp + 1L
-      case None => if (!bootstrappable(log0)) return 0L
+      case None => if (!bootstrappable(snap0)) return 0L
     }
     val e = ArrowDataSource.latestCommittedEpoch(srcRoot)
     val snap = spark.read.format("arrow").option("epochAsOf", e)
@@ -150,16 +148,16 @@ object ChangeReplication {
     ArrowDataSource.initTableLog(dstDir)
     if (!ArrowDataSource.isTableLog(dstDir)) return 0L // streaming sink
     // the epoch the replica is checked empty at is the commit's base
-    val log = TableLog.read(Paths.get(dstDir).toAbsolutePath.normalize)
-    if (snapshotStamp(log).isDefined || !bootstrappable(Some(log)))
+    val dst = TableSnapshot.read(dstDir)
+    if (dst.log.flatMap(snapshotStamp).isDefined || !bootstrappable(dst))
       return 0L
     // the codec a MERGE into the replica would write with
-    val codec = ArrowDataSource.visibleIpcFiles(dstDir, Some(log), None)
-      .headOption.flatMap(f => ArrowDataSource.footerInfo(f).codec)
+    val codec = dst.files(None).headOption
+      .flatMap(f => ArrowDataSource.footerInfo(f).codec)
     val w = snap.write.format("arrow").mode("append")
     try {
       MaintainCore.commit(dstDir, Some((appId + SnapshotSuffix, e))) {
-        ArrowDataSource.commitStaged(dstDir, log.latest,
+        ArrowDataSource.commitStaged(dstDir, dst.latest,
           codec.fold(w)(c => w.option("codec", c)))
       }
       e + 1L
@@ -221,8 +219,9 @@ object ChangeReplication {
       val cached = winners.persist()
       try {
         val t = Target(dstDir)
+        // null-safe: a NULL key matches its own replica row
         MaintainCore.mergeInto(cached, t,
-            keyCols.map(k => t(k) === src(k)).reduce(_ && _))
+            keyCols.map(k => t(k) <=> src(k)).reduce(_ && _))
           .whenMatched(src("__op") === "delete").delete()
           .whenMatched().update(assign(dataCols)(src))
           .whenNotMatched(src("__op") === "upsert")

@@ -131,9 +131,7 @@ private[streaming] object MaintainCore {
     * `foreachBatch` that is the stream's own session, not the caller's. */
   def mergeInto(source: DataFrame, t: Target, on: Column)
       : MergeIntoWriter[Row] = {
-    val spark = source.sparkSession
-    if (spark.conf.getOption("spark.sql.catalog.graft").isEmpty)
-      spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    GraftCatalog.register(source.sparkSession)
     source.as("s").mergeInto(t.name, on)
   }
 }

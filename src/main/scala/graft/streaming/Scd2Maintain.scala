@@ -111,10 +111,11 @@ object Scd2Maintain {
           lit("close").as("__action"),
           ec.cast("long").as("__close_epoch")): _*)
       // 4. close each key's open version, insert the version rows
+      // (keys match null-safely: a NULL key closes its own version)
       val t = Target(dimDir)
       val action = src("__action")
       MaintainCore.mergeInto(inserts.unionAll(closes), t,
-          keyCols.map(k => t(k) === src(k)).reduce(_ && _) && (
+          keyCols.map(k => t(k) <=> src(k)).reduce(_ && _) && (
             (action === "close" && t(IsCurrentCol) &&
               t(ValidFromCol) < src("__close_epoch")) ||
             (action === "insert" && t(ValidFromCol) === src(ValidFromCol))))

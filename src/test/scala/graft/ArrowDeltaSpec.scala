@@ -129,13 +129,13 @@ class ArrowDeltaSpec extends AnyFunSuite {
 
   test("delta batch abort unlinks BOTH appended-file classes — " +
       "plain-insert files and the update-arm's rewritten-row files") {
-    import graft.sources.arrow.{ArrowDeltaBatchWrite, ArrowDeltaCommitMessage, ArrowDeltaOperation}
+    import graft.sources.arrow.{ArrowDeltaBatchWrite, ArrowDeltaCommitMessage, ArrowDeltaOperation, TableSnapshot}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val dir = Files.createTempDirectory("delta_abort").toString
     val ins = Files.createFile(Paths.get(dir, "orphan_insert.arrow"))
     val upd = Files.createFile(Paths.get(dir, "orphan_update.arrow"))
     val schema = StructType(Seq(StructField("id", LongType)))
-    val op = new ArrowDeltaOperation(dir, schema,
+    val op = new ArrowDeltaOperation(TableSnapshot.read(dir), schema,
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.MERGE)
     val write = new ArrowDeltaBatchWrite(op, dir, schema,
       StructType(Seq.empty), None, Seq.empty)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowScan, ArrowScanBuilder}
+import graft.sources.arrow.{ArrowScan, ArrowScanBuilder, TableSnapshot}
 
 /** Limit pushdown on the Arrow DSv2: planning stops emitting splits
   * once the footers' per-batch row counts PROVE the limit is covered,
@@ -31,7 +31,7 @@ class ArrowLimitSpec extends AnyFunSuite {
     spark.read.format("arrow").load(d).schema
 
   test("planning truncates to the proven-row prefix of one file") {
-    val sb = new ArrowScanBuilder(dir, schemaOf(dir))
+    val sb = new ArrowScanBuilder(TableSnapshot.read(dir), schemaOf(dir))
     assert(sb.pushLimit(300), "limit push refused on an unfiltered scan")
     val parts = sb.build().asInstanceOf[ArrowScan]
       .toBatch.planInputPartitions()
@@ -42,7 +42,7 @@ class ArrowLimitSpec extends AnyFunSuite {
   }
 
   test("a limit above the directory's row count plans everything") {
-    val sb = new ArrowScanBuilder(dir, schemaOf(dir))
+    val sb = new ArrowScanBuilder(TableSnapshot.read(dir), schemaOf(dir))
     assert(sb.pushLimit(1000000))
     val parts = sb.build().asInstanceOf[ArrowScan]
       .toBatch.planInputPartitions()
@@ -50,7 +50,7 @@ class ArrowLimitSpec extends AnyFunSuite {
   }
 
   test("pushed data filters refuse the limit (residual may drop rows)") {
-    val sb = new ArrowScanBuilder(dir, schemaOf(dir))
+    val sb = new ArrowScanBuilder(TableSnapshot.read(dir), schemaOf(dir))
     val accepted = sb.pushFilters(Array(
       org.apache.spark.sql.sources.LessThan("id", 100L)))
     assert(sb.pushedFilters().nonEmpty)

@@ -297,6 +297,23 @@ class ArrowSourceSpec extends AnyFunSuite {
     assert(bagEqual(src, back))
   }
 
+  test("a loaded DataFrame run again after an append commits returns " +
+      "the appended rows (flat directory and logged table)") {
+    for (logged <- Seq(false, true)) {
+      val dir = tmpDir()
+      spark.range(10).toDF("id").write.format("arrow")
+        .mode("overwrite").save(dir)
+      if (logged) graft.sources.arrow.ArrowDataSource.initTableLog(dir)
+      val df = spark.read.format("arrow").load(dir)
+      assert(df.count() == 10)
+      spark.range(10, 15).toDF("id").write.format("arrow")
+        .mode("append").save(dir)
+      assert(df.count() == 15, s"logged=$logged: count missed the append")
+      assert(df.orderBy("id").collect().map(_.getLong(0)).toSeq ==
+        (0L until 15L), s"logged=$logged: rows missed the append")
+    }
+  }
+
   test("property: generated typed rows round-trip exactly") {
     import spark.implicits._
     val listGen = Gen.listOfN(50, genRow)

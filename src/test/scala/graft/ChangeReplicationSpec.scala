@@ -343,4 +343,28 @@ class ChangeReplicationSpec extends AnyFunSuite {
       "replica B diverged from its source")
     assert(snapshot(dstB).filter(col("id") === 5000L).count() == 1)
   }
+
+  test("a NULL key matches its own replica row: updates of a NULL-key " +
+      "source row replace it instead of adding copies") {
+    import spark.implicits._
+    val src = tmp("nullkey_src")
+    Seq[(Option[Long], String)]((Some(1L), "a"), (None, "n0"),
+      (Some(2L), "b")).toDF("id", "tag")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(src)
+    ArrowDataSource.initTableLog(src)
+    // a replica holding a row replays the feed through the keyed MERGE
+    val dst = tmp("nullkey_dst")
+    Seq[(Option[Long], String)]((Some(1L), "a")).toDF("id", "tag")
+      .coalesce(1).write.format("arrow").mode("overwrite").save(dst)
+    val ckpt = tmp("nullkey_ckpt")
+    replicate(src, dst, ckpt)
+    spark.sql(s"UPDATE graft.arrow.`$src` SET tag = 'n1' WHERE id IS NULL")
+    replicate(src, dst, ckpt)
+    spark.sql(s"UPDATE graft.arrow.`$src` SET tag = 'n2' WHERE id IS NULL")
+    replicate(src, dst, ckpt)
+    assert(bagEqual(snapshot(dst), snapshot(src)),
+      "replica diverged from a source with a NULL key")
+    assert(snapshot(dst).filter(col("id").isNull).count() == 1,
+      "the replica must hold the one NULL-key row")
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, FooterIndexFile}
+import graft.sources.arrow.{ArrowDataSource, FooterIndexFile, TableSnapshot}
 
 /** Write-time footer-stats sidecar ([[FooterIndexFile]]): planning an
   * Arrow directory must cost ONE metadata read, not O(files) footer
@@ -33,14 +33,18 @@ class FooterIndexSpec extends AnyFunSuite {
       .mode("overwrite").save(dir)
 
   /** Every live file has a sidecar entry whose stats and schema equal
-    * a sweep of the file's own footer. */
+    * a sweep of the file's own footer — in the index loaded directly
+    * and in a table snapshot's (its fragments named by the log's own
+    * listing). */
   private def assertSidecarMatchesFooters(dir: String): Unit = {
     val root = Paths.get(dir).toAbsolutePath.normalize
     val files = ArrowDataSource.visibleIpcFiles(dir)
     assert(files.nonEmpty)
-    val idx = FooterIndexFile.load(root)
+    val loaded = FooterIndexFile.load(root)
       .getOrElse(fail("no sidecar written"))
-    for (f <- files) {
+    val snapped = TableSnapshot.read(dir).sidecar
+      .getOrElse(fail("no sidecar in the table snapshot"))
+    for (idx <- Seq(loaded, snapped); f <- files) {
       val rel = root.relativize(f.toAbsolutePath.normalize).toString
       val got = idx.infoOf(rel)
         .getOrElse(fail(s"file $rel missing from sidecar"))
@@ -219,9 +223,11 @@ class FooterIndexSpec extends AnyFunSuite {
     assert(spark.read.format("arrow").load(dir).count() == 3800)
     assert(ArrowDataSource.footerOpens.get == before,
       "planning swept footers despite epoch fragments")
+    assertSidecarMatchesFooters(dir)
     // log compaction folds the fragments into the root sidecar
     ArrowDataSource.compactLog(root,
       ArrowDataSource.latestCommittedEpoch(root))
+    assertSidecarMatchesFooters(dir)
     val after = Files.list(md).iterator()
     var remaining = 0
     while (after.hasNext) {

@@ -160,4 +160,36 @@ class Scd2Spec extends AnyFunSuite {
       "an empty batch committed a dimension epoch")
     checkInvariants(src, dim)
   }
+
+  test("a NULL key closes its own open version: one current row per " +
+      "NULL key after its updates") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("scd2n_src").toString
+    val dim = Files.createTempDirectory("scd2n_dim").toString
+    val ckpt = Files.createTempDirectory("scd2n_ckpt").toString
+    val base = Seq[(Option[Long], String, Long)]((Some(1L), "g", 10L),
+      (None, "g", 0L), (Some(2L), "g", 20L)).toDF("id", "grp", "amt")
+    base.coalesce(1).write.format("arrow").mode("overwrite").save(src)
+    ArrowDataSource.initTableLog(src)
+    base.limit(0)
+      .withColumn("valid_from", lit(0L))
+      .withColumn("valid_to", lit(null).cast("long"))
+      .withColumn("is_current", lit(true))
+      .coalesce(1).write.format("arrow").mode("overwrite").save(dim)
+    def refresh(): Unit = {
+      val q = Scd2Maintain.maintain(spark, src, dim,
+        keyCols = Seq("id"), checkpoint = ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    refresh()
+    spark.sql(s"UPDATE graft.arrow.`$src` SET amt = 1 WHERE id IS NULL")
+    refresh()
+    spark.sql(s"UPDATE graft.arrow.`$src` SET amt = 2 WHERE id IS NULL")
+    refresh()
+    val nullKey = dimDf(dim).filter(col("id").isNull)
+    assert(nullKey.filter(col("is_current")).count() == 1,
+      "the NULL key must carry exactly one current version")
+    assert(nullKey.count() == 3, "the NULL key keeps its two closed versions")
+    checkInvariants(src, dim)
+  }
 }
