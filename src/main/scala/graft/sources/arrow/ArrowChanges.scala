@@ -234,12 +234,7 @@ object ArrowChanges {
             if (i < before.length) d.andNot(before(i))
             d
           }
-          val tmp = root.resolve(ArrowDataSource.DvDirName)
-            .resolve(s"cdf_${epoch}_$digest.dv.inprogress")
-          java.nio.file.Files.write(tmp, DeletionVectors.serialize(diff))
-          java.nio.file.Files.move(tmp, out,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          AtomicFiles.replace(out, DeletionVectors.serialize(diff))
         }
         out.toString
     }

@@ -790,12 +790,14 @@ object ArrowDataSource {
       listIpcFiles(dir)
   }
 
-  /** Atomically record one epoch's committed files. Idempotent by
-    * epoch: a replayed epoch (driver recovered from a checkpoint taken
-    * before the commit landed) finds the manifest already present — or
-    * already folded into a compact snapshot — and leaves it untouched;
-    * the first commit's file set stays the committed truth and the
-    * replay's fresh files remain invisible. Every `compactInterval`
+  /** Atomically record one epoch's committed files: the manifest,
+    * stamp included, is claimed whole ([[AtomicFiles.claim]]).
+    * Idempotent by epoch: a replayed epoch (driver recovered from a
+    * checkpoint taken before the commit landed) finds the manifest
+    * already present — or already folded into a compact snapshot, or
+    * claimed by a racing replay — and leaves it untouched; the first
+    * commit's file set stays the committed truth and the replay's
+    * fresh files remain invisible. Every `compactInterval`
     * epochs the log is folded into a `<epoch>.compact` snapshot and the
     * covered manifests deleted (crash between the two steps is safe:
     * readers ignore manifests at or below the latest snapshot's epoch,
@@ -806,17 +808,13 @@ object ArrowDataSource {
     val md = manifestDir(dir)
     Files.createDirectories(md)
     val root = Paths.get(dir).toAbsolutePath.normalize
-    val manifest = md.resolve(s"$epochId.manifest")
-    if (Files.exists(manifest) || latestCommittedEpoch(root) >= epochId)
-      return
+    if (latestCommittedEpoch(root) >= epochId) return
     val rels = files.map(f =>
       root.relativize(Paths.get(f).toAbsolutePath.normalize).toString)
-    val tmp = md.resolve(s"$epochId.manifest.inprogress")
-    Files.write(tmp, TableLog.manifestLines(Seq.empty, rels).asJava)
-    Files.move(tmp, manifest,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    TableLog.writeStamp(md, epochId)
-    if (compactInterval > 0 && (epochId + 1) % compactInterval == 0)
+    val claimed = AtomicFiles.claim(md.resolve(s"$epochId.manifest"),
+      TableLog.manifestLines(TableLog.nextStamp(md, epochId), Seq.empty,
+        rels))
+    if (claimed && compactInterval > 0 && (epochId + 1) % compactInterval == 0)
       compactLog(root, epochId)
   }
 
@@ -834,19 +832,7 @@ object ArrowDataSource {
   def compactLog(root: Path, epochId: Long,
       onlyExisting: Boolean = false): Unit = {
     val md = root.resolve(MetadataDirName)
-    // A commit reserves its epoch with an empty manifest and then
-    // renames the written one over it: folding the reservation would
-    // drop that commit (a racing JVM's compaction can land in the
-    // window). Let in-flight commits finish first; a reservation still
-    // empty after the wait is a crashed commit and folds as the empty
-    // epoch it is.
-    var log = TableLog.read(root)
-    val deadline = System.currentTimeMillis() + 2000L
-    while (log.reserved.exists(_ <= epochId) &&
-        System.currentTimeMillis() < deadline) {
-      Thread.sleep(5L)
-      log = TableLog.read(root)
-    }
+    val log = TableLog.read(root)
     // onlyExisting (vacuum's history prune): drop events about files
     // no longer on disk — a removed-then-reclaimed file loses both its
     // add and its remove, so the live fold is unchanged while the
@@ -867,19 +853,12 @@ object ArrowDataSource {
         }
         kept
       }
-    val ctmp = md.resolve(s"$epochId.compact.inprogress")
-    Files.write(ctmp, log.snapshotLines(epochId, entries).asJava)
-    try Files.move(ctmp, md.resolve(s"$epochId.compact"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // a replayed (or racing same-epoch) fold already landed this
-        // snapshot — its coverage is identical; defer to the winner
-        Files.deleteIfExists(ctmp)
-        return
-    }
+    // replaced, not claimed: vacuum's history prune re-folds the head
+    // epoch's snapshot, and two folds of one epoch both hold its facts
+    AtomicFiles.replace(md.resolve(s"$epochId.compact"),
+      log.snapshotLines(epochId, entries))
     // covered metadata is now redundant: older snapshots and every
-    // manifest (and stamp marker) at or below this snapshot's epoch
+    // manifest (and legacy marker) at or below this snapshot's epoch
     val names = listDir(md).map(_.getFileName.toString)
     names.foreach { n =>
       val f = md.resolve(n)
@@ -896,19 +875,20 @@ object ArrowDataSource {
   }
 
   /** Atomic, conflict-checked TABLE epoch commit: `removes` leave the
-    * visible set and `adds` enter it in one manifest rename.
+    * visible set and `adds` enter it in one manifest claim.
     *
     * Protocol: re-read the latest epoch; if it moved past
     * `expectedBase`, another writer committed since this operation
     * planned — throw (optimistic concurrency, Delta's commit-conflict
-    * check). Otherwise RESERVE epoch base+1 with an exclusive create
-    * (two racers both at base: exactly one create wins, the loser
-    * throws), then move the written manifest over the reservation.
-    * A crash between reserve and move burns the epoch number but
-    * commits nothing: an empty manifest folds to zero events, so
-    * readers stay on the prior snapshot. Old files are NOT unlinked —
-    * they back `VERSION AS OF` time travel until vacuum reclaims
-    * them. */
+    * check). Otherwise CLAIM epoch base+1: the whole manifest — its
+    * `#ts` stamp and `#neutral` mark included — is hard-linked into
+    * place from a temp ([[AtomicFiles.claim]]); of two racers at one
+    * base exactly one link wins, the loser throws. The epoch appears
+    * with its full content in one step, so no reader counts an epoch
+    * whose facts are not yet written, and a crash before the link
+    * leaves no epoch behind (at most a temp that vacuum sweeps). Old
+    * files are NOT unlinked — they back `VERSION AS OF` time travel
+    * until vacuum reclaims them. */
   def commitTableEpoch(dir: String, expectedBase: Long,
       adds: Seq[String], removes: Seq[String],
       compactInterval: Int = DefaultCompactInterval,
@@ -925,41 +905,49 @@ object ArrowDataSource {
           "since this operation planned its snapshot; retry against " +
           "the current table state")
     val epoch = latest + 1
-    val manifest = md.resolve(s"$epoch.manifest")
-    try Files.createFile(manifest)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"arrow: a concurrent writer committed epoch $epoch of $dir " +
-            "first; retry against the current table state")
-    }
     def rel(f: String): String =
       root.relativize(Paths.get(f).toAbsolutePath.normalize).toString
-    // writer-transaction and COPY INTO stamps travel INSIDE the
-    // manifest: atomic with the visibility flip (see withPendingTxn).
-    // Line order IS fold order within the epoch: removes, adds, then
-    // dv events (so a replace-and-remask in one epoch lands masked)
-    val lines = TableLog.manifestLines(removes.map(rel), adds.map(rel),
+    // the stamp, the neutral mark, writer-transaction and COPY INTO
+    // stamps travel INSIDE the manifest: atomic with the visibility
+    // flip (see withPendingTxn). Line order IS fold order within the
+    // epoch: removes, adds, then dv events (so a replace-and-remask in
+    // one epoch lands masked)
+    val stamp = TableLog.nextStamp(md, epoch)
+    val lines = TableLog.manifestLines(stamp, removes.map(rel),
+      adds.map(rel),
       dvs.map { case (f, dvf, count) => (rel(f), rel(dvf), count) },
       txn = Option(pendingTxns.get(root.toString)),
       copies = Option(pendingCopies.get(root.toString)).toSeq.flatten,
-      op = opKind)
-    val tmp = md.resolve(s"$epoch.manifest.inprogress")
-    Files.write(tmp, lines.asJava)
-    // The data-neutral marker must land BEFORE the manifest move —
-    // the epoch's visibility flip. Written after, a crash (or a
-    // concurrent change-feed trigger) in the gap would deliver a
-    // maintenance epoch's full-table churn to every CDC consumer.
-    // Before the move the marker is inert: the epoch is still an
-    // empty reservation folding to zero events.
-    if (neutral) TableLog.markNeutral(md, epoch)
-    Files.move(tmp, manifest,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    TableLog.writeStamp(md, epoch)
+      op = opKind, neutral = neutral)
+    if (!AtomicFiles.claim(md.resolve(s"$epoch.manifest"), lines) ||
+        claimedUnderFold(root, epoch, stamp, adds.map(rel)))
+      throw new java.util.ConcurrentModificationException(
+        s"arrow: a concurrent writer committed epoch $epoch of $dir " +
+          "first; retry against the current table state")
     if (compactInterval > 0 && (epoch + 1) % compactInterval == 0)
       compactLog(root, epoch)
     epoch
   }
+
+  /** Whether a claim of `epoch` landed on a name a fold had deleted:
+    * another writer committed `epoch` and a compaction at or past it
+    * removed the manifest between this writer's base check and its
+    * link. Readers ignore manifests at or below the latest snapshot,
+    * so such a claim is invisible (the next fold deletes it). Only
+    * when a snapshot at or past `epoch` exists is the log read, to
+    * tell that case from a fold that came after this claim and holds
+    * its stamp and adds. */
+  private def claimedUnderFold(root: Path, epoch: Long, stamp: Long,
+      adds: Seq[String]): Boolean =
+    listDir(root.resolve(MetadataDirName)).exists { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".compact") && TableLog.epochOf(n) >= epoch
+    } && {
+      val log = TableLog.read(root)
+      val added = log.history.filter(en => en.epoch == epoch && !en.remove)
+        .map(_.rel).toSet
+      !log.stamps.get(epoch).contains(stamp) || !adds.forall(added)
+    }
 
   /** Staged-write handoff: a `stageOnly` job tags itself with a
     * unique `stageToken` and its driver-side commit records EXACTLY
@@ -1060,13 +1048,13 @@ object ArrowDataSource {
     val files = listIpcFiles(dir)
       .map(p => root.relativize(p.toAbsolutePath.normalize).toString)
     // a concurrent init that won the rename holds the truth: defer
-    publishStagedLog(root, ".init.inprogress",
-      TableLog.manifestLines(Seq.empty, files))(_ => ())
+    publishStagedLog(root, ".init.inprogress", TableLog.manifestLines(
+      System.currentTimeMillis(), Seq.empty, files))(_ => ())
     ()
   }
 
   /** Build a table log in a staged directory (marker, whatever `fill`
-    * writes, the epoch-0 manifest and its stamp) and rename it into
+    * writes, the stamped epoch-0 manifest) and rename it into
     * place in one step, so readers see no log or a complete one. A
     * crashed earlier staging is rebuilt. False when a concurrent log
     * won the rename; the staged copy is removed. */
@@ -1078,7 +1066,6 @@ object ArrowDataSource {
     Files.createFile(tmp.resolve(TableMarkerName))
     fill(tmp)
     Files.write(tmp.resolve("0.manifest"), epoch0.asJava)
-    TableLog.writeStamp(tmp, 0L)
     try {
       Files.move(tmp, root.resolve(MetadataDirName),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -1342,12 +1329,11 @@ object ArrowDataSource {
   /** Atomic COMPARE-AND-SWAP declaration replace: publishes iff the
     * current generation still equals `expectedGen` (from
     * [[declaredSchemaGen]]; -1 = undeclared). The claim is
-    * `Files.createLink(_schema.g<expected+1>, tmp)` — hard-link
-    * creation is atomic and fails with EEXIST when a racer claimed
-    * the generation first, in which case this returns false and the
-    * CALLER re-reads the fresh declaration and recomputes (the
-    * mergeSchema retry loop). Readers always see complete content
-    * (the link targets a fully-written temp). Generations more than
+    * [[AtomicFiles.claim]] of `_schema.g<expected+1>` — it fails when
+    * a racer claimed the generation first, in which case this returns
+    * false and the CALLER re-reads the fresh declaration and
+    * recomputes (the mergeSchema retry loop). Readers always see
+    * complete content. Generations more than
     * 8 behind prune on each successful claim; the legacy bare file is
     * left in place (it reads as generation 0 only while no `.g` file
     * exists). */
@@ -1364,9 +1350,6 @@ object ArrowDataSource {
     Files.createDirectories(md)
     if (declaredSchemaGen(root) != expectedGen) return false
     val gen = expectedGen + 1
-    val target = md.resolve(s"$SchemaFileName.g$gen")
-    val tmp = md.resolve(s"$SchemaFileName.g$gen." +
-      java.util.UUID.randomUUID().toString.take(8) + ".inprogress")
     val lines = schema.toDDL +:
       (dropped.toSeq.sorted.map(n => s"drop\t$n") ++
         aliases.toSeq.sortBy(_._1).map { case (l, ps) =>
@@ -1375,48 +1358,19 @@ object ArrowDataSource {
         defaults.toSeq.sortBy(_._1).map { case (n, lit) =>
           s"default\t$n\t$lit"
         })
-    Files.write(tmp, lines.asJava)
-    try {
-      try Files.createLink(target, tmp)
-      catch {
-        case e @ (_: UnsupportedOperationException |
-            _: java.nio.file.FileSystemException)
-            if !e.isInstanceOf[java.nio.file.FileAlreadyExistsException]
-              && !Files.exists(target) =>
-          // hard links are the CAS primitive; a filesystem without
-          // them (exFAT, some NFS/SMB mounts) must fail with guidance,
-          // not a bare IO error deep in a write job
-          throw new UnsupportedOperationException(
-            s"arrow: cannot claim schema generation $gen under $md — " +
-              "the filesystem refused hard-link creation, which the " +
-              "declaration compare-and-swap requires. Host the table " +
-              "on a POSIX filesystem (ext4/xfs/tmpfs/HDFS-like) for " +
-              s"concurrent schema evolution. Cause: $e", e)
-      }
-      // prune far-past generations: readers re-resolve per call, so
-      // only a reader mid-list/read could see a pruned file — the
-      // 8-generation window is ample for that microsecond race
-      val prefix = SchemaFileName + ".g"
-      val s = Files.list(md)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith(prefix) && !n.endsWith(".inprogress"))
-        .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong)
-          .toOption.map(g => (n, g)))
-        .filter(_._2 < gen - 8)
-        .foreach(n => Files.deleteIfExists(md.resolve(n._1)))
-      finally s.close()
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-      // some filesystems surface EEXIST as a generic FS error; target
-      // present = a racer's claim landed = the ordinary lost-CAS case
-      case _: java.nio.file.FileSystemException
-          if Files.exists(target) => false
-    } finally {
-      Files.deleteIfExists(tmp)
-      ()
-    }
+    if (!AtomicFiles.claim(md.resolve(s"$SchemaFileName.g$gen"), lines))
+      return false
+    // prune far-past generations: readers re-resolve per call, so
+    // only a reader mid-list/read could see a pruned file — the
+    // 8-generation window is ample for that microsecond race
+    val prefix = SchemaFileName + ".g"
+    listDir(md).map(_.getFileName.toString)
+      .filter(n => n.startsWith(prefix) && !n.endsWith(".inprogress"))
+      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong)
+        .toOption.map(g => (n, g)))
+      .filter(_._2 < gen - 8)
+      .foreach(n => Files.deleteIfExists(md.resolve(n._1)))
+    true
   }
 
   /** `_clone_src` metadata: where (and at which epoch) this table was
@@ -1448,7 +1402,8 @@ object ArrowDataSource {
     // dv event — a clone of a merge-on-read table must not resurrect
     // the source's masked rows
     val landed = publishStagedLog(dstRoot, ".clone.inprogress",
-        TableLog.manifestLines(Seq.empty, rels, dvs)) { tmp =>
+        TableLog.manifestLines(System.currentTimeMillis(), Seq.empty,
+          rels, dvs)) { tmp =>
       // The clone's partition columns are RECORDED, not re-derived: the
       // borrowed rels walk `..`* down through the source's own path, and
       // no trailing col=value heuristic can tell a source-root segment
@@ -1757,13 +1712,8 @@ object ArrowDataSource {
   }
 
   private def writeTags(root: Path, t: Map[String, Long]): Unit = {
-    val md = root.resolve(MetadataDirName)
-    val tmp = md.resolve(TagsFileName + ".inprogress")
-    Files.write(tmp,
-      t.toSeq.sortBy(_._1).map { case (n, e) => s"$n\t$e" }.asJava)
-    Files.move(tmp, md.resolve(TagsFileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(root.resolve(MetadataDirName).resolve(TagsFileName),
+      t.toSeq.sortBy(_._1).map { case (n, e) => s"$n\t$e" })
   }
 
   /** Create or retarget a tag; `epoch` None = current latest. */
@@ -1816,13 +1766,9 @@ object ArrowDataSource {
 
   private[arrow] def writeBranches(root: Path,
       b: Map[String, String]): Unit = {
-    val md = root.resolve(MetadataDirName)
-    val tmp = md.resolve(BranchesFileName + ".inprogress")
-    Files.write(tmp,
-      b.toSeq.sortBy(_._1).map { case (n, d) => s"$n\t$d" }.asJava)
-    Files.move(tmp, md.resolve(BranchesFileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(
+      root.resolve(MetadataDirName).resolve(BranchesFileName),
+      b.toSeq.sortBy(_._1).map { case (n, d) => s"$n\t$d" })
   }
 
   /** Absolute directory of a registered branch (a sibling of the
@@ -1911,22 +1857,11 @@ object ArrowDataSource {
       ledger: Map[String, org.apache.spark.sql.types.DataType],
       spec: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit = {
     val md = root.resolve(MetadataDirName)
-    val ltmp = md.resolve(PartTypesFileName + ".inprogress")
-    Files.write(ltmp, ledger.toSeq.sortBy(_._1)
-      .map { case (c, t) => s"$c\t${t.sql}" }.asJava)
-    Files.move(ltmp, md.resolve(PartTypesFileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val utmp = md.resolve(PartColsFileName + ".set.inprogress")
-    Files.write(utmp, union.asJava)
-    Files.move(utmp, md.resolve(PartColsFileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val stmp = md.resolve(PartSpecFileName + ".inprogress")
-    Files.write(stmp, spec.map { case (c, t) => s"$c\t${t.sql}" }.asJava)
-    Files.move(stmp, md.resolve(PartSpecFileName),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(md.resolve(PartTypesFileName), ledger.toSeq
+      .sortBy(_._1).map { case (c, t) => s"$c\t${t.sql}" })
+    AtomicFiles.replace(md.resolve(PartColsFileName), union)
+    AtomicFiles.replace(md.resolve(PartSpecFileName),
+      spec.map { case (c, t) => s"$c\t${t.sql}" })
   }
 
   /** Partition columns as a schema: the recorded spec's type wins

@@ -266,7 +266,7 @@ object ArrowOptimize {
         metaData.put(ArrowDataSource.CodecMetaKey, c.toLowerCase))
       // same atomic-commit protocol as the writers: stream into a temp
       // invisible to readers, rename once the footer is on disk
-      val tmpDst = Paths.get(dst.toString + ".inprogress")
+      val tmpDst = AtomicFiles.tempFor(dst)
       val outCh = FileChannel.open(tmpDst, StandardOpenOption.CREATE,
         StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
       val writer = codecType match {
@@ -304,8 +304,7 @@ object ArrowOptimize {
         writerRoot.close()
         dicts.values.foreach(_.getVector.close())
       }
-      Files.move(tmpDst, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      AtomicFiles.publish(tmpDst, dst)
     } finally {
       reader.close(); inCh.close(); allocator.close()
     }
@@ -337,11 +336,7 @@ object AutoCompact {
       s"auto_compact: $dir is not a logged table")
     require(minFiles >= 2 && targetRows >= 2,
       s"auto_compact needs min_files >= 2 and target_rows >= 2")
-    val tmp = marker(dir).resolveSibling(MarkerName + ".inprogress")
-    Files.write(tmp, java.util.List.of(s"$minFiles\t$targetRows"))
-    Files.move(tmp, marker(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(marker(dir), Seq(s"$minFiles\t$targetRows"))
   }
 
   def disable(dir: String): Unit = {

@@ -46,8 +46,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Durability: the first DML upgrades a flat directory to a logged
   * table ([[ArrowDataSource.initTableLog]]); from then on replacement
-  * files stay invisible until the epoch manifest renames in (readers
-  * resolve old or new, never both), a crash before the rename commits
+  * files stay invisible until the epoch manifest is claimed (readers
+  * resolve old or new, never both), a crash before the claim commits
   * nothing (orphans are vacuum fodder), a concurrent commit since the
   * scan planned fails the DML (optimistic concurrency), and the
   * removed files back `VERSION AS OF` until vacuum reclaims them.

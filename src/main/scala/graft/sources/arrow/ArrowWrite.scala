@@ -27,10 +27,10 @@ import org.apache.spark.sql.types._
   * writing 150k orders rows) — lz4 is kept for format compatibility,
   * not as a performance option.
   *
-  * Commit protocol: tasks stream into
-  * `part-<pid>-<tid>-<uuid>.arrow.inprogress` (invisible to readers —
-  * the lister only matches `*.arrow`) and atomically rename at commit,
-  * so a concurrent reader can never observe a file whose footer is not
+  * Commit protocol: tasks stream into an [[AtomicFiles.tempFor]] temp
+  * of `part-<pid>-<tid>-<uuid>.arrow` (invisible to readers — the
+  * lister only matches `*.arrow`) and atomically rename at commit, so
+  * a concurrent reader can never observe a file whose footer is not
   * yet written; task abort deletes the temp. Truncate-on-overwrite
   * clears pre-existing `.arrow` files (and stale temps) on the driver
   * before tasks launch.
@@ -306,7 +306,7 @@ class ArrowBatchWrite(path: String, schema: StructType,
       // epoch at job commit. Nothing is physically deleted here —
       // the replaced files back VERSION AS OF until vacuum — and the
       // new files stay invisible (not in any manifest) until the
-      // commit rename, so a mid-write reader still resolves the old
+      // commit claim, so a mid-write reader still resolves the old
       // snapshot.
       loggedBase = ArrowDataSource.latestCommittedEpoch(
         Paths.get(logDir).toAbsolutePath.normalize)
@@ -746,8 +746,7 @@ class ArrowDataWriter(path: String, schema: StructType,
   // written.
   private val file: Path = Paths.get(path,
     f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.arrow")
-  private val tmpFile: Path = Paths.get(
-    file.toString + ".inprogress")
+  private val tmpFile: Path = AtomicFiles.tempFor(file)
   private val channel: FileChannel = FileChannel.open(tmpFile,
     StandardOpenOption.CREATE, StandardOpenOption.WRITE,
     StandardOpenOption.TRUNCATE_EXISTING)
@@ -880,7 +879,7 @@ object ArrowDataWriter {
   final case class Sealed(tmp: Path, file: Path, footer: String) {
     /** Rename the file visible; returns its path. */
     def publish(): String = {
-      Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      AtomicFiles.publish(tmp, file)
       file.toString
     }
   }

@@ -1,7 +1,7 @@
 package graft.sources.arrow
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 
 /** ANALYZE-style table-level column statistics the footers cannot
   * carry: nulls and min/max fold from per-file footer stats, but
@@ -57,13 +57,8 @@ object ColumnStatsFile {
         s"s\t${b64(c)}\t${java.util.Base64.getEncoder
           .encodeToString(bytes)}"
       }).mkString("\n")
-    // uuid-suffixed temp: two concurrent ANALYZE calls must not race
-    // on one staging name (last move wins either way — both are valid)
-    val tmp = root.resolve(FileName + "." +
-      java.util.UUID.randomUUID().toString.take(8) + ".inprogress")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, file(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    // two concurrent ANALYZE calls: last replace wins, both are valid
+    AtomicFiles.replace(file(root), body.getBytes(StandardCharsets.UTF_8))
   }
 
   /** ONE read + parse serving both statistic classes:

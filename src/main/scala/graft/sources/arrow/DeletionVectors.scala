@@ -1,6 +1,6 @@
 package graft.sources.arrow
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.Filter
@@ -79,11 +79,8 @@ object DeletionVectors {
   def write(root: Path, perBatch: Array[java.util.BitSet]): Path = {
     val dvDir = root.resolve(ArrowDataSource.DvDirName)
     Files.createDirectories(dvDir)
-    val name = java.util.UUID.randomUUID().toString + ".dv"
-    val tmp = dvDir.resolve(name + ".inprogress")
-    Files.write(tmp, serialize(perBatch))
-    val out = dvDir.resolve(name)
-    Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE)
+    val out = dvDir.resolve(java.util.UUID.randomUUID().toString + ".dv")
+    AtomicFiles.replace(out, serialize(perBatch))
     out
   }
 

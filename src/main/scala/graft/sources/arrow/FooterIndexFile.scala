@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    write), so a stale index entry cannot describe wrong stats —
   *    staleness only ever means MISSING entries, never wrong ones.
   *
-  * Format (line-oriented, atomically replaced via temp + ATOMIC_MOVE):
+  * Format (line-oriented, atomically replaced, [[AtomicFiles.replace]]):
   * {{{
   *   v1
   *   S<TAB>0<TAB><StructType json>          schema generations
@@ -120,7 +120,7 @@ object FooterIndexFile {
   private def sidecar(root: Path): Path = root.resolve(FileName)
 
   // sidecar path → ((size, mtime-millis) fingerprint, parsed index).
-  // Updates ATOMIC_MOVE a fresh file (new fingerprint), so a stale hit
+  // Each update renames a fresh file in (new fingerprint), so a stale hit
   // is impossible; keying by path alone keeps the cache bounded by
   // distinct directories, not by rewrite count.
   private val cache = scala.collection.concurrent.TrieMap
@@ -205,12 +205,8 @@ object FooterIndexFile {
           Paths.get(abs).toAbsolutePath.normalize).toString
         decodeInfo(enc.split("\t", -1).toSeq).map(rel -> (0, _))
       }.toMap
-      val tmp = md.resolve(s"$epoch.fstats.inprogress")
-      Files.write(tmp, render(Index(IndexedSeq(schema), entries))
+      AtomicFiles.replace(out, render(Index(IndexedSeq(schema), entries))
         .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, out,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Log-compaction hook: fold the fragments `listing` names at or
@@ -268,11 +264,8 @@ object FooterIndexFile {
   }
 
   private def writeAtomic(root: Path, idx: Index): Unit = {
-    val tmp = root.resolve(s"$FileName.inprogress")
-    Files.write(tmp, render(idx).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, sidecar(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(sidecar(root),
+      render(idx).getBytes(StandardCharsets.UTF_8))
   }
 
   private def sig(s: StructType): Seq[(String, DataType)] =

@@ -69,9 +69,9 @@ object GraftProcedures {
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
       val base = ArrowDataSource.latestCommittedEpoch(root)
       // maintenance rewrites carry the SAME row multiset — the
-      // neutral flag makes commitTableEpoch write the marker before
-      // the epoch's visibility flip, so change-feed consumers can
-      // never observe the churn as data change
+      // neutral flag puts `#neutral` in the epoch's claimed manifest,
+      // so change-feed consumers can never observe the churn as data
+      // change
       ArrowDataSource.commitStaged(path, base, writer(df),
         replaced.map(_.toString), neutral = true)
       ()

@@ -1,7 +1,7 @@
 package graft.sources.arrow
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, Predicate => CatalystPredicate}
@@ -65,15 +65,9 @@ object TableConstraints {
   }
 
   private def writeAll(dir: String,
-      constraints: Seq[(String, String)]): Unit = {
-    import scala.jdk.CollectionConverters._
-    val f = file(dir)
-    val tmp = f.resolveSibling(FileName + ".inprogress")
-    Files.write(tmp,
-      constraints.map { case (n, e) => s"$n\t${b64(e)}" }.asJava)
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+      constraints: Seq[(String, String)]): Unit =
+    AtomicFiles.replace(file(dir),
+      constraints.map { case (n, e) => s"$n\t${b64(e)}" })
 
   /** Parse + resolve `sql` against `schema`, returning the BOUND
     * boolean expression. Fails fast on unknown columns, non-boolean

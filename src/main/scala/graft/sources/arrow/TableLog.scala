@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import ArrowDataSource.MetadataDirName
 
 /** One read of a table's commit log (`_graft_metadata`): the latest
-  * `<epoch>.compact` snapshot, every `<epoch>.manifest` past it, their
-  * `.ts`/`.neutral` markers and `_horizon`, parsed once. Every log fact
-  * derives from this value in memory, so an operation reads the log
-  * once and sees one version of it (Delta's snapshot by one replay).
+  * `<epoch>.compact` snapshot, every `<epoch>.manifest` past it, the
+  * legacy `.ts`/`.neutral` markers and `_horizon`, parsed once. Every
+  * log fact derives from this value in memory, so an operation reads
+  * the log once and sees one version of it (Delta's snapshot by one
+  * replay).
   *
   * Line grammar. A manifest line carries no epoch (its file name does);
   * the compact form writes the epoch as the first field after the tag,
@@ -22,8 +23,8 @@ import ArrowDataSource.MetadataDirName
   *   add       rel                          epoch rel
   *   remove    -  rel                       epoch -  rel
   *   dv        dv count rel dvrel           epoch dv count rel dvrel
-  *   #ts       (<epoch>.ts holds millis)    #ts epoch millis
-  *   #neutral  (<epoch>.neutral marker)     #neutral epoch
+  *   #ts       #ts millis                   #ts epoch millis
+  *   #neutral  #neutral                     #neutral epoch
   *   #txn      #txn appId version           #txn epoch appId version
   *   #copy     #copy key size               #copy epoch key size
   *   #op       #op kind                     #op epoch kind
@@ -35,18 +36,20 @@ import ArrowDataSource.MetadataDirName
   *  - #ts: commit wall-clock; epochs from before stamping fall back to
   *    the manifest's mtime.
   *  - #neutral: a compaction rewrote the same rows; the change feed
-  *    skips the epoch. The marker lands before the manifest rename.
+  *    skips the epoch.
   *  - #txn: writer `appId` committed batch `version` (Delta's `txn`);
   *    the newest version per appId is kept.
   *  - #copy: COPY INTO loaded source `key` of `size` bytes; the first
   *    epoch per key is kept.
   *  - #op: operation kind (`update` tags pre/postimages in the feed).
   *
-  * `#txn`, `#copy` and `#op` ride inside the manifest, atomic with the
-  * epoch's visibility flip. A compaction folds every fact at or below
-  * its epoch into the snapshot, so the log reads the same after it.
-  * `reserved`: tail epochs whose manifest is still the empty
-  * reservation of a commit in flight or crashed (no `.ts` yet). */
+  * Every header rides inside the manifest, which a commit claims
+  * whole ([[AtomicFiles.claim]]): the epoch's facts appear with its
+  * visibility flip. Logs written before that carry an epoch's stamp
+  * and neutral mark as `<epoch>.ts` (holding millis) and
+  * `<epoch>.neutral` marker files; they still read, and a marker wins
+  * over a header. A compaction folds every fact at or below its epoch
+  * into the snapshot, so the log reads the same after it. */
 final case class TableLog(
     root: Path,
     latest: Long,
@@ -56,13 +59,12 @@ final case class TableLog(
     neutral: Set[Long],
     txns: Map[String, (Long, Long)],
     copies: Map[String, (Long, Long)],
-    ops: Map[Long, String],
-    reserved: Set[Long]) {
+    ops: Map[Long, String]) {
   import TableLog._
 
   /** The live `(addEpoch, rel)` set as of `asOf` (None = now): a
     * removal at `e2 <= asOf` cancels the add at `e1 < e2`, so a DML
-    * commit's file swap is one manifest rename for readers. */
+    * commit's file swap is one manifest claim for readers. */
   def live(asOf: Option[Long]): Seq[(Long, String)] = {
     val out = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     history.foreach { en =>
@@ -262,19 +264,17 @@ object TableLog {
         .foreach { case (e, line) => add(e, line) })
     }
     val tailManifests = tail(".manifest")
-    val empty = tailManifests.filter { e =>
-      val ls = lines(md.resolve(s"$e.manifest"))
-      ls.foreach(add(e, _))
-      ls.isEmpty
-    }
+    tailManifests.foreach(e =>
+      lines(md.resolve(s"$e.manifest")).foreach(add(e, _)))
     tail(".neutral").foreach(neutral += _)
-    // commit stamps: `.ts` markers win, then snapshot `#ts` headers,
-    // then manifest mtimes (epochs from before stamping)
+    // commit stamps: legacy `.ts` markers win, then `#ts` headers, then
+    // manifest mtimes (epochs from before stamping)
     val markers = tail(".ts").flatMap(e =>
       lines(md.resolve(s"$e.ts")).headOption.map(t => e -> t.trim.toLong))
       .toMap
-    val mtimes = tailManifests.filterNot(markers.contains).map(e =>
-      e -> Files.getLastModifiedTime(md.resolve(s"$e.manifest")).toMillis)
+    val mtimes = tailManifests
+      .filterNot(e => markers.contains(e) || folded.contains(e)).map(e =>
+        e -> Files.getLastModifiedTime(md.resolve(s"$e.manifest")).toMillis)
     val horizon =
       if (!names.contains(ArrowDataSource.HorizonMarkerName)) 0L
       else lines(md.resolve(ArrowDataSource.HorizonMarkerName))
@@ -287,8 +287,7 @@ object TableLog {
       neutral = neutral.toSet,
       txns = txns.toMap,
       copies = copies.toMap,
-      ops = ops.toMap,
-      reserved = empty.filterNot(markers.contains).toSet), names.toSet)
+      ops = ops.toMap), names.toSet)
   }
 
   // ---- the line codec: the only place log lines are parsed or
@@ -334,17 +333,20 @@ object TableLog {
       case _ => None
     }
 
-  /** One epoch's manifest in fold order: headers, then removes, adds
-    * and dv events, each sorted. Paths are root-relative; `dvs` holds
-    * `(rel, dvRel, deletedCount)`. */
-  def manifestLines(removes: Seq[String], adds: Seq[String],
+  /** One epoch's manifest in fold order: headers (the commit `stamp`
+    * first), then removes, adds and dv events, each sorted. Paths are
+    * root-relative; `dvs` holds `(rel, dvRel, deletedCount)`. */
+  def manifestLines(stamp: Long, removes: Seq[String], adds: Seq[String],
       dvs: Seq[(String, String, Long)] = Seq.empty,
       txn: Option[(String, Long)] = None,
       copies: Seq[(String, Long)] = Seq.empty,
-      op: Option[String] = None): Seq[String] = {
+      op: Option[String] = None,
+      neutral: Boolean = false): Seq[String] = {
     op.foreach(k =>
       require(!k.exists("\t\n".contains(_)), s"bad op kind '$k'"))
-    txn.toSeq.map { case (a, v) => header(TxnTag, a, v) } ++
+    Seq(header(TsTag, stamp)) ++
+      (if (neutral) Seq(header(NeutralTag)) else Seq.empty) ++
+      txn.toSeq.map { case (a, v) => header(TxnTag, a, v) } ++
       copies.map { case (k, sz) => header(CopyTag, k, sz) } ++
       op.toSeq.map(header(OpTag, _)) ++
       removes.map(r => eventLine(LogEntry(0L, remove = true, r))).sorted ++
@@ -354,32 +356,36 @@ object TableLog {
       }.sorted
   }
 
-  /** Drop `<epoch>.ts` under `md` (the log directory or a staged one).
-    * Delta's in-commit-timestamp rule: max(now, previous stamp + 1)
-    * while the previous marker is on disk, so a clock stepping back
-    * cannot record a non-monotone pair. */
-  def writeStamp(md: Path, epoch: Long): Unit = {
-    val prev = scala.util.Try(lines(md.resolve(s"${epoch - 1}.ts"))
-      .headOption.map(_.trim.toLong)).toOption.flatten
-    val stamp = math.max(System.currentTimeMillis(),
+  /** The `#ts` stamp for committing `epoch` to the log directory
+    * `md`. Delta's in-commit-timestamp rule:
+    * max(now, previous stamp + 1) while epoch-1's stamp is readable
+    * from its own files (the legacy `.ts` marker first, then its
+    * manifest's `#ts` line), so a clock stepping back cannot record a
+    * non-monotone pair. */
+  def nextStamp(md: Path, epoch: Long): Long = {
+    def stamp(read: => Option[Long]) =
+      scala.util.Try(read).toOption.flatten
+    val prev = stamp(lines(md.resolve(s"${epoch - 1}.ts")).headOption
+      .map(_.trim.toLong)).orElse(stamp(
+        headerLines(md.resolve(s"${epoch - 1}.manifest"))
+          .map(_.split('\t')).collectFirst {
+            case Array(TsTag, ms) => ms.toLong
+          }))
+    math.max(System.currentTimeMillis(),
       prev.map(_ + 1L).getOrElse(Long.MinValue))
-    writeMarker(md, s"$epoch.ts", stamp.toString)
   }
 
-  /** Mark `epoch` data-neutral (see the grammar's `#neutral`). */
-  def markNeutral(md: Path, epoch: Long): Unit =
-    writeMarker(md, s"$epoch.neutral", epoch.toString)
+  /** `f`'s leading `#` lines (a manifest's headers) — read no further. */
+  private def headerLines(f: Path): Seq[String] = {
+    val r = Files.newBufferedReader(f)
+    try Iterator.continually(r.readLine())
+      .takeWhile(l => l != null && l.startsWith("#")).toVector
+    finally r.close()
+  }
 
   /** Record the vacuum horizon: the lowest epoch `VERSION AS OF` may
     * still resolve exactly. */
   def writeHorizon(md: Path, horizon: Long): Unit =
-    writeMarker(md, ArrowDataSource.HorizonMarkerName, horizon.toString)
-
-  private def writeMarker(md: Path, name: String, value: String): Unit = {
-    val tmp = md.resolve(s"$name.inprogress")
-    Files.write(tmp, java.util.List.of(value))
-    Files.move(tmp, md.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+    AtomicFiles.replace(md.resolve(ArrowDataSource.HorizonMarkerName),
+      Seq(horizon.toString))
 }

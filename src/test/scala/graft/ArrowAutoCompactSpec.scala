@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.arrow.{ArrowDataSource, GraftCatalog, TableLog}
+import graft.sources.arrow.{ArrowDataSource, AutoCompact, GraftCatalog, TableLog}
 
 /** Post-commit auto-compaction (`set_auto_compact`): splinter-heavy
   * ingest self-heals without OPTIMIZE calls, the rewrite touches only
@@ -73,5 +73,40 @@ class ArrowAutoCompactSpec extends AnyFunSuite {
         .write.format("arrow").mode("append").save(dir)
     assert(ArrowDataSource.visibleIpcFiles(dir).length == 7,
       "disable did not stop auto-compaction")
+  }
+
+  test("concurrent configure calls never collide: no call throws and " +
+      "every read returns a pair some call wrote") {
+    val dir = Files.createTempDirectory("autocompact_race").toString
+    ArrowDataSource.initTableLog(dir)
+    AutoCompact.configure(dir, 2, 2L)
+    // thread t writes (t + 2, i + 2): unique to the thread and call
+    val written = Set((2, 2L)) ++
+      (for (t <- 0 until 4; i <- 1 to 200) yield (t + 2, i + 2L))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    try {
+      val reader = pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = {
+          var reads = 0
+          while (!stop.get()) {
+            val c = AutoCompact.config(dir)
+            assert(c.exists(written), s"read $c, which no call wrote")
+            reads += 1
+          }
+          reads
+        }
+      })
+      val writers = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (1 to 200).foreach(i =>
+            AutoCompact.configure(dir, t + 2, i + 2L))
+        })
+      }
+      try writers.foreach(_.get()) // rethrows a writer's failure
+      finally stop.set(true)
+      assert(reader.get() > 0)
+    } finally pool.shutdown()
+    assert(AutoCompact.config(dir).exists(c => written(c) && c._2 == 202L))
   }
 }

@@ -531,4 +531,76 @@ class ArrowTableLogSpec extends AnyFunSuite {
       messages.contains("graft.system.fsck") &&
       messages.contains("graft.system.restore"), messages)
   }
+
+  test("a log laid out with per-epoch marker files still reads: " +
+      "markers give the stamps and neutral marks, a crashed empty " +
+      "reservation folds as an empty epoch, compaction does not wait " +
+      "on it, and the next commit stamps above the markers") {
+    val root = Files.createTempDirectory("tlog_legacy").toAbsolutePath
+      .normalize
+    val md = Files.createDirectories(root.resolve("_graft_metadata"))
+    Files.write(root.resolve("a.arrow"), Array[Byte](1))
+    val (t0, t1) = (System.currentTimeMillis() - 2000L,
+      System.currentTimeMillis() - 1000L)
+    Files.createFile(md.resolve(ArrowDataSource.TableMarkerName))
+    Files.createFile(md.resolve("0.manifest"))
+    Files.write(md.resolve("0.ts"), java.util.List.of(t0.toString))
+    Files.write(md.resolve("1.manifest"), java.util.List.of("a.arrow"))
+    Files.write(md.resolve("1.ts"), java.util.List.of(t1.toString))
+    Files.write(md.resolve("1.neutral"), java.util.List.of("1"))
+    Files.createFile(md.resolve("2.manifest")) // crashed reservation
+
+    val before = TableLog.read(root)
+    assert(before.latest == 2L && before.neutral == Set(1L))
+    assert(before.stamps(0L) == t0 && before.stamps(1L) == t1 &&
+      before.stamps(2L) ==
+        Files.getLastModifiedTime(md.resolve("2.manifest")).toMillis,
+      s"stamps: ${before.stamps}")
+    assert(!before.history.exists(_.epoch == 2L) &&
+      before.live(Some(2L)) == Seq((1L, "a.arrow")) &&
+      before.live(None) == before.live(Some(1L)))
+
+    val started = System.nanoTime()
+    ArrowDataSource.compactLog(root, 2L)
+    val ms = (System.nanoTime() - started) / 1000000L
+    assert(ms < 1000L, s"compactLog took $ms ms over an empty epoch")
+    assert(TableLog.read(root) == before,
+      "the fold of the marker layout reads differently")
+    assert(Seq("0.ts", "1.ts", "1.neutral", "2.manifest")
+      .forall(n => !Files.exists(md.resolve(n))))
+
+    Files.write(root.resolve("b.arrow"), Array[Byte](2))
+    val epoch = ArrowDataSource.commitTableEpoch(root.toString, 2L,
+      Seq(root.resolve("b.arrow").toString), Seq.empty)
+    val stamp = TableLog.read(root).stamps(epoch)
+    assert(epoch == 3L && stamp > t1)
+    assert(Files.readAllLines(md.resolve("3.manifest")).contains(
+      s"#ts\t$stamp"), "the stamp is not the manifest's #ts line")
+    assert(!Files.exists(md.resolve("3.ts")))
+  }
+
+  test("two concurrent folds of one epoch, one of them vacuum's " +
+      "history prune, neither throw nor change the log") {
+    val dir = Files.createTempDirectory("tlog_fold_race").toString
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    ArrowDataSource.initTableLog(dir)
+    (1 to 5).foreach { i =>
+      val f = root.resolve(s"f$i.arrow")
+      Files.write(f, Array[Byte](1))
+      ArrowDataSource.commitTableEpoch(dir, i - 1L, Seq(f.toString),
+        Seq.empty, compactInterval = 0)
+    }
+    val before = TableLog.read(root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val runs = Seq(false, true).map { onlyExisting =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (1 to 200).foreach(_ =>
+            ArrowDataSource.compactLog(root, 5L, onlyExisting))
+        })
+      }
+      runs.foreach(_.get()) // rethrows a fold's failure
+    } finally pool.shutdown()
+    assert(TableLog.read(root) == before)
+  }
 }

@@ -8,7 +8,7 @@ import graft.sources.arrow.{ArrowDataSource, TableLog}
 
 /** Child-process entry for [[CrossJvmLogSpec]]: commits `n` one-file
   * append epochs to the table at `dir` under the optimistic-concurrency
-  * protocol (exclusive-create epoch reservation + blind-append rebase),
+  * protocol (hard-link manifest claim + blind-append rebase),
   * racing whatever other PROCESS is doing the same. No SparkSession —
   * the contract under test is the commit-log layer itself, and keeping
   * the child lean makes the race window tight instead of being
@@ -55,11 +55,13 @@ object CrossJvmTxnRacer {
 
 /** The optimistic-concurrency claim held only as far as it was tested:
   * ArrowTableLogSpec races 8 writers in ONE JVM, where the filesystem
-  * calls share a process. This spec races two PROCESSES on one table —
-  * the exclusive-create manifest reservation (Files.createFile) and
-  * blind-append rebase must serialize commits across JVMs with no lost
-  * epoch and no lost add, which is exactly the multi-writer story a
-  * shared table on a real cluster depends on. */
+  * calls share a process. This spec races PROCESSES on one table — the
+  * manifest claim (a hard link that fails when the epoch's manifest
+  * exists, [[graft.sources.arrow.AtomicFiles.claim]]) and blind-append
+  * rebase must serialize commits across JVMs with no lost epoch and no
+  * lost add, and a reader in another process must only ever see whole
+  * epochs — exactly the multi-writer story a shared table on a real
+  * cluster depends on. */
 class CrossJvmLogSpec extends AnyFunSuite {
 
   test("three JVMs racing blind appends on one table: every commit " +
@@ -91,7 +93,7 @@ class CrossJvmLogSpec extends AnyFunSuite {
     }
 
     // every commit landed as its own epoch: 3n epochs after the init
-    // snapshot, none skipped, none double-numbered (createFile on the
+    // snapshot, none skipped, none double-numbered (claiming the
     // manifest name is the cross-process mutex)
     assert(ArrowDataSource.latestCommittedEpoch(root) == 3L * n,
       "a racing commit overwrote or skipped an epoch")
@@ -176,5 +178,37 @@ class CrossJvmLogSpec extends AnyFunSuite {
     assert(child.waitFor() == 0 && out.contains("RACER_DONE"),
       s"child JVM failed:\n$out")
     assert(TableLog.read(root).lastTxnVersion("xjvm").contains(n.toLong))
+  }
+
+  test("a reader never sees an epoch whose manifest is not yet whole " +
+      "while another JVM commits") {
+    val dir = Files.createTempDirectory("xjvm_reader").toString
+    ArrowDataSource.initTableLog(dir) // epoch 0 lists no file
+    val root = Paths.get(dir).toAbsolutePath.normalize
+    val n = 200
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
+      .toString
+    val child = new ProcessBuilder(java, "-cp",
+      System.getProperty("java.class.path"), "graft.CrossJvmLogRacer",
+      dir, "w", n.toString).redirectErrorStream(true).start()
+    // each epoch after 0 adds one file, so a whole log at `latest`
+    // lists `latest` files and its head epoch carries an add
+    var reads = 0
+    def check(): Long = {
+      val log = TableLog.read(root)
+      assert(log.live(None).size == log.latest,
+        s"read $reads counts epoch ${log.latest} but lists " +
+          s"${log.live(None).size} files")
+      assert(log.latest == 0L || log.history.exists(en =>
+        en.epoch == log.latest && !en.remove),
+        s"read $reads: head epoch ${log.latest} carries no add")
+      reads += 1
+      log.latest
+    }
+    while (child.isAlive) check()
+    val out = new String(child.getInputStream.readAllBytes, "UTF-8")
+    assert(child.waitFor() == 0 && out.contains("RACER_DONE"),
+      s"child JVM failed:\n$out")
+    assert(check() == n.toLong)
   }
 }
