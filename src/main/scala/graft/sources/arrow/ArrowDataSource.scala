@@ -572,14 +572,15 @@ object ArrowDataSource {
     if (Files.isRegularFile(p)) Seq(p)
     else if (!Files.exists(p)) Seq.empty
     else {
-      // recursive: partitioned layouts nest files under col=value dirs
+      // recursive: partitioned layouts nest files under col=value dirs;
+      // the log and a log being staged beside it hold no data file
       val out = scala.collection.mutable.ArrayBuffer.empty[Path]
       def walk(d: Path): Unit = {
         listDir(d).foreach { c =>
-          if (Files.isDirectory(c)) {
-            if (c.getFileName.toString != MetadataDirName) walk(c)
-          }
-          else if (c.getFileName.toString.endsWith(".arrow")) out += c
+          val name = c.getFileName.toString
+          if (name.startsWith(MetadataDirName)) ()
+          else if (Files.isDirectory(c)) walk(c)
+          else if (name.endsWith(".arrow")) out += c
         }
       }
       walk(p)
@@ -997,10 +998,12 @@ object ArrowDataSource {
     * renamed-but-uncommitted files must not be claimed into this
     * epoch. Staged files bypass the batch-write commit hook, so their
     * footer stats are recorded here as the epoch's sidecar fragment:
-    * one footer read per written file, driver-side, page-cache hot. */
+    * one footer read per written file, driver-side, page-cache hot.
+    * Returns the files the epoch added. */
   def commitStaged(dir: String, base: Long,
       w: org.apache.spark.sql.DataFrameWriter[_],
-      removes: Seq[String] = Seq.empty, neutral: Boolean = false): Long = {
+      removes: Seq[String] = Seq.empty,
+      neutral: Boolean = false): Seq[String] = {
     val token = java.util.UUID.randomUUID().toString
     w.option("stageOnly", "true").option("stageToken", token).save(dir)
     val adds = Option(stagedFiles.remove(token))
@@ -1018,24 +1021,7 @@ object ArrowDataSource {
         readFooterSchema(Paths.get(adds.head)),
         adds.map(a => a -> FooterIndexFile.encodeInfo(
           footerInfo(Paths.get(a)))))
-    epoch
-  }
-
-  /** Rows live in `snap`'s head net of deletion vectors, counted from
-    * its files and footer row stats alone — no data read. None when a
-    * live file's footer carries no row count. */
-  def liveRowCount(snap: TableSnapshot): Option[Long] = {
-    val ix = snap.footers
-    val counts = ix.files.map { f =>
-      val info = ix.info(f)
-      val total =
-        if (info.sizes.isEmpty) Some(0L)
-        else info.rowStats.filter(_.batches.length == info.sizes.length)
-          .map(_.batches.map(_._1).sum)
-      total.map(_ - ix.dvs.get(f.toAbsolutePath.normalize.toString)
-        .fold(0L)(_._2))
-    }
-    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+    adds
   }
 
   /** Upgrade a flat directory to a logged TABLE in one atomic step
@@ -1048,35 +1034,37 @@ object ArrowDataSource {
     val files = listIpcFiles(dir)
       .map(p => root.relativize(p.toAbsolutePath.normalize).toString)
     // a concurrent init that won the rename holds the truth: defer
-    publishStagedLog(root, ".init.inprogress", TableLog.manifestLines(
+    publishStagedLog(root, TableLog.manifestLines(
       System.currentTimeMillis(), Seq.empty, files))(_ => ())
     ()
   }
 
   /** Build a table log in a staged directory (marker, whatever `fill`
     * writes, the stamped epoch-0 manifest) and rename it into
-    * place in one step, so readers see no log or a complete one. A
-    * crashed earlier staging is rebuilt. False when a concurrent log
-    * won the rename; the staged copy is removed. */
-  private def publishStagedLog(root: Path, stage: String,
-      epoch0: Seq[String])(fill: Path => Unit): Boolean = {
-    val tmp = root.resolve(MetadataDirName + stage)
-    if (Files.exists(tmp)) listDir(tmp).foreach(Files.deleteIfExists)
-    else Files.createDirectories(tmp)
-    Files.createFile(tmp.resolve(TableMarkerName))
-    fill(tmp)
-    Files.write(tmp.resolve("0.manifest"), epoch0.asJava)
+    * place in one step, so readers see no log or a complete one. The
+    * stage is named once per call ([[AtomicFiles.tempFor]]), so
+    * concurrent callers never share it. False when a concurrent log
+    * won the rename; the staged copy is removed either way. */
+  private def publishStagedLog(root: Path, epoch0: Seq[String])(
+      fill: Path => Unit): Boolean = {
+    val md = root.resolve(MetadataDirName)
+    val tmp = AtomicFiles.tempFor(md)
+    Files.createDirectories(tmp)
     try {
-      Files.move(tmp, root.resolve(MetadataDirName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException
-          | _: java.nio.file.DirectoryNotEmptyException
-          | _: java.nio.file.AccessDeniedException =>
-        listDir(tmp).foreach(Files.deleteIfExists)
-        Files.deleteIfExists(tmp)
-        false
+      Files.createFile(tmp.resolve(TableMarkerName))
+      fill(tmp)
+      Files.write(tmp.resolve("0.manifest"), epoch0.asJava)
+      try {
+        Files.move(tmp, md, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        true
+      } catch {
+        // EEXIST, ENOTEMPTY (a generic FileSystemException) or EACCES:
+        // the log is there, so a racer's rename won
+        case _: java.io.IOException if Files.isDirectory(md) => false
+      }
+    } finally if (Files.isDirectory(tmp)) {
+      listDir(tmp).foreach(Files.deleteIfExists)
+      Files.deleteIfExists(tmp)
     }
   }
 
@@ -1401,7 +1389,7 @@ object ArrowDataSource {
     // borrowed deletion vectors ride the epoch-0 manifest like any
     // dv event — a clone of a merge-on-read table must not resurrect
     // the source's masked rows
-    val landed = publishStagedLog(dstRoot, ".clone.inprogress",
+    val landed = publishStagedLog(dstRoot,
         TableLog.manifestLines(System.currentTimeMillis(), Seq.empty,
           rels, dvs)) { tmp =>
       // The clone's partition columns are RECORDED, not re-derived: the
@@ -1962,7 +1950,14 @@ object ArrowDataSource {
       bucket: Option[(String, Int, Int)] = None,
       blooms: Map[String, Array[Long]] = Map.empty,
       sort: Option[String] = None,
-      codec: Option[String] = None)
+      codec: Option[String] = None) {
+    /** Rows the file holds, from its footer row stats alone; None when
+      * the stats do not cover every record batch. */
+    def rows: Option[Long] =
+      if (sizes.isEmpty) Some(0L)
+      else rowStats.filter(_.batches.length == sizes.length)
+        .map(_.batches.map(_._1).sum)
+  }
 
   /** Footer stamp recording the buffer codec the file was written
     * with — IPC headers carry compression per batch, not per file, so

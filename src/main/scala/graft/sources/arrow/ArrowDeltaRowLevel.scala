@@ -160,10 +160,7 @@ class ArrowDeltaBatchWrite(op: ArrowRowLevelOperation, path: String,
         mask(b).or(bs)
       }
       val masked = DeletionVectors.cardinality(mask)
-      val total = info.rowStats
-        .filter(_.batches.length == nBatches)
-        .map(_.batches.map(_._1).sum)
-      if (total.contains(masked)) removes += file
+      if (info.rows.contains(masked)) removes += file
       else {
         val dvPath = DeletionVectors.write(root, mask)
         dvs += ((file, dvPath.toString, masked))

@@ -355,45 +355,27 @@ object AutoCompact {
     * met. Never throws into the caller's commit — compaction failure
     * must not fail the write that triggered it (the data is already
     * durably committed; the next commit retries). */
-  def maybe(spark: SparkSession, path: String): Unit =
+  def maybe(path: String): Unit =
     try {
       config(path).foreach { case (minFiles, targetRows) =>
-        val root = Paths.get(path).toAbsolutePath.normalize
-        val idx = FooterIndexFile.load(root)
-        def rowsOf(f: java.nio.file.Path): Option[Long] = {
-          val rel = scala.util.Try(
-            root.relativize(f.toAbsolutePath.normalize).toString).toOption
-          val info = rel.flatMap(r => idx.flatMap(_.infoOf(r)))
-            .getOrElse(ArrowDataSource.footerInfo(f))
-          info.rowStats.filter(_.batches.length == info.sizes.length)
-            .map(_.batches.map(_._1).sum)
-        }
+        // ONE snapshot picks the splinters, reads them and is the base
+        // the maintenance epoch commits on
+        val snap = TableSnapshot.read(path)
+        val ix = snap.footers
         // deletion-vectored files are skipped: their live row count is
         // smaller than the footer's and a rewrite here would need the
         // mask — OPTIMIZE handles those explicitly
-        val log = TableLog.read(root)
-        val dvRels = log.dvs(None).keySet
-        val small = log.files(path, None)
-          .filterNot(f => scala.util.Try(root.relativize(
-            f.toAbsolutePath.normalize).toString).toOption
-            .exists(dvRels))
-          .flatMap(f => rowsOf(f).filter(_ < targetRows / 2)
+        val small = ix.files
+          .filterNot(f =>
+            ix.dvs.contains(f.toAbsolutePath.normalize.toString))
+          .flatMap(f => ix.info(f).rows.filter(_ < targetRows / 2)
             .map(n => (f, n)))
         if (small.length >= minFiles) {
           val files = small.map(_._1)
-          val totalRows = small.map(_._2).sum
           val nOut = math.max(1L,
-            (totalRows + targetRows - 1) / targetRows).toInt
-          val schema = org.apache.spark.sql.SparkSession.active
-            .read.format("arrow").load(path).schema
-          val partCols = TableSnapshot.read(path).partSchema
-            .fieldNames.toSeq
-          val df = spark.read.format("arrow").schema(schema)
-            .option("files", files.map(f => root.relativize(
-              f.toAbsolutePath.normalize).toString).mkString(","))
-            .load(path)
-          GraftProcedures.loggedRewrite(path, files, partCols)(
-            df.repartition(nOut))
+            (small.map(_._2).sum + targetRows - 1) / targetRows).toInt
+          GraftProcedures.loggedRewrite(snap, files)(
+            GraftProcedures.readAt(snap, files).repartition(nOut))
         }
       }
     } catch { case scala.util.control.NonFatal(_) => () }

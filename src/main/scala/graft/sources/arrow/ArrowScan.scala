@@ -39,7 +39,7 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, Column
   * consult it (pushAggregation, estimateStatistics,
   * planInputPartitions) — at 100k files the difference between one
   * metadata pass and three. */
-private[arrow] class FooterIndex(val snap: TableSnapshot,
+private[graft] class FooterIndex(val snap: TableSnapshot,
     asOf: Option[Long], explicit: Option[Seq[java.nio.file.Path]]) {
   def log: Option[TableLog] = snap.log
 
@@ -80,6 +80,16 @@ private[arrow] class FooterIndex(val snap: TableSnapshot,
           (l.root.resolve(dvRel).normalize.toString, n)
       }
     }.getOrElse(Map.empty)
+
+  /** Rows live in `fs` net of their deletion vectors, from footer row
+    * stats alone — no data read. None when any file's stats do not
+    * cover its batches or its footer cannot be read. */
+  def liveRows(fs: Seq[java.nio.file.Path] = files): Option[Long] = {
+    val each = fs.map(f => scala.util.Try(info(f)).toOption
+      .flatMap(_.rows).map(_ -
+        dvs.get(f.toAbsolutePath.normalize.toString).fold(0L)(_._2)))
+    if (each.forall(_.isDefined)) Some(each.flatten.sum) else None
+  }
 }
 
 class ArrowScanBuilder(snap: TableSnapshot, schema: StructType,
@@ -658,8 +668,9 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
     val files = survivingFiles
     var bytes = 0L
-    var rows = 0L
-    var rowsKnown = true
+    // deletion vectors: the manifest carries the masked count, so the
+    // row estimate stays exact without opening a sidecar
+    val rows = footerIdx.liveRows(files)
     // per-data-column accumulators over every surviving file's footer:
     // null counts (row stats) and min/max (zone maps) — ESTIMATES for
     // the CBO, so partially-covered columns still contribute what the
@@ -674,13 +685,8 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     files.foreach { f =>
       val info = footerIdx.info(f)
       bytes += info.sizes.sum
-      info.rowStats match {
-        case Some(rs) if rs.batches.length == info.sizes.length =>
-          // deletion vectors: the manifest carries the masked count,
-          // so the row estimate stays exact without opening a sidecar
-          rows += rs.batches.map(_._1).sum -
-            footerIdx.dvs.get(f.toAbsolutePath.normalize.toString)
-              .map(_._2).getOrElse(0L)
+      info.rowStats.filter(_.batches.length == info.sizes.length) match {
+        case Some(rs) =>
           dataCols.foreach { c =>
             (0 until rs.batches.length)
               .map(b => rs.nullCount(b, c.name)) match {
@@ -690,9 +696,7 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
               case _ => nullsKnown(c.name) = false
             }
           }
-        case _ =>
-          rowsKnown = false
-          dataCols.foreach(c => nullsKnown(c.name) = false)
+        case None => dataCols.foreach(c => nullsKnown(c.name) = false)
       }
       info.zoneMap.foreach { zm =>
         dataCols.foreach { c =>
@@ -711,7 +715,6 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     val nFile = footerIdx.files.headOption
       .map(f => ArrowDataSource.readFooterSchema(f).length).getOrElse(nData)
     val scaled = math.max(1L, bytes * nData / math.max(1, nFile))
-    val (szOut, rowsOut) = (scaled, rows)
 
     def internal(v: BigDecimal, dt: DataType): Option[Any] = dt match {
       case ByteType => Some(v.toByte)
@@ -756,7 +759,7 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
       org.apache.spark.sql.connector.expressions.NamedReference,
       ColumnStatistics]()
     dataCols.foreach { c =>
-      val nc = if (rowsKnown && nullsKnown(c.name))
+      val nc = if (rows.isDefined && nullsKnown(c.name))
         nulls.get(c.name) else None
       val mnv = mins.get(c.name).flatMap(internal(_, c.dataType))
       val mxv = maxs.get(c.name).flatMap(internal(_, c.dataType))
@@ -789,10 +792,9 @@ class ArrowScan(path: String, schema: StructType, filters: Array[Filter],
     }
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(szOut)
+        java.util.OptionalLong.of(scaled)
       override def numRows(): java.util.OptionalLong =
-        if (rowsKnown) java.util.OptionalLong.of(rowsOut)
-        else java.util.OptionalLong.empty()
+        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
       override def columnStats(): java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         ColumnStatistics] = colStats

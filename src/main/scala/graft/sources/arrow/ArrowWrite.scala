@@ -441,7 +441,7 @@ class ArrowBatchWrite(path: String, schema: StructType,
     // post-commit auto-compaction (opt-in table property): the data
     // above is already durable — this never fails the write
     if (epoch.isDefined)
-      AutoCompact.maybe(org.apache.spark.sql.SparkSession.active, logDir)
+      AutoCompact.maybe(logDir)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

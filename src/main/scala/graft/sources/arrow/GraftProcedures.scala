@@ -2,12 +2,13 @@ package graft.sources.arrow
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Maintenance surface as SQL procedures (`CALL graft.system.<proc>`)
@@ -40,47 +41,86 @@ object GraftProcedures {
 
   private def utf8(s: String): UTF8String = UTF8String.fromString(s)
 
-  /** Rewrite `path`'s visible files (`replaced`) with `df`'s rows.
-    * On a LOGGED table the new files are STAGED (land on disk, enter
-    * no manifest) and one table epoch then swaps the generations
-    * atomically — a reader mid-rewrite resolves the old layout, never
-    * a mix, and the old files back `VERSION AS OF` until vacuum. On a
-    * flat directory the files land visibly and the old generation is
-    * unlinked after, the pre-log behavior (brief both-generations
-    * window, documented). */
-  private[arrow] def loggedRewrite(path: String,
-      replaced: Seq[java.nio.file.Path],
-      partitionCols: Seq[String] = Seq.empty,
-      sortCol: Option[String] = None)(
-      df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): Unit = {
+  /** The snapshot a maintenance rewrite of `path` lists, reads and
+    * commits at. Refuses a streaming sink's log (its epochs belong to
+    * the query checkpoint) and a partition subdirectory of a logged
+    * table: a rewrite addressed there would commit into a nested log
+    * the table's readers never consult. `scope` turns the
+    * subdirectory's root-relative path into the way to narrow `op`. */
+  private def rewriteSnapshot(path: String, op: String,
+      scope: String => String): TableSnapshot = {
+    val snap = TableSnapshot.read(path)
+    require(snap.log.isEmpty || snap.isTableLog,
+      s"$op: $path is a streaming sink, whose epochs belong to its " +
+        "query checkpoint; a file rewrite would desync them — stop the " +
+        "stream and upgrade it to a logged table first")
+    val dir = Paths.get(path).toAbsolutePath.normalize
+    require(snap.log.isEmpty || snap.root == dir,
+      s"$op: $path is a partition subdirectory of the logged table at " +
+        s"${snap.root} — ${scope(snap.root.relativize(dir).toString)}")
+    snap
+  }
+
+  /** `snap`'s rows at its head epoch (only `files` of them when given)
+    * under the snapshot's schema. The read is pinned by `epochAsOf`, so
+    * a commit landing after the snapshot changes neither what a
+    * rewrite reads nor the base it commits on; a directory with no
+    * committed epoch has nothing to pin. */
+  private[arrow] def readAt(snap: TableSnapshot,
+      files: Seq[Path] = Seq.empty): DataFrame = {
+    val dir = Paths.get(snap.path).toAbsolutePath.normalize
+    val r = SparkSession.active.read.format("arrow")
+      .schema(ArrowTable.inferSchema(snap,
+        new CaseInsensitiveStringMap(java.util.Map.of("path", snap.path))))
+    val pinned =
+      if (snap.latest >= 0) r.option("epochAsOf", snap.latest) else r
+    val picked =
+      if (files.isEmpty) pinned
+      else pinned.option("files", files.map(f =>
+        dir.relativize(f.toAbsolutePath.normalize).toString).mkString(","))
+    picked.load(snap.path)
+  }
+
+  /** Rewrite `replaced`, files of `snap`'s head, with `df`'s rows;
+    * returns the number of files visible after. On a LOGGED table the
+    * new files are STAGED (land on disk, enter no manifest) and one
+    * epoch on `snap.latest` then swaps the generations atomically — a
+    * reader mid-rewrite resolves the old layout, never a mix, and the
+    * old files back `VERSION AS OF` until vacuum. Any commit since the
+    * snapshot fails that epoch's base check: the staged files are
+    * deleted and the ConcurrentModificationException propagates, so a
+    * row appended or deleted meanwhile is never duplicated or
+    * resurrected. On a flat directory the files land visibly and the
+    * old generation is unlinked after, the pre-log behavior (brief
+    * both-generations window, documented). */
+  private[arrow] def loggedRewrite(snap: TableSnapshot,
+      replaced: Seq[Path], sortCol: Option[String] = None)(
+      df: Dataset[Row]): Long = {
     // Preserve the Hive partition LAYOUT through maintenance: a
     // rewrite that drops partitionBy would flatten col=value dirs into
     // plain columns — reads stay correct (partition values ride in the
     // files) but planning-time partition pruning is silently destroyed,
     // exactly the property a 100 TB layout was partitioned FOR.
-    def writer(d: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]) = {
-      val w0 = d.write.format("arrow").mode("append")
-      val w = sortCol.fold(w0)(c => w0.option("sortBy", c))
-      if (partitionCols.nonEmpty)
-        w.partitionBy(partitionCols: _*).option("optimizeWrite", "true")
-      else w
-    }
-    if (ArrowDataSource.isTableLog(path)) {
-      val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val base = ArrowDataSource.latestCommittedEpoch(root)
+    val w0 = df.write.format("arrow").mode("append")
+    val w1 = sortCol.fold(w0)(c => w0.option("sortBy", c))
+    val w =
+      if (snap.partCols.isEmpty) w1
+      else w1.partitionBy(snap.partCols: _*).option("optimizeWrite", "true")
+    val dir = snap.root.toString
+    if (snap.isTableLog) {
       // maintenance rewrites carry the SAME row multiset — the
       // neutral flag puts `#neutral` in the epoch's claimed manifest,
       // so change-feed consumers can never observe the churn as data
       // change
-      ArrowDataSource.commitStaged(path, base, writer(df),
+      val adds = ArrowDataSource.commitStaged(dir, snap.latest, w,
         replaced.map(_.toString), neutral = true)
-      ()
+      snap.footers.files.length - replaced.length + adds.length
     } else {
-      writer(df).save(path)
+      w.save(dir)
       replaced.foreach(Files.deleteIfExists)
       // the replaced generation is gone on a flat dir: forget it
-      FooterIndexFile.prune(
-        java.nio.file.Paths.get(path).toAbsolutePath.normalize, replaced)
+      FooterIndexFile.prune(snap.root, replaced)
+      ArrowDataSource.listIpcFiles(dir).length
     }
   }
 
@@ -150,40 +190,30 @@ object GraftProcedures {
       val target = math.max(1L, input.getLong(1))
       val selector = Option(input.getUTF8String(2)).map(_.toString)
         .map(_.stripPrefix("/").stripSuffix("/")).filter(_.nonEmpty)
-      val spark = SparkSession.active
-      require(ArrowDataSource.sinkRoot(path).isEmpty ||
-        ArrowDataSource.isTableLog(path),
-        s"compact: $path is a streaming sink; compact its commit log " +
-          "via the sink's manifest compaction, not a file rewrite")
-      val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-      val partCols = TableSnapshot.read(path).partSchema
-        .fieldNames.toSeq
+      // ONE snapshot: the files, their footers and sort stamps, the
+      // partition columns, the rows read and the commit base
+      val snap = rewriteSnapshot(path, "compact", rel =>
+        s"compact the table root with partition => '$rel'")
+      val root = snap.root
+      val partCols = snap.partCols
       selector.foreach(sel => require(partCols.nonEmpty,
         s"compact: partition => '$sel' but $path carries no " +
           "col=value partition layout"))
-      val visible = ArrowDataSource.visibleIpcFiles(path)
+      val memo = snap.footers
       val before = selector match {
-        case None => visible
+        case None => memo.files
         case Some(sel) =>
-          val picked = visible.filter(f => root.relativize(
+          val picked = memo.files.filter(f => root.relativize(
             f.toAbsolutePath.normalize).toString.startsWith(sel + "/"))
           require(picked.nonEmpty,
             s"compact: no visible files under partition '$sel' of $path")
           picked
       }
-      val df = selector match {
-        case None => spark.read.format("arrow").load(path)
-        case Some(_) =>
-          // the untouched partitions' files are neither read nor
-          // rewritten — cost scales with the SELECTED subtree
-          val schema = spark.read.format("arrow").load(path).schema
-          spark.read.format("arrow").schema(schema)
-            .option("files", before.map(f => root.relativize(
-              f.toAbsolutePath.normalize).toString).mkString(","))
-            .load(path)
-      }
-      val n = df.count() // footer-stat pushdown: metadata-only
-      val memo = TableSnapshot.read(path).footers
+      // the untouched partitions' files are neither read nor rewritten
+      // — cost scales with the SELECTED subtree
+      val df = readAt(snap, if (selector.isEmpty) Seq.empty else before)
+      // sizing from footer row stats: metadata-only
+      val n = memo.liveRows(before).getOrElse(df.count())
       val targetBytes = input.getLong(3)
       // bytes-targeted sizing: the sidecar's per-file block sizes are
       // already in hand (one metadata read), so the byte budget costs
@@ -213,20 +243,16 @@ object GraftProcedures {
             }
           else None
         }
-      sortCol match {
+      val after = sortCol match {
         case Some(c) =>
           import org.apache.spark.sql.functions.col
-          GraftProcedures.loggedRewrite(path, before, partCols,
-            sortCol = Some(c))(
+          loggedRewrite(snap, before, sortCol)(
             df.repartitionByRange(nFiles, col(c))
               .sortWithinPartitions(col(c)))
-        case None =>
-          GraftProcedures.loggedRewrite(path, before, partCols)(
-            df.repartition(nFiles))
+        case None => loggedRewrite(snap, before)(df.repartition(nFiles))
       }
       result(out, Array(new GenericInternalRow(Array[Any](
-        before.length.toLong,
-        ArrowDataSource.visibleIpcFiles(path).length.toLong, n))))
+        before.length.toLong, after, n))))
     }
   }
 
@@ -255,46 +281,41 @@ object GraftProcedures {
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val path = input.getUTF8String(0).toString
       val pred = input.getUTF8String(1).toString
-      val spark = SparkSession.active
-      require(ArrowDataSource.sinkRoot(path).isEmpty ||
-        ArrowDataSource.isTableLog(path),
-        s"purge: $path is a streaming sink; stop the stream and " +
-          "upgrade it to a logged table first")
-      spark.sql(s"DELETE FROM graft.arrow.`$path` WHERE $pred")
-      val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+      rewriteSnapshot(path, "purge", _ =>
+        "purge the table root with a predicate on the partition column")
+      SparkSession.active.sql(
+        s"DELETE FROM graft.arrow.`$path` WHERE $pred")
       // merge-on-read masks keep the purged BYTES in the data files —
       // materialize them: one logged rewrite of ONLY the vectored
-      // files (the scan reads through the vectors, so the replacement
-      // files carry surviving rows only; the epoch drops the vectors).
+      // files at the epoch after the DELETE (the scan reads through
+      // the vectors, so the replacement files carry surviving rows
+      // only; the epoch drops the vectors).
       // Selection is by the `_file` metadata column, NOT the in-root
       // `files` scan option: a shallow CLONE's vectors can sit on
       // BORROWED `../` files, which the option's root guard rejects —
       // the metadata-column path is exactly how CoW DML selects its
       // victim files on clones, so purge composes the same way
-      val dvs = ArrowDataSource.liveDvs(root, None)
+      val snap = TableSnapshot.read(path)
+      val dvs = snap.log.fold(Map.empty[String, (String, Long)])(_.dvs(None))
       if (dvs.nonEmpty) {
-        val partCols = TableSnapshot.read(path).partSchema
-          .fieldNames.toSeq
+        import org.apache.spark.sql.functions.col
         val files = dvs.keys.toSeq.sorted
-          .map(rel => root.resolve(rel).normalize)
-        val fileSet = files.map(_.toString)
-        val full = spark.read.format("arrow").load(path)
+          .map(rel => snap.root.resolve(rel).normalize)
+        val full = readAt(snap)
         val df = full
-          .select((full.columns.map(org.apache.spark.sql.functions.col)
-            .toIndexedSeq :+ org.apache.spark.sql.functions
-              .col(ArrowDataSource.FileMetaCol)): _*)
-          .where(org.apache.spark.sql.functions
-            .col(ArrowDataSource.FileMetaCol).isin(fileSet: _*))
+          .select((full.columns.map(col).toIndexedSeq :+
+            col(ArrowDataSource.FileMetaCol)): _*)
+          .where(col(ArrowDataSource.FileMetaCol)
+            .isin(files.map(_.toString): _*))
           .drop(ArrowDataSource.FileMetaCol)
-        loggedRewrite(path, files, partCols)(
-          df.repartition(files.length))
+        loggedRewrite(snap, files)(df.repartition(files.length))
       }
       // zero-grace vacuum: reclaim every replaced file NOW and
       // advance the horizon past the purged rows' last version
       val reclaimed = ArrowOptimize.vacuum(path, graceMs = 0L)
       result(out, Array(new GenericInternalRow(Array[Any](
         dvs.size.toLong, reclaimed.length.toLong,
-        TableLog.read(root).horizon))))
+        TableLog.read(snap.root).horizon))))
     }
   }
 
@@ -346,12 +367,10 @@ object GraftProcedures {
       val target = math.max(1L, input.getLong(2))
       require(cols.length >= 2 && cols.length <= 4,
         s"zorder interleaves 2..4 columns, got ${cols.toSeq}")
-      require(ArrowDataSource.sinkRoot(path).isEmpty ||
-        ArrowDataSource.isTableLog(path),
-        s"zorder: $path is a streaming sink; rewrite refused")
-      val spark = SparkSession.active
-      val before = ArrowDataSource.visibleIpcFiles(path)
-      val df = spark.read.format("arrow").load(path)
+      val snap = rewriteSnapshot(path, "zorder", _ =>
+        "zorder the table root")
+      val before = snap.footers.files
+      val df = readAt(snap)
       // Morton key: bit i of column j lands at position i*k + j — the
       // low 16 bits of each column interleave into one ≤64-bit key.
       // 16 bits per dimension bounds the curve's resolution, not the
@@ -364,17 +383,16 @@ object GraftProcedures {
             .bitwiseAND(1L), i * k + j)
         }
       }.reduce(_ + _)
-      val n = df.count() // footer-stat pushdown: metadata-only
+      // sizing from footer row stats: metadata-only
+      val n = snap.footers.liveRows(before).getOrElse(df.count())
       val nFiles = math.max(1L, (n + target - 1) / target).toInt
-      GraftProcedures.loggedRewrite(path, before,
-        TableSnapshot.read(path).partSchema.fieldNames.toSeq)(
+      val after = loggedRewrite(snap, before)(
         df.withColumn("__zkey", zkey)
           .repartitionByRange(nFiles, col("__zkey"))
           .sortWithinPartitions(col("__zkey"))
           .drop("__zkey"))
       result(out, Array(new GenericInternalRow(Array[Any](
-        before.length.toLong,
-        ArrowDataSource.visibleIpcFiles(path).length.toLong))))
+        before.length.toLong, after))))
     }
   }
 
@@ -1563,31 +1581,14 @@ object GraftProcedures {
         (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
           .reverse.takeWhile(_.contains('=')).reverse.mkString("/")
       }
-      def rowsOf(f: java.nio.file.Path): Option[Long] =
-        scala.util.Try {
-          val info = memo.info(f)
-          info.rowStats.filter(_.batches.length == info.sizes.length)
-            .map(_.batches.map(_._1).sum)
-        }.toOption.flatten
       // live deletion vectors shrink the row answer per file — via
       // the FooterIndex, which resolves the table's SINK ROOT (a
-      // partition-subdirectory path must still honor the log) and
-      // keys by absolute path
-      val dvs = memo.dvs
+      // partition-subdirectory path must still honor the log)
       val rows = memo.files.groupBy(partOf).toSeq.sortBy(_._1)
         .map { case (part, fs) =>
           val bytes = fs.map(f => Files.size(f)).sum
-          val perFile = fs.map { f =>
-            rowsOf(f).map(_ - dvs
-              .get(f.toAbsolutePath.normalize.toString)
-              .map(_._2).getOrElse(0L))
-          }
-          val total: java.lang.Long =
-            if (perFile.forall(_.isDefined))
-              java.lang.Long.valueOf(perFile.flatten.sum)
-            else null
-          new GenericInternalRow(Array[Any](
-            utf8(part), fs.length.toLong, bytes, total)): InternalRow
+          new GenericInternalRow(Array[Any](utf8(part), fs.length.toLong,
+            bytes, memo.liveRows(fs).map(Long.box).orNull)): InternalRow
         }
       result(out, rows.toArray)
     }
@@ -1642,9 +1643,12 @@ object GraftProcedures {
       val path = input.getUTF8String(0).toString
       val spark = SparkSession.active
       val root = java.nio.file.Paths.get(path).toAbsolutePath.normalize
+      // ONE snapshot: the rows, the file count and the epoch the
+      // stored stats describe
+      val snap = TableSnapshot.read(path)
       if (input.getBoolean(4))
-        return incrementalCall(spark, path, root)
-      val df = spark.read.format("arrow").load(path)
+        return incrementalCall(spark, snap, root)
+      val df = readAt(snap)
       val wanted = Option(input.getUTF8String(1)).map(_.toString)
         .filter(_.nonEmpty)
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -1660,15 +1664,11 @@ object GraftProcedures {
       require(wanted.nonEmpty, s"analyze: no atomic columns in $path")
       wanted.foreach(c => require(df.schema.fieldNames.contains(c),
         s"analyze: column $c not in ${df.schema.fieldNames.mkString(",")}"))
-      // the epoch is captured BEFORE the scan: files committing while
-      // the pass runs are re-scanned by the next incremental — HLL
-      // union is idempotent over re-seen values, so conservative is
-      // correct, never double-counted
-      val analyzedEpoch =
-        if (ArrowDataSource.isTableLog(path))
-          ArrowDataSource.latestCommittedEpoch(root)
-        else -1L
-      lastAnalyzeFiles = ArrowDataSource.visibleIpcFiles(path).size.toLong
+      // the scan is pinned to the snapshot's epoch, so the stored row
+      // count, NDVs and sketches all describe `analyzedEpoch`: the
+      // next incremental pass adds exactly the epochs after it
+      val analyzedEpoch = if (snap.isTableLog) snap.latest else -1L
+      lastAnalyzeFiles = snap.footers.files.size.toLong
       // ONE pass: every NDV estimate, HLL sketch, and the row count
       // share a scan
       val aggs = count(lit(1)).as("__rows") +:
@@ -1700,10 +1700,11 @@ object GraftProcedures {
 
     /** The incremental arm: merge delta-file sketches into the stored
       * state, costing O(churned files). */
-    private def incrementalCall(spark: SparkSession, path: String,
+    private def incrementalCall(spark: SparkSession, snap: TableSnapshot,
         root: java.nio.file.Path): java.util.Iterator[Scan] = {
       import org.apache.spark.sql.functions.{count, expr, lit}
-      require(ArrowDataSource.isTableLog(path),
+      val path = snap.path
+      require(snap.isTableLog,
         s"analyze incremental: $path is not a logged table — epochs " +
           "are the increment unit; run a full analyze")
       val (priorRows, priorEpoch, stored) =
@@ -1711,7 +1712,7 @@ object GraftProcedures {
           throw new IllegalStateException(
             s"analyze incremental: $path carries no sketch state — " +
               "run a full CALL analyze once first"))
-      val latest = ArrowDataSource.latestCommittedEpoch(root)
+      val latest = snap.latest
       val (_, curNdv, curHists) = ColumnStatsFile.loadAll(root)
         .getOrElse((priorRows, Map.empty[String, Long],
           Map.empty[String, ColumnStatsFile.Hist]))
@@ -1725,20 +1726,16 @@ object GraftProcedures {
       }
       // the window must be APPEND-ONLY: a sketch cannot subtract the
       // values a removal or deletion vector took away
-      val log = TableLog.read(root)
-      log.history.foreach { en =>
-        if ((en.remove || en.dv.isDefined) && en.epoch > priorEpoch &&
-            en.epoch <= latest)
+      val window = snap.log.get.history.filter(_.epoch > priorEpoch)
+      window.foreach { en =>
+        if (en.remove || en.dv.isDefined)
           throw new UnsupportedOperationException(
             s"analyze incremental: epoch ${en.epoch} of $path " +
               "removed or masked rows since the last analyze — NDV " +
               "sketches only grow; run a full CALL analyze to " +
               "recompute over the current snapshot")
       }
-      val deltaRels = log.history.collect {
-        case en if !en.remove && en.dv.isEmpty && en.epoch > priorEpoch &&
-          en.epoch <= latest => en.rel
-      }.distinct
+      val deltaRels = window.map(_.rel).distinct
       lastAnalyzeFiles = deltaRels.size.toLong
       if (deltaRels.isEmpty) { // empty epochs: advance the cursor only
         ColumnStatsFile.write(root, priorRows, curNdv.toSeq.sortBy(_._1),
@@ -1747,8 +1744,7 @@ object GraftProcedures {
         return emit(curNdv)
       }
       val cols = stored.keys.toSeq.sorted
-      val delta = spark.read.format("arrow")
-        .option("files", deltaRels.mkString(",")).load(path)
+      val delta = readAt(snap, deltaRels.map(snap.root.resolve))
       val aggs = count(lit(1)).as("__rows") +:
         cols.map(c => sketchAgg(c).as(s"__sk_$c"))
       val row = delta.agg(aggs.head, aggs.tail: _*).collect()(0)
@@ -2023,37 +2019,21 @@ object GraftProcedures {
       StructField("partition_columns", StringType, nullable = false)))
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
       val path = input.getUTF8String(0).toString
-      val memo = TableSnapshot.read(path).footers
-      val files = memo.files
-      val bytes = files.map(f => Files.size(f)).sum
-      def rowsOf(f: java.nio.file.Path): Option[Long] =
-        scala.util.Try {
-          val info = memo.info(f)
-          info.rowStats.filter(_.batches.length == info.sizes.length)
-            .map(_.batches.map(_._1).sum)
-        }.toOption.flatten // unreadable footer: rows stay unknown
-      val perFile = files.map(rowsOf)
-      // FooterIndex.dvs resolves the SINK ROOT (subdirectory paths
-      // honor the log) and keys by absolute path
-      val dvs = memo.dvs
-      val masked = dvs.values.map(_._2).sum
-      val rows: java.lang.Long =
-        if (perFile.forall(_.isDefined))
-          java.lang.Long.valueOf(perFile.flatten.sum - masked)
-        else null
       // the SINK ROOT owns the log — a subdirectory path reports its
-      // table's epochs, not an empty log
-      val epochs = memo.log.map(_.latest).getOrElse(-1L)
-      val horizon = memo.log.map(_.horizon).getOrElse(0L)
+      // table's epochs, vectors and properties, not an empty log
+      val snap = TableSnapshot.read(path)
+      val memo = snap.footers
+      val files = memo.files
+      val dvs = memo.dvs
       result(out, Array(new GenericInternalRow(Array[Any](
-        files.length.toLong, bytes, rows,
-        math.max(0L, epochs), horizon,
-        dvs.size.toLong, masked,
+        files.length.toLong, files.map(f => Files.size(f)).sum,
+        memo.liveRows().map(Long.box).orNull, // unreadable footer: null
+        math.max(0L, snap.latest), snap.log.fold(0L)(_.horizon),
+        dvs.size.toLong, dvs.values.map(_._2).sum,
         TableConstraints.list(path).length.toLong,
-        java.lang.Boolean.valueOf(ArrowDataSource.dvEnabled(path)),
+        java.lang.Boolean.valueOf(snap.dvEnabled),
         java.lang.Boolean.valueOf(AutoCompact.config(path).isDefined),
-        utf8(TableSnapshot.read(path).partSchema
-          .fieldNames.mkString(","))))))
+        utf8(snap.partCols.mkString(","))))))
     }
   }
 

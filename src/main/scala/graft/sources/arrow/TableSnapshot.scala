@@ -6,13 +6,14 @@ import org.apache.spark.sql.types.StructType
 
 /** One operation's view of a table's metadata, built from ONE log read
   * ([[TableLog.listed]]; Delta's snapshot by one replay). Schema
-  * inference, a scan, a DELETE/TRUNCATE and a row-level operation
-  * each take one snapshot and read every metadata fact from it:
+  * inference, a scan, a DELETE/TRUNCATE, a row-level operation and a
+  * maintenance rewrite each take one snapshot and read every metadata
+  * fact from it:
   *
   *  - `log`: the commit log (None for a flat directory) — visible files
   *    at any epoch, deletion vectors, and `latest`, the commit base of
-  *    DML planned on this snapshot, so a row-level operation's scan
-  *    and its conflict check see the same epoch by construction;
+  *    DML or a rewrite planned on this snapshot, so its scan and its
+  *    conflict check see the same epoch by construction;
   *  - `sidecar`: the footer-stats index, the root sidecar folded with
   *    the `.fstats` fragments named by the log's own listing;
   *  - `declaration`: the declared schema with its drop, rename and
@@ -67,7 +68,7 @@ final class TableSnapshot private (val path: String,
 
   /** Footer stats of the head's visible files, one parse per file for
     * every consumer of this snapshot. */
-  private[arrow] lazy val footers: FooterIndex =
+  private[graft] lazy val footers: FooterIndex =
     new FooterIndex(this, None, None)
 
   lazy val declaration: Declaration =

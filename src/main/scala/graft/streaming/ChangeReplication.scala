@@ -126,7 +126,7 @@ object ChangeReplication {
     }
     def bootstrappable(snap: TableSnapshot): Boolean =
       !snap.log.exists(_.lastTxnVersion(appId).isDefined) &&
-        ArrowDataSource.liveRowCount(snap).contains(0L)
+        snap.footers.liveRows().contains(0L)
     val snap0 = TableSnapshot.read(dstDir)
     snap0.log.flatMap(snapshotStamp) match {
       case Some(stamp) => return stamp + 1L

@@ -603,4 +603,32 @@ class ArrowTableLogSpec extends AnyFunSuite {
     } finally pool.shutdown()
     assert(TableLog.read(root) == before)
   }
+
+  test("two threads upgrading one flat directory both succeed and " +
+      "leave epoch 0 listing its file") {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 200).foreach { trial =>
+        val dir = Files.createTempDirectory("tlog_init_race").toString
+        val root = Paths.get(dir).toAbsolutePath.normalize
+        Files.write(root.resolve("a.arrow"), Array[Byte](1))
+        val gate = new java.util.concurrent.CyclicBarrier(2)
+        val runs = (1 to 2).map(_ =>
+          pool.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = {
+              gate.await()
+              ArrowDataSource.initTableLog(dir)
+            }
+          }))
+        runs.foreach(_.get()) // rethrows an init's failure
+        val log = TableLog.read(root)
+        assert(log.latest == 0L &&
+          log.live(None) == Seq((0L, "a.arrow")),
+          s"trial $trial: epoch ${log.latest}, files ${log.live(None)}")
+        assert(new java.io.File(dir).list().toSet ==
+          Set("a.arrow", ArrowDataSource.MetadataDirName),
+          s"trial $trial left a staged log behind")
+      }
+    } finally pool.shutdown()
+  }
 }
